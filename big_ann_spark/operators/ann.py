@@ -22,6 +22,8 @@ searches only the top-1 shard); ``nprobe`` trades IO for recall.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,6 +47,10 @@ def _isin_ids(col: str, ids: list) -> F.Column:
 # (base path, base-dir mtime) -> shards StructType; see
 # open_probed_shards. Schema only — never data.
 _SHARDS_SCHEMA_MEMO: dict[tuple[str, int], object] = {}
+
+# One shared worker for the PQ/OPQ sidecar prefetch in
+# ivf_search_from_disk (threads start lazily on the first submit).
+_SIDECAR_PREFETCH = ThreadPoolExecutor(1, thread_name_prefix="pq-sidecars")
 
 
 def open_probed_shards(
@@ -110,8 +116,8 @@ def open_probed_shards(
         return reader.schema(memo_schema).parquet(*dirs)
     df = reader.parquet(*dirs)
     if memo_key is not None:
-        if len(_SHARDS_SCHEMA_MEMO) >= 256:  # bound growth across layouts
-            _SHARDS_SCHEMA_MEMO.clear()
+        if len(_SHARDS_SCHEMA_MEMO) >= 256:  # bound growth: drop the oldest
+            del _SHARDS_SCHEMA_MEMO[next(iter(_SHARDS_SCHEMA_MEMO))]
         _SHARDS_SCHEMA_MEMO[memo_key] = df.schema
     return df
 
@@ -202,9 +208,9 @@ def ivf_search_from_disk(
     from big_ann_spark.operators.vector_ops import live_probed_view
 
     spark = queries.sparkSession
-    # lazy checkpoint (r14, guide §2.6/§5): the distinct-id collect below
-    # is the first action and materializes it — one job where the eager
-    # form ran a serial checkpoint job first and the collect second
+    # lazy checkpoint: the shard-id collect below is the first action
+    # and materializes it — one job where the eager form ran a serial
+    # checkpoint job first and the collect second
     routed = (
         _routed
         if _routed is not None
@@ -212,21 +218,17 @@ def ivf_search_from_disk(
             queries, centroids, nprobe, query_id=query_id, query_vec=query_vec, dim=dim
         ).localCheckpoint(eager=False)
     )
-    # one routing materialization (r14): the arrow pools and the pq
+    # one routing materialization: the arrow pools and the pq
     # fold LUT build need the routed ROWS on the driver anyway — when a
     # pool will collect them, collect once here and derive probe_ids
     # from the same rows instead of running a second serial job over
     # the same contractually-tiny table
-    # sidecar prefetch (r15, VERDICT r14 #4, guide §2.6): the codebooks
-    # (+ optional OPQ rotation) live in layout sidecars with NO data
-    # dependency on routing, yet their read jobs ran serially AFTER the
-    # routing collect — the two from-disk search hops that CAN overlap.
-    # Load them on a background thread while the routing job runs; the
+    # sidecar prefetch: the codebooks (+ optional OPQ rotation) live in
+    # layout sidecars with NO data dependency on routing, so their read
+    # jobs run on a background thread while the routing job runs; the
     # values are identical, only the wall-clock interleaving changes.
-    sidecar_fut = None
+    sidecar_fut = sidecars = None
     if codec in ("pq", "opq"):
-        from concurrent.futures import ThreadPoolExecutor
-
         from big_ann_spark.operators import oplayout as _ol2
         from big_ann_spark.operators.pq import load_pq_codebooks, load_rotation
 
@@ -237,28 +239,35 @@ def ivf_search_from_disk(
                 rot = load_rotation(spark, f"{path}/opq_rotation.parquet")
             return cb, rot
 
-        _ex = ThreadPoolExecutor(1)
-        sidecar_fut = _ex.submit(_load_pq_sidecars)
-        _ex.shutdown(wait=False)
+        sidecar_fut = _SIDECAR_PREFETCH.submit(_load_pq_sidecars)
     routed_rows = None
     pool_needs_rows = (codec == "sq8" and pool_impl == "arrow") or codec in (
         "pq",
         "opq",
     )
-    if pool_needs_rows:
-        routed_rows = routed.select("qid", "qvec", "shard_id").collect()
-        probe_ids = sorted({int(r["shard_id"]) for r in routed_rows})
-    else:
-        # plain collect + driver-side set: the table is contractually
-        # tiny (<= Q*nprobe rows), so a distinct() only added an
-        # exchange and its AQE stage micro-job to the serial chain (r15)
-        probe_ids = sorted(
-            {int(r["shard_id"]) for r in routed.select("shard_id").collect()}
+    try:
+        if pool_needs_rows:
+            routed_rows = routed.select("qid", "qvec", "shard_id").collect()
+            probe_ids = sorted({int(r["shard_id"]) for r in routed_rows})
+        else:
+            # plain collect + driver-side set: the table is contractually
+            # tiny (<= Q*nprobe rows), so a distinct() only added an
+            # exchange and its AQE stage micro-job to the serial chain
+            probe_ids = sorted(
+                {int(r["shard_id"]) for r in routed.select("shard_id").collect()}
+            )
+        shards = live_probed_view(
+            spark, path, open_probed_shards(spark, path, probe_ids),
+            probe_ids, as_of=as_of, id_col=id_col, vec_col=vec_col,
         )
-    shards = live_probed_view(
-        spark, path, open_probed_shards(spark, path, probe_ids),
-        probe_ids, as_of=as_of, id_col=id_col, vec_col=vec_col,
-    )
+        if sidecar_fut is not None:
+            sidecars = sidecar_fut.result()
+    finally:
+        # never leave the prefetch behind: when routing raised, cancel
+        # it or wait for it and drop its outcome (the routing error is
+        # the one that propagates)
+        if sidecar_fut is not None and not sidecar_fut.cancel():
+            sidecar_fut.exception()
     if codec == "raw":
         return ivf_search(
             queries,
@@ -288,7 +297,7 @@ def ivf_search_from_disk(
         # so rotation never touches the rerank. codec="opq" makes the
         # tier explicit and REFUSES a layout without the rotation
         # (a plain-PQ layout served as "opq" would silently be plain PQ).
-        if codec == "opq" and sidecar_fut.result()[1] is None:
+        if codec == "opq" and sidecars[1] is None:
             raise ValueError(
                 f"codec='opq' but {path} has no opq_rotation.parquet — "
                 "build with --opq-refine (write_sharded(opq_rotation=…)), "
@@ -297,7 +306,7 @@ def ivf_search_from_disk(
         pool = pq_pool(
             routed, shards, path, k * rerank_factor,
             id_col=id_col, impl=pool_impl, routed_rows=routed_rows,
-            _sidecars=sidecar_fut.result() if sidecar_fut is not None else None,
+            _sidecars=sidecars,
         )
     elif codec == "binary":
         pool = binary_pool(routed, shards, path, k * rerank_factor, id_col=id_col)

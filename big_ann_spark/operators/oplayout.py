@@ -89,16 +89,22 @@ def glob_op_ids(spark, pattern: str) -> set[int]:
     return out
 
 
-def committed_ops(spark, path: str) -> set[int]:
-    """Ids with a commit marker under ``{path}/_ops``."""
+def commit_markers(spark, path: str) -> dict[int, int]:
+    """op id → modification time of its commit marker under
+    ``{path}/_ops`` (one directory listing)."""
     fs, jp = fs_path(spark, f"{path}/_ops")
     if not fs.exists(jp):
-        return set()
+        return {}
     return {
-        int(st.getPath().getName())
+        int(st.getPath().getName()): int(st.getModificationTime())
         for st in fs.listStatus(jp)
         if st.getPath().getName().isdigit()  # skip _writer.lock etc.
     }
+
+
+def committed_ops(spark, path: str) -> set[int]:
+    """Ids with a commit marker under ``{path}/_ops``."""
+    return set(commit_markers(spark, path))
 
 
 def mark_committed(spark, path: str, op_id: int) -> None:
@@ -207,7 +213,8 @@ def writer_lock(spark, path: str, *, owner: str = "", in_compaction: bool = Fals
 CONTESTED_WARN_ABOVE = 500_000
 
 
-_contested_count_memo: dict[tuple[str, int | None, str], int] = {}
+# (path, as_of, context) -> (ledger token, contested count)
+_contested_count_memo: dict[tuple[str, int | None, str], tuple[frozenset, int]] = {}
 
 
 def invalidate_contested_memo(path: str) -> None:
@@ -224,18 +231,20 @@ def check_contested(
     emptiness probe is ``head(1)`` (an early-out job — needed anyway);
     the FULL count that feeds :func:`warn_contested_size` runs once
     per LEDGER STATE per (path, as_of, context) — the memo carries the
-    committed-op id set the count was taken under (one ``_ops`` dir
-    listing, the same metadata walk every search already pays — never
-    a Spark job), so a mutation landed by ANOTHER process busts it the
-    moment its commit marker is visible (ADVICE r13), and same-session
-    ``mark_committed`` / ``compact_in_place`` still invalidate
-    eagerly. Telemetry must not cost an extra Spark job per search
-    (ADVICE r12)."""
+    (op id, marker mtime) set the count was taken under (one ``_ops``
+    dir listing, the same metadata walk every search already pays —
+    never a Spark job), so a mutation landed by ANOTHER process busts
+    it the moment its commit marker is visible. The mtimes matter: op
+    ids restart at 0 after ``compact_in_place``, so a foreign compact
+    followed by new ops can reproduce the old id set exactly. Same-
+    session ``mark_committed`` / ``compact_in_place`` still invalidate
+    eagerly. Telemetry must not cost an extra Spark job per search."""
     base = path.rstrip("/")
     key = (base, as_of, context)
-    com = committed_ops(spark, base)
     token = frozenset(
-        com if as_of is None else {i for i in com if i <= as_of}
+        (i, t)
+        for i, t in commit_markers(spark, base).items()
+        if as_of is None or i <= as_of
     )
     if not latest.head(1):
         _contested_count_memo[key] = (token, 0)

@@ -13,9 +13,9 @@ Reference: ``multicollinearity.py:92-131`` (df.corr → np.linalg.inv),
 Scale split (SURVEY §2.4 notes): the N-dimension of every statistic is
 distributed (one scan, map-side partial aggs); the d×d matrices are
 tiny (d ≤ a few hundred) and are finished driver-side — inverting a
-64×64 matrix is not a distributed op. The KS all-pairs matrix runs as
-d²/2 independent Arrow-batched group tasks where the reference is a
-sequential Python double loop.
+64×64 matrix is not a distributed op. The KS all-pairs matrix is one
+scan and one shuffle into one Arrow group per dimension pair, where the
+reference is a sequential Python double loop.
 """
 
 from __future__ import annotations
@@ -180,155 +180,64 @@ def ks_two_sample(
     )
 
 
-def ks_matrix(
-    emb: DataFrame,
-    dims: int,
-    *,
-    vec_col: str = "embedding",
-    ranged: bool = True,
-    n_bins: int = 64,
-) -> DataFrame:
+def ks_matrix(emb: DataFrame, dims: int, *, vec_col: str = "embedding") -> DataFrame:
     """A10 at scale: two-sample KS statistic for every dimension pair
-    (i < j). The reference runs d²/2 sequential scipy calls under a
-    100k-row assert (``komolgorovsmirnov.py:84,90-113``).
+    (i < j) → (pos_i, pos_j, ks_stat). The reference runs d²/2
+    sequential scipy calls under a 100k-row assert
+    (``komolgorovsmirnov.py:84,90-113``).
 
-    ``ranged=True`` (default, VERDICT r2 #2): fully declarative
-    (pair, bin)-partitioned ECDF — NO task ever materializes a whole
-    dimension pair (the cliff the reference's 100k assert guards):
+    One scan, one shuffle, no join: each value of ``slice(vec, 1,
+    dims)`` explodes straight to its d-1 pairs through a literal
+    per-position partner array, tagged ``side = pos > partner`` (0 =
+    the pair's lower dimension). One Arrow group task per pair then
+    sorts both samples and takes max |ΔECDF| over ``searchsorted(...,
+    side="right")`` counts — integer counts, so D is exact and ties
+    count correctly.
 
-    1. tagged union (pair, val, side) — 2·N·d_pairs rows, one scan;
-    2. value bins per pair from broadcast per-dim min/max (bin ids are
-       monotone in the value, so all rows in earlier bins precede all
-       rows in later bins in the value order);
-    3. per-(pair, bin) running counts via a RANGE window (ties count
-       correctly), partition size N/n_bins — bounded;
-    4. carry-in per (pair, bin): exclusive prefix over the per-bin
-       totals table (pairs × n_bins rows — a window over ≤ n_bins rows
-       per pair), broadcast-joined back;
-    5. D = max |c0/n0 − c1/n1| per pair.
-
-    Counts are integers, so the statistic is bit-identical to the
-    ``ranged=False`` Arrow form (kept as the small-d fast path: one
-    task per pair, each holding both dims' full arrays)."""
-    pairs = [(i, j) for i in range(dims) for j in range(dims) if i < j]
-    spark = emb.sparkSession
-    pair_df = spark.createDataFrame(pairs, "pos_i int, pos_j int")
-    d = dim_table(emb, vec_col=vec_col).filter(F.col("pos") < dims)
-    left = d.join(pair_df, d.pos == pair_df.pos_i).select(
-        "pos_i", "pos_j", F.col("val"), F.lit(0).alias("side")
+    Memory contract: each pair group holds 2·N doubles (16·N bytes,
+    both dimensions' values) in one Python task. The reference guarded
+    the same cost with ``N ≤ 100k``."""
+    others = F.array(*[
+        F.array(*[F.lit(q) for q in range(dims) if q != p]) for p in range(dims)
+    ])
+    vals = emb.select(
+        F.posexplode(F.slice(F.col(vec_col).cast("array<double>"), 1, dims)).alias("pos", "val")
     )
-    right = d.join(pair_df, d.pos == pair_df.pos_j).select(
-        "pos_i", "pos_j", F.col("val"), F.lit(1).alias("side")
+    tagged = vals.select(
+        "val", "pos", F.explode(F.element_at(others, F.col("pos") + 1)).alias("other")
+    ).select(
+        F.least("pos", "other").alias("pos_i"),
+        F.greatest("pos", "other").alias("pos_j"),
+        "val",
+        (F.col("pos") > F.col("other")).cast("int").alias("side"),
     )
-    tagged = left.unionByName(right)
 
-    if not ranged:
-        def ks(pdf: pd.DataFrame) -> pd.DataFrame:
-            a = np.sort(pdf.loc[pdf["side"] == 0, "val"].to_numpy())
-            b = np.sort(pdf.loc[pdf["side"] == 1, "val"].to_numpy())
-            allv = np.concatenate([a, b])
-            ca = np.searchsorted(a, allv, side="right") / len(a)
-            cb = np.searchsorted(b, allv, side="right") / len(b)
-            d_stat = float(np.max(np.abs(ca - cb)))
-            return pd.DataFrame(
-                {
-                    "pos_i": [pdf["pos_i"].iloc[0]],
-                    "pos_j": [pdf["pos_j"].iloc[0]],
-                    "ks_stat": [d_stat],
-                }
-            )
-
-        # same-key repartition ahead of the group shuffle (r14, guide
-        # §2.4/§2.5): the pair groups are byte-light but CPU-dense, and
-        # byte-based AQE coalescing (parallelismFirst=false) would pack
-        # all d²/2 sorts onto ONE python task; an explicit repartition
-        # on the grouping keys is exempt from coalescing and satisfies
-        # the groupBy's distribution, so no extra Exchange appears.
-        n_tasks = min(
-            len(pairs), tagged.sparkSession.sparkContext.defaultParallelism
-        )
-        return (
-            tagged.repartition(n_tasks, "pos_i", "pos_j")
-            .groupBy("pos_i", "pos_j")
-            .applyInPandas(ks, schema="pos_i int, pos_j int, ks_stat double")
+    def ks(pdf: pd.DataFrame) -> pd.DataFrame:
+        a = np.sort(pdf.loc[pdf["side"] == 0, "val"].to_numpy())
+        b = np.sort(pdf.loc[pdf["side"] == 1, "val"].to_numpy())
+        allv = np.concatenate([a, b])
+        ca = np.searchsorted(a, allv, side="right") / len(a)
+        cb = np.searchsorted(b, allv, side="right") / len(b)
+        return pd.DataFrame(
+            {
+                "pos_i": [pdf["pos_i"].iloc[0]],
+                "pos_j": [pdf["pos_j"].iloc[0]],
+                "ks_stat": [float(np.max(np.abs(ca - cb)))],
+            }
         )
 
-    from pyspark.sql import Window
-
-    # per-dim min/max (d rows) → per-pair value range, fully lazy: the
-    # old driver collect + createDataFrame cost one eager job per call
-    # (r14 optimization); bin edges only steer partitioning, results
-    # are identical for any binning
-    mmdf = d.groupBy("pos").agg(F.min("val").alias("_mn1"), F.max("val").alias("_mx1"))
-    bounds = (
-        pair_df.join(
-            mmdf.select(
-                F.col("pos").alias("pos_i"),
-                F.col("_mn1").alias("_mn_i"),
-                F.col("_mx1").alias("_mx_i"),
-            ),
-            "pos_i",
-        )
-        .join(
-            mmdf.select(
-                F.col("pos").alias("pos_j"),
-                F.col("_mn1").alias("_mn_j"),
-                F.col("_mx1").alias("_mx_j"),
-            ),
-            "pos_j",
-        )
-        .select(
-            "pos_i",
-            "pos_j",
-            F.least("_mn_i", "_mn_j").alias("_mn"),
-            F.greatest("_mx_i", "_mx_j").alias("_mx"),
-        )
+    # the pair groups are byte-light but CPU-dense: byte-based AQE
+    # coalescing would pack all d²/2 sorts onto ONE Python task. An
+    # explicit repartition on the grouping keys is exempt from
+    # coalescing and already satisfies the groupBy's distribution, so
+    # it is the plan's only Exchange.
+    n_pairs = dims * (dims - 1) // 2
+    n_tasks = max(1, min(n_pairs, emb.sparkSession.sparkContext.defaultParallelism))
+    return (
+        tagged.repartition(n_tasks, "pos_i", "pos_j")
+        .groupBy("pos_i", "pos_j")
+        .applyInPandas(ks, schema="pos_i int, pos_j int, ks_stat double")
     )
-    b = tagged.join(F.broadcast(bounds), ["pos_i", "pos_j"])
-    width = (F.col("_mx") - F.col("_mn")) / n_bins
-    raw_bin = F.floor((F.col("val") - F.col("_mn")) / width).cast("int")
-    binned = b.withColumn(
-        "_bin",
-        F.when(
-            F.col("_mx") == F.col("_mn"), F.lit(0)
-        ).otherwise(F.least(F.greatest(raw_bin, F.lit(0)), F.lit(n_bins - 1))),
-    ).drop("_mn", "_mx")
-
-    is0 = F.when(F.col("side") == 0, 1).otherwise(0)
-    is1 = F.when(F.col("side") == 1, 1).otherwise(0)
-    # per-(pair, bin) totals: tiny table, windows over ≤ n_bins rows
-    totals = binned.groupBy("pos_i", "pos_j", "_bin").agg(
-        F.sum(is0).alias("_t0"), F.sum(is1).alias("_t1")
-    )
-    w_pfx = (
-        Window.partitionBy("pos_i", "pos_j")
-        .orderBy("_bin")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = Window.partitionBy("pos_i", "pos_j")
-    carry = totals.select(
-        "pos_i",
-        "pos_j",
-        "_bin",
-        F.coalesce(F.sum("_t0").over(w_pfx), F.lit(0)).alias("_pfx0"),
-        F.coalesce(F.sum("_t1").over(w_pfx), F.lit(0)).alias("_pfx1"),
-        F.sum("_t0").over(w_tot).alias("_n0"),
-        F.sum("_t1").over(w_tot).alias("_n1"),
-    )
-    w_loc = (
-        Window.partitionBy("pos_i", "pos_j", "_bin")
-        .orderBy("val")
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    e = binned.join(F.broadcast(carry), ["pos_i", "pos_j", "_bin"]).select(
-        "pos_i",
-        "pos_j",
-        F.abs(
-            (F.sum(is0).over(w_loc) + F.col("_pfx0")) / F.col("_n0")
-            - (F.sum(is1).over(w_loc) + F.col("_pfx1")) / F.col("_n1")
-        ).alias("_d"),
-    )
-    return e.groupBy("pos_i", "pos_j").agg(F.max("_d").alias("ks_stat"))
 
 
 def buddy_order(weights: np.ndarray) -> list[int]:

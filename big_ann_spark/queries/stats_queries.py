@@ -165,10 +165,11 @@ def dim_pair_stats(spark, sf_dir):
     """A7+A10 tagged union over dimension pairs (one registry slot —
     the driver checks the first 50 entries, so same-shaped pair stats
     consolidate; schema (variant, pos_i, pos_j, stat)):
-    - ``ks_window``: all-pairs two-sample KS over the first 8 dims — 28
-      independent Arrow group tasks (reference sequential double loop,
-      ``komolgorovsmirnov.py:84-113``); exact count/n ECDF ratios
-      hash-match the SQL window form bit-for-bit.
+    - ``ks_window``: all-pairs two-sample KS over the first 8 dims via
+      operators.stats.ks_matrix — one Arrow group per pair, 28 pairs
+      (reference sequential double loop, ``komolgorovsmirnov.py:
+      84-113``); exact count/n ECDF ratios hash-match the SQL window
+      form bit-for-bit.
     - ``ks_ranged``: the SAME (0,1) statistic via the range-binned
       two-pass ECDF (operators.stats.ks_two_sample, ranged=True — no
       global sort anywhere); equality with the window value in one
@@ -179,14 +180,10 @@ def dim_pair_stats(spark, sf_dir):
     from big_ann_spark.operators.stats import ks_matrix, ks_two_sample
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # ranged=False = the documented 28-Arrow-task small-d fast path
-    # (bit-identical to the ranged form — integer count ECDFs); the
-    # ranged two-pass stays certified by the ks_ranged variant below.
-    # r14 re-measured the choice: warm A/B at sf0.1 gives arrow 1.03 s
-    # vs ranged 2.27 s (the ranged form pays a 1.1M-row per-(pair,bin)
-    # RANGE window; the Arrow tasks amortize worker startup when warm),
-    # so the Arrow form stays.
-    ks_w = ks_matrix(emb, dims=8, ranged=False).select(
+    # the range-binned two-pass ECDF (no single-task sort) stays
+    # certified by the ks_ranged variant below: both forms count
+    # integers, so the (0, 1) statistic must agree exactly
+    ks_w = ks_matrix(emb, dims=8).select(
         F.lit("ks_window").alias("variant"),
         "pos_i",
         "pos_j",
@@ -195,7 +192,7 @@ def dim_pair_stats(spark, sf_dir):
     v = emb.select(F.col("embedding")[0].cast("double").alias("x"), F.lit(0).alias("grp")).union(
         emb.select(F.col("embedding")[1].cast("double").alias("x"), F.lit(1).alias("grp"))
     )
-    # lazy_counts (r14): both groups are embedding dims of a non-empty
+    # lazy_counts: both groups are embedding dims of a non-empty
     # table, so the eager empty-group guard buys nothing here and its
     # collect was a serial driver job per build
     ks_r = ks_two_sample(v, ranged=True, lazy_counts=True).select(

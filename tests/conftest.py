@@ -24,79 +24,30 @@ def sf_dir() -> str:
     return SF_DIR
 
 
-# ---- slow tier (VERDICT r14 #1) ---------------------------------------
-# A plain `pytest tests/` must finish inside the grading driver's window
-# (the r14 run was cut off at ~92% with zero failures after ~30+ min).
-# The multi-minute scale/stream/runbook/CLI tests below are gated behind
-# SPARK_GRAFT_SLOW_TESTS=1; every gated feature keeps a faster sibling in
-# the default run (e.g. runbook[raw] stays while [pq]/[sq8] are gated,
-# one crash-restart parameterization stays per stream family), and the
-# hypothesis property suites keep running with a reduced example count
-# (see the _prop_examples helper in the property test modules).
+# ---- slow tier --------------------------------------------------------
+# A plain `pytest tests/` must finish inside the CI window, so the
+# multi-minute scale/stream/runbook/CLI tests carry `@pytest.mark.slow`
+# and are skipped unless SPARK_GRAFT_SLOW_TESTS=1. Every gated feature
+# keeps a faster sibling in the default run (e.g. runbook[raw] stays
+# while [pq]/[sq8] are gated, one crash-restart parameterization stays
+# per stream family), and the hypothesis property suites keep running
+# with a reduced example count (see the _prop_examples helper in the
+# property test modules).
 # Full-coverage run: SPARK_GRAFT_SLOW_TESTS=1 python -m pytest tests/
-_SLOW_NODE_PATTERNS = [
-    # graph ANN extras: recall/convergence campaigns (the contracts are
-    # also covered by the faster graph search determinism tests)
-    "*test_ann_extras.py::test_nn_descent_recall_improves_and_converges*",
-    "*test_ann_extras.py::test_nn_descent_covers_every_node*",
-    "*test_ann_extras.py::test_knn_graph_search_from_disk_equals_in_memory*",
-    "*test_ann_extras.py::test_knn_graph_search_recall_and_determinism*",
-    "*test_ann_extras.py::test_two_level_seeding_contract*",
-    "*test_ann_extras.py::test_multiprobe_lifts_recall*",
-    "*test_ann_extras.py::test_refine_schedule_contract*",
-    "*test_ann_extras.py::test_graph_search_exhausted_space_early_exit*",
-    "*test_ann_extras.py::test_ivf_seeded_graph_recall_and_coverage*",
-    "*test_ann_extras.py::test_graph_layout_entries_knob*",
-    # vector mutation runbooks: [raw] stays in the default run
-    "*test_vector_ops.py::test_runbook_equals_rebuild_at_every_as_of[pq]*",
-    "*test_vector_ops.py::test_runbook_equals_rebuild_at_every_as_of[sq8]*",
-    "*test_vector_ops.py::test_cli_mutation_lifecycle*",
-    # filtered-layout runbooks/CLI (crash-window + delta exactness tests
-    # stay in the default run)
-    "*test_filtered_from_disk.py::test_tag_mutations_runbook_equals_in_memory*",
-    "*test_filtered_from_disk.py::test_cli_tag_mutation_lifecycle*",
-    "*test_filtered_from_disk.py::test_compaction_folds_tag_artifacts*",
-    "*test_filtered_from_disk.py::test_tag_op_crash_window_and_replay*",
-    # bm25 disk index: long mutation chains (delete/merge/crash basics stay)
-    "*test_bm25.py::test_as_of_snapshot_reads*",
-    "*test_bm25.py::test_replace_doc_delete_then_merge*",
-    # CLI end-to-end builds (library-level equivalents stay)
-    "*test_ivf_from_disk.py::test_cli_graph_serving_layout_from_disk*",
-    "*test_ivf_from_disk.py::test_cli_build_graph_and_search*",
-    "*test_ivf_pq_disk.py::test_cli_build_opq_refine_and_search*",
-    "*test_ivf_pq_disk.py::test_opq_from_disk_exhaustive_pool_equals_exact*",
-    # streaming ingest: one crash-restart parameterization ([pre-marker])
-    # stays per family
-    "*test_graph_stream.py::test_stream_equals_batch_landed_mutations*",
-    "*test_graph_stream.py::test_crash_restart_exactly_once[pre-land]*",
-    "*test_graph_stream.py::test_crash_restart_exactly_once[post-land]*",
-    "*test_stream_vector_index.py::test_export_to_batch_layout*",
-    "*test_stream_vector_index.py::test_live_view_many_batches_and_crashed_tail*",
-    "*test_bm25_stream.py::test_export_to_batch_layout_runs_batch_ops_unmodified*",
-    "*test_bm25_stream.py::test_compaction_preserves_index_and_resets_history*",
-    # graph mutation ledger: crash-window + rebuild-guard tests stay
-    "*test_graph_ops.py::test_graph_mutation_cli*",
-    "*test_graph_ops.py::test_compaction_into_previously_mutated_dst*",
-    "*test_graph_ops.py::test_graph_mutations_serve_live_view_exactly*",
-    "*test_graph_ops.py::test_graph_copy_on_write_compaction*",
-    "*test_graph_ops.py::test_graph_compaction_rebuild*",
-    # 2 GiB local-file WARC paths
-    "*test_warc.py::test_read_warc_stream_over_2gib_local_file*",
-    "*test_warc.py::test_read_warc_over_2gib_local_file_routes*",
-    # quantizer quality-threshold campaign (opq_beats_plain stays)
-    "*test_pq.py::test_buddy_pq_beats_plain_pq_on_correlated_dims*",
-]
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: multi-minute test; runs only with SPARK_GRAFT_SLOW_TESTS=1"
+    )
 
 
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
         return
-    # plain substring match: fnmatch would read the [param] brackets as
-    # character classes
-    subs = [p.strip("*") for p in _SLOW_NODE_PATTERNS]
     skip = pytest.mark.skip(
         reason="slow tier; set SPARK_GRAFT_SLOW_TESTS=1 to run"
     )
     for item in items:
-        if any(s in item.nodeid for s in subs):
+        if item.get_closest_marker("slow"):
             item.add_marker(skip)

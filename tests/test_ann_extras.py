@@ -11,6 +11,7 @@ from big_ann_spark.operators import dedup as D
 from big_ann_spark.operators.knn import exact_knn
 
 
+@pytest.mark.slow
 def test_multiprobe_lifts_recall(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20).select(
@@ -58,6 +59,7 @@ def test_capped_jaccard_is_lower_bound_subset(spark):
         assert j <= full[pair] + 1e-12
 
 
+@pytest.mark.slow
 def test_nn_descent_recall_improves_and_converges(spark, sf_dir):
     """NN-Descent kNN-graph: recall vs the exact (self-excluded) kNN
     graph rises monotonically with iterations and the converged graph
@@ -167,6 +169,7 @@ def test_nn_descent_recall_improves_and_converges(spark, sf_dir):
         )
 
 
+@pytest.mark.slow
 def test_nn_descent_covers_every_node(spark, sf_dir):
     """ADVICE r6: a node whose init buckets are all singletons used to
     be silently absent from the returned graph. The orphan backfill
@@ -201,6 +204,7 @@ def test_nn_descent_covers_every_node(spark, sf_dir):
     assert saw_orphan, "fixture never produced an orphan; test is vacuous"
 
 
+@pytest.mark.slow
 def test_knn_graph_search_recall_and_determinism(spark, sf_dir):
     """Beam search over the NN-Descent graph: recall rises with hop
     count and reaches >= 0.95 of the exact (self-included) top-10 at
@@ -240,6 +244,7 @@ def test_knn_graph_search_recall_and_determinism(spark, sf_dir):
     assert a == b
 
 
+@pytest.mark.slow
 def test_knn_graph_search_from_disk_equals_in_memory(spark, sf_dir, tmp_path):
     """VERDICT r11 #3 — the persisted graph tier: a write_knn_graph_layout
     serving layout must reproduce the in-memory beam search EXACTLY, in
@@ -301,6 +306,7 @@ def test_knn_graph_search_from_disk_equals_in_memory(spark, sf_dir, tmp_path):
     assert hinted and all(cols != ("node",) for cols in hinted)
 
 
+@pytest.mark.slow
 def test_graph_search_exhausted_space_early_exit(spark, sf_dir, tmp_path):
     """With n_entry >= n and a big beam the search space exhausts in
     one hop; the from-disk loop must break out of the remaining hops
@@ -355,6 +361,7 @@ def test_graph_record_fetch_is_pruned(spark, sf_dir, tmp_path):
     assert ANN._collect_ids_and_buckets(ids_df, 8, 1) == (None, None)
 
 
+@pytest.mark.slow
 def test_ivf_seeded_graph_recall_and_coverage(spark, sf_dir):
     """VERDICT r12 #1 — the scale-path graph build: IVF multi-probe
     seeding + capped refinement must (a) cover EVERY node as a src,
@@ -409,6 +416,7 @@ def test_ivf_seeded_graph_recall_and_coverage(spark, sf_dir):
     assert a == b
 
 
+@pytest.mark.slow
 def test_two_level_seeding_contract(spark, sf_dir):
     """VERDICT r13 #1 — the hierarchical (two-level) cell fit that
     removes the flat KMeans k-scaling ceiling: same coverage / rank /
@@ -496,6 +504,7 @@ def test_ivf_seeded_seed_only_and_orphan_backfill(spark, sf_dir):
     assert rows == [(0, 1), (1, 0)]
 
 
+@pytest.mark.slow
 def test_refine_schedule_contract(spark, sf_dir):
     """local_join_schedule (VERDICT r13 #4): a one-round schedule [J]
     is EXACTLY refine_iterations=1 + local_join_cap=J (the same loop,
@@ -536,6 +545,7 @@ def test_refine_schedule_contract(spark, sf_dir):
         ANN.nn_descent_knn_graph(emb, k=5, local_join_schedule=[4, 0])
 
 
+@pytest.mark.slow
 def test_graph_layout_entries_knob(spark, sf_dir, tmp_path):
     """VERDICT r12 #6 — n_entries is a build knob: the layout stores
     its entry-table size in graph_meta, searches up to it succeed,

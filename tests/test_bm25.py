@@ -397,6 +397,7 @@ def test_cli_bm25_build_search_merge(spark, tmp_path, capsys):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
+@pytest.mark.slow
 def test_replace_doc_delete_then_merge(spark, corpus, tmp_path):
     """The documented replace-a-doc flow: delete the old version, merge
     the new one. Tombstone resolution is latest-op-wins (op order), so
@@ -507,6 +508,7 @@ def test_crash_between_ledger_and_postings(spark, corpus, tmp_path, monkeypatch)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
+@pytest.mark.slow
 def test_as_of_snapshot_reads(spark, corpus, tmp_path):
     """Time travel over the op-delta layout: as_of=N is the index
     exactly as it stood after op N (a partition-range filter — no

@@ -132,6 +132,7 @@ def test_crash_restart_exactly_once(spark, crash_point):
     assert dupes == 0
 
 
+@pytest.mark.slow
 def test_compaction_preserves_index_and_resets_history(spark):
     src = tempfile.mkdtemp(prefix="bm25s_src_")
     _write_batches(spark, src, [_TEXTS[:3], _TEXTS[3:6], _TEXTS[6:]])
@@ -192,6 +193,7 @@ def test_cli_stream_compact(spark, tmp_path):
     _index_equal(live, full)
 
 
+@pytest.mark.slow
 def test_export_to_batch_layout_runs_batch_ops_unmodified(spark):
     """VERDICT r8 #8: the stream is the ingestion front, the batch
     layout the serving form — export a streamed index and run the

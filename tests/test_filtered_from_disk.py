@@ -204,6 +204,7 @@ def _cmp(got, want):
 import pytest as _pt
 
 
+@_pt.mark.slow
 @_pt.mark.parametrize("carry", [False, True])
 def test_tag_mutations_runbook_equals_in_memory(spark, sf_dir, tmp_path, carry):
     """op0: combined upsert (the %3==0 vectors WITH their tags, one
@@ -322,6 +323,7 @@ def test_vector_only_upsert_across_shards_stays_served(spark, tmp_path):
     assert abs(got[0]["dist"]) < 1e-9  # the MOVED vector's distance
 
 
+@_pt.mark.slow
 def test_tag_op_crash_window_and_replay(spark, sf_dir, tmp_path, monkeypatch):
     """A tag op crashing between partitions and its marker must stay
     INVISIBLE to search; replaying the crashed id lands it exactly
@@ -445,6 +447,7 @@ def test_tag_df_deltas_stay_exact(spark, sf_dir, tmp_path):
     assert got == want
 
 
+@_pt.mark.slow
 @_pt.mark.parametrize("carry", [False, True])
 def test_compaction_folds_tag_artifacts(spark, sf_dir, tmp_path, carry):
     """compact_vector_layout on a layout carrying tag artifacts must
@@ -484,6 +487,7 @@ def test_compaction_folds_tag_artifacts(spark, sf_dir, tmp_path, carry):
     assert posts.filter(F.col("neighbor_id") % 7 == 0).count() == 0
 
 
+@_pt.mark.slow
 @_pt.mark.parametrize("carry", [False, True])
 def test_cli_tag_mutation_lifecycle(spark, sf_dir, tmp_path, carry):
     """build-index → index-tags → index-upsert --tags-col → retag →

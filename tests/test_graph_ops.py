@@ -78,6 +78,7 @@ def _mutate(spark, emb, path):
     return op0, op1, live
 
 
+@pytest.mark.slow
 def test_graph_mutations_serve_live_view_exactly(spark, sf_dir, tmp_path):
     """In the exact-by-construction regime (n_entry >= n) the mutated
     layout must serve EXACTLY the brute-force kNN over the live view:
@@ -143,6 +144,7 @@ def test_graph_crash_window_invisible(spark, sf_dir, tmp_path):
     )
 
 
+@pytest.mark.slow
 def test_graph_compaction_rebuild(spark, sf_dir, tmp_path):
     """compact_graph_in_place folds every op into a pristine REBUILT
     layout at the same path: serving equality preserved (exact
@@ -179,6 +181,7 @@ def test_graph_compaction_rebuild(spark, sf_dir, tmp_path):
         cfs.delete(cjp, False)
 
 
+@pytest.mark.slow
 def test_graph_copy_on_write_compaction(spark, sf_dir, tmp_path):
     """compact_graph_layout to a NEW path: source untouched (still
     serves the mutated view), destination pristine and equal."""
@@ -195,6 +198,7 @@ def test_graph_copy_on_write_compaction(spark, sf_dir, tmp_path):
     assert not VO.has_vector_ops(spark, dst)
 
 
+@pytest.mark.slow
 def test_compaction_into_previously_mutated_dst(spark, sf_dir, tmp_path):
     """Review r13: a compaction target (or rebuild dir) that carried
     an op ledger from a previous generation must come out PRISTINE —
@@ -215,6 +219,7 @@ def test_compaction_into_previously_mutated_dst(spark, sf_dir, tmp_path):
     assert _serve(qs, dst) == _serve(qs, path)  # id 0 NOT resurrected-deleted
 
 
+@pytest.mark.slow
 def test_graph_mutation_cli(spark, sf_dir, tmp_path):
     """graph-upsert / graph-delete / graph-search --as-of /
     graph-compact drive the graph_ops surface end-to-end."""

@@ -105,6 +105,7 @@ def _stream(spark, src):
     )
 
 
+@pytest.mark.slow
 def test_stream_equals_batch_landed_mutations(spark, sf_dir, tmp_path):
     """The streamed ledger is INDISTINGUISHABLE from batch landing:
     same op ids, same resolved live view, same exact serving output —
@@ -166,7 +167,14 @@ def test_same_batch_insert_delete_resolves_deleted(spark, sf_dir, tmp_path):
     assert oplayout.committed_ops(spark, path) == {0}  # nothing landed
 
 
-@pytest.mark.parametrize("crash_point", ["pre-marker", "pre-land", "post-land"])
+@pytest.mark.parametrize(
+    "crash_point",
+    [
+        "pre-marker",
+        pytest.param("pre-land", marks=pytest.mark.slow),
+        pytest.param("post-land", marks=pytest.mark.slow),
+    ],
+)
 def test_crash_restart_exactly_once(spark, sf_dir, tmp_path, crash_point):
     """Kill the stream at every fault window of batch 1, restart, and
     the ledger holds exactly one op per batch — no duplicate op ids,

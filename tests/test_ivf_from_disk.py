@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_ann_spark.catalog import load_table
@@ -93,6 +94,7 @@ def test_cli_build_index_and_search(spark, sf_dir, tmp_path):
     assert any(d.startswith("shard_id=") for d in os.listdir(f"{idx}/shards"))
 
 
+@pytest.mark.slow
 def test_cli_build_graph_and_search(spark, sf_dir, tmp_path):
     """Graph-tier lifecycle as two CLI calls: build-graph (NN-Descent
     edges -> parquet) then graph-search from the landed edge list;
@@ -118,6 +120,7 @@ def test_cli_build_graph_and_search(spark, sf_dir, tmp_path):
     assert main(["graph-search", gdir, src, "--k", "5"]) == 2
 
 
+@pytest.mark.slow
 def test_cli_graph_serving_layout_from_disk(spark, sf_dir, tmp_path):
     """--serving-layout persists the graph TIER (node records: vector +
     adjacency in one bucketed row — the on-disk-HNSW analog of

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_ann_spark.catalog import load_table
@@ -171,6 +172,7 @@ def _opq_layout(spark, sf_dir):
     return got
 
 
+@pytest.mark.slow
 def test_opq_from_disk_exhaustive_pool_equals_exact(spark, sf_dir):
     """End-to-end rotation invariance: with an exhaustive pool, the
     OPQ path's exact rerank (raw vectors, unrotated queries) must
@@ -240,6 +242,7 @@ def test_opq_pool_impls_agree_and_mutations_compose(spark, sf_dir):
     _CACHE.pop(sf_dir + ":opq")
 
 
+@pytest.mark.slow
 def test_cli_build_opq_refine_and_search(spark, sf_dir, tmp_path):
     from big_ann_spark.cli import main
 
@@ -342,3 +345,66 @@ def test_binary_mutation_runbook(spark, sf_dir):
     a = sorted(map(tuple, got.select("qid", "neighbor_id", "rank").collect()))
     b = sorted(map(tuple, want.select("qid", "neighbor_id", "rank").collect()))
     assert a == b and len(a) == 40
+
+
+def test_sidecar_prefetch_outcome_is_retrieved_when_routing_raises(spark, monkeypatch):
+    """When routing raises, the background PQ sidecar load is not left
+    behind with an unread exception: the search cancels it, or waits
+    for it and reads its outcome, before the routing error propagates."""
+    import threading
+    from concurrent.futures import Future
+
+    from big_ann_spark.operators import pq as PQ
+
+    class TrackedFuture(Future):
+        retrieved = False
+
+        def result(self, timeout=None):
+            self.retrieved = True
+            return super().result(timeout)
+
+        def exception(self, timeout=None):
+            self.retrieved = True
+            return super().exception(timeout)
+
+    futures: list[TrackedFuture] = []
+
+    class Pool:
+        def submit(self, fn):
+            fut = TrackedFuture()
+
+            def run():
+                if fut.set_running_or_notify_cancel():
+                    try:
+                        fut.set_result(fn())
+                    except BaseException as e:
+                        fut.set_exception(e)
+
+            threading.Thread(target=run).start()
+            futures.append(fut)
+            return fut
+
+    sidecar_started = threading.Event()
+
+    def unreadable_codebooks(spark, path):
+        sidecar_started.set()
+        raise OSError("sidecar unreadable")
+
+    class FailingRouting:
+        def select(self, *cols):
+            return self
+
+        def collect(self):
+            sidecar_started.wait(30)
+            raise RuntimeError("routing failed")
+
+    monkeypatch.setattr(ANN, "_SIDECAR_PREFETCH", Pool())
+    monkeypatch.setattr(PQ, "load_pq_codebooks", unreadable_codebooks)
+    queries = spark.createDataFrame([(0, [0.0])], "qid long, qvec array<double>")
+    with pytest.raises(RuntimeError, match="routing failed"):
+        ANN.ivf_search_from_disk(
+            queries, "/nonexistent/layout", None, codec="pq", _routed=FailingRouting()
+        )
+    [fut] = futures
+    assert fut.done() and fut.retrieved
+    assert isinstance(fut.exception(), OSError)

@@ -101,6 +101,7 @@ def test_ivf_pq_recall(spark, trained):
     assert joined.count() == approx.count()
 
 
+@pytest.mark.slow
 def test_buddy_pq_beats_plain_pq_on_correlated_dims(spark):
     """The reference's headline composition (README.md:5-7 — buddy
     reorder feeding PQ lifts Recall@10 ~12%): on the correlation-

@@ -58,3 +58,23 @@ def test_write_sharded_prepopulates_schema_memo(spark, sf_dir):
     # and the serving-path open agrees with a bare read on those dirs
     probed = ANN.open_probed_shards(spark, path, [0, 1])
     assert probed.schema == inferred
+
+
+def test_schema_memo_evicts_only_the_oldest_entry(spark, sf_dir, monkeypatch):
+    """At its 256-entry bound the schema memo drops the oldest entry
+    (insertion order), not every hot layout at once."""
+    from big_ann_spark.operators import ann as ANN
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = SH.label_centroids(emb)
+    assign = SH.assign_to_centroids(emb, cents)
+    path = tempfile.mkdtemp(prefix="big_ann_memo_") + "/layout"
+    SH.write_sharded(assign, emb, path)
+
+    memo = {(f"/other/{i}/shards", 0): None for i in range(256)}
+    monkeypatch.setattr(ANN, "_SHARDS_SCHEMA_MEMO", memo)
+    ANN.open_probed_shards(spark, path, [0])
+    assert len(memo) == 256
+    assert ("/other/0/shards", 0) not in memo
+    assert ("/other/1/shards", 0) in memo and ("/other/255/shards", 0) in memo
+    assert [k for k in memo if k[0] == f"{path}/shards"]

@@ -218,6 +218,7 @@ def test_search_state_reuse_and_full_resolution_agree(spark):
     assert 2 in hit_ids and 102 not in hit_ids  # revived found, deleted not
 
 
+@pytest.mark.slow
 def test_live_view_many_batches_and_crashed_tail(spark):
     """VERDICT r7 #6: the committed filter must stay O(1)-sized over
     long uncompacted runs — 12 batches plus a crashed (landed,
@@ -482,6 +483,7 @@ def test_live_view_as_of_snapshots(spark):
     assert head == want[2]
 
 
+@pytest.mark.slow
 def test_export_to_batch_layout(spark, tmp_path):
     """vindex-export: the streamed live view materialized into the
     batch write_sharded layout must serve IDENTICAL results through

@@ -81,7 +81,14 @@ def _runbook(spark, emb, path):
     }
 
 
-@pytest.mark.parametrize("codec", ["raw", "sq8", "pq"])
+@pytest.mark.parametrize(
+    "codec",
+    [
+        "raw",
+        pytest.param("sq8", marks=pytest.mark.slow),
+        pytest.param("pq", marks=pytest.mark.slow),
+    ],
+)
 def test_runbook_equals_rebuild_at_every_as_of(spark, sf_dir, codec):
     emb, cents, path = _build_layout(
         spark, sf_dir, sq8=codec == "sq8", pq=codec == "pq"
@@ -178,6 +185,7 @@ def test_pristine_layout_short_circuits(spark, sf_dir):
     assert VO.live_probed_view(spark, path, base, [0, 1]) is base
 
 
+@pytest.mark.slow
 def test_cli_mutation_lifecycle(spark, sf_dir, tmp_path):
     """build-index → index-upsert → index-delete → search (head and
     --as-of) → index-compact → search: the full CLI lifecycle, with
@@ -470,6 +478,24 @@ def test_contested_memo_busts_on_foreign_commit(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "count", boom)
     assert VO.mutation_state(spark, path) is not None
+
+
+def test_contested_memo_busts_after_foreign_compaction(spark, sf_dir, monkeypatch):
+    """Op ids restart at 0 after compact_in_place, so another process
+    that compacts and then lands as many ops reproduces the committed
+    id set exactly. The memo token also carries each commit marker's
+    mtime, so the count still re-runs."""
+    emb, cents, path = _build_layout(spark, sf_dir)
+    monkeypatch.setattr(oplayout, "invalidate_contested_memo", lambda p: None)
+    VO.delete_vectors(spark, path, [2])
+    assert VO.mutation_state(spark, path) is not None  # counts, warms memo
+    key = (path.rstrip("/"), None, "mutation_state")
+    assert oplayout._contested_count_memo[key][1] == 1
+    VO.compact_in_place(spark, path)
+    VO.delete_vectors(spark, path, [4, 5])
+    assert oplayout.committed_ops(spark, path) == {0}  # same id set as before
+    assert VO.mutation_state(spark, path) is not None
+    assert oplayout._contested_count_memo[key][1] == 2
 
 
 def test_compact_swap_lock_guards_rename_window(spark, sf_dir, monkeypatch):

@@ -474,6 +474,7 @@ def test_read_warc_stream_local_walk_equals_batch(spark, sf_dir, tmp_path):
         assert got == want and len(got) == 20
 
 
+@pytest.mark.slow
 def test_read_warc_stream_over_2gib_local_file(spark, tmp_path):
     """VERDICT r12 #5 — the streaming route must ingest a >2 GiB local
     file (binaryFile's content cap never applies: content is walked
@@ -504,6 +505,7 @@ def test_read_warc_stream_over_2gib_local_file(spark, tmp_path):
     assert {r["record_id"] for r in got} == {f"<urn:shuge:{i}>" for i in range(n)}
 
 
+@pytest.mark.slow
 def test_read_warc_over_2gib_local_file_routes(spark, tmp_path):
     """REGRESSION (ADVICE r12): the blob-route filter must be a PURE
     length predicate. The old disjunction (length <= cap) | ~file:
