@@ -14,7 +14,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 HEADLINE = [
     "knn_exact_top10",
-    "knn_exact_arrow",
     "knn_cosine_top5",
     "pairwise_distance_stats",
     "q1_pricing_summary",
@@ -340,8 +339,7 @@ def measure_cold_disk_qps(
             layout,
             n_queries,
             lambda: ANN.ivf_search_from_disk(
-                queries, layout, cents, k=10, nprobe=2,
-                codec="pq", pool_impl="arrow",
+                queries, layout, cents, k=10, nprobe=2, codec="pq"
             ),
         )
         return raw, pq, {"raw": raw_runs, "pq": pq_runs}
@@ -495,19 +493,19 @@ def main() -> None:
     slowdown = max(min(canary_before, canary_after) / CANARY_REF_SEC, 1e-6)
     total_normalized = round(total / slowdown, 3)
     # A14: the reference's QPS metric (MAXIMUM_QUERIES / elapsed,
-    # kanndi_search.py:64-66) — ours over the arrow kNN batch.
-    # Reported from BOTH the warm min and the cold first run (VERDICT
-    # r5 #8): min is the code-cost number, cold is what a fresh session
-    # sees — publishing both keeps cross-round comparisons unambiguous.
+    # kanndi_search.py:64-66) — ours over the exact kNN batch.
+    # Reported from BOTH the warm min and the cold first run: min is
+    # the code-cost number, cold is what a fresh session sees —
+    # publishing both keeps cross-round comparisons unambiguous.
     n_queries = 20
     knn_qps = (
-        round(n_queries / timings["knn_exact_arrow"], 2)
-        if timings.get("knn_exact_arrow")
+        round(n_queries / timings["knn_exact_top10"], 2)
+        if timings.get("knn_exact_top10")
         else None
     )
     knn_qps_cold = (
-        round(n_queries / cold["knn_exact_arrow"], 2)
-        if cold.get("knn_exact_arrow")
+        round(n_queries / cold["knn_exact_top10"], 2)
+        if cold.get("knn_exact_top10")
         else None
     )
     print(

@@ -1130,7 +1130,7 @@ def main(argv: list[str] | None = None) -> int:
             out = ANN.ivf_search_from_disk(
                 q, args.index, cents, k=args.k, nprobe=args.nprobe,
                 id_col=args.id_col, vec_col=args.vec_col,
-                codec="sq8", pool_impl="arrow", as_of=args.as_of,
+                codec="sq8", as_of=args.as_of,
             )
         elif "pq_codes" in probed.columns and args.vec_col in probed.columns:
             # --pq-refine / --opq-refine layout: ADC candidate scan
@@ -1141,7 +1141,7 @@ def main(argv: list[str] | None = None) -> int:
             out = ANN.ivf_search_from_disk(
                 q, args.index, cents, k=args.k, nprobe=args.nprobe,
                 id_col=args.id_col, vec_col=args.vec_col,
-                codec=pq_codec, pool_impl="arrow", as_of=args.as_of,
+                codec=pq_codec, as_of=args.as_of,
             )
         elif "bcodes" in probed.columns and args.vec_col in probed.columns:
             # --binary-refine layout: Hamming candidate scan (bcodes

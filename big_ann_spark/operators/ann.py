@@ -171,7 +171,6 @@ def ivf_search_from_disk(
     codec: str = "raw",
     rerank_factor: int = 4,
     max_id_pushdown: int = 100_000,
-    pool_impl: str = "fold",
     as_of: int | None = None,
     _routed: DataFrame | None = None,
     _sq8_ranges: tuple[list[float], list[float]] | None = None,
@@ -187,13 +186,14 @@ def ivf_search_from_disk(
     ``codec="sq8"`` (layout written with ``sq8_ranges``): the candidate
     pass scans ONLY the ``codes`` column of the probed shards — parquet
     column pruning drops the raw float32 vectors, ~4× less IO on the
-    dominant phase — scoring decoded bucket midpoints in whole-stage
-    codegen. The top-``k·rerank_factor`` quantized candidates are then
-    re-ranked exactly: their ids (bounded by Q·k·rerank_factor, and
-    In-pushed only while ≤ ``max_id_pushdown`` — the BM25
-    MAX_PUSHDOWN_TERMS lesson) fetch raw vectors from the id-sorted
-    shard files with row-group/page skipping, so the raw column is read
-    at candidate granularity, not probed-shard granularity.
+    dominant phase — scoring decoded bucket midpoints (``sq8_pool``).
+    The top-``k·rerank_factor`` quantized candidates are then re-ranked
+    exactly: while the pool holds at most ``max_id_pushdown`` rows (the
+    BM25 MAX_PUSHDOWN_TERMS lesson) their ids are In-pushed and fetch
+    raw vectors from the id-sorted shard files with row-group/page
+    skipping, so the raw column is read at candidate granularity, not
+    probed-shard granularity; a larger pool is never collected and
+    joins the probed shards distributed instead.
 
     ``as_of``: SNAPSHOT search — the layout exactly as of committed
     mutation op ``as_of`` (``operators.vector_ops``; −1 = the pristine
@@ -218,11 +218,10 @@ def ivf_search_from_disk(
             queries, centroids, nprobe, query_id=query_id, query_vec=query_vec, dim=dim
         ).localCheckpoint(eager=False)
     )
-    # one routing materialization: the arrow pools and the pq
-    # fold LUT build need the routed ROWS on the driver anyway — when a
-    # pool will collect them, collect once here and derive probe_ids
-    # from the same rows instead of running a second serial job over
-    # the same contractually-tiny table
+    # one routing materialization: the sq8/pq pools need the routed
+    # ROWS on the driver anyway, so collect once here and derive
+    # probe_ids from the same rows instead of running a second serial
+    # job over the same contractually-tiny table
     # sidecar prefetch: the codebooks (+ optional OPQ rotation) live in
     # layout sidecars with NO data dependency on routing, so their read
     # jobs run on a background thread while the routing job runs; the
@@ -241,12 +240,8 @@ def ivf_search_from_disk(
 
         sidecar_fut = _SIDECAR_PREFETCH.submit(_load_pq_sidecars)
     routed_rows = None
-    pool_needs_rows = (codec == "sq8" and pool_impl == "arrow") or codec in (
-        "pq",
-        "opq",
-    )
     try:
-        if pool_needs_rows:
+        if codec in ("sq8", "pq", "opq"):
             routed_rows = routed.select("qid", "qvec", "shard_id").collect()
             probe_ids = sorted({int(r["shard_id"]) for r in routed_rows})
         else:
@@ -285,8 +280,7 @@ def ivf_search_from_disk(
     if codec == "sq8":
         pool = sq8_pool(
             routed, shards, path, k * rerank_factor,
-            id_col=id_col, dim=dim, impl=pool_impl, ranges=_sq8_ranges,
-            routed_rows=routed_rows,
+            id_col=id_col, ranges=_sq8_ranges, routed_rows=routed_rows,
         )
     elif codec in ("pq", "opq"):
         # OPQ is the PQ tier with codes in a LEARNED ROTATED space:
@@ -305,8 +299,7 @@ def ivf_search_from_disk(
             )
         pool = pq_pool(
             routed, shards, path, k * rerank_factor,
-            id_col=id_col, impl=pool_impl, routed_rows=routed_rows,
-            _sidecars=sidecars,
+            id_col=id_col, routed_rows=routed_rows, _sidecars=sidecars,
         )
     elif codec == "binary":
         pool = binary_pool(routed, shards, path, k * rerank_factor, id_col=id_col)
@@ -315,26 +308,26 @@ def ivf_search_from_disk(
             f"unknown codec {codec!r}; use 'raw', 'sq8', 'pq', 'opq' or "
             "'binary'"
         )
-    # ONE pool materialization (r15): the pool is contractually tiny
-    # (<= Q * k * rerank_factor rows — the same bound the cand-id
-    # collect always relied on), so collect its (qid, neighbor_id)
-    # pairs once and derive BOTH the id-pushdown list and the rerank's
-    # broadcast pair table from the same rows. The old chain was a
-    # lazy checkpoint + a distinct() collect (an extra exchange and
-    # AQE stage-job) + a pool-subtree rescan inside the rerank plan —
-    # three serial pieces over one tiny table.
+    # ONE pool materialization: the pool is Q * k * rerank_factor rows,
+    # so collect its (qid, neighbor_id) pairs once — bounded at
+    # max_id_pushdown + 1 rows — and derive BOTH the id-pushdown list
+    # and the rerank's broadcast pair table from the same rows. Past
+    # the bound the rerank joins the pool DataFrame itself,
+    # distributed, with no id pushdown.
     pool_pairs = pool.select("qid", "neighbor_id")
-    pool_rows = pool_pairs.collect()
-    cand_ids = sorted({r["neighbor_id"] for r in pool_rows})
+    pool_rows = pool_pairs.limit(max_id_pushdown + 1).collect()
     raw = shards.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
-    if len(cand_ids) <= max_id_pushdown:
+    if len(pool_rows) <= max_id_pushdown:
+        cand_ids = sorted({r["neighbor_id"] for r in pool_rows})
         raw = raw.filter(_isin_ids("neighbor_id", cand_ids))
-    pairs_lit = spark.createDataFrame(pool_rows, pool_pairs.schema)
+        pairs = F.broadcast(spark.createDataFrame(pool_rows, pool_pairs.schema))
+    else:
+        pairs = pool_pairs
     q = queries.select(
         F.col(query_id).alias("qid"), F.col(query_vec).alias("_qv")
     )
     exact = (
-        raw.join(F.broadcast(pairs_lit), "neighbor_id")
+        raw.join(pairs, "neighbor_id")
         .join(F.broadcast(q), "qid")
         .select(
             "qid", "neighbor_id", l2_distance("_qv", vec_col, dim).alias("dist")
@@ -352,9 +345,6 @@ def sq8_pool(
     k_pool: int,
     *,
     id_col: str = "vec_id",
-    dim: int | None = None,
-    impl: str = "fold",
-    rerank_margin: int = 5,
     ranges: tuple[list[float], list[float]] | None = None,
     routed_rows=None,
 ) -> DataFrame:
@@ -364,66 +354,59 @@ def sq8_pool(
     scan — plan-pinned in tests), top-``k_pool`` per query by
     (quantized dist, id). The exact-rerank tier consumes this.
 
-    ``impl``: ``"fold"`` is the codegen/oracle-shaped projection —
-    per-dim decode + sequential fold, bit-identical to the DuckDB
-    mirror. ``"arrow"`` is the scale path (the exact_knn/assign
-    pattern): mapInArrow decodes each batch with the IDENTICAL
-    arithmetic order, GEMM-nominates an error-bound-widened candidate
-    band per (routed query, shard) and selects within it by the exact
-    sequential fold — DETERMINISTICALLY bit-equal to the fold impl
-    (see ``_sq8_pool_arrow``; parity-tested) while the scan runs at
-    memory bandwidth instead of interpreted-expression speed (measured
-    ~6× on 2M×64, SCALE.md)."""
+    Each Arrow batch decodes its codes once with the arithmetic of
+    ``sq8_decode_col``, ``mn + ((c + 0.5) * (mx − mn)) / 255`` (numpy
+    elementwise ops round identically to the scalar expression), and
+    selects per (routed query, shard) through ``knn.fold_l2_topk``: a
+    GEMM nominates an error-bound band and the left-to-right fold
+    ranks inside it. Pool distances are therefore the fold
+    ``l2_distance(qvec, sq8_decode_col(codes))`` bit-for-bit, however
+    many near-tie GEMM inversions a batch produces, while the scan runs
+    at memory bandwidth (measured ~6× the expression fold on 2M×64,
+    SCALE.md).
+
+    ``ranges``: the layout's (mins, maxs) sidecar values when the
+    caller already holds them — skips the one-row driver read, one
+    fewer serial job on the serving path."""
+    import numpy as np
+
     from big_ann_spark.operators import oplayout
+    from big_ann_spark.operators.knn import fold_l2_topk
 
     spark = routed.sparkSession
-    if ranges is not None:
-        # caller already holds the layout's (mins, maxs) sidecar values
-        # (e.g. from the build it just ran, or a session-scoped layout
-        # cache) — skip the per-search one-row driver read (r14: one
-        # fewer serial job on the serving critical path)
-        mins, maxs = list(ranges[0]), list(ranges[1])
-    else:
+    if ranges is None:
         ranges_path = f"{path}/sq8_ranges.parquet"
         if not oplayout.path_exists(spark, ranges_path):
-            # layouts written before the sidecar rename (r9) used
-            # {path}/sq8.parquet — read them rather than forcing a
-            # rebuild. An existence check, not a bare except: a genuine
-            # read failure (permissions, corrupt footer) must surface
-            # as itself, not as a misleading not-found on the legacy
-            # name.
+            # older layouts named the sidecar {path}/sq8.parquet — read
+            # them rather than forcing a rebuild. An existence check,
+            # not a bare except: a genuine read failure (permissions,
+            # corrupt footer) must surface as itself, not as a
+            # misleading not-found on the legacy name.
             ranges_path = f"{path}/sq8.parquet"
-        # explicit schema (r14): write_sharded's sidecar schema — no
-        # footer inference job on the serving path
+        # explicit schema (write_sharded's sidecar schema): no footer
+        # inference job on the serving path
         rng = (
             spark.read.schema("mins array<double>, maxs array<double>")
             .parquet(ranges_path)
             .collect()[0]
         )
-        mins, maxs = list(rng["mins"]), list(rng["maxs"])
-    if impl == "arrow":
-        return _sq8_pool_arrow(
-            routed, shards, mins, maxs, k_pool,
-            id_col=id_col, rerank_margin=rerank_margin,
-            routed_rows=routed_rows,
-        )
-    if impl != "fold":
-        raise ValueError(f"impl must be 'fold' or 'arrow', got {impl!r}")
-    from big_ann_spark.operators.pq import sq8_decode_col
+        ranges = (rng["mins"], rng["maxs"])
+    mn = np.array(ranges[0], dtype=np.float64)
+    mx = np.array(ranges[1], dtype=np.float64)
 
-    cands = routed.join(
-        shards.select(
-            F.col(id_col).alias("neighbor_id"), F.col("codes"), "shard_id"
-        ),
-        "shard_id",
-    )
-    scored = cands.select(
-        "qid",
-        "neighbor_id",
-        l2_distance("qvec", sq8_decode_col("codes", mins, maxs), dim).alias("dist"),
-    )
-    return top_k_per_group(
-        scored, ["qid"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k_pool
+    def make_state(qids, qvec_by_id):
+        return np.array([qvec_by_id[int(q)] for q in qids], dtype=np.float64)
+
+    def score_shard(qmat, qidx, codes_rows, id_rows):
+        X = mn + ((codes_rows + 0.5) * (mx - mn)) / 255.0
+        qi, sel_ids, dists = fold_l2_topk(qmat[qidx], X, id_rows, k_pool)
+        return qidx[qi], sel_ids, dists
+
+    return _arrow_nominating_pool(
+        routed, shards, k_pool,
+        id_col=id_col, payload_col="codes", payload_dtype=np.float64,
+        make_state=make_state, score_shard=score_shard,
+        routed_rows=routed_rows,
     )
 
 
@@ -444,18 +427,18 @@ def _arrow_nominating_pool(
     ids, caller-built per-query state, shard→query-index lists); each
     Arrow batch extracts the payload matrix once, and for every
     (probed shard ∩ batch) group the caller's
-    ``score_shard(state, qids, qidx, payload_rows, id_rows)`` yields
-    (global qid, selected ids, dists) nominations — emitted as
+    ``score_shard(state, qidx, payload_rows, id_rows)`` returns aligned
+    (query index, neighbor id, dist) arrays — emitted as
     (qid, neighbor_id, dist) rows and globally top-``k_pool``'d per
-    query with the fold impls' (dist, id) tie-break. The nomination
-    arithmetic lives entirely in the scorer, so bit-parity with the
-    expression impls is the scorer's contract, not the skeleton's."""
+    query by (dist, id). The distance arithmetic lives entirely in the
+    scorer.
+
+    ``routed_rows``: a caller that already collected the routing table
+    (ivf_search_from_disk derives probe_ids from the same rows) passes
+    it through — one routing materialization per search, not two
+    serial jobs over the same tiny table."""
     import numpy as np
 
-    # routed_rows (r14): a caller that already collected the routing
-    # table (ivf_search_from_disk derives probe_ids from the same rows)
-    # passes it through — one routing materialization per search, not
-    # two serial jobs over the same 40-row table
     rrows = (
         routed_rows
         if routed_rows is not None
@@ -491,12 +474,10 @@ def _arrow_nominating_pool(
                 if qidx is None or len(qidx) == 0:
                     continue
                 rows = np.flatnonzero(sh == s)
-                for gq, sel_ids, dists in score_shard(
-                    state, qids, qidx, payload[rows], ids[rows]
-                ):
-                    out_q.append(np.full(len(sel_ids), gq, dtype=np.int64))
-                    out_n.append(sel_ids)
-                    out_d.append(np.asarray(dists, dtype=np.float64))
+                qi, sel_ids, dists = score_shard(state, qidx, payload[rows], ids[rows])
+                out_q.append(qids[qi])
+                out_n.append(sel_ids)
+                out_d.append(dists)
             if not out_q:
                 continue
             yield pa.RecordBatch.from_arrays(
@@ -516,83 +497,6 @@ def _arrow_nominating_pool(
     )
 
 
-def _sq8_pool_arrow(
-    routed: DataFrame,
-    shards: DataFrame,
-    mins: list[float],
-    maxs: list[float],
-    k_pool: int,
-    *,
-    id_col: str = "vec_id",
-    rerank_margin: int = 5,
-    routed_rows=None,
-) -> DataFrame:
-    """BLAS scoring of the codes scan: each batch decodes its codes
-    ONCE with the exact fold-order arithmetic
-    ``mn + ((c + 0.5) * (mx − mn)) / 255`` (numpy elementwise ops round
-    identically to the scalar expression, so decoded values are
-    bit-equal to ``sq8_decode_col``).
-
-    Fold bit-parity is DETERMINISTIC, not margin-probabilistic: GEMM
-    distances nominate a candidate BAND — every row within the kk-th
-    smallest GEMM distance widened by 2δ, where δ is an a-priori bound
-    on |GEMM − fold| derived from the batch (FP summation error:
-    ``|√a − √b| ≤ √|a−b|`` and both accumulations carry at most
-    ``4·d·ulp·(‖q‖+‖x‖)²`` of squared-distance error) — and the final
-    kk are selected INSIDE the band by the exact sequential fold
-    (dist, id) order. Any row the fold impl would rank into the top kk
-    lies within the band by construction, so emitted pools are
-    bit-equal to ``impl="fold"`` regardless of how many near-tie GEMM
-    inversions a batch produces. ``rerank_margin`` only sizes kk (the
-    per-shard nomination count, kk = k_pool + margin ≥ k_pool) — it no
-    longer carries any correctness weight."""
-    import numpy as np
-
-    mn = np.array(mins, dtype=np.float64)
-    mx = np.array(maxs, dtype=np.float64)
-    n_cand = k_pool + rerank_margin
-
-    def make_state(qids, qvec_by_id):
-        return np.array(
-            [qvec_by_id[int(q)] for q in qids], dtype=np.float64
-        )
-
-    def score_shard(qmat, qids, qidx, codes_rows, id_rows):
-        from big_ann_spark.operators.knn import _exact_fold_l2
-
-        # EXACT decode order: mn + ((c + 0.5) * (mx - mn)) / 255
-        X = mn + ((codes_rows + 0.5) * (mx - mn)) / 255.0
-        Q = qmat[qidx]
-        qsq = (Q * Q).sum(axis=1)
-        d2 = qsq[:, None] + (X * X).sum(axis=1)[None, :] - 2.0 * (Q @ X.T)
-        np.maximum(d2, 0.0, out=d2)
-        d = np.sqrt(d2)
-        kk = min(n_cand, d.shape[1])
-        part_idx = np.argpartition(d, kk - 1, axis=1)[:, :kk]
-        eps = np.finfo(np.float64).eps
-        fp_bound = np.sqrt(4.0 * X.shape[1] * eps)
-        xnorm = float(np.sqrt((X * X).sum(axis=1).max())) if X.shape[0] else 0.0
-        for qi in range(d.shape[0]):
-            row = d[qi]
-            thresh = row[part_idx[qi]].max()
-            delta = fp_bound * (np.sqrt(qsq[qi]) + xnorm) + 8.0 * eps * thresh
-            cand = np.flatnonzero(row <= thresh + 2.0 * delta)
-            ex = _exact_fold_l2(Q[qi], X[cand], sqrt=True)
-            order = np.lexsort((id_rows[cand], ex))[:kk]
-            yield (
-                qids[qidx[qi]],
-                id_rows[cand[order]],
-                ex[order],
-            )
-
-    return _arrow_nominating_pool(
-        routed, shards, k_pool,
-        id_col=id_col, payload_col="codes", payload_dtype=np.float64,
-        make_state=make_state, score_shard=score_shard,
-        routed_rows=routed_rows,
-    )
-
-
 def pq_pool(
     routed: DataFrame,
     shards: DataFrame,
@@ -600,7 +504,6 @@ def pq_pool(
     k_pool: int,
     *,
     id_col: str = "vec_id",
-    impl: str = "fold",
     routed_rows=None,
     _sidecars: tuple | None = None,
 ) -> DataFrame:
@@ -614,13 +517,19 @@ def pq_pool(
     per query by (adc dist, id); ADC distances are approximate, the
     exact-rerank tier above fixes ranks and emits true distances.
 
-    ``impl``: ``"fold"`` scores in whole-stage codegen (zip_with +
-    element_at per row — interpreted-expression cost scales with m);
-    ``"arrow"`` gathers the same LUT entries with numpy fancy indexing
-    per Arrow batch, accumulating left-to-right over j so emitted
-    distances are BIT-EQUAL to the fold (parity-tested) while the scan
-    runs at memory bandwidth — the sq8 arrow-pool pattern."""
+    Each Arrow batch gathers ``lut[j, codes[:, j]]`` with numpy fancy
+    indexing and accumulates left-to-right over j, then selects through
+    ``knn.band_select`` with a zero-width band (the gathered sum is
+    already the exact score).
+
+    ``_sidecars``: (codebooks, rotation) already loaded by the caller —
+    ivf_search_from_disk prefetches them on a background thread
+    concurrent with the routing collect; values are identical to
+    loading here."""
+    import numpy as np
+
     from big_ann_spark.operators import oplayout
+    from big_ann_spark.operators.knn import band_select
     from big_ann_spark.operators.pq import (
         load_pq_codebooks,
         load_rotation,
@@ -628,10 +537,6 @@ def pq_pool(
     )
 
     spark = routed.sparkSession
-    # ``_sidecars``: (codebooks, rotation) already loaded by the caller
-    # — ivf_search_from_disk prefetches them on a background thread
-    # concurrent with the routing collect (r15); values are identical
-    # to loading here.
     if _sidecars is not None:
         codebooks, rotation = _sidecars
     else:
@@ -644,53 +549,34 @@ def pq_pool(
         rotation = None
         if oplayout.path_exists(spark, f"{path}/opq_rotation.parquet"):
             rotation = load_rotation(spark, f"{path}/opq_rotation.parquet")
-    if impl == "arrow":
-        return _pq_pool_arrow(
-            routed, shards, codebooks, k_pool, id_col=id_col,
-            rotation=rotation, routed_rows=routed_rows,
-        )
-    if impl != "fold":
-        raise ValueError(f"impl must be 'fold' or 'arrow', got {impl!r}")
-    qvecs: dict[int, list[float]] = {}
-    for r in (
-        routed_rows
-        if routed_rows is not None
-        else routed.select("qid", "qvec").collect()
-    ):
-        qvecs.setdefault(int(r["qid"]), [float(x) for x in r["qvec"]])
-    if rotation is not None:
-        import numpy as np
 
-        R = np.asarray(rotation, dtype=np.float64)
-        qvecs = {
-            q: list(np.asarray(v, dtype=np.float64) @ R)
-            for q, v in qvecs.items()
-        }
-    luts = spark.createDataFrame(
-        pq_lut_rows(sorted(qvecs.items()), codebooks),
-        "qid long, lut array<array<double>>",
-    )
-    probes = routed.select("qid", "shard_id").join(F.broadcast(luts), "qid")
-    cands = probes.join(
-        shards.select(
-            F.col(id_col).alias("neighbor_id"), F.col("pq_codes"), "shard_id"
-        ),
-        "shard_id",
-    ).select(
-        "qid",
-        "neighbor_id",
-        F.aggregate(
-            F.zip_with(
-                F.col("lut"),
-                F.col("pq_codes"),
-                lambda l, c: F.element_at(l, c.cast("int") + 1),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("dist"),
-    )
-    return top_k_per_group(
-        cands, ["qid"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k_pool
+    def make_state(qids, qvec_by_id):
+        if rotation is not None:
+            R = np.asarray(rotation, dtype=np.float64)
+            qvec_by_id = {
+                q: list(np.asarray(v, dtype=np.float64) @ R)
+                for q, v in qvec_by_id.items()
+            }
+        rows = pq_lut_rows(
+            [(int(q), qvec_by_id[int(q)]) for q in qids], codebooks
+        )
+        return np.array([l for _, l in rows], dtype=np.float64)
+
+    def score_shard(luts, qidx, codes_rows, id_rows):
+        L = luts[qidx]
+        acc = np.zeros((len(qidx), len(id_rows)))
+        for j in range(L.shape[1]):
+            acc = acc + L[:, j, codes_rows[:, j]]
+        qi, sel_ids, dists = band_select(
+            acc, id_rows, k_pool, np.zeros_like, lambda qi, ci: acc[qi, ci]
+        )
+        return qidx[qi], sel_ids, dists
+
+    return _arrow_nominating_pool(
+        routed, shards, k_pool,
+        id_col=id_col, payload_col="pq_codes", payload_dtype=np.int64,
+        make_state=make_state, score_shard=score_shard,
+        routed_rows=routed_rows,
     )
 
 
@@ -744,61 +630,6 @@ def binary_pool(
     )
     return top_k_per_group(
         cands, ["qid"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k_pool
-    )
-
-
-def _pq_pool_arrow(
-    routed: DataFrame,
-    shards: DataFrame,
-    codebooks: list[list[list[float]]],
-    k_pool: int,
-    *,
-    id_col: str = "vec_id",
-    rotation: list[list[float]] | None = None,
-    routed_rows=None,
-) -> DataFrame:
-    """numpy LUT-gather ADC scan on the shared nominating skeleton:
-    each batch gathers ``lut[j, codes[:, j]]`` and accumulates
-    LEFT-TO-RIGHT over j — the identical addition order to the fold
-    expression, so emitted pool distances are bit-equal
-    (parity-tested) while the scan runs at gather speed. ``rotation``:
-    OPQ — LUTs are built from the rotated queries."""
-    import numpy as np
-
-    from big_ann_spark.operators.pq import pq_lut_rows
-
-    def make_state(qids, qvec_by_id):
-        if rotation is not None:
-            R = np.asarray(rotation, dtype=np.float64)
-            qvec_by_id = {
-                q: list(np.asarray(v, dtype=np.float64) @ R)
-                for q, v in qvec_by_id.items()
-            }
-        rows = pq_lut_rows(
-            [(int(q), qvec_by_id[int(q)]) for q in qids], codebooks
-        )
-        return np.array([l for _, l in rows], dtype=np.float64)
-
-    def score_shard(luts, qids, qidx, codes_rows, id_rows):
-        for qi in qidx:
-            lut = luts[qi]
-            # left-to-right accumulation == the fold's order
-            acc = np.zeros(len(id_rows), dtype=np.float64)
-            for j in range(lut.shape[0]):
-                acc = acc + lut[j, codes_rows[:, j]]
-            kk = min(k_pool, len(id_rows))
-            part_idx = np.argpartition(acc, kk - 1)[:kk]
-            thresh = acc[part_idx].max()
-            cand = np.flatnonzero(acc <= thresh)
-            order = np.lexsort((id_rows[cand], acc[cand]))[:kk]
-            sel = cand[order]
-            yield qids[qi], id_rows[sel], acc[sel]
-
-    return _arrow_nominating_pool(
-        routed, shards, k_pool,
-        id_col=id_col, payload_col="pq_codes", payload_dtype=np.int64,
-        make_state=make_state, score_shard=score_shard,
-        routed_rows=routed_rows,
     )
 
 

@@ -103,10 +103,9 @@ def hybrid_search_from_disk(
             "only (no raw column) — build with --sq8-refine (or raw) so "
             "the dense run can rerank exactly"
         )
-    kw = {"pool_impl": "arrow"} if codec in ("sq8", "pq", "opq") else {}
     dense = ANN.ivf_search_from_disk(
         q.select("qid", "qvec"), vec_index, cents,
-        k=depth, nprobe=nprobe, as_of=as_of, codec=codec, **kw,
+        k=depth, nprobe=nprobe, as_of=as_of, codec=codec,
     ).select("qid", "neighbor_id", "rank")
     lex = B.bm25_topk_from_disk(
         spark, bm25_index, q.select("qid", "qtext"),

@@ -274,7 +274,7 @@ def pq_adc_search(
 ) -> DataFrame:
     """Asymmetric-distance top-k: per query, the m×k lookup table of
     squared subvector distances is computed driver-side (queries are
-    the contractual small side, like exact_knn's arrow path) and
+    the contractual small side, like exact_knn's) and
     broadcast; each encoded row scores with
     ``sum_j lut[j][codes[j]]`` — pure array arithmetic over the 8-byte
     codes, candidate scan never touches the original vectors.
@@ -584,7 +584,7 @@ def opq_recall_ab(
 
     exact = exact_knn(
         queries, emb, k=k, query_id=query_id, query_vec=query_vec,
-        base_id=id_col, base_vec=vec_col, impl="sql",
+        base_id=id_col, base_vec=vec_col,
     ).select("qid", "neighbor_id")
 
     def adc_recall(base: DataFrame, qs: DataFrame, books) -> float:
@@ -675,7 +675,7 @@ def buddy_pq_recall_ab(
         order = blended_buddy_order(emb, dims, vec_col=vec_col)
     exact = exact_knn(
         queries, emb, k=k, query_id=query_id, query_vec=query_vec,
-        base_id=id_col, base_vec=vec_col, impl="sql",
+        base_id=id_col, base_vec=vec_col,
     ).select("qid", "neighbor_id")
 
     def adc_recall(base: DataFrame, qs: DataFrame) -> float:
@@ -1001,8 +1001,8 @@ def hamming_knn(
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k by Hamming distance over packed sign-bit codes
-    (broadcast query codes × code scan, WindowGroupLimit top-k —
-    the exact_knn plan shape on 32×-smaller data).
+    (broadcast query codes × code scan, WindowGroupLimit top-k over
+    32×-smaller data than the raw vectors).
 
     Returns (qid, neighbor_id, dist, rank) with ``dist`` the integer
     Hamming distance (as double, exact). Pass ``rerank_with`` — a

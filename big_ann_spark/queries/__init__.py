@@ -181,11 +181,10 @@ def load_all() -> dict[str, Query]:
 
     Import order IS registration order, and the driver's correctness
     harness checks the first 50 registry entries — so flagship modules
-    register first (VERDICT r1 §Next-round #1). The registry is
-    consolidated to exactly 50 entries (tagged unions of same-shaped
-    queries), so every operator family gets a driver correctness row;
-    the explicit priority order stays as insurance should the window
-    ever shrink."""
+    register first. The registry fits inside that window (tagged
+    unions of same-shaped queries), so every operator family gets a
+    driver correctness row; the explicit priority order stays as
+    insurance should the window ever shrink."""
     from big_ann_spark.queries import (  # noqa: F401
         vector_queries,  # flagship kNN + vector surface
         dedup_queries,

@@ -514,22 +514,19 @@ def ann_recall_at_10(spark, sf_dir):
     exact kNN result — the engine checks its own approximation the way
     ``recall.py`` does, entirely in-engine.
 
-    Cost shape (VERDICT r4 #5, revised r5): the exact side runs the
-    arrow BLAS partial top-k with the exact-fold re-rank (bit-identical
-    to ``impl="sql"``/the oracle, shuffle O(parts·Q·k), never
-    materializing Q×N — a first r5 cut checkpointed the full Q×N
-    scored table, which won at sf0.1 but grew linearly with N: 11s at
-    the 10× fixture) and its tiny Q×k result is checkpointed so the
-    hit-join and the count evaluate it once; the IVF side scans only
-    the routed shards; centroids are computed once and shared."""
+    Cost shape: the exact side is ``exact_knn``'s partial top-k
+    (fold-exact like the oracle, shuffle O(parts·Q·k), never
+    materializing Q×N — checkpointing the full Q×N scored table won at
+    sf0.1 but grew linearly with N: 11 s at the 10× fixture); the IVF
+    side scans only the routed shards; centroids are computed once and
+    shared."""
     from big_ann_spark.operators.knn import exact_knn
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
     exact = exact_knn(
         queries, emb, k=10, query_id="vec_id", query_vec="embedding",
-        base_id="vec_id", base_vec="embedding", impl="arrow",
-        exact_fold_rerank=True,
+        base_id="vec_id", base_vec="embedding",
     ).select("qid", "neighbor_id")  # Q x k rows
     cents = SH.label_centroids(emb).localCheckpoint(eager=False)  # 10 x d
     assign = SH.assign_to_centroids(emb, cents)
@@ -542,11 +539,10 @@ def ann_recall_at_10(spark, sf_dir):
     ).select(
         "qid", "neighbor_id"
     )
-    # ONE lazy job (r14 optimization): the old form ran exact.count()
-    # and a hit-join count as two EAGER driver round trips inside the
-    # DataFrame build (~1.2 s of the query's 1.45 s warm wall). A left
+    # ONE lazy job: counting exact and the hit-join as two eager driver
+    # round trips cost ~1.2 s of the query's 1.45 s warm wall. A left
     # join marks hits and a single aggregate divides — the exact side
-    # is consumed once, so its checkpoint goes too; approx (qid,
+    # is consumed once, so it needs no checkpoint; approx (qid,
     # neighbor_id) is unique by construction (rank ≤ 10 rows), so the
     # left join preserves exact's row count.
     hit = approx.withColumn("_hit", F.lit(1))
@@ -1112,7 +1108,6 @@ def pipeline_invariants(spark, sf_dir):
             k=11,
             base_id="vec_id",
             base_vec="embedding",
-            impl="sql",
         )
         .filter(F.col("neighbor_id") != F.col("qid"))
         .select("qid", "neighbor_id")
@@ -1137,7 +1132,7 @@ def pipeline_invariants(spark, sf_dir):
     # the dist-0 self node, so both sides must count it the same way)
     gs_exact = exact_knn(
         gs_queries, nd_base, k=10,
-        base_id="vec_id", base_vec="embedding", impl="sql",
+        base_id="vec_id", base_vec="embedding",
     ).select("qid", "neighbor_id")
     graph_search = recall_at_k(
         gs.select("qid", "neighbor_id"), gs_exact, 10

@@ -1,7 +1,7 @@
-"""Vector-surface queries: exact kNN (declarative + Arrow scale path),
-pairwise/median distance stats, cosine kNN, vector encoders and the
-dimension-permutation projection. SURVEY §2 ids: J1, J4, J5, W1, W2,
-A1, A3, P2, P4, P6, F1-F3, F6, F8, S13.
+"""Vector-surface queries: exact kNN, pairwise/median distance stats,
+cosine kNN, vector encoders and the dimension-permutation projection.
+SURVEY §2 ids: J1, J4, J5, W1, W2, A1, A3, P2, P4, P6, F1-F3, F6, F8,
+S13.
 
 Query vectors: the driver testdata has no separate query table, so by
 convention ``vec_id < N_QUERIES`` rows of ``embeddings`` serve as the
@@ -84,56 +84,17 @@ FROM r WHERE rk <= 10
 @register("knn_exact_top10", sql=_KNN_EXACT_SQL)
 def knn_exact_top10(spark, sf_dir):
     """J1+W1: exact top-10 L2 neighbors per query (reference
-    ``recall.py:34-46`` + k=10 of ``utils.py:311``), declarative impl.
-    Uses the zip_with fold distance: at d=64 the unrolled ``dim=``
-    form's 256-term expression exceeds the whole-stage-codegen method
-    budget and measures SLOWER warm (1.59s vs 0.95s at sf0.1) — the
-    knob stays for small fixed dims (functions.vector docstring)."""
+    ``recall.py:34-46`` + k=10 of ``utils.py:311``) through
+    ``exact_knn``'s partial top-k — each partition emits only Q×k rows
+    against the broadcast query matrix (fixes the reference's O(Q×S)
+    Python loop, ``recall.py:36-46``). Distances are the left-to-right
+    fold the oracle runs, so ROUND(·, 6) can never straddle a boundary
+    differently across engines."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     out = exact_knn(
-        queries,
-        emb,
-        k=10,
-        metric="l2",
-        query_id="vec_id",
-        query_vec="embedding",
-        base_id="vec_id",
-        base_vec="embedding",
-        impl="sql",
-    )
-    return out.select("qid", "neighbor_id", F.round("dist", 6).alias("dist"), "rank")
-
-
-@register("knn_exact_arrow", sql=_KNN_EXACT_SQL)
-def knn_exact_arrow(spark, sf_dir):
-    """J1+W1 scale path: mapInPandas partial top-k — each partition
-    emits only Q×k rows after a numpy BLAS distance block against the
-    broadcast query matrix (fixes the reference's O(Q×S) Python loop,
-    ``recall.py:36-46``).
-
-    Oracle bit-parity without float luck (ADVICE r2): the BLAS pass
-    only nominates a candidate superset (k+5 per query — BLAS vs fold
-    distances differ at ~1e-12, so the true top-10 is inside it);
-    the candidate distances are then recomputed with the exact same
-    left-to-right fold the DuckDB oracle runs. Nothing hashed depends
-    on BLAS summation order, so ROUND(·, 6) can never straddle a
-    boundary differently across engines.
-
-    The re-rank is FUSED into the partial-top-k task (VERDICT r3 #8 /
-    ADVICE r3 medium): the exact fold runs on the k+5 candidates inside
-    ``part_topk`` against the already-broadcast query matrix — the
-    earlier cand⋈qv broadcast join shipped Q×15 rows each carrying a
-    full query vector, a payload that grows past Spark's broadcast
-    limit at a realistic 10k–1M query batch. Now nothing but the
-    O(partitions×Q×k) id/dist rows moves."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    out = exact_knn(
-        queries, emb, k=10, metric="l2",
-        query_id="vec_id", query_vec="embedding",
-        base_id="vec_id", base_vec="embedding", impl="arrow",
-        exact_fold_rerank=True,
+        queries, emb, k=10, query_id="vec_id", query_vec="embedding",
+        base_id="vec_id", base_vec="embedding",
     )
     return out.select("qid", "neighbor_id", F.round("dist", 6).alias("dist"), "rank")
 

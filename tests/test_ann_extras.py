@@ -20,7 +20,7 @@ def test_multiprobe_lifts_recall(spark, sf_dir):
     exact = exact_knn(
         emb.filter(F.col("vec_id") < 20), emb, k=10,
         query_id="vec_id", query_vec="embedding",
-        base_id="vec_id", base_vec="embedding", impl="arrow",
+        base_id="vec_id", base_vec="embedding",
     ).select("qid", "neighbor_id")
     n_exact = exact.count()
 
@@ -73,7 +73,7 @@ def test_nn_descent_recall_improves_and_converges(spark, sf_dir):
         exact_knn(
             emb.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")),
             emb, k=k + 1,
-            base_id="vec_id", base_vec="embedding", impl="sql",
+            base_id="vec_id", base_vec="embedding",
         )
         .filter(F.col("neighbor_id") != F.col("qid"))
         .select("qid", "neighbor_id")
@@ -214,7 +214,7 @@ def test_knn_graph_search_recall_and_determinism(spark, sf_dir):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     exact = (
-        exact_knn(qs, emb, k=10, base_id="vec_id", base_vec="embedding", impl="sql")
+        exact_knn(qs, emb, k=10, base_id="vec_id", base_vec="embedding")
         .select("qid", "neighbor_id")
         .localCheckpoint()
     )
@@ -390,7 +390,7 @@ def test_ivf_seeded_graph_recall_and_coverage(spark, sf_dir):
     from pyspark.sql import Window
 
     gt = (
-        exact_knn(qs, emb, k=11, dim=64, base_id="vec_id", base_vec="embedding")
+        exact_knn(qs, emb, k=11, base_id="vec_id", base_vec="embedding")
         .filter(F.col("neighbor_id") != F.col("qid"))
         .withColumn(
             "_r",
@@ -444,7 +444,7 @@ def test_two_level_seeding_contract(spark, sf_dir):
     from pyspark.sql import Window
 
     gt = (
-        exact_knn(qs, emb, k=11, dim=64, base_id="vec_id", base_vec="embedding")
+        exact_knn(qs, emb, k=11, base_id="vec_id", base_vec="embedding")
         .filter(F.col("neighbor_id") != F.col("qid"))
         .withColumn(
             "_r",

@@ -44,11 +44,10 @@ def _serve(qs, path, **kw):
 
 
 def _exact(qs, live):
-    # impl="sql": the l2_distance EXPRESSION — bit-identical to the
-    # graph tier's scoring (arrow's BLAS fold differs in the last ulp)
+    # exact_knn's distances are the l2_distance fold — bit-identical
+    # to the graph tier's scoring
     out = exact_knn(
-        qs, live, k=K, dim=64, base_id="vec_id", base_vec="embedding",
-        impl="sql",
+        qs, live, k=K, base_id="vec_id", base_vec="embedding",
     )
     return sorted(
         (r["qid"], r["neighbor_id"], round(r["dist"], 9), r["rank"])

@@ -48,8 +48,7 @@ def _serve(qs, path, **kw):
 
 def _exact(qs, live):
     out = exact_knn(
-        qs, live, k=K, dim=64, base_id="vec_id", base_vec="embedding",
-        impl="sql",
+        qs, live, k=K, base_id="vec_id", base_vec="embedding",
     )
     return sorted(
         (r["qid"], r["neighbor_id"], round(r["dist"], 9), r["rank"])

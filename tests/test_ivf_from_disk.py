@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -253,7 +254,7 @@ def test_gt_round_trip_and_cli_evaluate(spark, sf_dir, tmp_path):
     exact = exact_knn(
         q, emb, k=5,
         query_id="vec_id", query_vec="embedding",
-        base_id="vec_id", base_vec="embedding", impl="sql",
+        base_id="vec_id", base_vec="embedding",
     ).collect()
     nq, k = 8, 5
     gids = np.zeros((nq, k), dtype=np.int32)
@@ -363,6 +364,40 @@ def _sq8_layout(spark, sf_dir):
     return emb, cents, path, ranges
 
 
+def _np_fold(q, X):
+    """Left-to-right float64 fold of (q_j - x_j)^2 per row, then sqrt
+    — the arithmetic of l2_distance and the DuckDB oracles."""
+    acc = np.zeros(len(X))
+    for j in range(X.shape[1]):
+        dv = q[j] - X[:, j]
+        acc += dv * dv
+    return np.sqrt(acc)
+
+
+def _np_sq8_pool(spark, routed, path, k_pool):
+    """numpy oracle of sq8_pool: per routed query, every row of its
+    probed shards decoded to bucket midpoints, scored by the fold,
+    first k_pool by (dist, id) as (qid, neighbor_id, dist, rank)."""
+    rng = spark.read.parquet(f"{path}/sq8_ranges.parquet").collect()[0]
+    mn, mx = np.array(rng["mins"]), np.array(rng["maxs"])
+    rows = (
+        spark.read.parquet(f"{path}/shards")
+        .select("vec_id", "codes", "shard_id").collect()
+    )
+    probes = {}
+    for r in routed.collect():
+        probes.setdefault(r["qid"], (r["qvec"], set()))[1].add(r["shard_id"])
+    out = []
+    for qid, (qv, sids) in probes.items():
+        cand = [r for r in rows if r["shard_id"] in sids]
+        ids = np.array([r["vec_id"] for r in cand])
+        codes = np.array([r["codes"] for r in cand], dtype=np.float64)
+        d = _np_fold(np.asarray(qv, dtype=np.float64), mn + ((codes + 0.5) * (mx - mn)) / 255.0)
+        for rank, i in enumerate(np.lexsort((ids, d))[:k_pool], 1):
+            out.append((qid, int(ids[i]), float(d[i]), rank))
+    return sorted(out)
+
+
 def test_sq8_layout_roundtrip(spark, sf_dir):
     """Codes column lands next to raw vectors; ranges round-trip; codes
     match re-encoding the raw column with the persisted ranges."""
@@ -457,9 +492,9 @@ def test_sq8_scan_plans(spark, sf_dir):
 
 
 def test_sq8_pool_arrow_equals_fold(spark, sf_dir):
-    """The BLAS pool impl must be bit-identical to the fold impl —
-    decode order and fold re-score make it so (the exact_knn arrow
-    contract, applied to quantized scoring)."""
+    """The Arrow pool must equal a numpy oracle that decodes the codes
+    and scores them by the left-to-right fold — ids, ranks and
+    bit-equal distances."""
     emb, cents, path, _ = _sq8_layout(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
@@ -467,11 +502,29 @@ def test_sq8_pool_arrow_equals_fold(spark, sf_dir):
     routed = ANN.route_queries(queries, cents, 2).localCheckpoint()
     probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
     shards = ANN.open_probed_shards(spark, path, probe_ids)
-    fold = ANN.sq8_pool(routed, shards, path, 20, impl="fold")
-    arrow = ANN.sq8_pool(routed, shards, path, 20, impl="arrow")
-    a = sorted(map(tuple, fold.select("qid", "neighbor_id", "dist", "rank").collect()))
-    b = sorted(map(tuple, arrow.select("qid", "neighbor_id", "dist", "rank").collect()))
-    assert a == b and len(a) == 160  # bit-equal dists included
+    pool = ANN.sq8_pool(routed, shards, path, 20)
+    got = sorted(map(tuple, pool.select("qid", "neighbor_id", "dist", "rank").collect()))
+    assert got == _np_sq8_pool(spark, routed, path, 20) and len(got) == 160
+
+
+def _np_sq8_search(spark, sf_dir, routed, path, k, k_pool):
+    """numpy oracle of the sq8 from-disk search: the oracle pool, then
+    the exact fold rerank against the raw vectors."""
+    raw = {
+        r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
+        for r in load_table(spark, sf_dir, "embeddings").collect()
+    }
+    qvec = {r["qid"]: np.asarray(r["qvec"], dtype=np.float64) for r in routed.collect()}
+    pools = {}
+    for qid, nid, _, _ in _np_sq8_pool(spark, routed, path, k_pool):
+        pools.setdefault(qid, []).append(nid)
+    out = []
+    for qid, nids in pools.items():
+        ids = np.array(nids)
+        d = _np_fold(qvec[qid], np.array([raw[n] for n in nids]))
+        for rank, i in enumerate(np.lexsort((ids, d))[:k], 1):
+            out.append((qid, int(ids[i]), float(d[i]), rank))
+    return sorted(out)
 
 
 def test_sq8_from_disk_arrow_pool_end_to_end(spark, sf_dir):
@@ -479,14 +532,30 @@ def test_sq8_from_disk_arrow_pool_end_to_end(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    fold = ANN.ivf_search_from_disk(
-        queries, path, cents, k=5, nprobe=2, codec="sq8", pool_impl="fold"
+    got = ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=2, codec="sq8")
+    routed = ANN.route_queries(queries, cents, 2)
+    a = sorted(map(tuple, got.collect()))
+    assert a == _np_sq8_search(spark, sf_dir, routed, path, 5, 20) and len(a) == 40
+
+
+def test_sq8_from_disk_pool_past_pushdown_bound_joins_distributed(spark, sf_dir):
+    """A pool larger than max_id_pushdown is never collected: the
+    rerank joins the pool DataFrame (no id In pushed to the scan) and
+    returns exactly what the collected path returns."""
+    from big_ann_spark.plans import formatted_plan
+
+    emb, cents, path, _ = _sq8_layout(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    arrow = ANN.ivf_search_from_disk(
-        queries, path, cents, k=5, nprobe=2, codec="sq8", pool_impl="arrow"
-    )
-    a = sorted(map(tuple, fold.collect()))
-    b = sorted(map(tuple, arrow.collect()))
+    kw = dict(k=5, nprobe=2, codec="sq8")
+    collected = ANN.ivf_search_from_disk(queries, path, cents, **kw)
+    joined = ANN.ivf_search_from_disk(queries, path, cents, max_id_pushdown=3, **kw)
+    assert "In(vec_id" in formatted_plan(collected)
+    plan = formatted_plan(joined)
+    assert "In(vec_id" not in plan and "MapInArrow" in plan
+    a = sorted(map(tuple, collected.collect()))
+    b = sorted(map(tuple, joined.collect()))
     assert a == b and len(a) == 40
 
 
@@ -520,14 +589,12 @@ def test_cli_build_index_sq8_refine_and_search(spark, sf_dir, tmp_path):
 
 
 def test_sq8_pool_arrow_parity_is_margin_free(spark, sf_dir):
-    """Fold parity must be DETERMINISTIC, not margin-probabilistic
-    (ADVICE r10): with rerank_margin=0 and a hostile cluster of rows
-    whose quantized distances tie within float rounding (identical
-    codes → exactly-tied GEMM rows → any number of near-boundary
-    inversions), the error-bound band + in-band exact-fold selection
-    still emits pools bit-equal to the fold impl."""
-    import numpy as np
-
+    """Fold parity must be DETERMINISTIC, not margin-probabilistic:
+    with a hostile cluster of rows whose quantized distances tie within
+    float rounding (identical codes → exactly-tied GEMM rows → any
+    number of near-boundary inversions), the error-bound band +
+    in-band exact-fold selection still emits pools bit-equal to the
+    numpy fold oracle."""
     rng = np.random.default_rng(7)
     base = rng.normal(size=64)
     rows = []
@@ -553,8 +620,6 @@ def test_sq8_pool_arrow_parity_is_margin_free(spark, sf_dir):
     routed = ANN.route_queries(queries, cents, 3).localCheckpoint()
     probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
     shards = ANN.open_probed_shards(spark, path, probe_ids)
-    fold = ANN.sq8_pool(routed, shards, path, 25, impl="fold")
-    arrow = ANN.sq8_pool(routed, shards, path, 25, impl="arrow", rerank_margin=0)
-    a = sorted(map(tuple, fold.select("qid", "neighbor_id", "dist").collect()))
-    b = sorted(map(tuple, arrow.select("qid", "neighbor_id", "dist").collect()))
-    assert a == b and len(a) == 75
+    pool = ANN.sq8_pool(routed, shards, path, 25)
+    got = sorted(map(tuple, pool.select("qid", "neighbor_id", "dist", "rank").collect()))
+    assert got == _np_sq8_pool(spark, routed, path, 25) and len(got) == 75

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import tempfile
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -39,6 +40,57 @@ def _queries(emb):
     return emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
+
+
+def _np_pq_pool(spark, routed, path, k_pool):
+    """numpy oracle of pq_pool: per routed query, an ADC lookup table
+    from the (rotated, on an OPQ layout) query and the persisted
+    codebooks, each probed row scored as lut[j][code_j] summed left to
+    right over j, first k_pool by (dist, id) as
+    (qid, neighbor_id, dist, rank)."""
+    import os
+
+    from big_ann_spark.operators.pq import load_rotation
+
+    books = [np.asarray(b) for b in load_pq_codebooks(spark, f"{path}/pq_codebooks.parquet")]
+    R = None
+    if os.path.isdir(f"{path}/opq_rotation.parquet"):
+        R = np.asarray(load_rotation(spark, f"{path}/opq_rotation.parquet"))
+    sub = books[0].shape[1]
+    rows = (
+        spark.read.parquet(f"{path}/shards")
+        .select("vec_id", "pq_codes", "shard_id").collect()
+    )
+    probes = {}
+    for r in routed.collect():
+        probes.setdefault(r["qid"], (r["qvec"], set()))[1].add(r["shard_id"])
+    out = []
+    for qid, (qv, sids) in probes.items():
+        q = np.asarray(qv, dtype=np.float64)
+        if R is not None:
+            q = q @ R
+        lut = np.array([
+            [((q[j * sub:(j + 1) * sub] - c) ** 2).sum() for c in book]
+            for j, book in enumerate(books)
+        ])
+        cand = [r for r in rows if r["shard_id"] in sids]
+        ids = np.array([r["vec_id"] for r in cand])
+        codes = np.array([r["pq_codes"] for r in cand])
+        d = np.zeros(len(cand))
+        for j in range(len(books)):
+            d = d + lut[j, codes[:, j]]
+        for rank, i in enumerate(np.lexsort((ids, d))[:k_pool], 1):
+            out.append((qid, int(ids[i]), float(d[i]), rank))
+    return sorted(out)
+
+
+def _routed_pool(spark, emb, cents, path, k_pool):
+    routed = ANN.route_queries(_queries(emb), cents, 2).localCheckpoint()
+    probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
+    shards = ANN.open_probed_shards(spark, path, probe_ids)
+    pool = ANN.pq_pool(routed, shards, path, k_pool)
+    got = sorted(map(tuple, pool.select("qid", "neighbor_id", "dist", "rank").collect()))
+    return got, _np_pq_pool(spark, routed, path, k_pool)
 
 
 def test_pq_layout_roundtrip(spark, sf_dir):
@@ -99,19 +151,11 @@ def test_pq_candidate_scan_reads_codes_only(spark, sf_dir):
 
 
 def test_pq_pool_arrow_equals_fold(spark, sf_dir):
-    """The numpy LUT-gather impl must be bit-identical to the fold —
-    left-to-right accumulation over j makes the doubles equal, not
-    just close."""
+    """The numpy LUT-gather pool must equal a LUT oracle that sums
+    left to right over j — the doubles equal, not just close."""
     emb, cents, path, _ = _pq_layout(spark, sf_dir)
-    queries = _queries(emb)
-    routed = ANN.route_queries(queries, cents, 2).localCheckpoint()
-    probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
-    shards = ANN.open_probed_shards(spark, path, probe_ids)
-    fold = ANN.pq_pool(routed, shards, path, 20, impl="fold")
-    arrow = ANN.pq_pool(routed, shards, path, 20, impl="arrow")
-    a = sorted(map(tuple, fold.select("qid", "neighbor_id", "dist", "rank").collect()))
-    b = sorted(map(tuple, arrow.select("qid", "neighbor_id", "dist", "rank").collect()))
-    assert a == b and len(a) == 160
+    got, want = _routed_pool(spark, emb, cents, path, 20)
+    assert got == want and len(got) == 160
 
 
 def test_cli_build_pq_refine_and_search(spark, sf_dir, tmp_path):
@@ -213,16 +257,12 @@ def test_opq_codec_refused_without_rotation(spark, sf_dir):
     assert ANN.detect_refine_codec(spark, path) == "pq"
 
 
-def test_opq_pool_impls_agree_and_mutations_compose(spark, sf_dir):
+def test_opq_pool_equals_numpy_lut_and_mutations_compose(spark, sf_dir):
     emb, cents, path = _opq_layout(spark, sf_dir)
     queries = _queries(emb)
-    fold = ANN.ivf_search_from_disk(
-        queries, path, cents, k=5, nprobe=2, codec="pq", pool_impl="fold"
-    )
-    arrow = ANN.ivf_search_from_disk(
-        queries, path, cents, k=5, nprobe=2, codec="pq", pool_impl="arrow"
-    )
-    assert sorted(map(tuple, fold.collect())) == sorted(map(tuple, arrow.collect()))
+    # the pool scores the ROTATED queries against the OPQ codebooks
+    got, want = _routed_pool(spark, emb, cents, path, 20)
+    assert got == want and len(got) == 160
 
     # upsert re-encodes under the frozen rotation; deleted ids vanish
     from big_ann_spark.operators import vector_ops as VO

@@ -113,7 +113,10 @@ def test_topk_uses_window_group_limit(spark, sf_dir):
 
 def test_knn_broadcasts_queries(spark, sf_dir):
     plan = _plan(load_all()["knn_exact_top10"].fn(spark, sf_dir))
-    assert "Broadcast" in plan  # queries side broadcast, base side streams
+    # the queries ride a broadcast variable into one MapInArrow pass:
+    # the base streams once, through no join
+    assert "MapInArrow" in plan and "Join" not in plan
+    assert plan.count("Scan parquet") == 1
     assert "WindowGroupLimit" in plan  # partial top-k before final
 
 

@@ -52,7 +52,7 @@ def test_pq_adc_recall_vs_exact(spark, trained):
     q = emb.filter(F.col("vec_id") < 20)
     exact = exact_knn(
         q, emb, k=10, query_id="vec_id", query_vec="embedding",
-        base_id="vec_id", base_vec="embedding", impl="sql",
+        base_id="vec_id", base_vec="embedding",
     ).select("qid", "neighbor_id")
     approx = PQ.pq_adc_search(
         q.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")),
@@ -83,7 +83,7 @@ def test_ivf_pq_recall(spark, trained):
     approx = ivf_pq_search(qq, sharded_codes, cents, books, k=10, nprobe=2)
     exact = exact_knn(
         q, emb, k=10, query_id="vec_id", query_vec="embedding",
-        base_id="vec_id", base_vec="embedding", impl="sql",
+        base_id="vec_id", base_vec="embedding",
     ).select("qid", "neighbor_id")
     r = recall_at_k(approx.select("qid", "neighbor_id"), exact, 10).collect()[0][
         "recall_at_k"

@@ -120,7 +120,7 @@ def test_ivf_full_probe_equals_exact(spark, emb):
     qsrc = emb.filter(F.col("vec_id") < 5)
     exact = exact_knn(
         qsrc, emb, k=10, query_id="vec_id", query_vec="embedding",
-        base_id="vec_id", base_vec="embedding", impl="sql",
+        base_id="vec_id", base_vec="embedding",
     )
     a = sorted(map(tuple, ivf.select("qid", "neighbor_id", "rank").collect()))
     b = sorted(map(tuple, exact.select("qid", "neighbor_id", "rank").collect()))
@@ -140,7 +140,7 @@ def test_ivf_nprobe2_recall_reasonable(spark, emb):
     exact = exact_knn(
         emb.filter(F.col("vec_id") < 20), emb, k=10,
         query_id="vec_id", query_vec="embedding",
-        base_id="vec_id", base_vec="embedding", impl="arrow",
+        base_id="vec_id", base_vec="embedding",
     ).select("qid", "neighbor_id")
     hits = exact.join(ivf, ["qid", "neighbor_id"]).count()
     recall = hits / exact.count()
@@ -158,7 +158,7 @@ def test_lsh_bucket_recall(spark, emb):
     exact = exact_knn(
         emb.filter(F.col("vec_id") < 20), emb, k=10,
         query_id="vec_id", query_vec="embedding",
-        base_id="vec_id", base_vec="embedding", impl="arrow",
+        base_id="vec_id", base_vec="embedding",
     ).select("qid", "neighbor_id")
     hits = exact.join(lsh, ["qid", "neighbor_id"]).count()
     # 8-bit sign buckets are coarse on near-orthogonal gaussian data;

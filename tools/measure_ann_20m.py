@@ -126,7 +126,7 @@ def main() -> None:
         )
         emb = spark.read.parquet(emb_path)
         timed(
-            f"exact_knn arrow n={n}",
+            f"exact_knn n={n}",
             lambda: exact_knn(
                 emb.filter(F.col("vec_id") < nq),
                 emb,
@@ -135,7 +135,6 @@ def main() -> None:
                 query_vec="embedding",
                 base_id="vec_id",
                 base_vec="embedding",
-                impl="arrow",
             ),
         )
         return

@@ -99,7 +99,7 @@ def _edge_recall(emb, edges, n: int, nq: int = 200) -> float:
         .localCheckpoint()
     )
     gt = (
-        exact_knn(qs, emb, k=11, base_id="vec_id", base_vec="embedding", dim=D)
+        exact_knn(qs, emb, k=11, base_id="vec_id", base_vec="embedding")
         .filter(F.col("neighbor_id") != F.col("qid"))
         .withColumn(
             "_r",
@@ -385,7 +385,6 @@ def main() -> None:
                 k=11,
                 base_id="vec_id",
                 base_vec="embedding",
-                dim=D,
             )
             .filter(F.col("neighbor_id") != F.col("qid"))
             .withColumn(
@@ -433,7 +432,6 @@ def main() -> None:
         gt = (
             exact_knn(
                 qs, emb, k=10, base_id="vec_id", base_vec="embedding",
-                impl="arrow", dim=D,
             )
             .select("qid", "neighbor_id")
             .localCheckpoint()
@@ -475,7 +473,6 @@ def main() -> None:
         gt = (
             exact_knn(
                 qs, emb, k=10, base_id="vec_id", base_vec="embedding",
-                impl="arrow", dim=D,
             )
             .select("qid", "neighbor_id")
             .localCheckpoint()
@@ -523,14 +520,14 @@ def main() -> None:
             "IVF-PQ m=8 k=256 rerank_factor=4", ivf_pq,
             lambda: ANN.ivf_search_from_disk(
                 qs, ivf_pq, cents, k=10, nprobe=2,
-                codec="pq", pool_impl="arrow", rerank_factor=4,
+                codec="pq", rerank_factor=4,
             ),
         )
         run(
             "IVF-OPQ m=8 k=256 rerank_factor=4", ivf_opq,
             lambda: ANN.ivf_search_from_disk(
                 qs, ivf_opq, cents, k=10, nprobe=2,
-                codec="opq", pool_impl="arrow", rerank_factor=4,
+                codec="opq", rerank_factor=4,
             ),
         )
         return

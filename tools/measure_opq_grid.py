@@ -58,7 +58,6 @@ def main() -> None:
     gt = (
         exact_knn(
             qs, emb, k=10, base_id="vec_id", base_vec="embedding",
-            impl="arrow", dim=D,
         )
         .select("qid", "neighbor_id")
         .localCheckpoint()

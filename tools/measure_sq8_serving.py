@@ -256,7 +256,6 @@ def main() -> None:
                 t = time.perf_counter()
                 rows = ivf_search_from_disk(
                     queries, path, cents, k=10, nprobe=nprobe, codec=codec,
-                    pool_impl="arrow" if codec in ("sq8", "pq") else "fold",
                 ).count()
                 walls.append(time.perf_counter() - t)
             print(
