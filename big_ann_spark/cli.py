@@ -810,41 +810,17 @@ def _build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _load_index_shards(
-    spark,
-    index: str,
-    id_col: str,
-    vec_col: str,
-    shard_ids: list[int] | None = None,
-    shards_df=None,
-):
-    """Read a build-index dir's shards, decoding SQ8 codes when present.
-    SQ8 auto-detect keys off the DATA ('codes' column present), not off
-    the sidecar file: a float rebuild into a dir that previously held an
-    --sq8 index overwrites shards/ but leaves the stale
-    sq8_ranges.parquet behind, and sidecar-keyed detection would then
-    reference a nonexistent codes column. The decode is a pure
-    projection placed above the pruned scan, so only probed shards
-    decode. ``shard_ids``: open only those shard directories by
-    explicit path (no full-layout listing walk — see
-    ``ann.open_probed_shards``). ``shards_df``: a caller that already
-    opened (and possibly mutation-resolved) the shard scan passes it
-    here; only the decode projection is applied."""
+def _load_index_shards(spark, index: str, id_col: str, vec_col: str, shards_df=None):
+    """A build-index dir's shards (``shards_df``, else the whole layout),
+    SQ8 codes decoded by a projection when there is no raw column. Keyed
+    off the DATA, not the sidecar: a float rebuild over an --sq8 index
+    leaves a stale sq8_ranges.parquet, and decoding a refine layout would
+    replace its real embeddings with quantized midpoints."""
     from pyspark.sql import functions as F
 
-    if shards_df is not None:
-        shards = shards_df
-    elif shard_ids is not None:
-        from big_ann_spark.operators.ann import open_probed_shards
+    from big_ann_spark.operators import pq as PQ
 
-        shards = open_probed_shards(spark, index, shard_ids)
-    else:
-        shards = spark.read.parquet(f"{index}/shards")
-    # decode ONLY codes-only layouts: a refine layout carries BOTH the
-    # codes and the raw vectors, and decoding there would silently
-    # replace the real embeddings with quantized midpoints (e.g. an
-    # `evaluate` run reporting recall of the quantization, not the
-    # index)
+    shards = shards_df if shards_df is not None else spark.read.parquet(f"{index}/shards")
     if "codes" in shards.columns and vec_col not in shards.columns:
         rows = spark.read.parquet(f"{index}/sq8_ranges.parquet").collect()
         if not rows:
@@ -852,17 +828,46 @@ def _load_index_shards(
                 f"{index}: shards carry sq8 codes but sq8_ranges.parquet "
                 "is empty — rebuild the index"
             )
-        rng = rows[0]
-        from big_ann_spark.operators import pq as PQ
-
         shards = shards.select(
             id_col,
             "shard_id",
             PQ.sq8_decode_col(
-                F.col("codes"), list(rng.mins), list(rng.maxs)
+                F.col("codes"), list(rows[0].mins), list(rows[0].maxs)
             ).alias(vec_col),
         )
     return shards
+
+
+def _decoded_index_search(spark, args, q, cents):
+    """IVF search of a build-index dir as stored (``evaluate``; ``search``
+    of a codes-only layout): route, open the probed shards — or list the
+    layout when at least half are probed, one walk beating m explicit
+    roots — resolve mutations, decode, ``ivf_search``."""
+    from pyspark.sql import functions as F
+
+    from big_ann_spark.operators import ann as ANN
+    from big_ann_spark.operators import vector_ops as VO
+
+    routed = ANN.route_queries(q, cents, args.nprobe).localCheckpoint()
+    probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
+    probed = len(probe_ids) < cents.count() / 2
+    if probed:
+        base = ANN.open_probed_shards(spark, args.index, probe_ids)
+    else:
+        base = spark.read.option("basePath", f"{args.index}/shards").parquet(
+            f"{args.index}/shards"
+        )
+    live = VO.live_probed_view(
+        spark, args.index, base, probe_ids if probed else None,
+        as_of=args.as_of, id_col=args.id_col, vec_col=args.vec_col,
+    )
+    shards = _load_index_shards(spark, args.index, args.id_col, args.vec_col, live)
+    if not probed:
+        shards = shards.filter(F.col("shard_id").isin(probe_ids))
+    return ANN.ivf_search(
+        q, shards, cents, k=args.k, nprobe=args.nprobe,
+        id_col=args.id_col, vec_col=args.vec_col, _routed=routed,
+    )
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -1107,61 +1112,25 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "search":
         from big_ann_spark.operators import ann as ANN
-        from big_ann_spark.operators import vector_ops as VO
 
         cents = spark.read.parquet(f"{args.index}/centroids.parquet")
         q = spark.read.parquet(args.queries).select(
             F.col(args.id_col).alias("qid"), F.col(args.vec_col).alias("qvec")
         )
-        # route first, then open ONLY the probed shard directories —
-        # a fresh CLI session skips the full-layout listing walk
-        routed = ANN.route_queries(q, cents, args.nprobe).localCheckpoint()
-        probe_ids = [
-            r["shard_id"] for r in routed.select("shard_id").distinct().collect()
-        ]
-        probed = ANN.open_probed_shards(spark, args.index, probe_ids)
         # codec detection is SCHEMA-ONLY (zero jobs): code columns can
-        # only come from the base layout; the refine branches below
-        # resolve mutations inside ivf_search_from_disk, and the raw
-        # fallback builds the live view itself — never both
-        if "codes" in probed.columns and args.vec_col in probed.columns:
-            # --sq8-refine layout: quantized candidate scan (codes
-            # column only) + exact rerank from the raw column
-            out = ANN.ivf_search_from_disk(
-                q, args.index, cents, k=args.k, nprobe=args.nprobe,
-                id_col=args.id_col, vec_col=args.vec_col,
-                codec="sq8", as_of=args.as_of,
-            )
-        elif "pq_codes" in probed.columns and args.vec_col in probed.columns:
-            # --pq-refine / --opq-refine layout: ADC candidate scan
-            # (pq_codes column only, LUTs from rotated queries when the
-            # rotation sidecar exists) + exact rerank from the raw
-            # column; ONE detection rule lives in detect_refine_codec
-            pq_codec = ANN.detect_refine_codec(spark, args.index, args.vec_col)
-            out = ANN.ivf_search_from_disk(
-                q, args.index, cents, k=args.k, nprobe=args.nprobe,
-                id_col=args.id_col, vec_col=args.vec_col,
-                codec=pq_codec, as_of=args.as_of,
-            )
-        elif "bcodes" in probed.columns and args.vec_col in probed.columns:
-            # --binary-refine layout: Hamming candidate scan (bcodes
-            # only) + exact rerank from the raw column
-            out = ANN.ivf_search_from_disk(
-                q, args.index, cents, k=args.k, nprobe=args.nprobe,
-                id_col=args.id_col, vec_col=args.vec_col,
-                codec="binary", as_of=args.as_of,
-            )
+        # only come from the base layout
+        codec = ANN.detect_refine_codec(spark, args.index, args.vec_col)
+        if codec == "codes_only":
+            # --sq8 layout: no raw column, so search the decoded codes
+            out = _decoded_index_search(spark, args, q, cents)
         else:
-            live = VO.live_probed_view(
-                spark, args.index, probed, probe_ids, as_of=args.as_of,
+            # raw vectors, or a refine layout: quantized candidate scan
+            # (codes/pq_codes/bcodes only) + exact rerank from the raw
+            # column — one call routes, resolves mutations and scores
+            out = ANN.ivf_search_from_disk(
+                q, args.index, cents, k=args.k, nprobe=args.nprobe,
                 id_col=args.id_col, vec_col=args.vec_col,
-            )
-            shards = _load_index_shards(
-                spark, args.index, args.id_col, args.vec_col, shards_df=live
-            )
-            out = ANN.ivf_search(
-                q, shards, cents, k=args.k, nprobe=args.nprobe,
-                id_col=args.id_col, vec_col=args.vec_col, _routed=routed,
+                codec=codec, as_of=args.as_of,
             )
         if args.out:
             out.write.mode("overwrite").parquet(args.out)
@@ -1610,7 +1579,6 @@ def main(argv: list[str] | None = None) -> int:
     from big_ann_spark.sources import fbin as FB
 
     if args.cmd == "evaluate":
-        from big_ann_spark.operators import ann as ANN
         from big_ann_spark.operators.knn import recall_at_k
 
         nq, gt_k = FB.read_header(args.gt)
@@ -1622,10 +1590,10 @@ def main(argv: list[str] | None = None) -> int:
             )
         cents = spark.read.parquet(f"{args.index}/centroids.parquet")
         # sniff the queries input instead of routing purely on the
-        # .parquet suffix (ADVICE r7: a parquet DIRECTORY not named
-        # *.parquet went down the fbin reader and died on a garbage
-        # header): any directory is a parquet layout, a file must carry
-        # a known vector suffix — anything else fails with the contract
+        # .parquet suffix (a parquet DIRECTORY not named *.parquet went
+        # down the fbin reader and died on a garbage header): any
+        # directory is a parquet layout, a file must carry a known
+        # vector suffix — anything else fails with the contract
         import os as _os
 
         qpath = args.queries
@@ -1658,37 +1626,11 @@ def main(argv: list[str] | None = None) -> int:
                 f"(got {len(qids)} ids, first/last "
                 f"{qids[0] if qids else None}/{qids[-1] if qids else None})"
             )
-        # probed-directory read only when it actually prunes: an
-        # exhaustive evaluate (nprobe = m) touches every shard, and a
-        # full-layout listing beats handing the reader m explicit roots
-        from big_ann_spark.operators import vector_ops as VO
-
-        routed = ANN.route_queries(q, cents, args.nprobe).localCheckpoint()
-        probe_ids = [
-            r["shard_id"] for r in routed.select("shard_id").distinct().collect()
-        ]
-        probed = len(probe_ids) < cents.count() / 2
-        if probed:
-            base = ANN.open_probed_shards(spark, args.index, probe_ids)
-        else:
-            base = spark.read.option(
-                "basePath", f"{args.index}/shards"
-            ).parquet(f"{args.index}/shards")
         # recall must be measured against the SERVED index — deleted
         # vectors out, upserts in — exactly like `search`
-        live = VO.live_probed_view(
-            spark, args.index, base, probe_ids if probed else None,
-            as_of=args.as_of, id_col=args.id_col, vec_col=args.vec_col,
+        pred = _decoded_index_search(spark, args, q, cents).select(
+            "qid", "neighbor_id", "rank"
         )
-        shards = _load_index_shards(
-            spark, args.index, args.id_col, args.vec_col, shards_df=live
-        )
-        if not probed:
-            shards = shards.filter(F.col("shard_id").isin(probe_ids))
-        pred = ANN.ivf_search(
-            q, shards, cents, k=args.k, nprobe=args.nprobe,
-            id_col=args.id_col, vec_col=args.vec_col, _routed=routed,
-        ).select("qid", "neighbor_id", "rank")
         gt = FB.ground_truth_df(spark, args.gt, k=args.k)
         r = recall_at_k(pred, gt, args.k).collect()[0].recall_at_k
         print(f"recall@{args.k} (nprobe={args.nprobe}): {r:.4f}")

@@ -8,13 +8,19 @@ HNSW → top-10 by distance. Its cliffs: sequential queries, and the
 shard index re-loaded from disk per query (``utils.py:308-310``).
 
 Spark-first replacement (§7.4): IVF-style —
-1. routing join J3: queries × broadcast centroids → top-``nprobe``
-   shard ids per query (WindowGroupLimit, no shuffle of the big side);
-2. candidate join: probe list joined to the sharded vector table on
-   ``shard_id`` — with a ``partitionBy(shard_id)`` layout this is
-   partition-pruned IO (only probed shards are read);
-3. W1/W2: per-query top-k over candidates, globally re-ranked by true
-   distance.
+1. routing: top-``nprobe`` centroids per query. In memory
+   (``route_queries``) a broadcast centroid array scored in a pure
+   projection; off a persisted layout (``ivf_search_from_disk``) the
+   query batch and the tiny centroid table are collected once and
+   routed on the driver with the same arithmetic and tie-break;
+2. candidate scan: only the probed shards are read. In memory a join
+   on ``shard_id`` with static partition pruning; from disk ONE
+   ``mapInArrow`` pass over the probed shard directories scores each
+   (query, shard) group against the broadcast queries (the fold-exact
+   ``knn.fold_l2_topk`` for raw vectors, quantized scorers for the
+   refine tiers) and drops rows the mutation ledger made dead;
+3. top-k per query, globally re-ranked by true distance (one window;
+   the refine tiers re-rank their pool exactly first).
 
 Recall loss vs exact is a *property of the routing* (the reference
 searches only the top-1 shard); ``nprobe`` trades IO for recall.
@@ -23,21 +29,22 @@ searches only the top-1 shard); ``nprobe`` trades IO for recall.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from big_ann_spark.functions.vector import l2_distance
+from big_ann_spark.operators.knn import band_select, fold_l2, fold_l2_topk
 from big_ann_spark.operators.topk import top_k_per_group
 
 
 def _isin_ids(col: str, ids: list) -> F.Column:
     """``col IN (ids)`` for an integer id list, built as ONE parsed SQL
-    expression. ``Column.isin`` constructs one literal Column — one py4j
-    round trip — per element (~400 trips, 0.4-0.5 s of pure driver wall
-    for a 400-id rerank pool; r14 profiling), while the string parses in
-    a single call to the identical ``In(col, literals)`` predicate.
-    Non-integer or empty lists fall back to ``isin`` unchanged."""
+    expression: ``Column.isin`` costs one py4j round trip per element
+    (0.4-0.5 s of driver wall for a 400-id rerank pool). Non-integer or
+    empty lists fall back to ``isin``."""
     if ids and all(type(i) is int for i in ids):
         id_list = ",".join(str(i) for i in ids)
         return F.expr(f"`{col}` IN ({id_list})")
@@ -58,41 +65,27 @@ def open_probed_shards(
     path: str,
     shard_ids: list[int],
 ) -> DataFrame:
-    """Open ONLY the probed shard directories of a
-    ``write_sharded``-produced layout, by explicit path — skipping the
-    full-layout file listing.
-
-    ``spark.read.parquet(f"{path}/shards")`` walks every partition
-    directory before the first byte of data is read: measured ~60 s for
-    an m = 10⁴ layout at 20M vectors (a 10,000-task listing job), and
-    at real scale (m ~ 10⁵ shards on object storage) the listing walk
-    dwarfs the query itself. The probed set is min(Q·nprobe, m) —
-    contractually tiny — so reading those directories by name is O(T)
+    """Open ONLY the probed shard directories of a ``write_sharded``
+    layout, by explicit path: ``spark.read.parquet(f"{path}/shards")``
+    walks every partition directory first (measured ~60 s at m = 10⁴
+    and 20M vectors), while the probed set is min(Q·nprobe, m) — O(T)
     listing work instead of O(m). ``basePath`` keeps ``shard_id`` a
-    (partition) column.
-
-    Shards with zero points never got a directory (dynamic-partition
-    writes create dirs only for non-empty groups), so existence-check
-    through the Hadoop FS API — which also works on object stores, not
-    just local paths."""
+    partition column. Shards with zero points never got a directory,
+    so each is existence-checked through the Hadoop FS API, which works
+    on object stores too."""
     base = f"{path}/shards"
-    jvm = spark.sparkContext._jvm
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path  # one class lookup
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(base)
+    jpath = Path(base)
     fs = jpath.getFileSystem(hconf)
-    dirs = [
-        d
-        for s in shard_ids
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(d := f"{base}/shard_id={s}"))
-    ]
-    # schema memo (r14, guide §6): a bare parquet read runs a footer-
-    # inference job on the driver before the first data byte — on the
-    # serving path that is one serial job per search. Shard schema is
-    # fixed at build time (mutations append files, never columns), so
-    # memoize it per (base, base-dir mtime): a NEW shard directory
-    # bumps the base mtime and invalidates; file appends inside
-    # existing shard dirs keep the identical schema. SCHEMA only,
-    # never rows.
+    dirs = [d for s in shard_ids if fs.exists(Path(d := f"{base}/shard_id={s}"))]
+    # schema memo: a bare parquet read runs a footer-inference job on
+    # the driver before the first data byte — on the serving path that
+    # is one serial job per search. Shard schema is fixed at build time
+    # (mutations append files, never columns), so memoize it per (base,
+    # base-dir mtime): a NEW shard directory bumps the base mtime and
+    # invalidates; file appends inside existing shard dirs keep the
+    # identical schema. SCHEMA only, never rows.
     memo_key = None
     memo_schema = None
     try:
@@ -106,7 +99,7 @@ def open_probed_shards(
         # lands no files), so prefer the schema sidecar write_sharded
         # leaves for exactly this case; fall back to inferring from
         # the (non-empty) shards dir for layouts predating it.
-        sidecar = jvm.org.apache.hadoop.fs.Path(f"{path}/schema.parquet")
+        sidecar = Path(f"{path}/schema.parquet")
         if fs.exists(sidecar):
             sc = spark.read.parquet(f"{path}/schema.parquet").schema
             return spark.createDataFrame([], sc)
@@ -156,6 +149,82 @@ def detect_refine_codec(spark, path: str, vec_col: str = "embedding") -> str:
     return "raw"
 
 
+# Rows a serving call collects to the driver at most: the default
+# ``max_id_pushdown`` of a rerank pool, and the bound on the query batch
+# a from-disk search routes on the driver.
+DRIVER_ROWS = 100_000
+
+# Cells of a (query × row) or (query × centroid) distance matrix that
+# one numpy scoring block holds at once.
+_SCORE_BLOCK = 1 << 20
+
+# popcount of every byte value: the binary pool's Hamming kernel
+_POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
+
+
+class Routing(NamedTuple):
+    """One search's routing, on the driver."""
+
+    qids: np.ndarray  # sorted distinct query ids
+    qmat: np.ndarray  # float64 query vectors; row i is query qids[i]
+    shard_to_q: dict  # probed shard id -> sorted row indices into qids
+    dead: np.ndarray  # sorted ids whose base rows the candidate scan drops
+
+
+def _routing(qids, qmat, qrow, shards) -> Routing:
+    """Routing of (query row, shard) pairs; a repeated id keeps its first vector."""
+    uq, first, inv = np.unique(qids, return_index=True, return_inverse=True)
+    qpos = inv[qrow]
+    order = np.lexsort((qpos, shards))
+    groups = np.split(order, np.flatnonzero(np.diff(shards[order])) + 1)
+    shard_to_q = {int(shards[g[0]]): np.unique(qpos[g]) for g in groups if len(g)}
+    return Routing(uq, qmat[first], shard_to_q, np.empty(0, dtype=np.int64))
+
+
+def _routing_of_table(routed: DataFrame) -> Routing:
+    """Routing of a (qid, qvec, shard_id) routing table."""
+    rows = routed.select("qid", "qvec", "shard_id").collect()
+    qids, shards = (np.array([r[c] for r in rows], dtype=np.int64) for c in ("qid", "shard_id"))
+    qmat = np.array([r["qvec"] for r in rows] or np.empty((0, 0)), dtype=np.float64)
+    return _routing(qids, qmat, np.arange(len(rows)), shards)
+
+
+def _route_on_driver(
+    queries: DataFrame, centroids: DataFrame, nprobe: int, *, query_id: str, query_vec: str
+) -> Routing:
+    """``route_queries`` on the driver, pair for pair: the query batch
+    and the centroid table are collected once each, and every query
+    keeps its first ``nprobe`` shards by (distance, shard id) — the
+    ``l2_distance`` arithmetic (``knn.fold_l2``) and the order of
+    ``array_sort(struct(cdist, shard_id))``. The query collect reads at
+    most ``DRIVER_ROWS + 1`` rows in one job; a larger batch fails
+    loudly, it is never truncated."""
+    from big_ann_spark.functions.arrowio import int_col, list_col_matrix
+
+    q = (
+        queries.select(F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec"))
+        .limit(DRIVER_ROWS + 1)
+        .toArrow()
+    )
+    if q.num_rows > DRIVER_ROWS:
+        raise ValueError(
+            f"the query batch has more than {DRIVER_ROWS:,} rows, and a "
+            "from-disk search routes its queries on the driver: split the "
+            "batch into smaller searches"
+        )
+    c = centroids.select("shard_id", "centroid").toArrow()
+    qids, qmat = int_col(q, "qid"), list_col_matrix(q, "qvec")
+    cids, cmat = int_col(c, "shard_id"), list_col_matrix(c, "centroid")
+    if not len(qids) or not len(cids) or nprobe < 1:
+        return _routing(qids, qmat, np.empty(0, np.int64), np.empty(0, np.int64))
+    step, top = max(1, _SCORE_BLOCK // len(cids)), []
+    for s in range(0, len(qmat), step):
+        cd = fold_l2(qmat[s : s + step, None], cmat[None])  # (block, m)
+        top.append(np.lexsort((np.broadcast_to(cids, cd.shape), cd), axis=1)[:, :nprobe])
+    top = np.concatenate(top)
+    return _routing(qids, qmat, np.repeat(np.arange(len(qids)), top.shape[1]), cids[top].ravel())
+
+
 def ivf_search_from_disk(
     queries: DataFrame,
     path: str,
@@ -170,62 +239,59 @@ def ivf_search_from_disk(
     dim: int | None = None,
     codec: str = "raw",
     rerank_factor: int = 4,
-    max_id_pushdown: int = 100_000,
+    max_id_pushdown: int = DRIVER_ROWS,
     as_of: int | None = None,
     _routed: DataFrame | None = None,
     _sq8_ranges: tuple[list[float], list[float]] | None = None,
 ) -> DataFrame:
-    """``ivf_search`` straight off a ``write_sharded`` layout path:
-    route first, open only the probed shard directories
-    (``open_probed_shards``), then join/score/top-k. First-search cost
-    on a cold session drops from the full-layout listing walk to the
-    probed-set read — the rest of the plan is identical to
-    ``ivf_search(static_prune=True)`` (the explicit paths subsume the
-    ``isin`` partition filter).
+    """``ivf_search`` straight off a ``write_sharded`` layout path: a
+    global index on the driver picks the shards, then one local scan.
 
-    ``codec="sq8"`` (layout written with ``sq8_ranges``): the candidate
-    pass scans ONLY the ``codes`` column of the probed shards — parquet
-    column pruning drops the raw float32 vectors, ~4× less IO on the
-    dominant phase — scoring decoded bucket midpoints (``sq8_pool``).
-    The top-``k·rerank_factor`` quantized candidates are then re-ranked
-    exactly: while the pool holds at most ``max_id_pushdown`` rows (the
-    BM25 MAX_PUSHDOWN_TERMS lesson) their ids are In-pushed and fetch
-    raw vectors from the id-sorted shard files with row-group/page
-    skipping, so the raw column is read at candidate granularity, not
-    probed-shard granularity; a larger pool is never collected and
-    joins the probed shards distributed instead.
+    1. Route on the driver (``_route_on_driver``, bit-equal to
+       ``route_queries``); a query batch over ``DRIVER_ROWS`` fails.
+    2. Open ONLY the probed shard directories (``open_probed_shards``,
+       no full-layout listing walk) and resolve the mutation ledger
+       (``vector_ops.live_probed_scan``, memoized per ledger state: an
+       unchanged ledger costs no Spark job).
+    3. One ``mapInArrow`` candidate scan (``_arrow_nominating_pool``)
+       drops dead base rows, scores each (query, shard) group against
+       the broadcast queries and keeps a per-query top-k; one window
+       merges them.
 
-    ``as_of``: SNAPSHOT search — the layout exactly as of committed
-    mutation op ``as_of`` (``operators.vector_ops``; −1 = the pristine
-    base build, ``None`` = head). A layout with no ``ops/`` directory
-    short-circuits: mutation resolution costs NOTHING until the first
-    upsert/delete lands.
+    ``codec="raw"`` scores raw vectors by ``_fold_pool``, so results
+    equal ``ivf_search`` over the fully listed layout bit for bit: four
+    Spark jobs once the ledger state is resolved (query collect,
+    centroid collect, the scan's two stages).
 
-    ``_routed``: a caller-provided routing table (same contract as
-    ``ivf_search``), already MATERIALIZED or checkpointed — a caller
-    serving several tiers of the same layout routes once and shares
-    the table, instead of paying one routing checkpoint per tier."""
-    from big_ann_spark.operators.vector_ops import live_probed_view
+    ``codec="sq8"``/``"pq"``/``"opq"``/``"binary"`` (refine layouts)
+    scan ONLY the code column of the probed shards — parquet column
+    pruning keeps the raw vectors out of the dominant phase — through
+    ``sq8_pool``/``pq_pool``/``binary_pool``; the
+    top-``k·rerank_factor`` candidates are then re-ranked exactly.
+    While the pool holds at most ``max_id_pushdown`` rows (the BM25
+    MAX_PUSHDOWN_TERMS lesson) their ids are In-pushed and fetch raw
+    vectors from the id-sorted shard files with row-group/page
+    skipping; a larger pool is never collected and joins the probed
+    shards distributed instead.
 
+    ``as_of``: SNAPSHOT search — the layout as of committed mutation op
+    ``as_of`` (``operators.vector_ops``; −1 = the base build, ``None`` =
+    head). A layout with no ``ops/`` directory resolves nothing.
+
+    ``_routed``: a caller-provided, materialized (qid, qvec, shard_id)
+    routing table (``ivf_search``'s contract) replaces step 1."""
+    from big_ann_spark.operators.vector_ops import live_probed_scan, live_probed_view
+
+    if codec not in ("raw", "sq8", "pq", "opq", "binary"):
+        raise ValueError(
+            f"unknown codec {codec!r}; use 'raw', 'sq8', 'pq', 'opq' or "
+            "'binary'"
+        )
     spark = queries.sparkSession
-    # lazy checkpoint: the shard-id collect below is the first action
-    # and materializes it — one job where the eager form ran a serial
-    # checkpoint job first and the collect second
-    routed = (
-        _routed
-        if _routed is not None
-        else route_queries(
-            queries, centroids, nprobe, query_id=query_id, query_vec=query_vec, dim=dim
-        ).localCheckpoint(eager=False)
-    )
-    # one routing materialization: the sq8/pq pools need the routed
-    # ROWS on the driver anyway, so collect once here and derive
-    # probe_ids from the same rows instead of running a second serial
-    # job over the same contractually-tiny table
     # sidecar prefetch: the codebooks (+ optional OPQ rotation) live in
     # layout sidecars with NO data dependency on routing, so their read
-    # jobs run on a background thread while the routing job runs; the
-    # values are identical, only the wall-clock interleaving changes.
+    # jobs run on a background thread while routing runs; the values
+    # are identical, only the wall-clock interleaving changes.
     sidecar_fut = sidecars = None
     if codec in ("pq", "opq"):
         from big_ann_spark.operators import oplayout as _ol2
@@ -239,22 +305,20 @@ def ivf_search_from_disk(
             return cb, rot
 
         sidecar_fut = _SIDECAR_PREFETCH.submit(_load_pq_sidecars)
-    routed_rows = None
     try:
-        if codec in ("sq8", "pq", "opq"):
-            routed_rows = routed.select("qid", "qvec", "shard_id").collect()
-            probe_ids = sorted({int(r["shard_id"]) for r in routed_rows})
-        else:
-            # plain collect + driver-side set: the table is contractually
-            # tiny (<= Q*nprobe rows), so a distinct() only added an
-            # exchange and its AQE stage micro-job to the serial chain
-            probe_ids = sorted(
-                {int(r["shard_id"]) for r in routed.select("shard_id").collect()}
+        routing = (
+            _routing_of_table(_routed)
+            if _routed is not None
+            else _route_on_driver(
+                queries, centroids, nprobe, query_id=query_id, query_vec=query_vec
             )
-        shards = live_probed_view(
-            spark, path, open_probed_shards(spark, path, probe_ids),
-            probe_ids, as_of=as_of, id_col=id_col, vec_col=vec_col,
         )
+        probe_ids = sorted(routing.shard_to_q)
+        base = open_probed_shards(spark, path, probe_ids)
+        live, dead = live_probed_scan(
+            spark, path, base, probe_ids, as_of=as_of, id_col=id_col, vec_col=vec_col
+        )
+        routing = routing._replace(dead=dead)
         if sidecar_fut is not None:
             sidecars = sidecar_fut.result()
     finally:
@@ -264,33 +328,20 @@ def ivf_search_from_disk(
         if sidecar_fut is not None and not sidecar_fut.cancel():
             sidecar_fut.exception()
     if codec == "raw":
-        return ivf_search(
-            queries,
-            shards,
-            centroids,
-            k,
-            nprobe,
-            query_id=query_id,
-            query_vec=query_vec,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=dim,
-            _routed=routed,
+        return _fold_pool(
+            None, live, k, vec_col, lambda X: X, id_col=id_col, routed_rows=routing
         )
     if codec == "sq8":
         pool = sq8_pool(
-            routed, shards, path, k * rerank_factor,
-            id_col=id_col, ranges=_sq8_ranges, routed_rows=routed_rows,
+            None, live, path, k * rerank_factor,
+            id_col=id_col, ranges=_sq8_ranges, routed_rows=routing,
         )
     elif codec in ("pq", "opq"):
-        # OPQ is the PQ tier with codes in a LEARNED ROTATED space:
-        # pq_pool builds the per-query ADC LUTs from the rotated
-        # queries whenever the rotation sidecar is present (codec="pq"
-        # on an OPQ layout therefore serves correctly too); the exact
-        # rerank compares raw vectors — an orthogonal R preserves L2,
-        # so rotation never touches the rerank. codec="opq" makes the
-        # tier explicit and REFUSES a layout without the rotation
-        # (a plain-PQ layout served as "opq" would silently be plain PQ).
+        # OPQ is PQ with codes in a learned rotated space: pq_pool
+        # rotates the queries whenever the rotation sidecar exists, and
+        # the exact rerank is rotation-free (an orthogonal R preserves
+        # L2). codec="opq" REFUSES a layout without the rotation, which
+        # would otherwise silently serve as plain PQ.
         if codec == "opq" and sidecars[1] is None:
             raise ValueError(
                 f"codec='opq' but {path} has no opq_rotation.parquet — "
@@ -298,36 +349,38 @@ def ivf_search_from_disk(
                 "or serve as codec='pq'"
             )
         pool = pq_pool(
-            routed, shards, path, k * rerank_factor,
-            id_col=id_col, routed_rows=routed_rows, _sidecars=sidecars,
+            None, live, path, k * rerank_factor,
+            id_col=id_col, routed_rows=routing, _sidecars=sidecars,
         )
-    elif codec == "binary":
-        pool = binary_pool(routed, shards, path, k * rerank_factor, id_col=id_col)
     else:
-        raise ValueError(
-            f"unknown codec {codec!r}; use 'raw', 'sq8', 'pq', 'opq' or "
-            "'binary'"
+        pool = binary_pool(
+            None, live, path, k * rerank_factor, id_col=id_col, routed_rows=routing
         )
-    # ONE pool materialization: the pool is Q * k * rerank_factor rows,
-    # so collect its (qid, neighbor_id) pairs once — bounded at
-    # max_id_pushdown + 1 rows — and derive BOTH the id-pushdown list
-    # and the rerank's broadcast pair table from the same rows. Past
-    # the bound the rerank joins the pool DataFrame itself,
-    # distributed, with no id pushdown.
+    # ONE pool collect, bounded at max_id_pushdown + 1 rows, feeds both
+    # the id pushdown and the rerank's broadcast pair table; past the
+    # bound the rerank joins the pool DataFrame, distributed
     pool_pairs = pool.select("qid", "neighbor_id")
     pool_rows = pool_pairs.limit(max_id_pushdown + 1).collect()
-    raw = shards.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
     if len(pool_rows) <= max_id_pushdown:
-        cand_ids = sorted({r["neighbor_id"] for r in pool_rows})
-        raw = raw.filter(_isin_ids("neighbor_id", cand_ids))
+        cand = np.unique(np.array([r["neighbor_id"] for r in pool_rows], dtype=np.int64))
+        contested = np.isin(cand, routing.dead)
+        keep = _isin_ids(id_col, cand[~contested].tolist())
+        if contested.any():
+            # the pool nominated a contested id by its resolved row
+            keep = keep | (F.col("_resolved") & _isin_ids(id_col, cand[contested].tolist()))
+        raw = live.filter(keep)
         pairs = F.broadcast(spark.createDataFrame(pool_rows, pool_pairs.schema))
     else:
+        raw = live_probed_view(
+            spark, path, base, probe_ids, as_of=as_of, id_col=id_col, vec_col=vec_col
+        )
         pairs = pool_pairs
     q = queries.select(
         F.col(query_id).alias("qid"), F.col(query_vec).alias("_qv")
     )
     exact = (
-        raw.join(pairs, "neighbor_id")
+        raw.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
+        .join(pairs, "neighbor_id")
         .join(F.broadcast(q), "qid")
         .select(
             "qid", "neighbor_id", l2_distance("_qv", vec_col, dim).alias("dist")
@@ -339,79 +392,63 @@ def ivf_search_from_disk(
 
 
 def sq8_pool(
-    routed: DataFrame,
+    routed: DataFrame | None,
     shards: DataFrame,
     path: str,
     k_pool: int,
     *,
     id_col: str = "vec_id",
     ranges: tuple[list[float], list[float]] | None = None,
-    routed_rows=None,
+    routed_rows: Routing | None = None,
 ) -> DataFrame:
-    """Quantized candidate pool of an SQ8 layout: score routed queries
-    against decoded bucket midpoints reading ONLY the ``codes`` column
-    (parquet column pruning keeps the raw float32 vectors out of the
-    scan — plan-pinned in tests), top-``k_pool`` per query by
-    (quantized dist, id). The exact-rerank tier consumes this.
-
-    Each Arrow batch decodes its codes once with the arithmetic of
-    ``sq8_decode_col``, ``mn + ((c + 0.5) * (mx − mn)) / 255`` (numpy
-    elementwise ops round identically to the scalar expression), and
-    selects per (routed query, shard) through ``knn.fold_l2_topk``: a
-    GEMM nominates an error-bound band and the left-to-right fold
-    ranks inside it. Pool distances are therefore the fold
-    ``l2_distance(qvec, sq8_decode_col(codes))`` bit-for-bit, however
-    many near-tie GEMM inversions a batch produces, while the scan runs
-    at memory bandwidth (measured ~6× the expression fold on 2M×64,
-    SCALE.md).
+    """Quantized candidate pool of an SQ8 layout: reads ONLY the
+    ``codes`` column (plan-pinned in tests), decodes each Arrow batch
+    with the arithmetic of ``sq8_decode_col``,
+    ``mn + ((c + 0.5) * (mx − mn)) / 255``, and keeps the top-``k_pool``
+    per query by (``_fold_pool`` distance, id) for the exact rerank —
+    the fold ``l2_distance(qvec, sq8_decode_col(codes))`` bit for bit,
+    ~6× the expression fold on 2M×64 (SCALE.md).
 
     ``ranges``: the layout's (mins, maxs) sidecar values when the
-    caller already holds them — skips the one-row driver read, one
-    fewer serial job on the serving path."""
-    import numpy as np
-
-    from big_ann_spark.operators import oplayout
-    from big_ann_spark.operators.knn import fold_l2_topk
-
-    spark = routed.sparkSession
+    caller already holds them (one driver read fewer).
+    ``routed``/``routed_rows``: see ``_arrow_nominating_pool``."""
+    spark = shards.sparkSession
     if ranges is None:
-        ranges_path = f"{path}/sq8_ranges.parquet"
-        if not oplayout.path_exists(spark, ranges_path):
-            # older layouts named the sidecar {path}/sq8.parquet — read
-            # them rather than forcing a rebuild. An existence check,
-            # not a bare except: a genuine read failure (permissions,
-            # corrupt footer) must surface as itself, not as a
-            # misleading not-found on the legacy name.
-            ranges_path = f"{path}/sq8.parquet"
         # explicit schema (write_sharded's sidecar schema): no footer
         # inference job on the serving path
         rng = (
             spark.read.schema("mins array<double>, maxs array<double>")
-            .parquet(ranges_path)
+            .parquet(f"{path}/sq8_ranges.parquet")
             .collect()[0]
         )
         ranges = (rng["mins"], rng["maxs"])
     mn = np.array(ranges[0], dtype=np.float64)
     mx = np.array(ranges[1], dtype=np.float64)
+    return _fold_pool(
+        routed, shards, k_pool, "codes",
+        lambda c: mn + ((c + 0.5) * (mx - mn)) / 255.0,
+        id_col=id_col, routed_rows=routed_rows,
+    )
 
-    def make_state(qids, qvec_by_id):
-        return np.array([qvec_by_id[int(q)] for q in qids], dtype=np.float64)
 
-    def score_shard(qmat, qidx, codes_rows, id_rows):
-        X = mn + ((codes_rows + 0.5) * (mx - mn)) / 255.0
-        qi, sel_ids, dists = fold_l2_topk(qmat[qidx], X, id_rows, k_pool)
+def _fold_pool(routed, shards, k_pool, payload_col, decode, **kw) -> DataFrame:
+    """``_arrow_nominating_pool`` scoring ``decode(payload)`` by
+    ``knn.fold_l2_topk``: a GEMM nominates an error-bound band and the
+    left-to-right fold ranks inside it, so distances are the fold of
+    ``l2_distance`` bit for bit however many near-ties a batch holds."""
+
+    def score_shard(qmat, qidx, rows, id_rows):
+        qi, sel_ids, dists = fold_l2_topk(qmat[qidx], decode(rows), id_rows, k_pool)
         return qidx[qi], sel_ids, dists
 
     return _arrow_nominating_pool(
-        routed, shards, k_pool,
-        id_col=id_col, payload_col="codes", payload_dtype=np.float64,
-        make_state=make_state, score_shard=score_shard,
-        routed_rows=routed_rows,
+        routed, shards, k_pool, payload_col=payload_col, payload_dtype=np.float64,
+        make_state=lambda qids, qmat: qmat, score_shard=score_shard, **kw,
     )
 
 
 def _arrow_nominating_pool(
-    routed: DataFrame,
+    routed: DataFrame | None,
     shards: DataFrame,
     k_pool: int,
     *,
@@ -420,123 +457,105 @@ def _arrow_nominating_pool(
     payload_dtype,
     make_state,
     score_shard,
-    routed_rows=None,
+    routed_rows: Routing | None = None,
 ) -> DataFrame:
-    """The shared skeleton of the numpy candidate pools (sq8 decode
-    GEMM, pq LUT gather): routing ships as ONE broadcast (sorted query
-    ids, caller-built per-query state, shard→query-index lists); each
-    Arrow batch extracts the payload matrix once, and for every
-    (probed shard ∩ batch) group the caller's
-    ``score_shard(state, qidx, payload_rows, id_rows)`` returns aligned
-    (query index, neighbor id, dist) arrays — emitted as
-    (qid, neighbor_id, dist) rows and globally top-``k_pool``'d per
-    query by (dist, id). The distance arithmetic lives entirely in the
-    scorer.
+    """The one candidate scan of the from-disk search: ONE broadcast
+    carries the routing (sorted query ids, per-query state
+    ``make_state(qids, qmat)``, shard → query rows, dead ids). Each
+    Arrow batch drops its dead base rows (``np.isin``; rows a
+    ``vector_ops.live_probed_scan`` union marks ``_resolved`` stay),
+    extracts the payload matrix once, and per (probed shard ∩ batch)
+    group and block of queries ``score_shard(state, qidx, payload_rows,
+    id_rows)`` returns aligned (query row, neighbor id, dist) arrays;
+    one window keeps the top-``k_pool`` per query by (dist, id).
 
-    ``routed_rows``: a caller that already collected the routing table
-    (ivf_search_from_disk derives probe_ids from the same rows) passes
-    it through — one routing materialization per search, not two
-    serial jobs over the same tiny table."""
-    import numpy as np
-
-    rrows = (
-        routed_rows
-        if routed_rows is not None
-        else routed.select("qid", "qvec", "shard_id").collect()
+    ``routed_rows``: the search's ``Routing`` when the caller holds it;
+    otherwise the (qid, qvec, shard_id) table ``routed`` is collected."""
+    routing = routed_rows if routed_rows is not None else _routing_of_table(routed)
+    state = make_state(routing.qids, routing.qmat)
+    bc = shards.sparkSession.sparkContext.broadcast(
+        (routing.qids, state, routing.shard_to_q, routing.dead)
     )
-    qvec_by_id: dict[int, list[float]] = {}
-    shard_to_q: dict[int, list[int]] = {}
-    for r in rrows:
-        qvec_by_id.setdefault(int(r["qid"]), [float(x) for x in r["qvec"]])
-    qids = np.array(sorted(qvec_by_id), dtype=np.int64)
-    qpos = {int(q): i for i, q in enumerate(qids)}
-    for r in rrows:
-        shard_to_q.setdefault(int(r["shard_id"]), []).append(qpos[int(r["qid"])])
-    shard_to_q = {s: np.unique(np.array(v)) for s, v in shard_to_q.items()}
-    state = make_state(qids, qvec_by_id)
-    bc = routed.sparkSession.sparkContext.broadcast((qids, state, shard_to_q))
+    # dead ids come with a live_probed_scan union and its _resolved column
+    cols = [id_col, payload_col, "shard_id"] + (["_resolved"] if len(routing.dead) else [])
 
     def part(batches):
         import pyarrow as pa
 
         from big_ann_spark.functions.arrowio import int_col, list_col_matrix
 
-        qids, state, shard_to_q = bc.value
+        qids, state, shard_to_q, dead = bc.value
         for rb in batches:
+            ids = int_col(rb, id_col)
+            if len(dead):
+                keep = ~np.isin(ids, dead)
+                keep |= rb.column("_resolved").to_numpy(zero_copy_only=False)
+                rb, ids = rb.filter(pa.array(keep)), ids[keep]
             if rb.num_rows == 0:
                 continue
-            ids = int_col(rb, id_col)
             sh = int_col(rb, "shard_id")
             payload = list_col_matrix(rb, payload_col, payload_dtype)
             out_q, out_n, out_d = [], [], []
             for s in np.unique(sh):
                 qidx = shard_to_q.get(int(s))
-                if qidx is None or len(qidx) == 0:
+                if qidx is None:
                     continue
                 rows = np.flatnonzero(sh == s)
-                qi, sel_ids, dists = score_shard(state, qidx, payload[rows], ids[rows])
-                out_q.append(qids[qi])
-                out_n.append(sel_ids)
-                out_d.append(dists)
+                step = max(1, _SCORE_BLOCK // len(rows))
+                for b in range(0, len(qidx), step):
+                    qi, sel_ids, dists = score_shard(
+                        state, qidx[b : b + step], payload[rows], ids[rows]
+                    )
+                    out_q.append(qids[qi])
+                    out_n.append(sel_ids)
+                    out_d.append(dists)
             if not out_q:
                 continue
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_q), type=pa.int64()),
-                    pa.array(np.concatenate(out_n), type=pa.int64()),
-                    pa.array(np.concatenate(out_d), type=pa.float64()),
-                ],
+                [pa.array(np.concatenate(c)) for c in (out_q, out_n, out_d)],
                 names=["qid", "neighbor_id", "dist"],
             )
 
-    partial = shards.select(
-        F.col(id_col), F.col(payload_col), F.col("shard_id")
-    ).mapInArrow(part, schema="qid long, neighbor_id long, dist double")
+    # at most one task per core: every task pays a Python worker round
+    # trip (~0.2 s on a 4-core host) before its first batch, and the
+    # resolved winners' checkpoint partition would otherwise start a
+    # second wave; Arrow batches stream, so a task's memory stays flat
+    partial = (
+        shards.select(*cols)
+        .coalesce(shards.sparkSession.sparkContext.defaultParallelism)
+        .mapInArrow(part, schema="qid long, neighbor_id long, dist double")
+    )
     return top_k_per_group(
         partial, ["qid"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k_pool
     )
 
 
 def pq_pool(
-    routed: DataFrame,
+    routed: DataFrame | None,
     shards: DataFrame,
     path: str,
     k_pool: int,
     *,
     id_col: str = "vec_id",
-    routed_rows=None,
+    routed_rows: Routing | None = None,
     _sidecars: tuple | None = None,
 ) -> DataFrame:
-    """Quantized candidate pool of an IVF-PQ (IVFADC) layout: the
-    candidate pass scans ONLY the ``pq_codes`` column of the probed
-    shards (m sub-codes per row — at m=8 over 64-d float32 that is
-    ~16× less column IO than raw, one decade past SQ8's 4×), scoring
-    each row as ``Σ_j lut[qid][j][code_j]`` against the broadcast
-    per-query ADC lookup tables (driver-computed from the persisted
-    codebooks — queries are the contractual small side). top-``k_pool``
-    per query by (adc dist, id); ADC distances are approximate, the
-    exact-rerank tier above fixes ranks and emits true distances.
+    """Quantized candidate pool of an IVF-PQ (IVFADC) layout: scans ONLY
+    the ``pq_codes`` column of the probed shards (m sub-codes per row,
+    ~16× less column IO than raw at m=8 over 64-d) and scores each row
+    as ``Σ_j lut[q][j][code_j]`` against per-query ADC lookup tables
+    built on the driver from the persisted codebooks: a numpy gather
+    accumulated left-to-right over j, selected by ``knn.band_select``
+    with a zero-width band (the sum is already the exact score).
+    top-``k_pool`` per query by (adc dist, id); the exact rerank above
+    fixes ranks and distances.
 
-    Each Arrow batch gathers ``lut[j, codes[:, j]]`` with numpy fancy
-    indexing and accumulates left-to-right over j, then selects through
-    ``knn.band_select`` with a zero-width band (the gathered sum is
-    already the exact score).
-
-    ``_sidecars``: (codebooks, rotation) already loaded by the caller —
-    ivf_search_from_disk prefetches them on a background thread
-    concurrent with the routing collect; values are identical to
-    loading here."""
-    import numpy as np
-
+    ``_sidecars``: (codebooks, rotation) the caller already loaded —
+    ivf_search_from_disk prefetches them while routing."""
     from big_ann_spark.operators import oplayout
-    from big_ann_spark.operators.knn import band_select
-    from big_ann_spark.operators.pq import (
-        load_pq_codebooks,
-        load_rotation,
-        pq_lut_rows,
-    )
+    from big_ann_spark.operators.pq import load_pq_codebooks, load_rotation, pq_lut_rows
 
-    spark = routed.sparkSession
+    spark = shards.sparkSession
     if _sidecars is not None:
         codebooks, rotation = _sidecars
     else:
@@ -550,16 +569,11 @@ def pq_pool(
         if oplayout.path_exists(spark, f"{path}/opq_rotation.parquet"):
             rotation = load_rotation(spark, f"{path}/opq_rotation.parquet")
 
-    def make_state(qids, qvec_by_id):
+    def make_state(qids, qmat):
         if rotation is not None:
             R = np.asarray(rotation, dtype=np.float64)
-            qvec_by_id = {
-                q: list(np.asarray(v, dtype=np.float64) @ R)
-                for q, v in qvec_by_id.items()
-            }
-        rows = pq_lut_rows(
-            [(int(q), qvec_by_id[int(q)]) for q in qids], codebooks
-        )
+            qmat = [v @ R for v in qmat]
+        rows = pq_lut_rows(zip(qids.tolist(), qmat), codebooks)
         return np.array([l for _, l in rows], dtype=np.float64)
 
     def score_shard(luts, qidx, codes_rows, id_rows):
@@ -581,55 +595,54 @@ def pq_pool(
 
 
 def binary_pool(
-    routed: DataFrame,
+    routed: DataFrame | None,
     shards: DataFrame,
     path: str,
     k_pool: int,
     *,
     id_col: str = "vec_id",
+    routed_rows: Routing | None = None,
 ) -> DataFrame:
-    """Candidate pool of a binary (sign-bit) layout — the 32× tier:
-    the candidate pass scans ONLY the packed ``bcodes`` words of the
-    probed shards (d bits per row vs d·32 for raw float32) and scores
-    XOR+popcount Hamming distance against the broadcast query codes
-    (binarized under the layout's frozen thresholds). Integer-exact,
-    whole-stage codegen, no Python. top-``k_pool`` per query by
-    (hamming, id); the exact-rerank tier above fixes ranks."""
-    from big_ann_spark.operators.pq import (
-        BINARY_WORD_BITS,
-        binarize_col,
-        hamming_distance,
-    )
+    """Candidate pool of a binary (sign-bit) layout — the 32× tier: scans
+    ONLY the packed ``bcodes`` words of the probed shards and scores the
+    Hamming distance ``Σ_w popcount(q_w XOR b_w)`` of ``pq.hamming_distance``
+    against query codes packed on the driver as ``pq.binarize_col`` packs
+    rows. Integer-exact, so ``knn.band_select`` selects with a zero-width
+    band: top-``k_pool`` per query by (hamming, id), for the exact rerank."""
+    from big_ann_spark.operators.pq import BINARY_WORD_BITS
 
-    spark = routed.sparkSession
-    # explicit schema (r14): write_sharded's sidecar schema — no footer
-    # inference job on the serving path
-    thr = list(
+    spark = shards.sparkSession
+    # explicit schema: no footer inference job on the serving path
+    thr = np.array(
         spark.read.schema("thresholds array<double>")
         .parquet(f"{path}/binary_thresholds.parquet")
-        .collect()[0]["thresholds"]
+        .collect()[0]["thresholds"],
+        dtype=np.float64,
     )
-    qcodes = (
-        routed.select("qid", "qvec")
-        .dropDuplicates(["qid"])
-        .select(
-            "qid",
-            binarize_col("qvec", thr, word_bits=BINARY_WORD_BITS).alias("_qc"),
+
+    def make_state(qids, qmat):
+        # bit j of word w is set iff dim w·BINARY_WORD_BITS + j exceeds
+        # its threshold; dims past the vector or the thresholds read 0
+        n_words = -(-len(thr) // BINARY_WORD_BITS)
+        d = min(len(thr), qmat.shape[1])
+        bits = np.zeros((len(qmat), n_words * BINARY_WORD_BITS), dtype=np.int64)
+        bits[:, :d] = qmat[:, :d] > thr[:d]
+        weights = np.left_shift(1, np.arange(BINARY_WORD_BITS, dtype=np.int64))
+        return (bits.reshape(len(qmat), n_words, BINARY_WORD_BITS) * weights).sum(axis=2)
+
+    def score_shard(qcodes, qidx, codes_rows, id_rows):
+        x = qcodes[qidx][:, None, :] ^ codes_rows[None, :, :]
+        ham = _POPCOUNT8[x.view(np.uint8)].sum(axis=2, dtype=np.float64)
+        qi, sel_ids, dists = band_select(
+            ham, id_rows, k_pool, np.zeros_like, lambda qi, ci: ham[qi, ci]
         )
-    )
-    probes = routed.select("qid", "shard_id").join(F.broadcast(qcodes), "qid")
-    cands = probes.join(
-        shards.select(
-            F.col(id_col).alias("neighbor_id"), F.col("bcodes"), "shard_id"
-        ),
-        "shard_id",
-    ).select(
-        "qid",
-        "neighbor_id",
-        hamming_distance("_qc", "bcodes").cast("double").alias("dist"),
-    )
-    return top_k_per_group(
-        cands, ["qid"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k_pool
+        return qidx[qi], sel_ids, dists
+
+    return _arrow_nominating_pool(
+        routed, shards, k_pool,
+        id_col=id_col, payload_col="bcodes", payload_dtype=np.int64,
+        make_state=make_state, score_shard=score_shard,
+        routed_rows=routed_rows,
     )
 
 
@@ -1588,7 +1601,6 @@ def _assign_top_probes(
     top-p). Exact f64 distances; WHICH p at an equal-distance boundary
     is argpartition-arbitrary but deterministic for identical input
     (all p assignments are emitted, so intra-p order is moot)."""
-    import numpy as np
 
     sids = np.array([c[0] for c in centroids], dtype=np.int64)
     C = np.array([c[1] for c in centroids], dtype=np.float64)
@@ -1603,7 +1615,6 @@ def _assign_top_probes(
         # need not have the package importable (driver-contract runs
         # launch from an arbitrary cwd); this is arrowio's
         # list_col_matrix inlined (flatten honors offsets/slices)
-        import numpy as np
         import pyarrow as pa
 
         for rb in batches:
@@ -1692,7 +1703,6 @@ def _seed_cell_centroids(
     seed a multi-probe assignment, so seeding quality shifts WHERE
     the within-cell kNN work lands, never correctness — the
     NN-Descent refinement closes seams regardless."""
-    import numpy as np
     import pandas as pd
 
     from pyspark.ml.clustering import KMeans
@@ -1756,8 +1766,6 @@ def _seed_cell_centroids(
     iters = int(max_iter)
 
     def sub_fit(key, pdf):
-        import numpy as np
-
         k_i = min(int(k_map.get(int(key[0]), 1)), len(pdf))
         ids = pdf["_nid"].to_numpy(dtype=np.int64)
         V = np.asarray(np.stack(pdf["_nvec"].to_numpy()), dtype=np.float64)
@@ -1898,8 +1906,6 @@ def ivf_seeded_knn_graph(
     cap_ = int(max_shard_rows)
 
     def shard_knn(pdf):
-        import numpy as np
-
         n_s = len(pdf)
         if n_s < 2:
             return pd.DataFrame(
@@ -2357,7 +2363,7 @@ def knn_graph_search_from_disk(
     column-pruned scan per hop joined distributively, amortized over
     the batch.
 
-    MUTATIONS (``graph_ops``, VERDICT r12 #2): a layout carrying
+    MUTATIONS (``graph_ops``): a layout carrying
     committed ops serves the LIVE view — the beam walks the base graph
     unchanged (tombstoned records still route, the FreshDiskANN rule),
     then contested node ids are suppressed from the surfaced results
@@ -2422,7 +2428,7 @@ def knn_graph_search_from_disk(
         if f_ids is None:
             # over-cap regime: the id set EXCEEDS max_id_pushdown and
             # grows with Q·beam·degree — never force a broadcast of an
-            # unbounded set (ADVICE r12); AQE picks the strategy from
+            # unbounded set; AQE picks the strategy from
             # the runtime size (small batches still get a broadcast)
             recs = recs.join(f_ids_df, "node", "left_semi")
         nbrs = (
@@ -2451,17 +2457,12 @@ def knn_graph_search_from_disk(
         ).localCheckpoint()
     from big_ann_spark.operators import vector_ops as VO
 
-    state = (
-        VO.mutation_state(spark, path, as_of)
-        if VO.has_vector_ops(spark, path)
-        else None
-    )
+    state = VO.mutation_state(spark, path, as_of)
     if state is not None:
-        contested, resolved = state
         # suppress contested ids from the BASE results (deletes vanish,
         # re-upserts must not surface their stale vector)...
         scored = scored.join(
-            F.broadcast(contested.select(F.col("vec_id").alias("node"))),
+            F.broadcast(state.contested.select(F.col("vec_id").alias("node"))),
             "node",
             "left_anti",
         )
@@ -2469,7 +2470,7 @@ def knn_graph_search_from_disk(
         # op-sized × query-batch, the IVF contested-side contract
         live = q.crossJoin(
             F.broadcast(
-                resolved.select(
+                state.resolved.select(
                     F.col("vec_id").alias("node"),
                     F.col("embedding").alias("_lv"),
                 )

@@ -172,10 +172,9 @@ def compact_graph_layout(
     state = VO.mutation_state(spark, src_path)
     live = base
     if state is not None:
-        contested, resolved = state
         live = base.join(
-            F.broadcast(contested), "vec_id", "left_anti"
-        ).unionByName(resolved.select("vec_id", "embedding"))
+            F.broadcast(state.contested), "vec_id", "left_anti"
+        ).unionByName(state.resolved.select("vec_id", "embedding"))
     live = live.localCheckpoint()  # consumed by the build AND the writer
     if build == "ivf":
         edges = ANN.ivf_seeded_knn_graph(live, k, dim=dim, **build_kwargs)

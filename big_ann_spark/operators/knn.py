@@ -53,13 +53,14 @@ def _dist_expr(metric: str, a: str | Column, b: str | Column, dim: int | None = 
 
 
 def fold_l2(Q: np.ndarray, X: np.ndarray) -> np.ndarray:
-    """L2 distance of each row pair ``(Q[i], X[i])`` as the left-to-right
-    fold ``acc += (q_j − x_j)²`` in dimension order: every accumulator
-    sees the addition sequence of the scalar ``F.aggregate`` fold and
-    DuckDB's ``list_sum`` (numpy's pairwise ``.sum()`` would not)."""
-    acc = np.zeros(Q.shape[0])
-    for j in range(Q.shape[1]):
-        dv = Q[:, j] - X[:, j]
+    """L2 distance of each row pair ``(Q[i], X[i])`` (leading axes
+    broadcast) as the left-to-right fold ``acc += (q_j − x_j)²`` over
+    the last axis: every accumulator sees the addition sequence of the
+    scalar ``F.aggregate`` fold and DuckDB's ``list_sum`` (numpy's
+    pairwise ``.sum()`` would not)."""
+    acc = np.zeros(np.broadcast_shapes(Q.shape[:-1], X.shape[:-1]))
+    for j in range(Q.shape[-1]):
+        dv = Q[..., j] - X[..., j]
         acc += dv * dv
     return np.sqrt(acc)
 

@@ -46,8 +46,8 @@ reclaimable without a delete+recreate race; commit deletes the id's
 claims. The claim is an allocation arbiter, not a lease — liveness
 stays the lock's (and the orchestrator's) job.
 
-**Compaction policy**: mutation state costs every search one broadcast
-row per contested id — measured linear in mutation volume (+6.5 s at
+**Compaction policy**: mutation state costs every search one shipped
+id per contested id — measured linear in mutation volume (+6.5 s at
 1.58M ids, SCALE.md) and reset by compaction. Readers warn past
 ``CONTESTED_WARN_ABOVE`` (``warn_contested_size``), and the mutation
 CLIs accept ``--compact-above N`` to fold the layout in place
@@ -58,6 +58,8 @@ contested count exceeds the budget.
 from __future__ import annotations
 
 import contextlib
+from collections import OrderedDict
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -203,8 +205,8 @@ def writer_lock(spark, path: str, *, owner: str = "", in_compaction: bool = Fals
         fs.delete(jp, False)
 
 
-# Query-time contested-set guardrail: mutation resolution broadcasts
-# one (id, latest-op) row per mutated id, and the 20M campaign measured
+# Query-time contested-set guardrail: mutation resolution ships one
+# id per mutated id with every search, and the 20M campaign measured
 # that cost LINEAR in mutation volume — +1.4 s/search at 158k contested
 # ids, +6.5 s at 1.58M, reset to baseline by compaction (SCALE.md
 # "Filtered-track serving"). Above this many contested ids every search
@@ -213,62 +215,84 @@ def writer_lock(spark, path: str, *, owner: str = "", in_compaction: bool = Fals
 CONTESTED_WARN_ABOVE = 500_000
 
 
-# (path, as_of, context) -> (ledger token, contested count)
-_contested_count_memo: dict[tuple[str, int | None, str], tuple[frozenset, int]] = {}
+class LedgerEntry(NamedTuple):
+    """State derived from one ledger state of one layout."""
+
+    token: tuple  # the ledger state it was derived under
+    count: int  # contested ids
+    state: object  # the context's state, e.g. vector_ops.MutationState
+    checkpoint: DataFrame | None  # the local checkpoint ``state`` reads
+
+
+# (path, as_of, context) -> LedgerEntry, least recently used first: the
+# one bounded memo of ledger-derived state (mutation_state's winners,
+# check_contested's counts), each entry valid while its token is current
+_contested_count_memo: OrderedDict[tuple[str, int | None, str], LedgerEntry] = (
+    OrderedDict()
+)
+LEDGER_MEMO_ENTRIES = 16
 
 
 def invalidate_contested_memo(path: str) -> None:
+    """Drop every entry of ``path``, leaving their checkpoints to Spark's
+    ContextCleaner: a search built before a mutation may still read them."""
     base = path.rstrip("/")
     for k in [k for k in _contested_count_memo if k[0] == base]:
         _contested_count_memo.pop(k, None)
 
 
-def check_contested(
-    spark, path: str, latest, context: str, *, as_of: int | None = None
-) -> bool:
-    """Emptiness probe + memoized size telemetry for a checkpointed
-    op-sized winners DF; returns True when ``latest`` is EMPTY. The
-    emptiness probe is ``head(1)`` (an early-out job — needed anyway);
-    the FULL count that feeds :func:`warn_contested_size` runs once
-    per LEDGER STATE per (path, as_of, context) — the memo carries the
-    (op id, marker mtime) set the count was taken under (one ``_ops``
-    dir listing, the same metadata walk every search already pays —
-    never a Spark job), so a mutation landed by ANOTHER process busts
-    it the moment its commit marker is visible. The mtimes matter: op
-    ids restart at 0 after ``compact_in_place``, so a foreign compact
-    followed by new ops can reproduce the old id set exactly. Same-
-    session ``mark_committed`` / ``compact_in_place`` still invalidate
-    eagerly. Telemetry must not cost an extra Spark job per search."""
+def ledger_entry(
+    spark, path: str, context: str, build, *, as_of: int | None = None
+) -> LedgerEntry:
+    """The memoized ``context`` state of ``path`` under its current
+    ledger token: the Spark application (checkpoints live in it) and
+    the (op id, commit-marker mtime) set filtered by ``as_of``, from one
+    ``_ops`` listing — so a foreign commit busts it the moment its marker
+    is visible, and a foreign compaction too (op ids restart at 0 after
+    ``compact_in_place``; the mtimes differ). On a miss ``build()``
+    returns (count, state, checkpoint). Past ``LEDGER_MEMO_ENTRIES`` the
+    least recently used entry is dropped and its checkpoint unpersisted."""
     base = path.rstrip("/")
     key = (base, as_of, context)
-    token = frozenset(
+    token = spark.sparkContext.applicationId, frozenset(
         (i, t)
         for i, t in commit_markers(spark, base).items()
         if as_of is None or i <= as_of
     )
-    if not latest.head(1):
-        _contested_count_memo[key] = (token, 0)
-        return True
-    memo = _contested_count_memo.get(key)
-    if memo is None or memo[0] != token:
-        n = latest.count()
-        _contested_count_memo[key] = (token, n)
-    else:
-        n = memo[1]
-    warn_contested_size(n, base, context)
-    return False
+    # pop + insert, each atomic, (re)files the entry as most recent
+    entry = _contested_count_memo.pop(key, None)
+    if entry is None or entry.token != token:
+        entry = LedgerEntry(token, *build())
+    _contested_count_memo[key] = entry
+    while len(_contested_count_memo) > LEDGER_MEMO_ENTRIES:
+        _, old = _contested_count_memo.popitem(last=False)
+        if old.checkpoint is not None:
+            old.checkpoint._jdf.queryExecution().logical().rdd().unpersist(False)
+    return entry
+
+
+def check_contested(
+    spark, path: str, latest, context: str, *, as_of: int | None = None
+) -> bool:
+    """Size telemetry for an op-sized winners DataFrame, True when it is
+    EMPTY; counted once per ledger state (``ledger_entry``)."""
+    n = ledger_entry(
+        spark, path, context, lambda: (latest.count(), None, None), as_of=as_of
+    ).count
+    warn_contested_size(n, path.rstrip("/"), context)
+    return n == 0
 
 
 def warn_contested_size(n: int, path: str, context: str) -> None:
     """One actionable warning when a layout's uncompacted mutation
     state has outgrown sanity — turns the silent +6.5 s/search the 20M
-    campaign measured into a signal (VERDICT r11 #2)."""
+    campaign measured into a signal."""
     if n > CONTESTED_WARN_ABOVE:
         import warnings
 
         warnings.warn(
             f"{context}: {n:,} contested ids in {path} — mutation "
-            f"resolution broadcasts one row per contested id on EVERY "
+            f"resolution ships one id per contested id with EVERY "
             f"search (measured +6.5 s/search at 1.58M, SCALE.md); "
             f"compact the layout (CLI: index-compact, or pass "
             f"--compact-above to the mutation commands) to reset it",

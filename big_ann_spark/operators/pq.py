@@ -905,33 +905,16 @@ def binarize_col(vec_col, thresholds: list[float], *, word_bits: int = BINARY_WO
     d = 1024+ without blowing the codegen budget. Out-of-range dims
     (d not a multiple of word_bits) read NULL via ``get`` and
     contribute 0."""
-    col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    v = col.cast("array<double>")
-    d = len(thresholds)
-    n_words = (d + word_bits - 1) // word_bits
     thr = F.array(*[F.lit(float(t)) for t in thresholds])
-    w2 = F.array(*[F.lit(1 << j).cast("long") for j in range(word_bits)])
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_words - 1)),
-        lambda w: F.aggregate(
-            F.sequence(F.lit(0), F.lit(word_bits - 1)),
-            F.lit(0).cast("long"),
-            lambda acc, j: acc
-            + F.when(
-                F.get(v, w * word_bits + j) > F.get(thr, w * word_bits + j),
-                F.get(w2, j),
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-    )
+    return binarize_col_lazy(vec_col, thr, len(thresholds), word_bits=word_bits)
 
 
 def binarize_col_lazy(vec_col, thr_col, d: int, *, word_bits: int = BINARY_WORD_BITS):
     """``binarize_col`` with the per-dim thresholds read from an ARRAY
-    COLUMN instead of driver literals (r14): callers fold the midrange
+    COLUMN instead of driver literals: callers fold the midrange
     aggregate into the plan (one-row broadcast) rather than paying an
-    eager ``train_binary`` collect job per query build. Identical
-    packing arithmetic — only where the threshold values come from
-    changes; ``d`` must be passed since no literal list carries it."""
+    eager ``train_binary`` collect job per query build. ``d`` must be
+    passed since no literal list carries it."""
     col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     v = col.cast("array<double>")
     thr = F.col(thr_col) if isinstance(thr_col, str) else thr_col

@@ -271,10 +271,8 @@ def latest_op_of_contested(
         .agg(F.max("_mb").alias("_latest"))
         .localCheckpoint()
     )
-    # this broadcast IS the payload layout's per-search mutation cost
-    # (the 20M campaign's +6.5 s at 1.58M uncompacted ids) — warn when
-    # it outgrows the threshold, but never pay a per-search count job
-    # for the telemetry (head(1) + memoized count, ADVICE r12)
+    # this broadcast IS the payload layout's per-search mutation cost:
+    # warn past the threshold, counted once per ledger state
     if oplayout.check_contested(
         spark, path, latest, "latest_op_of_contested", as_of=as_of
     ):
@@ -301,10 +299,9 @@ def live_rows_of(spark, path: str, ids: list, cols: list[str]) -> DataFrame:
     state = VO.mutation_state(spark, path)
     if state is None:
         return base
-    contested, resolved = state
-    contested = contested.withColumnRenamed("vec_id", "neighbor_id")
+    contested = state.contested.withColumnRenamed("vec_id", "neighbor_id")
     ops_side = (
-        resolved.select(F.col("vec_id").alias("neighbor_id"), *cols)
+        state.resolved.select(F.col("vec_id").alias("neighbor_id"), *cols)
         .join(F.broadcast(id_set), "neighbor_id", "left_semi")
     )
     return base.join(

@@ -26,20 +26,26 @@ Layout extension (backward compatible — a pristine layout has no
   half-writes, O(in-flight) NOT-IN for readers).
 
 Read-side resolution mirrors ``streaming/vector_index.prepare_search``:
-the CONTESTED set (ids touched by any committed op — small between
-compactions by construction) broadcasts into an anti-join against the
-probed base partitions, and the ops table — op-count-sized, not
-corpus-sized — resolves per-id winners with one ``max_by``. The base
-scan stays partition-pruned; uncontested vectors never shuffle.
+the ops table — op-count-sized, not corpus-sized — resolves per-id
+winners with one ``max_by``, and the CONTESTED set (ids touched by any
+committed op — small between compactions by construction) removes the
+stale base rows: inside the from-disk search's candidate scan
+(``live_probed_scan``), or by a broadcast anti-join
+(``live_probed_view``). Both are memoized per ledger state
+(``mutation_state``). The base scan stays partition-pruned;
+uncontested vectors never shuffle.
 
-At 100 TB: ops cost O(batch) writes; search cost gains one broadcast
-anti-join over the probed partitions plus an O(ops-size) side scan —
+At 100 TB: ops cost O(batch) writes; search cost gains an O(contested)
+id filter in the probed scan plus an O(ops-size) side scan —
 independent of corpus size — and compaction folds everything back to
 a pristine base when the contested set grows past taste.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -320,43 +326,81 @@ def committed_op_scan(
     return raw
 
 
+class MutationState(NamedTuple):
+    """The resolved mutation state of one ledger state of a layout."""
+
+    contested: DataFrame  # (vec_id): ids touched by any visible op
+    resolved: DataFrame  # the live winner row of each contested id
+    contested_ids: np.ndarray  # sorted int64, the ids of ``contested``
+
+
 def mutation_state(
     spark, path: str, as_of: int | None = None
-) -> tuple[DataFrame, DataFrame] | None:
-    """Per-epoch search state ``(contested, resolved)``, or None for a
-    pristine layout (or an ``as_of`` behind every op).
+) -> MutationState | None:
+    """The search state of the ledger, or None for a pristine layout
+    (or an ``as_of`` behind every op). ``contested``: the ids touched by
+    any visible op — one per delete/upsert since the last compaction,
+    SMALL by construction — also on the driver as ``contested_ids``.
+    ``resolved``: the LIVE row of each contested id under latest-op-wins
+    (one ``max_by`` keyed on (op id, delete-beats-insert) over the
+    op-count-sized ops table, never the corpus): (vec_id, dist,
+    embedding[, codes], shard_id).
 
-    ``contested``: the ids touched by any visible op — one per
-    delete/upsert since the last compaction, SMALL by construction;
-    materialized (localCheckpoint) for broadcast into anti-joins.
-    ``resolved``: the LIVE row of each contested id that survives
-    latest-op-wins (one ``max_by`` keyed on (op id, delete-beats-
-    insert) — the streaming index's resolution, over the op-count-
-    sized ops table, never the corpus). Columns: (vec_id, dist,
-    embedding[, codes], shard_id)."""
-    raw = committed_op_scan(spark, path, as_of)
-    if raw is None:
+    Memoized per ledger state (``oplayout.ledger_entry``): the first
+    call checkpoints the winners and collects their ids, every later
+    call on that state runs no Spark job."""
+    if not has_vector_ops(spark, path):
         return None
-    data_cols = [c for c in raw.columns if c not in ("op", "_mb")]
-    rank = F.when(F.col("op") == OP_DELETE, F.lit(1)).otherwise(F.lit(0))
-    # ONE materialization of the per-id winners; contested and
-    # resolved are projections of it (no second pass over the ops)
-    latest = raw.groupBy("vec_id").agg(
-        F.max_by(
-            F.struct("op", *[c for c in data_cols if c != "vec_id"]),
-            F.struct(F.col("_mb"), rank.alias("_r")),
-        ).alias("_w")
-    ).localCheckpoint()
-    # head(1) emptiness + memoized size telemetry (one full count per
-    # ledger state per session, never a per-search job — ADVICE r12)
-    if oplayout.check_contested(spark, path, latest, "mutation_state", as_of=as_of):
-        return None
-    resolved = latest.filter(F.col("_w.op") == OP_INSERT).select(
-        "vec_id",
-        *[F.col(f"_w.{c}").alias(c) for c in data_cols if c != "vec_id"],
+
+    def build():
+        raw = committed_op_scan(spark, path, as_of)
+        if raw is None:
+            return 0, None, None
+        data_cols = [c for c in raw.columns if c not in ("op", "_mb", "vec_id")]
+        rank = F.when(F.col("op") == OP_DELETE, F.lit(1)).otherwise(F.lit(0))
+        # ONE materialization of the per-id winners, by the id collect
+        # below; contested and resolved are projections of it
+        latest = raw.groupBy("vec_id").agg(
+            F.max_by(
+                F.struct("op", *data_cols),
+                F.struct(F.col("_mb"), rank.alias("_r")),
+            ).alias("_w")
+        ).localCheckpoint(eager=False)
+        ids = np.sort(
+            latest.select("vec_id").toArrow().column(0).to_numpy().astype(np.int64)
+        )
+        if not len(ids):
+            return 0, None, latest
+        resolved = latest.filter(F.col("_w.op") == OP_INSERT).select(
+            "vec_id", *[F.col(f"_w.{c}").alias(c) for c in data_cols]
+        )
+        return len(ids), MutationState(latest.select("vec_id"), resolved, ids), latest
+
+    entry = oplayout.ledger_entry(spark, path, "mutation_state", build, as_of=as_of)
+    oplayout.warn_contested_size(entry.count, path.rstrip("/"), "mutation_state")
+    return entry.state
+
+
+def _probed_winners(
+    state: MutationState, base: DataFrame, probe_ids, id_col: str, vec_col: str
+) -> DataFrame:
+    """The resolved winners whose shard is probed (all live shards for
+    ``probe_ids=None``), renamed and typed like ``base``: the ops table
+    stores the canonical (vec_id, embedding[, codes…]) names, and an
+    upsert batch may have arrived as array<double>."""
+    alive = state.resolved
+    for old, new in {"vec_id": id_col, "embedding": vec_col}.items():
+        if old != new and old in alive.columns:
+            alive = alive.withColumnRenamed(old, new)
+    if probe_ids is not None:
+        # one parsed predicate, not one py4j literal per probed shard
+        probed = ",".join(str(int(s)) for s in probe_ids)
+        alive = alive.filter(F.expr(f"shard_id IN ({probed})") if probed else F.lit(False))
+    else:
+        alive = alive.filter(F.col("shard_id") != TOMBSTONE_SHARD)
+    return alive.select(
+        [F.col(c).cast(base.schema[c].dataType).alias(c) for c in base.columns]
     )
-    contested = latest.select("vec_id")
-    return contested, resolved
 
 
 def live_probed_view(
@@ -376,32 +420,41 @@ def live_probed_view(
     the ops side is O(mutations). A pristine layout returns ``base``
     unchanged. ``probe_ids=None`` = all shards (compaction/export).
 
-    ``id_col``/``vec_col``: the BASE layout's column names. The ops
-    table always stores the canonical (vec_id, embedding[, codes…])
-    names (upsert_vectors canonicalizes on write), so the resolved
-    side is renamed to match a layout built with custom names."""
+    ``id_col``/``vec_col``: the BASE layout's column names."""
     state = mutation_state(spark, path, as_of)
     if state is None:
         return base
-    contested, resolved = state
-    rename = {"vec_id": id_col, "embedding": vec_col}
-    for old, new in rename.items():
-        if old != new and old in resolved.columns:
-            resolved = resolved.withColumnRenamed(old, new)
-    contested = contested.withColumnRenamed("vec_id", id_col)
-    cols = base.columns
+    contested = state.contested.withColumnRenamed("vec_id", id_col)
     base_live = base.join(F.broadcast(contested), id_col, "left_anti")
-    alive = resolved
-    if probe_ids is not None:
-        alive = alive.filter(
-            F.col("shard_id").isin([int(s) for s in probe_ids])
-        )
-    else:
-        alive = alive.filter(F.col("shard_id") != TOMBSTONE_SHARD)
-    # cast ops columns to the base scan's exact types (an upsert batch
-    # may have arrived as array<double>; the union must stay typed)
-    typed = [F.col(c).cast(base.schema[c].dataType).alias(c) for c in cols]
-    return base_live.select(cols).unionByName(alive.select(typed))
+    return base_live.select(base.columns).unionByName(
+        _probed_winners(state, base, probe_ids, id_col, vec_col)
+    )
+
+
+def live_probed_scan(
+    spark,
+    path: str,
+    base: DataFrame,
+    probe_ids: list[int],
+    *,
+    as_of: int | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[DataFrame, np.ndarray]:
+    """``live_probed_view`` for a reader that drops dead base rows itself
+    (the Arrow candidate scan), with no join and so no broadcast job:
+    ``base`` plus a false ``_resolved`` column, unioned with the probed
+    resolved winners (``_resolved`` true), and the sorted contested ids.
+    A base row is live iff its id is not contested. A pristine layout
+    returns ``(base, [])``."""
+    state = mutation_state(spark, path, as_of)
+    if state is None:
+        return base, np.empty(0, dtype=np.int64)
+    winners = _probed_winners(state, base, probe_ids, id_col, vec_col)
+    live = base.withColumn("_resolved", F.lit(False)).unionByName(
+        winners.withColumn("_resolved", F.lit(True))
+    )
+    return live, state.contested_ids
 
 
 def compact_vector_layout(
@@ -518,14 +571,15 @@ def compact_vector_layout(
 
 def contested_count(spark, path: str) -> int:
     """Number of DISTINCT ids carrying uncompacted mutation state
-    across BOTH op families (vector ops ∪ tag deltas) — exactly the
-    row count of the per-search resolution broadcast, i.e. the number
-    the contested-set warning (oplayout.warn_contested_size) and the
-    CLI ``--compact-above`` policy act on. 0 for a pristine layout."""
+    across BOTH op families (vector ops ∪ tag deltas), the number the
+    contested-set warning and ``--compact-above`` act on; 0 for a
+    pristine layout. Without tag ops it is ``mutation_state``'s memoized
+    id count: no Spark job on a resolved ledger state."""
     from big_ann_spark.operators import tag_ops
 
-    if not (has_vector_ops(spark, path) or tag_ops.has_tag_ops(spark, path)):
-        return 0
+    if not tag_ops.has_tag_ops(spark, path):
+        state = mutation_state(spark, path)
+        return 0 if state is None else len(state.contested_ids)
     unc = sorted(_ops_on_disk(spark, path) - oplayout.committed_ops(spark, path))
     latest = tag_ops.latest_op_of_contested(spark, path, uncommitted=unc)
     return 0 if latest is None else latest.count()
@@ -545,8 +599,7 @@ def compact_if_needed(
     +6.5 s/search at 1.58M uncompacted ids (SCALE.md) — exceeds
     ``max_contested``. Returns ``(n_contested, ops_folded | None)`` —
     the count is the signal an operator tunes the threshold WITH, so
-    it is always reported (the check is one op-table aggregate, cheap
-    to call after every mutation)."""
+    it is always reported."""
     n = contested_count(spark, path)
     if n <= int(max_contested):
         return n, None

@@ -69,6 +69,88 @@ def test_ivf_search_from_disk_skips_listing(spark, sf_dir):
     assert empty.count() == 0 and "shard_id" in empty.columns
 
 
+def test_from_disk_equals_in_memory_bit_for_bit_on_near_ties(spark):
+    """Driver routing plus the fold-exact Arrow scan must give the
+    (qid, neighbor_id, rank, dist) of ivf_search over the fully listed
+    layout bit for bit where GEMM estimates cannot rank: rows 1e-16
+    apart around the k-th boundary, duplicate vectors under different
+    ids, and a query equidistant from two centroids (the tie goes to
+    the lower shard id, whose rows differ from the other's)."""
+    d = 8
+    e = np.eye(d)
+    cents_np = {0: -e[0], 1: e[0], 2: 4.0 * e[1]}
+    rows = []
+    # shard 0: twelve rows whose distances from its centroid are
+    # 0.5 + i·1e-16 (ties and one-ulp steps across the k = 5 boundary)
+    for i in range(12):
+        rows.append((i, cents_np[0] + (0.5 + i * 1e-16) * e[2]))
+    # duplicates under different ids, straddling the boundary too
+    rows += [(100, rows[4][1].copy()), (101, rows[4][1].copy())]
+    for i in range(8):
+        rows.append((200 + i, cents_np[1] + 0.3 * e[3] + i * 1e-16 * e[4]))
+        rows.append((300 + i, cents_np[2] + 0.2 * e[5] + i * 0.01 * e[6]))
+    emb = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in rows],
+        "vec_id long, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(s, [float(x) for x in c]) for s, c in cents_np.items()],
+        "shard_id int, centroid array<double>",
+    )
+    assign = SH.assign_to_centroids(emb, cents, extra_cols=["embedding"])
+    path = tempfile.mkdtemp(prefix="big_ann_ivf_ties_") + "/layout"
+    SH.write_sharded(assign, emb, path)
+    queries = spark.createDataFrame(
+        [
+            (0, [0.0] * d),  # equidistant from shards 0 and 1
+            (1, [float(x) for x in cents_np[0]]),  # ranks the 1e-16 ladder
+            (2, [float(x) for x in cents_np[1] + 0.3 * e[3]]),
+        ],
+        "qid long, qvec array<double>",
+    )
+    listed = spark.read.parquet(f"{path}/shards")
+    cols = ("qid", "neighbor_id", "rank", "dist")
+    got = {}
+    for nprobe in (1, 2):
+        want = ANN.ivf_search(queries, listed, cents, k=5, nprobe=nprobe)
+        out = ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=nprobe)
+        got[nprobe] = sorted(map(tuple, out.select(*cols).collect()))
+        assert got[nprobe] == sorted(map(tuple, want.select(*cols).collect()))
+        assert len(got[nprobe]) == 15
+    # the routing tie is real: at nprobe = 1 query 0 sees only shard 0,
+    # at nprobe = 2 shard 1's nearer rows win
+    assert {n for q, n, _, _ in got[1] if q == 0} <= set(range(12)) | {100, 101}
+    assert {n for q, n, _, _ in got[2] if q == 0} <= set(range(200, 208))
+    # and query 1 ranks the 1e-16 ladder: ids 0..4 at ranks 1..5
+    assert [n for q, n, _, _ in got[1] if q == 1] == [0, 1, 2, 3, 4]
+
+
+def test_query_batch_past_the_driver_bound_fails_loudly(spark, sf_dir, monkeypatch):
+    """The from-disk search collects its query batch to the driver to
+    route it: a batch over the bound must fail with a message that says
+    to split it, never be silently truncated; a batch at the bound is
+    served whole."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = SH.label_centroids(emb)
+    path = tempfile.mkdtemp(prefix="big_ann_ivf_bound_") + "/layout"
+    SH.write_sharded(SH.assign_to_centroids(emb, cents), emb, path)
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    monkeypatch.setattr(ANN, "DRIVER_ROWS", 7)
+    with pytest.raises(ValueError, match="split the batch"):
+        ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=2)
+    monkeypatch.setattr(ANN, "DRIVER_ROWS", 8)
+    out = ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=2).collect()
+    assert {r.qid for r in out} == set(range(8)) and len(out) == 40
+    # and an empty batch is an empty result, not an error
+    none = queries.limit(0)
+    assert ANN.ivf_search_from_disk(none, path, cents, k=5, nprobe=2).count() == 0
+    assert ANN.ivf_search_from_disk(
+        none, path, cents, k=5, nprobe=2, _routed=ANN.route_queries(none, cents, 2)
+    ).count() == 0
+
+
 def test_cli_build_index_and_search(spark, sf_dir, tmp_path):
     """The reference's main workflow as two CLI calls: build-index
     (K-Means shard -> partitioned parquet + centroids) then search;
@@ -586,6 +668,29 @@ def test_cli_build_index_sq8_refine_and_search(spark, sf_dir, tmp_path):
     assert len(common) / len(f) >= 0.95, len(common) / len(f)
     for key in common:
         assert f[key] == r_[key]  # exact rerank: dists bit-equal
+
+
+def test_cli_refine_search_runs_no_spark_routing(spark, sf_dir, tmp_path, monkeypatch):
+    """A CLI search of an --sq8-refine layout dispatches on the
+    schema-only codec detection straight to ivf_search_from_disk, which
+    routes on the driver: no route_queries pass at all (the CLI used to
+    route once only to read the probed columns, then the search routed
+    again)."""
+    from big_ann_spark.cli import main
+
+    calls = []
+    real = ANN.route_queries
+    monkeypatch.setattr(
+        ANN, "route_queries", lambda *a, **kw: calls.append(1) or real(*a, **kw)
+    )
+    src = f"{sf_dir}/embeddings.parquet"
+    idx = str(tmp_path / "idx_refine")
+    assert main(["build-index", src, idx, "--m", "5", "--sq8-refine"]) == 0
+    out = str(tmp_path / "res.parquet")
+    assert main(["search", idx, src, "--k", "5", "--nprobe", "2", "--out", out]) == 0
+    assert calls == []
+    n_q = load_table(spark, sf_dir, "embeddings").count()
+    assert spark.read.parquet(out).count() == 5 * n_q
 
 
 def test_sq8_pool_arrow_parity_is_margin_free(spark, sf_dir):

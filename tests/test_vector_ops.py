@@ -498,6 +498,89 @@ def test_contested_memo_busts_after_foreign_compaction(spark, sf_dir, monkeypatc
     assert oplayout._contested_count_memo[key][1] == 2
 
 
+def test_ledger_memo_evicts_only_the_least_recently_used(spark, monkeypatch):
+    """At its bound the ledger memo drops the least recently used entry
+    alone — a hit refreshes an entry — and unpersists its checkpoint."""
+    from collections import OrderedDict
+
+    memo = OrderedDict()
+    monkeypatch.setattr(oplayout, "_contested_count_memo", memo)
+    monkeypatch.setattr(oplayout, "LEDGER_MEMO_ENTRIES", 3)
+    checkpoint = spark.range(4).localCheckpoint()
+    rdd_id = checkpoint._jdf.queryExecution().logical().rdd().id()
+    built = []
+
+    def entry(name, ckpt=None):
+        # a path with no _ops dir: its ledger token never changes
+        def build():
+            built.append(name)
+            return len(built), None, ckpt
+
+        return oplayout.ledger_entry(spark, f"/nonexistent/{name}", "t", build)
+
+    entry("a")
+    entry("b", checkpoint)
+    entry("c")
+    assert entry("a").count == 1  # a hit: refreshed, not rebuilt
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    assert persistent.contains(rdd_id)
+    entry("d")
+    assert built == ["a", "b", "c", "d"]
+    assert [k[0] for k in memo] == ["/nonexistent/c", "/nonexistent/a", "/nonexistent/d"]
+    assert not spark.sparkContext._jsc.sc().getPersistentRDDs().contains(rdd_id)
+
+
+def test_search_sees_same_process_and_foreign_commits(spark, sf_dir, monkeypatch):
+    """The memoized mutation state never serves a stale live set: a
+    search after an upsert in this process, and after a commit marker
+    landed without this process's invalidation (another process),
+    returns exactly the new live set."""
+    emb, cents, path = _build_layout(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 12).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+
+    def search():
+        return _rows(ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3))
+
+    base_live = F.col("vec_id") % 3 != 0
+    assert search() == _rows(_expected(spark, emb, cents, base_live, queries))
+    VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id").isin(0, 3)))
+    live = base_live | F.col("vec_id").isin(0, 3)
+    assert search() == _rows(_expected(spark, emb, cents, live, queries))
+    monkeypatch.setattr(oplayout, "invalidate_contested_memo", lambda p: None)
+    VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id").isin(6, 9)))
+    VO.delete_vectors(spark, path, [3, 4])
+    live = (base_live | F.col("vec_id").isin(0, 3, 6, 9)) & ~F.col("vec_id").isin(3, 4)
+    assert search() == _rows(_expected(spark, emb, cents, live, queries))
+
+
+def test_repeat_search_of_unchanged_mutated_layout_runs_four_jobs(spark, sf_dir):
+    """A search whose ledger state is already resolved runs at most four
+    Spark jobs — the query collect, the centroid collect and the
+    candidate scan's two stages — and still serves the upsert and hides
+    the delete."""
+    emb, _, path = _build_layout(spark, sf_dir)
+    cents = spark.read.parquet(f"{path}/centroids.parquet")
+    VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") % 3 == 0))
+    VO.delete_vectors(spark, path, [1, 2])
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3).collect()
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-from-disk-jobcount", "repeat search job census")
+    try:
+        rows = ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3).collect()
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("ivf-from-disk-jobcount")
+    assert len(jobs) <= 4, f"a repeat search ran {len(jobs)} jobs"
+    top = {r.qid: r.neighbor_id for r in rows if r["rank"] == 1}
+    assert top[3] == 3 and top[6] == 6  # upserted ids find themselves
+    assert not {r.neighbor_id for r in rows} & {1, 2}
+
+
 def test_compact_swap_lock_guards_rename_window(spark, sf_dir, monkeypatch):
     """ADVICE r12 — the in-tree writer lock cannot guard the compact
     swap (the first rename moves {base}/_ops, lock included, out with
