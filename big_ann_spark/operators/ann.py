@@ -516,10 +516,9 @@ def _arrow_nominating_pool(
                 names=["qid", "neighbor_id", "dist"],
             )
 
-    # at most one task per core: every task pays a Python worker round
-    # trip (~0.2 s on a 4-core host) before its first batch, and the
-    # resolved winners' checkpoint partition would otherwise start a
-    # second wave; Arrow batches stream, so a task's memory stays flat
+    # at most one task per core: the resolved winners' checkpoint
+    # partition would otherwise start a second wave of Python tasks;
+    # Arrow batches stream, so a task's memory stays flat
     partial = (
         shards.select(*cols)
         .coalesce(shards.sparkSession.sparkContext.defaultParallelism)

@@ -34,20 +34,65 @@ def dim_table(emb: DataFrame, *, vec_col: str = "embedding", id_col: str = "vec_
     )
 
 
-def correlation_matrix(emb: DataFrame, dims: int, *, vec_col: str = "embedding") -> np.ndarray:
-    """A8: d×d Pearson correlation matrix. Distributed sufficient
-    statistics (one pass over (pos_i, pos_j) pairs via MLlib's
-    Correlation on assembled vectors), tiny result to the driver."""
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.stat import Correlation
+def _merge_moments(a, b):
+    """Pairwise (Chan et al.) merge of two (n, mean, centred Gram)
+    partials: stable however far the data sit from zero."""
+    if a is None:
+        return b
+    na, ma, ga = a
+    nb, mb, gb = b
+    n = na + nb
+    delta = mb - ma
+    return n, ma + delta * (nb / n), ga + gb + np.outer(delta, delta) * (na * nb / n)
 
-    feat = emb.select(
-        array_to_vector(
-            F.slice(F.col(vec_col).cast("array<double>"), 1, dims)
-        ).alias("features")
+
+def correlation_matrix(emb: DataFrame, dims: int, *, vec_col: str = "embedding") -> np.ndarray:
+    """A8: d×d Pearson correlation matrix of the first ``dims`` values
+    of ``vec_col``, in one Spark job. Each Arrow batch becomes an
+    (n, mean, centred Gram) partial, merged pairwise inside its task;
+    the driver merges one partial per task (d² doubles each) and
+    normalises. As in MLlib's Pearson correlation, a dimension whose
+    variance is ≤ 1e-12 correlates as NaN with every other one, and
+    the diagonal is 1."""
+    import pyarrow as pa
+
+    def moments(batches):
+        acc = None
+        for batch in batches:
+            col = batch.column(0)
+            if len(col) == 0:
+                continue
+            x = col.flatten().to_numpy(zero_copy_only=False)
+            # slice() leaves at most dims values per row
+            if col.null_count or x.size != len(col) * dims:
+                raise ValueError(f"correlation_matrix: every {vec_col} needs {dims} values")
+            x = x.reshape(-1, dims)
+            mean = x.mean(axis=0)
+            c = x - mean
+            acc = _merge_moments(acc, (len(x), mean, c.T @ c))
+        if acc is not None:
+            yield pa.RecordBatch.from_pydict(
+                {"n": [acc[0]], "mean": [acc[1].tobytes()], "gram": [acc[2].tobytes()]}
+            )
+
+    rows = (
+        emb.select(F.slice(F.col(vec_col).cast("array<double>"), 1, dims).alias("v"))
+        .mapInArrow(moments, schema="n long, mean binary, gram binary")
+        .collect()
     )
-    mat = Correlation.corr(feat, "features", "pearson").collect()[0][0]
-    return mat.toArray()
+    acc = None
+    for r in rows:
+        part = (r["n"], np.frombuffer(r["mean"]), np.frombuffer(r["gram"]).reshape(dims, dims))
+        acc = _merge_moments(acc, part)
+    if acc is None or acc[0] < 2:
+        raise ValueError("correlation_matrix needs at least 2 rows")
+    n, _mean, gram = acc
+    var = np.diag(gram) / (n - 1)
+    std = np.where(var <= 1e-12, 0.0, np.sqrt(var))
+    denom = np.outer(std, std)
+    cor = np.divide(gram / (n - 1), denom, out=np.full_like(gram, np.nan), where=denom > 0)
+    np.fill_diagonal(cor, 1.0)
+    return cor
 
 
 def vif_matrix(emb: DataFrame, dims: int, *, vec_col: str = "embedding") -> np.ndarray:

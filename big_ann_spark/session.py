@@ -8,6 +8,15 @@ config below is chosen for the 100 TB / 1000-executor target:
 - Arrow on: every Pandas-UDF boundary is columnar-batched.
 - shuffle.partitions is only the *initial* value — AQE coalesces down on
   small inputs and a real cluster raises it via spark-defaults.
+- Python workers run under ``big_ann_spark.pyworker``: pyspark's worker
+  calls ``importlib.invalidate_caches()`` before every task, and on
+  Python < 3.13 that re-reads the central directory of every zip and
+  jar on the worker's path (pyspark.zip, py4j, spark-core) — about
+  0.2 s of CPU per task. The daemon re-reads an archive only when it
+  changed on disk. Only a session this factory launches gets it: a
+  foreign session and a ``SPARK_MASTER`` deployment keep Spark's
+  default daemon, and ``prepare_foreign_session`` cannot change it
+  once the context exists.
 """
 
 from __future__ import annotations
@@ -15,6 +24,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 
 
 def _default_driver_mem() -> str:
@@ -81,6 +92,12 @@ def get_spark(app_name: str = "big-ann-spark", *, shuffle_partitions: int | None
         builder = builder.config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
+        )
+        # the worker daemon (see module docstring) is imported by module
+        # name, so the workers need this package's parent on their path
+        # whatever the driver's working directory
+        builder = builder.config("spark.python.daemon.module", "big_ann_spark.pyworker").config(
+            "spark.executorEnv.PYTHONPATH", os.path.dirname(_PKG_DIR)
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -157,15 +174,15 @@ def prepare_foreign_session(spark: SparkSession) -> None:
     import tempfile
     import zipfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "big_ann_spark_pkg.zip")
-    with zipfile.ZipFile(zpath, "w") as z:
-        for root, _dirs, files in os.walk(pkg_dir):
+    # one archive per call, never deleted: workers fetch it after this
+    # returns, and a shared name could be rewritten by another process
+    fd, zpath = tempfile.mkstemp(prefix="big_ann_spark_pkg-", suffix=".zip")
+    with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
+        for root, _dirs, files in os.walk(_PKG_DIR):
             for fn in files:
                 if fn.endswith(".py"):
                     full = os.path.join(root, fn)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    z.write(full, rel)
+                    z.write(full, os.path.relpath(full, os.path.dirname(_PKG_DIR)))
     sc.addPyFile(zpath)
     sc._big_ann_pyfile_added = True
 

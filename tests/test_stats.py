@@ -165,3 +165,17 @@ def test_approx_distinct_within_tolerance(spark, sf_dir):
     approx = l.agg(F.approx_count_distinct("l_partkey").alias("a")).collect()[0]["a"]
     exact = l.select("l_partkey").distinct().count()
     assert abs(approx - exact) / exact < 0.05
+
+
+def test_correlation_matrix_equals_numpy_across_partitions(spark):
+    """Several partitions, so the driver merges partials, and data far
+    from zero, so the merge must stay stable: a sum-of-squares form is
+    off by about 7e-7 (relative) on these data."""
+    rng = np.random.default_rng(7)
+    x = rng.normal(size=(3000, 5)) @ rng.normal(size=(5, 5)) + 1e4
+    emb = spark.createDataFrame(
+        [(i, row.tolist()) for i, row in enumerate(x)], "vec_id long, embedding array<double>"
+    ).repartition(3)
+    assert emb.rdd.getNumPartitions() == 3
+    got = correlation_matrix(emb, dims=5)
+    np.testing.assert_allclose(got, np.corrcoef(x, rowvar=False), rtol=1e-9)
