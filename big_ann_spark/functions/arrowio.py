@@ -46,3 +46,13 @@ def int_col(batch, col: str) -> np.ndarray:
     if arr.null_count:
         raise ValueError(f"{col}: null ids are not supported")
     return np.asarray(arr).astype(np.int64, copy=False)
+
+
+def matrix_list_col(M: np.ndarray):
+    """An (n, d) ndarray as an Arrow ``list`` column of its dtype — the
+    inverse of ``list_col_matrix``."""
+    import pyarrow as pa
+
+    n, d = M.shape
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * d, type=pa.int32())
+    return pa.ListArray.from_arrays(offsets, pa.array(np.ascontiguousarray(M).reshape(-1)))

@@ -28,6 +28,7 @@ searches only the top-1 shard); ``nprobe`` trades IO for recall.
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
@@ -60,10 +61,24 @@ _SHARDS_SCHEMA_MEMO: dict[tuple[str, int], object] = {}
 _SIDECAR_PREFETCH = ThreadPoolExecutor(1, thread_name_prefix="pq-sidecars")
 
 
+def rekey_shards_schema(src_path: str, dst_path: str) -> None:
+    """After ``src_path`` was renamed to ``dst_path``: file the memoized
+    shards schema of ``src_path`` under ``dst_path`` and drop the entries
+    of both old names. A rename keeps the shards directory's mtime, so
+    the moved entry is the one a reader of ``dst_path`` computes."""
+    src, dst = f"{src_path}/shards", f"{dst_path}/shards"
+    moved = {}
+    for k in [k for k in _SHARDS_SCHEMA_MEMO if k[0] in (src, dst)]:
+        schema = _SHARDS_SCHEMA_MEMO.pop(k)
+        if k[0] == src:
+            moved[(dst, k[1])] = schema
+    _SHARDS_SCHEMA_MEMO.update(moved)
+
+
 def open_probed_shards(
     spark,
     path: str,
-    shard_ids: list[int],
+    shard_ids: list[int] | None,
 ) -> DataFrame:
     """Open ONLY the probed shard directories of a ``write_sharded``
     layout, by explicit path: ``spark.read.parquet(f"{path}/shards")``
@@ -72,13 +87,18 @@ def open_probed_shards(
     listing work instead of O(m). ``basePath`` keeps ``shard_id`` a
     partition column. Shards with zero points never got a directory,
     so each is existence-checked through the Hadoop FS API, which works
-    on object stores too."""
+    on object stores too. ``shard_ids=None`` opens every shard (one
+    listing walk, for compaction)."""
     base = f"{path}/shards"
     Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path  # one class lookup
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     jpath = Path(base)
     fs = jpath.getFileSystem(hconf)
-    dirs = [d for s in shard_ids if fs.exists(Path(d := f"{base}/shard_id={s}"))]
+    if shard_ids is None:
+        shard_dirs = fs.exists(jpath) and any(st.isDirectory() for st in fs.listStatus(jpath))
+        dirs = [base] if shard_dirs else []
+    else:
+        dirs = [d for s in shard_ids if fs.exists(Path(d := f"{base}/shard_id={s}"))]
     # schema memo: a bare parquet read runs a footer-inference job on
     # the driver before the first data byte — on the serving path that
     # is one serial job per search. Shard schema is fixed at build time
@@ -189,39 +209,113 @@ def _routing_of_table(routed: DataFrame) -> Routing:
     return _routing(qids, qmat, np.arange(len(rows)), shards)
 
 
+def collect_to_driver(df: DataFrame, what: str):
+    """``df`` as an Arrow table, read in one job of at most
+    ``DRIVER_ROWS + 1`` rows; a larger ``df`` fails loudly, it is never
+    truncated."""
+    t = df.limit(DRIVER_ROWS + 1).toArrow()
+    if t.num_rows > DRIVER_ROWS:
+        raise ValueError(
+            f"the {what} has more than {DRIVER_ROWS:,} rows, and it is "
+            "collected to the driver: split the batch into smaller calls"
+        )
+    return t
+
+
+# (path, size, mtime) of each data file of a centroid table -> (shard
+# ids, float64 centroid matrix), least recently used first
+_CENTROID_MEMO: OrderedDict[tuple, tuple[np.ndarray, np.ndarray]] = OrderedDict()
+CENTROID_MEMO_ENTRIES = 16
+
+
+def centroid_matrix(spark, centroids: DataFrame | str) -> tuple[np.ndarray, np.ndarray]:
+    """(shard ids, float64 centroid rows) of a centroid table: a
+    DataFrame, or the path of a ``centroids.parquet``. Memoized by the
+    table's data files as (path, size, mtime) — from the frame's
+    ``inputFiles()`` plus one stat per file, or one directory listing
+    for a path; neither starts a Spark job. Every Spark write names its
+    files anew, so a rebuilt table misses; a byte-identical copy that
+    keeps the mtime (``oplayout.copy_dir``, compaction) hits. A frame
+    that is not a bare file scan is collected on every call."""
+    from big_ann_spark.functions.arrowio import int_col, list_col_matrix
+    from big_ann_spark.operators import oplayout
+
+    key = None
+    if isinstance(centroids, str):
+        fs, jp = oplayout.fs_path(spark, centroids)
+        sts = [st for st in fs.listStatus(jp) if st.isFile()]
+        frame = lambda: spark.read.parquet(centroids)  # noqa: E731
+    else:
+        plan = centroids._jdf.queryExecution().analyzed()
+        bare = plan.getClass().getSimpleName() == "LogicalRelation" and (
+            plan.relation().getClass().getSimpleName() == "HadoopFsRelation"
+        )
+        sts = []
+        if bare:
+            try:
+                for f in centroids.inputFiles():
+                    fs, jp = oplayout.fs_path(spark, f)
+                    sts.append(fs.getFileStatus(jp))
+            except Exception:  # a file is gone: the collect reports it
+                sts = []
+        frame = lambda: centroids  # noqa: E731
+    stamps = sorted(
+        (str(st.getPath()), int(st.getLen()), int(st.getModificationTime()))
+        for st in sts
+        if not st.getPath().getName().startswith(("_", "."))
+    )
+    if stamps:
+        key = tuple(stamps)
+        hit = _CENTROID_MEMO.pop(key, None)
+        if hit is not None:
+            _CENTROID_MEMO[key] = hit
+            return hit
+    c = frame().select("shard_id", "centroid").toArrow()
+    out = int_col(c, "shard_id"), list_col_matrix(c, "centroid")
+    if key is not None:
+        _CENTROID_MEMO[key] = out
+        while len(_CENTROID_MEMO) > CENTROID_MEMO_ENTRIES:
+            _CENTROID_MEMO.popitem(last=False)
+    return out
+
+
+def nearest_centroids(
+    X: np.ndarray, cids: np.ndarray, cmat: np.ndarray, n: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Row indices into ``cids`` of the first ``n`` centroids of each
+    row of ``X`` by (distance, shard id), and those distances: the
+    ``l2_distance`` arithmetic (``knn.fold_l2``) and the order of
+    ``array_min``/``array_sort`` over ``struct(dist, shard_id)``, so
+    ``route_queries`` and ``assign_to_centroids`` pick the same shards
+    bit for bit, near-ties included."""
+    k = min(max(n, 0), len(cids))
+    if not len(X) or not k:
+        return np.empty((len(X), k), np.int64), np.empty((len(X), k))
+    step, top, dist = max(1, _SCORE_BLOCK // len(cids)), [], []
+    for s in range(0, len(X), step):
+        cd = fold_l2(X[s : s + step, None], cmat[None])  # (block, m)
+        order = np.lexsort((np.broadcast_to(cids, cd.shape), cd), axis=1)[:, :n]
+        top.append(order)
+        dist.append(np.take_along_axis(cd, order, axis=1))
+    return np.concatenate(top), np.concatenate(dist)
+
+
 def _route_on_driver(
     queries: DataFrame, centroids: DataFrame, nprobe: int, *, query_id: str, query_vec: str
 ) -> Routing:
     """``route_queries`` on the driver, pair for pair: the query batch
-    and the centroid table are collected once each, and every query
-    keeps its first ``nprobe`` shards by (distance, shard id) — the
-    ``l2_distance`` arithmetic (``knn.fold_l2``) and the order of
-    ``array_sort(struct(cdist, shard_id))``. The query collect reads at
-    most ``DRIVER_ROWS + 1`` rows in one job; a larger batch fails
-    loudly, it is never truncated."""
+    is collected once (``collect_to_driver``), the centroid matrix comes
+    from ``centroid_matrix``, and every query keeps its first
+    ``nprobe`` shards (``nearest_centroids``)."""
     from big_ann_spark.functions.arrowio import int_col, list_col_matrix
 
-    q = (
-        queries.select(F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec"))
-        .limit(DRIVER_ROWS + 1)
-        .toArrow()
+    q = collect_to_driver(
+        queries.select(F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec")),
+        "query batch of a from-disk search",
     )
-    if q.num_rows > DRIVER_ROWS:
-        raise ValueError(
-            f"the query batch has more than {DRIVER_ROWS:,} rows, and a "
-            "from-disk search routes its queries on the driver: split the "
-            "batch into smaller searches"
-        )
-    c = centroids.select("shard_id", "centroid").toArrow()
+    cids, cmat = centroid_matrix(queries.sparkSession, centroids)
     qids, qmat = int_col(q, "qid"), list_col_matrix(q, "qvec")
-    cids, cmat = int_col(c, "shard_id"), list_col_matrix(c, "centroid")
-    if not len(qids) or not len(cids) or nprobe < 1:
-        return _routing(qids, qmat, np.empty(0, np.int64), np.empty(0, np.int64))
-    step, top = max(1, _SCORE_BLOCK // len(cids)), []
-    for s in range(0, len(qmat), step):
-        cd = fold_l2(qmat[s : s + step, None], cmat[None])  # (block, m)
-        top.append(np.lexsort((np.broadcast_to(cids, cd.shape), cd), axis=1)[:, :nprobe])
-    top = np.concatenate(top)
+    top, _ = nearest_centroids(qmat, cids, cmat, nprobe)
     return _routing(qids, qmat, np.repeat(np.arange(len(qids)), top.shape[1]), cids[top].ravel())
 
 

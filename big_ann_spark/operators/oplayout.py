@@ -397,18 +397,42 @@ def write_op_partitions(df: DataFrame, target: str, cols: list[str]) -> None:
     partition dirs it touches) are replaced — a re-run of the same op
     id is a pure overwrite of itself, never an append-duplicate.
 
-    Rows are REPARTITIONED onto the partition columns first: without
-    it, every upstream task writes its own file into every dir it has
+    Each partition dir gets ONE file per op. A batch the driver built
+    (every leaf of its plan a ``LocalRelation``) is coalesced into one
+    task: no shuffle, the write is the op's only Spark job. Any other
+    ``df`` is REPARTITIONED onto the partition columns first: without
+    it every upstream task writes its own file into every dir it has
     rows for — a 100k-row upsert over 1000 shard dirs from 32 shuffle
     partitions landed 32,000 one-row files, and every later ledger
-    read paid ~12 s of listing + footer opens (measured, 2M campaign).
-    With the repartition each partition dir holds ONE file per op;
-    write parallelism = number of touched dirs, which is exactly the
-    op's fan-out."""
+    read paid ~12 s of listing + footer opens (measured, 2M campaign)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    local = all(
+        leaves.apply(i).getClass().getSimpleName() == "LocalRelation"
+        for i in range(leaves.size())
+    )
     (
-        df.repartition(*[F.col(c) for c in cols])
+        (df.coalesce(1) if local else df.repartition(*[F.col(c) for c in cols]))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*cols)
         .parquet(target)
     )
+
+
+def copy_dir(spark, src: str, dst: str) -> None:
+    """Replace ``dst`` with a copy of the flat directory ``src`` through
+    the Hadoop FS API (no Spark job); each file keeps its modification
+    time, so a byte-identical copy keeps the (path, size, mtime) key of
+    ``ann.centroid_matrix``."""
+    jvm = spark._jvm
+    sfs, jsrc = fs_path(spark, src)
+    dfs, jdst = fs_path(spark, dst)
+    dfs.delete(jdst, True)
+    if not jvm.org.apache.hadoop.fs.FileUtil.copy(
+        sfs, jsrc, dfs, jdst, False, True, spark._jsc.hadoopConfiguration()
+    ):
+        raise IOError(f"copy {src} -> {dst} failed")
+    for st in sfs.listStatus(jsrc):
+        if st.isFile():
+            target = jvm.org.apache.hadoop.fs.Path(jdst, st.getPath().getName())
+            dfs.setTimes(target, st.getModificationTime(), -1)

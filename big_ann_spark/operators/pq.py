@@ -167,38 +167,16 @@ def with_pq_codes_arrow(
             None if rotation is None else np.asarray(rotation, dtype=np.float64),
         )
     )
-    sub_len = len(codebooks[0][0])
 
     def part(batches):
-        import pyarrow as pa
-
-        from big_ann_spark.functions.arrowio import list_col_matrix
+        from big_ann_spark.functions.arrowio import list_col_matrix, matrix_list_col
 
         books, R = bc.value
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+            if rb.num_rows == 0:
                 continue
             X = list_col_matrix(rb, vec_col, np.float64)
-            if R is not None:
-                X = X @ R
-            m = len(books)
-            codes = np.empty((n, m), dtype=np.int16)
-            for j in range(m):
-                S = X[:, j * sub_len:(j + 1) * sub_len]
-                C = books[j]
-                d2 = np.zeros((n, C.shape[0]), dtype=np.float64)
-                # identical order to the fold: += over t, left to right
-                for t in range(sub_len):
-                    diff = S[:, t:t + 1] - C[None, :, t]
-                    d2 += diff * diff
-                codes[:, j] = np.argmin(d2, axis=1)
-            values = pa.array(codes.reshape(-1), type=pa.int16())
-            offsets = pa.array(
-                np.arange(0, (n + 1) * m, m, dtype=np.int32), type=pa.int32()
-            )
-            col = pa.ListArray.from_arrays(offsets, values)
-            yield rb.append_column(out_col, col)
+            yield rb.append_column(out_col, matrix_list_col(pq_encode_matrix(X, books, R)))
 
     # a FRESH StructType — StructType.add mutates in place, and
     # df.schema hands back the DataFrame's own cached object
@@ -206,6 +184,29 @@ def with_pq_codes_arrow(
         list(df.schema.fields) + [StructField(out_col, ArrayType(ShortType()))]
     )
     return df.mapInArrow(part, schema=schema)
+
+
+def pq_encode_matrix(X, books, rotation=None):
+    """(n, m) int16 PQ codes of the float64 rows of ``X`` — the kernel of
+    :func:`with_pq_codes_arrow`; ``books`` holds one (k, d/m) float64
+    array per subspace, ``rotation`` an optional d×d OPQ matrix."""
+    import numpy as np
+
+    if rotation is not None:
+        X = X @ rotation
+    n, m = len(X), len(books)
+    sub_len = books[0].shape[1]
+    codes = np.empty((n, m), dtype=np.int16)
+    for j in range(m):
+        S = X[:, j * sub_len:(j + 1) * sub_len]
+        C = books[j]
+        d2 = np.zeros((n, C.shape[0]), dtype=np.float64)
+        # identical order to the fold: += over t, left to right
+        for t in range(sub_len):
+            diff = S[:, t:t + 1] - C[None, :, t]
+            d2 += diff * diff
+        codes[:, j] = np.argmin(d2, axis=1)
+    return codes
 
 
 def save_pq_codebooks(spark, path: str, codebooks: list[list[list[float]]]) -> None:
@@ -784,6 +785,19 @@ def sq8_encode_col(
     )
 
 
+def sq8_encode_matrix(X, mins: list[float], maxs: list[float]):
+    """(n, d) int16 SQ8 codes of the float64 rows of ``X``: the
+    arithmetic of :func:`sq8_encode_col` element for element (Spark's
+    ``floor`` takes NaN to 0, so does this)."""
+    import numpy as np
+
+    mn, mx = np.asarray(mins, dtype=np.float64), np.asarray(maxs, dtype=np.float64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        q = np.floor((X - mn) / (mx - mn) * 255)
+    q = np.minimum(255.0, np.maximum(0.0, np.nan_to_num(q, nan=0.0)))
+    return np.where(mx == mn, 0, q).astype(np.int16)
+
+
 def sq8_decode_col(codes_col, mins: list[float], maxs: list[float]):
     """Reconstruct ``array<double>`` from SQ8 codes: bucket midpoint
     ``mn + (code + 0.5) * (mx - mn) / 255`` — max reconstruction error
@@ -907,6 +921,21 @@ def binarize_col(vec_col, thresholds: list[float], *, word_bits: int = BINARY_WO
     contribute 0."""
     thr = F.array(*[F.lit(float(t)) for t in thresholds])
     return binarize_col_lazy(vec_col, thr, len(thresholds), word_bits=word_bits)
+
+
+def binarize_matrix(X, thresholds: list[float], *, word_bits: int = BINARY_WORD_BITS):
+    """(n, words) int64 packed sign-bit codes of the float64 rows of
+    ``X``: the bits and weights of :func:`binarize_col` (a NaN value,
+    greater than every number in Spark's ordering, sets its bit)."""
+    import numpy as np
+
+    d = len(thresholds)
+    n_words = (d + word_bits - 1) // word_bits
+    bits = np.zeros((len(X), n_words * word_bits), dtype=np.int64)
+    V = X[:, :d]
+    bits[:, :d] = (V > np.asarray(thresholds, dtype=np.float64)) | np.isnan(V)
+    weights = np.left_shift(np.int64(1), np.arange(word_bits, dtype=np.int64))
+    return bits.reshape(len(X), n_words, word_bits) @ weights
 
 
 def binarize_col_lazy(vec_col, thr_col, d: int, *, word_bits: int = BINARY_WORD_BITS):

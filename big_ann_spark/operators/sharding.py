@@ -27,6 +27,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 from big_ann_spark.functions.vector import l2_distance
 from big_ann_spark.operators.knn import median_pairwise_distance
@@ -302,7 +303,6 @@ def write_sharded(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    repartition_to: int | None = None,
     sq8_ranges: tuple[list[float], list[float]] | None = None,
     pq_codebooks: list[list[list[float]]] | None = None,
     pq_encode_impl: str = "fold",
@@ -320,12 +320,17 @@ def write_sharded(
     at 20M rows that join is a full self-shuffle for data the
     assignment projection already had in hand.
 
-    ``repartition_to``: hash-cluster rows by shard before the
-    partitioned write. Without it, every scan task writes a file into
-    every shard directory it sees — fine at m ≈ 10¹-10³, but at
-    m = 10⁴ and hundreds of tasks that is millions of tiny files (the
-    classic dynamic-partition-write explosion); clustering first caps
-    file count at ~m while keeping ~m/repartition_to shards per task."""
+    Rows are hash-clustered by shard into ``defaultParallelism`` tasks
+    before the partitioned write, so each shard directory gets ONE
+    file. Without it every scan task writes a file into every shard
+    directory it sees: 64 files for 32 shards from 2 tasks, and at
+    m = 10⁴ and hundreds of tasks millions of tiny files (the classic
+    dynamic-partition-write explosion). Each task writes ~m/parallelism
+    shards.
+
+    Schemas it already holds are not inferred again: the schema
+    sidecar, the histogram read-back and the read-side schema memo all
+    use the schema of the rows it wrote."""
     with_vec = (
         assignments
         if vec_col in assignments.columns
@@ -413,10 +418,9 @@ def write_sharded(
         ).coalesce(1).write.mode("overwrite").parquet(
             f"{path}/binary_thresholds.parquet"
         )
-    if repartition_to:
-        with_vec = with_vec.repartition(repartition_to, "shard_id")
+    spark = assignments.sparkSession
     (
-        with_vec
+        with_vec.repartition(spark.sparkContext.defaultParallelism, "shard_id")
         # sorted-by-distance within each shard file: scans that re-rank
         # candidates read them best-first, and parquet row-group stats
         # on dist enable range pruning — the "pre-partitioned + sorted
@@ -440,67 +444,82 @@ def write_sharded(
         .mode("overwrite")
         .parquet(f"{path}/shards")
     )
-    # a same-path rebuild (e.g. a codec change) must not serve the old
-    # schema from the read-side memo: the (base, mtime) key alone is
-    # unsafe on filesystems with coarse 1 s mtime granularity (ADVICE
-    # r14) — drop every entry for this base, mirroring
-    # write_tag_postings_layout's _TAG_META_MEMO pop.
-    from big_ann_spark.operators import ann as _ann
-
-    _shards_base = f"{path}/shards"
-    for _k in [k for k in _ann._SHARDS_SCHEMA_MEMO if k[0] == _shards_base]:
-        _ann._SHARDS_SCHEMA_MEMO.pop(_k, None)
+    # the schema a read of the written layout infers: the data columns
+    # as written, then shard_id as an int partition column, all nullable
+    read_schema = _nullable(
+        StructType(
+            [f for f in with_vec.schema.fields if f.name != "shard_id"]
+            + [StructField("shard_id", IntegerType())]
+        )
+    )
     # schema sidecar: a PARTITIONED write of an EMPTY row set lands no
     # files at all (no partition values exist), which makes the shards
     # dir schema-uninferable — legal state when compaction folds a
-    # layout whose every vector was deleted. A non-partitioned write of
-    # limit(0) always produces one schema-carrying empty file
-    # (SPARK-23271), so readers of an empty layout stay typed.
-    (
-        with_vec.limit(0)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/schema.parquet")
-    )
+    # layout whose every vector was deleted. One empty parquet file
+    # carries the row schema, written from the driver (no Spark job).
+    _write_empty_parquet(spark, with_vec.schema, f"{path}/schema.parquet")
     # histogram from the JUST-WRITTEN layout, not the assignment
     # lineage: `assignments` is typically an uncached mapInPandas /
     # KMeans plan, and re-collecting it here silently re-ran the whole
     # assignment a second time (measured: a full extra 20M-row BLAS
     # pass at m = 10⁴). Reading back shard_id+dist is a 2-column
-    # pruned scan of what actually landed — with the EXPLICIT sidecar
-    # schema, so an all-deleted (zero-file) layout yields an empty
-    # histogram instead of an inference error.
-    spark = assignments.sparkSession
-    read_schema = spark.read.parquet(f"{path}/schema.parquet").schema
+    # pruned scan of what actually landed — with the EXPLICIT schema,
+    # so an all-deleted (zero-file) layout yields an empty histogram
+    # instead of an inference error.
     shard_histogram(
         spark.read.schema(read_schema)
         .option("basePath", f"{path}/shards")
         .parquet(f"{path}/shards")
         .select("shard_id", "dist")
     ).write.mode("overwrite").csv(f"{path}/distribution", header=True)
-    # pre-populate the read-side schema memo at BUILD time (r15): the
-    # first search against a fresh layout otherwise pays a footer-
-    # inference driver job in open_probed_shards (a cold-serving
-    # attempt-1 cost). One INFERRED read here — the exact read the
-    # serving path would run, stored under the exact (base, mtime) key
-    # it would compute — moves that job off the serving path; the
-    # listing it needs was just done by the histogram read above.
-    # Best-effort: serving never depends on this (a miss only re-infers).
-    try:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/shards")
-        fs = jpath.getFileSystem(hconf)
-        mtime = int(fs.getFileStatus(jpath).getModificationTime())
-        from big_ann_spark.operators import ann as _ann
+    # the read-side schema memo, under the exact (base, mtime) key
+    # open_probed_shards computes: the first search of a fresh layout
+    # then runs no footer-inference job. A same-path rebuild (e.g. a
+    # codec change) drops every older entry for this base: the mtime
+    # alone is unsafe on filesystems with 1 s mtime granularity.
+    from big_ann_spark.operators import ann as _ann
+    from big_ann_spark.operators import oplayout
 
-        _ann._SHARDS_SCHEMA_MEMO[(f"{path}/shards", mtime)] = (
-            spark.read.option("basePath", f"{path}/shards")
-            .parquet(f"{path}/shards")
-            .schema
+    base = f"{path}/shards"
+    for k in [k for k in _ann._SHARDS_SCHEMA_MEMO if k[0] == base]:
+        _ann._SHARDS_SCHEMA_MEMO.pop(k, None)
+    fs, jbase = oplayout.fs_path(spark, base)
+    if fs.exists(jbase):
+        mtime = int(fs.getFileStatus(jbase).getModificationTime())
+        _ann._SHARDS_SCHEMA_MEMO[(base, mtime)] = read_schema
+
+
+def _nullable(dt):
+    """``dt`` with every field and element nullable — how a file read
+    reports a schema."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
         )
-    except Exception:
-        pass
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    return dt
+
+
+def _write_empty_parquet(spark, schema: StructType, path: str) -> None:
+    """Replace ``path`` with a directory holding one empty parquet file
+    of ``schema``, written through the Hadoop FS API from the driver."""
+    import io
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from big_ann_spark.operators import oplayout
+
+    buf = io.BytesIO()
+    pq.write_table(to_arrow_schema(schema).empty_table(), buf)
+    fs, jp = oplayout.fs_path(spark, path)
+    fs.delete(jp, True)
+    out = fs.create(spark._jvm.org.apache.hadoop.fs.Path(jp, "part-00000.parquet"))
+    try:
+        out.write(bytearray(buf.getvalue()))
+    finally:
+        out.close()
 
 
 # --------------------------------------------------------------- KANNDI

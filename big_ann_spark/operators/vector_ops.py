@@ -15,12 +15,17 @@ Layout extension (backward compatible — a pristine layout has no
 ``ops/`` directory and every reader short-circuits to the base):
 
 - ``{path}/shards/shard_id=S/…``  — the base build (epoch −1);
-- ``{path}/ops/_mb=<op>/shard_id=S/…`` — one dir per committed
-  mutation: upserts land rows ``(vec_id, dist, embedding[, codes],
-  op='insert')`` under their assigned shard; deletes land tombstones
-  ``op='delete'`` under the RESERVED shard −1 (query routing can never
-  probe it, so a bare tombstone can never surface as a candidate —
-  the streaming index's trick);
+- ``{path}/ops/_mb=<op>/`` — one dir per committed mutation, one file
+  for a batch the driver built, ``shard_id`` a data column: upserts
+  land rows ``(vec_id, dist, embedding[, codes], op='insert',
+  shard_id)`` with their assigned shard (routed on the driver);
+  deletes land tombstones ``op='delete'`` with the RESERVED shard −1
+  kept as a value (query routing can never probe it, so a bare
+  tombstone can never surface as a candidate — the streaming index's
+  trick). Ledgers written before ``shard_id`` became a column hold
+  ``_mb=<op>/shard_id=S/`` dirs: they are read and compacted as
+  before, and a new op on them is refused until they are compacted
+  (Spark cannot infer one table over both layouts);
 - ``{path}/_ops/<op>`` — commit markers (oplayout protocol: dynamic
   partition overwrite + marker = idempotent replay, crash-invisible
   half-writes, O(in-flight) NOT-IN for readers).
@@ -34,6 +39,11 @@ stale base rows: inside the from-disk search's candidate scan
 (``live_probed_view``). Both are memoized per ledger state
 (``mutation_state``). The base scan stays partition-pruned;
 uncontested vectors never shuffle.
+
+Each mutation lands in one write job as one file (an upsert first
+collects its batch in one more job; a DataFrame of ids to delete is
+deduplicated distributed instead), and compaction rewrites the base
+as one file per shard.
 
 At 100 TB: ops cost O(batch) writes; search cost gains an O(contested)
 id filter in the probed scan plus an O(ops-size) side scan —
@@ -94,8 +104,18 @@ def _has_sq8(spark, path: str) -> bool:
 
 
 def _sq8_ranges(spark, path: str) -> tuple[list[float], list[float]]:
-    row = spark.read.parquet(f"{path}/sq8_ranges.parquet").collect()[0]
+    # write_sharded's sidecar schema: no footer-inference job
+    row = spark.read.schema("mins array<double>, maxs array<double>").parquet(
+        f"{path}/sq8_ranges.parquet"
+    ).collect()[0]
     return list(row["mins"]), list(row["maxs"])
+
+
+def has_per_shard_ops(spark, path: str) -> bool:
+    """True when the ledger holds ops in the layout written before
+    ``shard_id`` became a column: ``ops/_mb=<op>/shard_id=S/``."""
+    fs, jp = oplayout.fs_path(spark, f"{path}/ops/_mb=*/shard_id=*")
+    return bool(fs.globStatus(jp))
 
 
 def _land_vector_op(
@@ -105,11 +125,18 @@ def _land_vector_op(
     op_id: int | None,
     tag_batch: DataFrame | None = None,
 ) -> int:
-    """Purge-first landing of one op's rows under ``_mb=<id>`` +
-    commit marker. ``rows`` must carry (vec_id, dist, embedding
-    [, codes], op, shard_id). ``tag_batch``: optional
+    """Purge-first landing of one op's rows as ``ops/_mb=<id>/`` +
+    commit marker, ``shard_id`` a data column (−1 for tombstones). A
+    batch the driver built lands as one file in one Spark job
+    (``oplayout.write_op_partitions``). ``rows`` must carry (vec_id,
+    dist, embedding[, codes], op, shard_id). ``tag_batch``: optional
     (neighbor_id, _btags) landed as the SAME op (one marker — the
     vectors and their tags become visible atomically).
+
+    A ledger that still holds ops in the per-shard layout
+    (``has_per_shard_ops``) is refused before anything is written:
+    Spark cannot infer one table over both layouts, so it must be
+    compacted first.
 
     SINGLE-WRITER: one mutator per layout at a time (see
     oplayout's module docstring) — id allocation + purge + write +
@@ -117,6 +144,13 @@ def _land_vector_op(
     concurrent upsert/delete against the same path raises
     ``ConcurrentWriterError`` instead of purging this op's in-flight
     partitions."""
+    if has_per_shard_ops(spark, path):
+        raise ValueError(
+            f"{path}/ops holds ops written as _mb=<op>/shard_id=S/ "
+            "directories, which cannot be read together with ops that "
+            "carry shard_id as a column: compact first (compact_in_place, "
+            "CLI index-compact), then mutate"
+        )
     with oplayout.writer_lock(spark, path, owner="vector_ops"):
         # create-marker-first: the id claim is atomic and happens
         # BEFORE any purge — a same-id allocation race loses here,
@@ -129,9 +163,7 @@ def _land_vector_op(
         if int(op_id) not in oplayout.committed_ops(spark, path):
             oplayout.purge_op_dirs(spark, _all_op_dirs(path, int(op_id)))
         oplayout.write_op_partitions(
-            rows.withColumn("_mb", F.lit(int(op_id))),
-            f"{path}/ops",
-            ["_mb", "shard_id"],
+            rows.withColumn("_mb", F.lit(int(op_id))), f"{path}/ops", ["_mb"]
         )
         if tag_batch is not None:
             from big_ann_spark.operators import tag_ops
@@ -148,6 +180,34 @@ def _land_vector_op(
     return int(op_id)
 
 
+def _code_columns(spark, path: str, E: np.ndarray) -> dict:
+    """The code columns the layout's sidecars call for, encoded on the
+    driver from the stored float32 vectors ``E`` (widened to float64)
+    with the numpy kernels bit-equal to the build's encoders."""
+    from big_ann_spark.functions.arrowio import matrix_list_col
+    from big_ann_spark.operators import pq as PQ
+
+    X = E.astype(np.float64)
+    out = {}
+    if _has_sq8(spark, path):
+        out["codes"] = PQ.sq8_encode_matrix(X, *_sq8_ranges(spark, path))
+    if oplayout.path_exists(spark, f"{path}/pq_codebooks.parquet"):
+        books = PQ.load_pq_codebooks(spark, f"{path}/pq_codebooks.parquet")
+        rot = None
+        if oplayout.path_exists(spark, f"{path}/opq_rotation.parquet"):
+            rot = np.asarray(
+                PQ.load_rotation(spark, f"{path}/opq_rotation.parquet"), dtype=np.float64
+            )
+        books = [np.asarray(b, dtype=np.float64) for b in books]
+        out["pq_codes"] = PQ.pq_encode_matrix(X, books, rot)
+    if oplayout.path_exists(spark, f"{path}/binary_thresholds.parquet"):
+        thr = spark.read.schema("thresholds array<double>").parquet(
+            f"{path}/binary_thresholds.parquet"
+        ).collect()[0]
+        out["bcodes"] = PQ.binarize_matrix(X, list(thr["thresholds"]))
+    return {c: matrix_list_col(M) for c, M in out.items()}
+
+
 def upsert_vectors(
     spark,
     path: str,
@@ -156,107 +216,79 @@ def upsert_vectors(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     op_id: int | None = None,
-    assign_impl: str = "fold",
     tags_col: str | None = None,
 ) -> int:
     """Insert-or-replace ``vectors`` (``(id_col, vec_col)``) into the
-    layout as ONE exactly-once op. Each vector is assigned to its
-    nearest centroid under the layout's FROZEN routing (the
+    layout as ONE exactly-once op. The batch is collected to the driver
+    (at most ``ann.DRIVER_ROWS`` rows; a larger batch fails loudly and
+    must be split into several upserts) and each vector is assigned to
+    its nearest centroid under the layout's FROZEN routing (the
     ``centroids.parquet`` written at build — upserts never move the
     centroids, exactly like adding to a trained IVF index; recall for
-    upserted points is a property of that frozen routing). If the
-    layout carries SQ8 codes, the new vectors are encoded with the
-    frozen quantization ranges for the same reason. Duplicate ids
-    WITHIN one batch collapse to a single arbitrary row
-    (``dropDuplicates``) — between batches, the higher op id wins.
+    upserted points is a property of that frozen routing), by
+    ``ann.nearest_centroids``: the shard and distance
+    ``assign_to_centroids`` computes, bit for bit. The centroid matrix
+    is read once per state of ``centroids.parquet``
+    (``ann.centroid_matrix``). Code columns (SQ8/PQ/OPQ/binary) are
+    encoded on the driver under the frozen sidecars, bit-equal to the
+    build's encoders. The op lands in one write job. Duplicate ids
+    WITHIN one batch collapse to their first row — between batches,
+    the higher op id wins.
 
     ``tags_col``: when the layout carries filtered-track tag artifacts
     (``write_tag_postings_layout``), the batch's tag arrays land as
     the SAME op under the same commit marker — the vectors and their
     tags become visible atomically (operators/tag_ops.py).
     Returns the committed op id."""
-    from big_ann_spark.operators.sharding import assign_to_centroids
+    import pyarrow as pa
 
-    vectors = vectors.dropDuplicates([id_col])
-    tag_batch = None
+    from big_ann_spark.functions.arrowio import int_col, list_col_matrix, matrix_list_col
+    from big_ann_spark.operators import tag_ops
+    from big_ann_spark.operators.ann import (
+        centroid_matrix,
+        collect_to_driver,
+        nearest_centroids,
+    )
+
     if tags_col is not None:
-        from big_ann_spark.operators import tag_ops
-
         if not tag_ops.has_tag_artifacts(spark, path):
             raise ValueError(
                 f"{path} has no tag artifacts — run write_tag_postings_layout "
                 "(CLI: index-tags) before upserting tagged vectors"
             )
-        tag_batch = vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(tags_col).alias("_btags")
-        ).localCheckpoint()
-    else:
-        from big_ann_spark.operators import tag_ops
-
-        if tag_ops.has_tag_artifacts(spark, path) and tag_ops.tag_meta(
-            spark, path
-        )[1]:
-            raise ValueError(
-                "this layout's tag postings CARRY payload vectors — a "
-                "vector upsert must land its tags in the same op "
-                "(tags_col=...), or the id's postings would serve a "
-                "stale embedding"
-            )
-    cents = spark.read.parquet(f"{path}/centroids.parquet")
-    rows = assign_to_centroids(
-        vectors,
-        cents,
-        id_col=id_col,
-        vec_col=vec_col,
-        extra_cols=[vec_col],
-        impl=assign_impl,
-    ).select(
-        F.col(id_col).alias("vec_id"),
-        F.col("dist").cast("double").alias("dist"),
-        F.col(vec_col).cast("array<float>").alias("embedding"),
-        F.col("shard_id").cast("int").alias("shard_id"),
+    elif tag_ops.has_tag_artifacts(spark, path) and tag_ops.tag_meta(spark, path)[1]:
+        raise ValueError(
+            "this layout's tag postings CARRY payload vectors — a "
+            "vector upsert must land its tags in the same op "
+            "(tags_col=...), or the id's postings would serve a "
+            "stale embedding"
+        )
+    cols = [id_col, vec_col] + ([tags_col] if tags_col is not None else [])
+    batch = collect_to_driver(vectors.select(*cols), "upsert batch")
+    ids = int_col(batch, id_col)
+    _, first = np.unique(ids, return_index=True)
+    keep = np.sort(first)
+    batch, ids = batch.take(keep), ids[keep]
+    cids, cmat = centroid_matrix(spark, f"{path}/centroids.parquet")
+    V = list_col_matrix(batch, vec_col) if len(ids) else np.empty((0, cmat.shape[1]))
+    near, dist = nearest_centroids(V, cids, cmat, 1)
+    E = V.astype(np.float32)  # the stored embedding is array<float>
+    table = pa.table(
+        {
+            "vec_id": pa.array(ids, pa.int64()),
+            "dist": pa.array(dist[:, 0], pa.float64()),
+            "embedding": matrix_list_col(E),
+            **_code_columns(spark, path, E),
+            "op": pa.array([OP_INSERT] * len(ids), pa.string()),
+            "shard_id": pa.array(cids[near[:, 0]], pa.int32()),
+        }
     )
-    if _has_sq8(spark, path):
-        from big_ann_spark.operators.pq import sq8_encode_col
-
-        mins, maxs = _sq8_ranges(spark, path)
-        rows = rows.withColumn(
-            "codes", sq8_encode_col("embedding", mins, maxs).cast("array<smallint>")
+    rows = spark.createDataFrame(table)
+    tag_batch = None
+    if tags_col is not None:
+        tag_batch = spark.createDataFrame(
+            pa.table({"neighbor_id": table["vec_id"], "_btags": batch.column(tags_col)})
         )
-    if oplayout.path_exists(spark, f"{path}/pq_codebooks.parquet"):
-        from big_ann_spark.operators.pq import (
-            load_pq_codebooks,
-            load_rotation,
-            pq_encode_col,
-            with_pq_codes_arrow,
-        )
-
-        books = load_pq_codebooks(spark, f"{path}/pq_codebooks.parquet")
-        if oplayout.path_exists(spark, f"{path}/opq_rotation.parquet"):
-            # OPQ: codes live in the rotated space — arrow kernel only
-            rows = with_pq_codes_arrow(
-                rows, books, vec_col="embedding",
-                rotation=load_rotation(spark, f"{path}/opq_rotation.parquet"),
-            )
-        else:
-            rows = rows.withColumn(
-                "pq_codes",
-                pq_encode_col("embedding", books).cast("array<smallint>"),
-            )
-    if oplayout.path_exists(spark, f"{path}/binary_thresholds.parquet"):
-        from big_ann_spark.operators.pq import binarize_col
-
-        thr = list(
-            spark.read.parquet(f"{path}/binary_thresholds.parquet").collect()[0][
-                "thresholds"
-            ]
-        )
-        rows = rows.withColumn("bcodes", binarize_col("embedding", thr))
-    rows = rows.withColumn("op", F.lit(OP_INSERT))
-    if tag_batch is not None:
-        # the tag landing derives shard_of + df deltas from the rows
-        # lineage twice — pin it once
-        rows = rows.localCheckpoint()
     return _land_vector_op(spark, path, rows, op_id, tag_batch=tag_batch)
 
 
@@ -269,22 +301,23 @@ def delete_vectors(
 ) -> int:
     """Tombstone the given vector ids (a DataFrame whose first column
     is the id, or any iterable of ints) as ONE exactly-once op.
-    Tombstones are 8-byte rows in the reserved shard −1 — routing
-    never probes it, so a tombstone can never surface as a candidate;
-    it only KILLS base/earlier-op rows via latest-op-wins resolution.
-    Deleting an id that was never inserted is a legal no-op row.
-    Returns the committed op id."""
+    Tombstones are 8-byte rows with shard id −1 — routing never probes
+    it, so a tombstone can never surface as a candidate; it only KILLS
+    base/earlier-op rows via latest-op-wins resolution. Deleting an id
+    that was never inserted is a legal no-op row. An iterable lands
+    from the driver in one Spark job; a DataFrame is deduplicated
+    distributed. Returns the committed op id."""
+    import pyarrow as pa
+
     if isinstance(ids, DataFrame):
-        id_df = ids.select(F.col(ids.columns[0]).cast("long").alias("vec_id"))
+        id_df = ids.select(F.col(ids.columns[0]).cast("long").alias("vec_id")).distinct()
     else:
-        id_df = spark.createDataFrame(
-            [(int(i),) for i in ids], "vec_id long"
-        )
-    rows = id_df.distinct().select(
+        uniq = np.unique(np.fromiter((int(i) for i in ids), dtype=np.int64))
+        id_df = spark.createDataFrame(pa.table({"vec_id": uniq}))
+    rows = id_df.select(
         "vec_id",
         F.lit(None).cast("double").alias("dist"),
         F.lit(None).cast("array<float>").alias("embedding"),
-        F.lit(TOMBSTONE_SHARD).cast("int").alias("shard_id"),
     )
     if _has_sq8(spark, path):
         rows = rows.withColumn("codes", F.lit(None).cast("array<smallint>"))
@@ -292,7 +325,9 @@ def delete_vectors(
         rows = rows.withColumn("pq_codes", F.lit(None).cast("array<smallint>"))
     if oplayout.path_exists(spark, f"{path}/binary_thresholds.parquet"):
         rows = rows.withColumn("bcodes", F.lit(None).cast("array<bigint>"))
-    rows = rows.withColumn("op", F.lit(OP_DELETE))
+    rows = rows.withColumn("op", F.lit(OP_DELETE)).withColumn(
+        "shard_id", F.lit(TOMBSTONE_SHARD).cast("int")
+    )
     return _land_vector_op(spark, path, rows, op_id)
 
 
@@ -478,11 +513,10 @@ def compact_vector_layout(
     re-encoded under the frozen sidecars) AND codes-only ``--sq8``
     layouts (no raw column → the stored codes are carried as the
     payload and the ranges sidecar is copied verbatim)."""
+    from big_ann_spark.operators.ann import open_probed_shards
     from big_ann_spark.operators.sharding import write_sharded
 
-    base = spark.read.option("basePath", f"{src_path}/shards").parquet(
-        f"{src_path}/shards"
-    )
+    base = open_probed_shards(spark, src_path, None)
     live = live_probed_view(
         spark, src_path, base, None, id_col=id_col, vec_col=vec_col
     )
@@ -525,17 +559,11 @@ def compact_vector_layout(
     if not has_raw and _has_sq8(spark, src_path):
         # codes-only layout: the codes ARE the payload; carry the
         # ranges sidecar so decode keeps working on the new base
-        (
-            spark.read.parquet(f"{src_path}/sq8_ranges.parquet")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{dst_path}/sq8_ranges.parquet")
+        oplayout.copy_dir(
+            spark, f"{src_path}/sq8_ranges.parquet", f"{dst_path}/sq8_ranges.parquet"
         )
-    (
-        spark.read.parquet(f"{src_path}/centroids.parquet")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{dst_path}/centroids.parquet")
+    oplayout.copy_dir(
+        spark, f"{src_path}/centroids.parquet", f"{dst_path}/centroids.parquet"
     )
     if oplayout.path_exists(spark, f"{src_path}/tag_postings.parquet"):
         # filtered-track artifacts: resolve the live tag sets (base ∪
@@ -641,6 +669,8 @@ def compact_in_place(
     create, so a mutator racing the rename window aborts and unwinds
     the phantom ``_ops`` dir its mkdirs made instead of breaking the
     swap-in."""
+    from big_ann_spark.operators.ann import rekey_shards_schema
+
     base = path.rstrip("/")
     tmp, old = base + ".compacting", base + ".precompact"
     for p in (tmp, old):
@@ -687,6 +717,7 @@ def compact_in_place(
                 )
             fs.delete(jold, True)
             oplayout.invalidate_contested_memo(base)
+            rekey_shards_schema(tmp, base)
     finally:
         cfs.delete(cjp, False)
     return n_ops

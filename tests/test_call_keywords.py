@@ -1,5 +1,5 @@
-"""Every keyword passed to the exact-kNN and quantized-serving entry
-points must exist in the callee's signature — including in scripts
+"""Every keyword passed to the exact-kNN, quantized-serving, layout
+write and mutation entry points must exist in the callee's signature — including in scripts
 that no test runs (``tools/``, ``bench.py``), where a deleted parameter
 would otherwise only surface as a TypeError the next time someone
 measures. Static (stdlib ``ast`` + ``inspect.signature``); starts no
@@ -11,7 +11,7 @@ import ast
 import inspect
 import pathlib
 
-from big_ann_spark.operators import ann, knn
+from big_ann_spark.operators import ann, knn, sharding, vector_ops
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 CALLEES = {
@@ -19,6 +19,11 @@ CALLEES = {
     "ivf_search_from_disk": ann.ivf_search_from_disk,
     "sq8_pool": ann.sq8_pool,
     "pq_pool": ann.pq_pool,
+    "write_sharded": sharding.write_sharded,
+    "upsert_vectors": vector_ops.upsert_vectors,
+    "delete_vectors": vector_ops.delete_vectors,
+    "compact_in_place": vector_ops.compact_in_place,
+    "compact_if_needed": vector_ops.compact_if_needed,
 }
 
 
@@ -66,8 +71,12 @@ def test_stale_keyword_is_reported():
         "exact_knn(q, b, k=10, metric='l2')\n"
         "ANN.ivf_search_from_disk(q, p, c, max_pushdown=9, **kw)\n"
         "ANN.sq8_pool(r, s, p, 20, routed_rows=None)\n"
+        "VO.upsert_vectors(s, p, v, assign_impl='arrow')\n"
+        "write_sharded(a, e, p, repartition_to=256, sq8_ranges=r)\n"
     )
     assert stale_keywords(src, "x.py") == [
         "x.py:1: exact_knn(metric=)",
         "x.py:2: ivf_search_from_disk(max_pushdown=)",
+        "x.py:4: upsert_vectors(assign_impl=)",
+        "x.py:5: write_sharded(repartition_to=)",
     ]

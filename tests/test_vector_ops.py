@@ -726,3 +726,244 @@ def test_compact_after_deleting_everything(spark, sf_dir, tmp_path):
     assert got.count() == 0
     # and the pre-compaction live view serves empty too
     assert ANN.ivf_search_from_disk(queries, path, cents, k=3, nprobe=2).count() == 0
+
+
+def _job_count(spark, fn):
+    """(fn(), number of Spark jobs it ran)."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"vector-ops-jobcount-{uuid.uuid4()}"
+    sc.setJobGroup(group, "job census")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _op_files(path, op_id):
+    import os
+
+    d = f"{path}/ops/_mb={op_id}"
+    return [f for f in os.listdir(d) if not f.startswith((".", "_"))]
+
+
+def test_upsert_assignment_bit_equal_to_fold_on_near_ties(spark):
+    """Driver assignment equals assign_to_centroids' fold, shard and
+    distance bit for bit: points 1e-16 apart around the plane
+    equidistant from two centroids (ties go to the lower shard id), and
+    a batch-internal duplicate id keeps its first row."""
+    import numpy as np
+
+    d = 8
+    e = np.eye(d)
+    cents = spark.createDataFrame(
+        [(s, [float(x) for x in c]) for s, c in {0: -e[0], 1: e[0], 2: 4.0 * e[1]}.items()],
+        "shard_id int, centroid array<double>",
+    )
+    path = tempfile.mkdtemp(prefix="big_ann_vec_ties_") + "/layout"
+    base = spark.createDataFrame([(0, [float(x) for x in e[2]])], "vec_id long, embedding array<double>")
+    SH.write_sharded(SH.assign_to_centroids(base, cents, extra_cols=["embedding"]), base, path)
+    cents.write.parquet(f"{path}/centroids.parquet")
+    rows = []
+    for i, t in enumerate([-3e-16, -2e-16, -1e-16, 0.0, 1e-16, 2e-16, 3e-16]):
+        rows.append((10 + i, t * e[0] + 0.5 * e[2]))
+        rows.append((20 + i, (1.0 + t) * e[0] + 2.0 * e[1] + 1e-16 * i * e[3]))
+    vecs = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in rows + [(10, e[1])]],
+        "vec_id long, embedding array<double>",
+    )
+    VO.upsert_vectors(spark, path, vecs)
+    want = SH.assign_to_centroids(
+        spark.createDataFrame([(int(i), [float(x) for x in v]) for i, v in rows], vecs.schema),
+        cents,
+    )
+    want = sorted((r["vec_id"], r["shard_id"], r["dist"]) for r in want.collect())
+    ops = spark.read.parquet(f"{path}/ops")
+    got = sorted((r["vec_id"], r["shard_id"], r["dist"]) for r in ops.collect())
+    assert got == want
+    shard = {i: s for i, s, _ in got}
+    assert shard[13] == 0  # an exact tie goes to the lower shard id
+    assert {shard[i] for i in range(10, 17)} == {0, 1}  # the ladder crosses over
+
+
+@pytest.mark.parametrize("codec", ["sq8", "pq", "opq", "binary"])
+def test_upserted_codes_equal_build_encoders(spark, sf_dir, codec):
+    """An upsert of vectors the build already encoded lands the same
+    codes, shard and distance as the build wrote for them."""
+    import numpy as np
+
+    from big_ann_spark.operators.pq import train_binary, train_sq8
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cents = SH.label_centroids(load_table(spark, sf_dir, "embeddings"))
+    assign = SH.assign_to_centroids(emb, cents, extra_cols=["embedding"])
+    rng = np.random.default_rng(7)
+    kw, col = {}, {"sq8": "codes", "binary": "bcodes"}.get(codec, "pq_codes")
+    if codec == "sq8":
+        kw["sq8_ranges"] = train_sq8(emb)
+    elif codec == "binary":
+        kw["binary_thresholds"] = train_binary(emb)
+    else:
+        kw["pq_codebooks"] = rng.normal(size=(8, 16, 8)).tolist()
+        if codec == "opq":
+            kw["opq_rotation"] = np.linalg.qr(rng.normal(size=(64, 64)))[0].tolist()
+            kw["pq_encode_impl"] = "arrow"
+    path = tempfile.mkdtemp(prefix=f"big_ann_vec_{codec}_") + "/layout"
+    SH.write_sharded(assign, emb, path, **kw)
+    cents.write.parquet(f"{path}/centroids.parquet")
+    VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") % 2 == 0))
+    cols = ["vec_id", "shard_id", "dist", col]
+    base = {r["vec_id"]: tuple(r) for r in spark.read.parquet(f"{path}/shards").select(*cols).collect()}
+    ops = spark.read.parquet(f"{path}/ops").select(*cols).collect()
+    assert len(ops) == len([i for i in base if i % 2 == 0]) > 0
+    assert all(tuple(r) == base[r["vec_id"]] for r in ops)
+
+
+def test_upsert_past_driver_rows_fails_before_writing(spark, sf_dir, monkeypatch):
+    """An upsert batch is collected to the driver under DRIVER_ROWS: a
+    larger one fails loudly and leaves no trace in the ledger."""
+    import os
+
+    emb, cents, path = _build_layout(spark, sf_dir)
+    monkeypatch.setattr(ANN, "DRIVER_ROWS", 5)
+    with pytest.raises(ValueError, match="split the batch"):
+        VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") < 6))
+    assert not os.path.exists(f"{path}/ops") and not os.path.exists(f"{path}/_ops")
+    assert VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") < 5)) == 0
+
+
+def test_each_op_lands_one_file_in_one_write_job(spark, sf_dir):
+    """An upsert over many shards and a delete each land one file under
+    their ops/_mb=<op>/ directory, shard_id a column (−1 for
+    tombstones); with the centroid matrix read once, an upsert runs two
+    Spark jobs (batch collect, write) and a delete of listed ids one."""
+    emb, cents, path = _build_layout(spark, sf_dir)
+    batch = emb.filter(F.col("vec_id") % 3 == 0)
+    VO.upsert_vectors(spark, path, batch.filter(F.col("vec_id") % 2 == 0))
+    _, n_up = _job_count(
+        spark, lambda: VO.upsert_vectors(spark, path, batch.filter(F.col("vec_id") % 2 == 1))
+    )
+    _, n_del = _job_count(spark, lambda: VO.delete_vectors(spark, path, [1, 2, 2, 4]))
+    assert (n_up, n_del) == (2, 1)
+    for op in (0, 1, 2):
+        assert len(_op_files(path, op)) == 1
+    ops = spark.read.parquet(f"{path}/ops")
+    assert ops.filter("_mb = 1").select("shard_id").distinct().count() > 3
+    tomb = ops.filter("_mb = 2").select("vec_id", "shard_id", "op").collect()
+    assert sorted(map(tuple, tomb)) == [(i, -1, VO.OP_DELETE) for i in (1, 2, 4)]
+
+
+def test_search_after_compact_in_place_runs_no_inference_job(spark, sf_dir):
+    """compact_in_place files the new layout's shards schema under the
+    swapped-in path, so the first search after it runs as many jobs as
+    a repeat search — the query collect and the scan's two stages, the
+    centroid matrix served from memory (the copied centroid files keep
+    their mtime) — and no .compacting entry is left behind."""
+    emb, _, path = _build_layout(spark, sf_dir)
+    VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") % 3 == 0))
+    VO.delete_vectors(spark, path, [1, 2])
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+
+    def search():
+        cents = spark.read.parquet(f"{path}/centroids.parquet")
+        return lambda: ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3).collect()
+
+    before = sorted(map(tuple, search()()))
+    assert VO.compact_in_place(spark, path) == 2
+    rows, n_first = _job_count(spark, search())
+    _, n_repeat = _job_count(spark, search())
+    assert n_first == n_repeat <= 3, (n_first, n_repeat)
+    assert sorted(map(tuple, rows)) == before
+    assert not [k for k in ANN._SHARDS_SCHEMA_MEMO if ".compacting" in k[0]]
+
+
+def test_rewritten_centroids_seen_by_next_search_and_upsert(spark, sf_dir):
+    """The centroid matrix is memoized per state of centroids.parquet:
+    a rebuild of the table (new files) is seen by the next upsert and
+    by the next search that reads it, and a compaction's copy is served
+    without a Spark job."""
+    import numpy as np
+
+    emb, cents, path = _build_layout(spark, sf_dir)
+    m = cents.count()
+    VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") == 3))
+    flipped = cents.select((F.lit(m - 1) - F.col("shard_id")).alias("shard_id"), "centroid")
+    flipped.localCheckpoint().write.mode("overwrite").parquet(f"{path}/centroids.parquet")
+    batch = emb.filter(F.col("vec_id").isin(6, 9, 12))
+    VO.upsert_vectors(spark, path, batch)
+    want = SH.assign_to_centroids(batch, flipped).select("vec_id", "shard_id").collect()
+    got = spark.read.parquet(f"{path}/ops").filter("_mb = 1").select("vec_id", "shard_id")
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want))
+    queries = batch.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
+    fresh = spark.read.parquet(f"{path}/centroids.parquet")
+    routed = ANN._route_on_driver(queries, fresh, 1, query_id="qid", query_vec="qvec")
+    want_routed = ANN.route_queries(queries, flipped, 1).select("qid", "shard_id").collect()
+    assert sorted(
+        (int(routed.qids[q]), s) for s, qs in routed.shard_to_q.items() for q in qs
+    ) == sorted(map(tuple, want_routed))
+    VO.compact_in_place(spark, path)
+    (cids, cmat), n = _job_count(spark, lambda: ANN.centroid_matrix(spark, f"{path}/centroids.parquet"))
+    assert n == 0
+    assert sorted(cids.tolist()) == list(range(m)) and np.isfinite(cmat).all()
+
+
+def _per_shard_ledger(spark, sf_dir):
+    """A layout whose ledger was written before shard_id became a
+    column: op 0 upserts the %3 == 0 ids, op 1 deletes 1, 2 and 3, each
+    landed as ops/_mb=<op>/shard_id=S/ directories."""
+    emb, cents, path = _build_layout(spark, sf_dir)
+    up = SH.assign_to_centroids(
+        emb.filter(F.col("vec_id") % 3 == 0), cents, extra_cols=["embedding"]
+    ).select(
+        "vec_id", F.col("dist").cast("double"), F.col("embedding").cast("array<float>"),
+        F.lit(VO.OP_INSERT).alias("op"), F.col("shard_id").cast("int"),
+    )
+    tomb = spark.createDataFrame([(1,), (2,), (3,)], "vec_id long").select(
+        "vec_id", F.lit(None).cast("double").alias("dist"),
+        F.lit(None).cast("array<float>").alias("embedding"),
+        F.lit(VO.OP_DELETE).alias("op"), F.lit(-1).alias("shard_id"),
+    )
+    for op, rows in enumerate((up, tomb)):
+        oplayout.write_op_partitions(
+            rows.withColumn("_mb", F.lit(op)), f"{path}/ops", ["_mb", "shard_id"]
+        )
+        oplayout.mark_committed(spark, path, op)
+    live = ~F.col("vec_id").isin(1, 2, 3)
+    return emb, cents, path, live
+
+
+def test_per_shard_ledger_is_read_compacted_and_refuses_new_ops(spark, sf_dir):
+    """A ledger of _mb=<op>/shard_id=S/ directories keeps serving and
+    compacting; a new upsert or delete on it fails with "compact first"
+    before it writes anything, and after compact_in_place ops land as
+    one file under ops/_mb=<op>/."""
+    import os
+
+    emb, cents, path, live = _per_shard_ledger(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    want = _rows(_expected(spark, emb, cents, live, queries))
+    assert _rows(ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3)) == want
+    n_touched = emb.filter((F.col("vec_id") % 3 == 0) | F.col("vec_id").isin(1, 2)).count()
+    assert VO.contested_count(spark, path) == n_touched
+    assert VO.has_per_shard_ops(spark, path)
+
+    def ledger():
+        return sorted(os.listdir(f"{path}/ops")), sorted(os.listdir(f"{path}/_ops"))
+
+    before = ledger()
+    with pytest.raises(ValueError, match="compact first"):
+        VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") == 4))
+    with pytest.raises(ValueError, match="compact first"):
+        VO.delete_vectors(spark, path, [4])
+    assert ledger() == before
+    assert VO.compact_in_place(spark, path) == 2
+    assert _rows(ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3)) == want
+    assert VO.delete_vectors(spark, path, [4]) == 0
+    assert not VO.has_per_shard_ops(spark, path) and len(_op_files(path, 0)) == 1
+    want = _rows(_expected(spark, emb, cents, live & (F.col("vec_id") != 4), queries))
+    assert _rows(ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3)) == want

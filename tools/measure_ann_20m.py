@@ -88,7 +88,7 @@ def main() -> None:
         asg = assign_to_centroids(
             emb, cents, impl="arrow", extra_cols=["embedding"]
         )
-        write_sharded(asg, emb, idx_path, repartition_to=256)
+        write_sharded(asg, emb, idx_path)
         print(f"build n={n} m={m}: {time.perf_counter()-t0:.1f}s")
         return
 

@@ -48,6 +48,19 @@ def centroids_np(m: int) -> np.ndarray:
     return (rng.normal(size=(m, D)) * 10).astype("float32")
 
 
+def _upsert_in_parts(spark, path, vectors, n_rows: int, **kw) -> None:
+    """``upsert_vectors`` collects its batch to the driver, at most
+    ``ann.DRIVER_ROWS`` rows: land ``vectors`` (about ``n_rows`` rows)
+    as several ops, hash-split on vec_id with room to spare."""
+    from big_ann_spark.operators.ann import DRIVER_ROWS
+    from big_ann_spark.operators.vector_ops import upsert_vectors
+
+    parts = 2 * -(-n_rows // DRIVER_ROWS)
+    for p in range(parts):
+        part = vectors.filter(F.pmod(F.xxhash64("vec_id"), F.lit(parts)) == p)
+        upsert_vectors(spark, path, part, **kw)
+
+
 def _noise():
     return F.transform(
         F.sequence(F.lit(0), F.lit(D - 1)),
@@ -126,7 +139,7 @@ def main() -> None:
         emb = spark.read.parquet(emb_path)
         t0 = time.perf_counter()
         asg = assign_to_centroids(emb, cents, impl="arrow", extra_cols=["embedding"])
-        write_sharded(asg, emb, pristine, repartition_to=256)
+        write_sharded(asg, emb, pristine)
         cents.coalesce(4).write.mode("overwrite").parquet(
             f"{pristine}/centroids.parquet"
         )
@@ -163,10 +176,7 @@ def main() -> None:
         import shutil
 
         from big_ann_spark.operators.tag_ops import upsert_tags
-        from big_ann_spark.operators.vector_ops import (
-            delete_vectors,
-            upsert_vectors,
-        )
+        from big_ann_spark.operators.vector_ops import delete_vectors
 
         pairs = [(pristine, mutated), (payload, payloadmut)]
         if os.environ.get("FT_SKIP_POINTFETCH") == "1":
@@ -176,7 +186,7 @@ def main() -> None:
                 shutil.rmtree(dst_l)
             shutil.copytree(src_l, dst_l)
         t1 = time.perf_counter()
-        # op0: 5% NEW tagged vectors (ids n .. n + n/20)
+        # 5% NEW tagged vectors (ids n .. n + n/20), split into ops
         newbies = (
             spark.range(n, n + n // 20)
             .select(F.col("id").alias("vec_id"))
@@ -201,16 +211,14 @@ def main() -> None:
             targets = targets[1:]
         for label, target in targets:
             t1 = time.perf_counter()
-            upsert_vectors(
-                spark, target, newbies, tags_col="tags", assign_impl="arrow"
-            )
+            _upsert_in_parts(spark, target, newbies, n // 20, tags_col="tags")
             t2 = time.perf_counter()
-            print(f"[{label}] op0 combined upsert ({n//20} rows): {t2-t1:.1f}s")
+            print(f"[{label}] combined upsert ({n//20} rows): {t2-t1:.1f}s")
             upsert_tags(spark, target, retag)
             t3 = time.perf_counter()
-            print(f"[{label}] op1 retag (~{n//53} rows): {t3-t2:.1f}s")
+            print(f"[{label}] retag (~{n//53} rows): {t3-t2:.1f}s")
             delete_vectors(spark, target, dele)
-            print(f"[{label}] op2 delete (~{n//97} rows): {time.perf_counter()-t3:.1f}s")
+            print(f"[{label}] delete (~{n//97} rows): {time.perf_counter()-t3:.1f}s")
         return
 
     if phase == "search":

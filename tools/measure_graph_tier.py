@@ -250,7 +250,7 @@ def main() -> None:
         asg = assign_to_centroids(
             emb, cents, impl="arrow", extra_cols=["embedding"]
         ).localCheckpoint()
-        write_sharded(asg, emb, ivf, repartition_to=64)
+        write_sharded(asg, emb, ivf)
         cents.coalesce(4).write.mode("overwrite").parquet(f"{ivf}/centroids.parquet")
         t1 = time.perf_counter()
         print(f"build IVF raw: {t1-t0:.1f}s")
@@ -263,7 +263,7 @@ def main() -> None:
         ).limit(50_000)
         books = train_pq(sample, m=8, k=256)
         write_sharded(
-            asg, emb, ivf_pq, repartition_to=64,
+            asg, emb, ivf_pq,
             pq_codebooks=books, pq_encode_impl="arrow",
         )
         cents.coalesce(4).write.mode("overwrite").parquet(
@@ -276,7 +276,7 @@ def main() -> None:
         R, obooks, pmse, omse = train_opq(sample, m=8, k=256, init_books=books)
         print(f"train_opq: plain mse {pmse:.4f} -> opq mse {omse:.4f}")
         write_sharded(
-            asg, emb, ivf_opq, repartition_to=64,
+            asg, emb, ivf_opq,
             pq_codebooks=obooks, opq_rotation=R, pq_encode_impl="arrow",
         )
         cents.coalesce(4).write.mode("overwrite").parquet(

@@ -38,6 +38,19 @@ SHARD_SIZE = 2000
 NQ = 20
 
 
+def _upsert_in_parts(spark, path, vectors, n_rows: int, **kw) -> None:
+    """``upsert_vectors`` collects its batch to the driver, at most
+    ``ann.DRIVER_ROWS`` rows: land ``vectors`` (about ``n_rows`` rows)
+    as several ops, hash-split on vec_id with room to spare."""
+    from big_ann_spark.operators.ann import DRIVER_ROWS
+    from big_ann_spark.operators.vector_ops import upsert_vectors
+
+    parts = 2 * -(-n_rows // DRIVER_ROWS)
+    for p in range(parts):
+        part = vectors.filter(F.pmod(F.xxhash64("vec_id"), F.lit(parts)) == p)
+        upsert_vectors(spark, path, part, **kw)
+
+
 def centroids_np(m: int) -> np.ndarray:
     rng = np.random.default_rng(11)
     return (rng.normal(size=(m, D)) * 10).astype("float32")
@@ -152,14 +165,14 @@ def main() -> None:
         emb = spark.read.parquet(emb_path)
         t0 = time.perf_counter()
         asg = assign_to_centroids(emb, cents, impl="arrow", extra_cols=["embedding"])
-        write_sharded(asg, emb, raw_path, repartition_to=256)
+        write_sharded(asg, emb, raw_path)
         t1 = time.perf_counter()
         print(f"build raw n={n} m={m}: {t1-t0:.1f}s")
         ranges = train_sq8(emb)
         t2 = time.perf_counter()
         print(f"train_sq8: {t2-t1:.1f}s")
         asg2 = assign_to_centroids(emb, cents, impl="arrow", extra_cols=["embedding"])
-        write_sharded(asg2, emb, sq8_path, repartition_to=256, sq8_ranges=ranges)
+        write_sharded(asg2, emb, sq8_path, sq8_ranges=ranges)
         t3 = time.perf_counter()
         print(f"build sq8 n={n} m={m}: {t3-t2:.1f}s")
         from big_ann_spark.operators.pq import train_pq
@@ -171,7 +184,7 @@ def main() -> None:
         print(f"train_pq (200k sample): {t4-t3:.1f}s")
         asg3 = assign_to_centroids(emb, cents, impl="arrow", extra_cols=["embedding"])
         write_sharded(
-            asg3, emb, pq_path, repartition_to=256,
+            asg3, emb, pq_path,
             pq_codebooks=books, pq_encode_impl="arrow",
         )
         t5 = time.perf_counter()
@@ -181,7 +194,7 @@ def main() -> None:
         thr = train_binary(emb)
         asg4 = assign_to_centroids(emb, cents, impl="arrow", extra_cols=["embedding"])
         write_sharded(
-            asg4, emb, f"{BASE}/bin_{n}_{m}", repartition_to=256,
+            asg4, emb, f"{BASE}/bin_{n}_{m}",
             binary_thresholds=thr,
         )
         print(f"build bin n={n} m={m}: {time.perf_counter()-t5:.1f}s")
@@ -193,10 +206,7 @@ def main() -> None:
         # search", so the pristine layout must stay comparable
         import shutil
 
-        from big_ann_spark.operators.vector_ops import (
-            delete_vectors,
-            upsert_vectors,
-        )
+        from big_ann_spark.operators.vector_ops import delete_vectors
 
         mut_path = f"{BASE}/mut_{n}_{m}"
         if not os.path.isdir(f"{mut_path}/shards"):
@@ -206,10 +216,10 @@ def main() -> None:
         )
         emb = spark.read.parquet(emb_path)
         t0 = time.perf_counter()
-        upsert_vectors(
+        _upsert_in_parts(
             spark, mut_path,
             emb.filter(F.col("vec_id") % 100 == 0).select("vec_id", "embedding"),
-            assign_impl="arrow",
+            n // 100,
         )
         t1 = time.perf_counter()
         delete_vectors(
