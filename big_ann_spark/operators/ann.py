@@ -15,12 +15,14 @@ Spark-first replacement (§7.4): IVF-style —
    routed on the driver with the same arithmetic and tie-break;
 2. candidate scan: only the probed shards are read. In memory a join
    on ``shard_id`` with static partition pruning; from disk ONE
-   ``mapInArrow`` pass over the probed shard directories scores each
-   (query, shard) group against the broadcast queries (the fold-exact
-   ``knn.fold_l2_topk`` for raw vectors, quantized scorers for the
-   refine tiers) and drops rows the mutation ledger made dead;
-3. top-k per query, globally re-ranked by true distance (one window;
-   the refine tiers re-rank their pool exactly first).
+   ``mapInArrow`` pass over the probed shards of the layout's memoized
+   live frame scores each (query, shard) group against the broadcast
+   queries (the fold-exact ``knn.fold_l2_topk`` for raw vectors,
+   quantized scorers for the refine tiers) and drops rows the mutation
+   ledger made dead;
+3. top-k per query by true distance: in memory one window; from disk
+   each scan task keeps its own top-k and the driver merges them (the
+   refine tiers re-rank their pool exactly first).
 
 Recall loss vs exact is a *property of the routing* (the reference
 searches only the top-1 shard); ``nprobe`` trades IO for recall.
@@ -28,13 +30,13 @@ searches only the top-1 shard); ``nprobe`` trades IO for recall.
 
 from __future__ import annotations
 
-from collections import OrderedDict
 from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 from big_ann_spark.functions.vector import l2_distance
 from big_ann_spark.operators.knn import band_select, fold_l2, fold_l2_topk
@@ -181,6 +183,17 @@ _SCORE_BLOCK = 1 << 20
 # popcount of every byte value: the binary pool's Hamming kernel
 _POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
+# what a candidate scan emits per (query, candidate), and a merged pool:
+# types, not DDL strings, which the JVM would parse on every call
+_POOL_SCHEMA = StructType(
+    [
+        StructField("qid", LongType()),
+        StructField("neighbor_id", LongType()),
+        StructField("dist", DoubleType()),
+    ]
+)
+_RANKED_POOL_SCHEMA = StructType(_POOL_SCHEMA.fields + [StructField("rank", IntegerType())])
+
 
 class Routing(NamedTuple):
     """One search's routing, on the driver."""
@@ -222,28 +235,19 @@ def collect_to_driver(df: DataFrame, what: str):
     return t
 
 
-# (path, size, mtime) of each data file of a centroid table -> (shard
-# ids, float64 centroid matrix), least recently used first
-_CENTROID_MEMO: OrderedDict[tuple, tuple[np.ndarray, np.ndarray]] = OrderedDict()
-CENTROID_MEMO_ENTRIES = 16
-
-
 def centroid_matrix(spark, centroids: DataFrame | str) -> tuple[np.ndarray, np.ndarray]:
     """(shard ids, float64 centroid rows) of a centroid table: a
     DataFrame, or the path of a ``centroids.parquet``. Memoized by the
-    table's data files as (path, size, mtime) — from the frame's
+    table's data files (``oplayout.memo_by_files``) — from the frame's
     ``inputFiles()`` plus one stat per file, or one directory listing
-    for a path; neither starts a Spark job. Every Spark write names its
-    files anew, so a rebuilt table misses; a byte-identical copy that
-    keeps the mtime (``oplayout.copy_dir``, compaction) hits. A frame
-    that is not a bare file scan is collected on every call."""
+    for a path; neither starts a Spark job. A frame that is not a bare
+    file scan is collected on every call."""
     from big_ann_spark.functions.arrowio import int_col, list_col_matrix
     from big_ann_spark.operators import oplayout
 
-    key = None
     if isinstance(centroids, str):
         fs, jp = oplayout.fs_path(spark, centroids)
-        sts = [st for st in fs.listStatus(jp) if st.isFile()]
+        sts = fs.listStatus(jp)
         frame = lambda: spark.read.parquet(centroids)  # noqa: E731
     else:
         plan = centroids._jdf.queryExecution().analyzed()
@@ -259,24 +263,12 @@ def centroid_matrix(spark, centroids: DataFrame | str) -> tuple[np.ndarray, np.n
             except Exception:  # a file is gone: the collect reports it
                 sts = []
         frame = lambda: centroids  # noqa: E731
-    stamps = sorted(
-        (str(st.getPath()), int(st.getLen()), int(st.getModificationTime()))
-        for st in sts
-        if not st.getPath().getName().startswith(("_", "."))
-    )
-    if stamps:
-        key = tuple(stamps)
-        hit = _CENTROID_MEMO.pop(key, None)
-        if hit is not None:
-            _CENTROID_MEMO[key] = hit
-            return hit
-    c = frame().select("shard_id", "centroid").toArrow()
-    out = int_col(c, "shard_id"), list_col_matrix(c, "centroid")
-    if key is not None:
-        _CENTROID_MEMO[key] = out
-        while len(_CENTROID_MEMO) > CENTROID_MEMO_ENTRIES:
-            _CENTROID_MEMO.popitem(last=False)
-    return out
+
+    def read():
+        c = frame().select("shard_id", "centroid").toArrow()
+        return int_col(c, "shard_id"), list_col_matrix(c, "centroid")
+
+    return oplayout.memo_by_files("centroids", oplayout.file_stamps(sts), read)
 
 
 def nearest_centroids(
@@ -343,30 +335,32 @@ def ivf_search_from_disk(
 
     1. Route on the driver (``_route_on_driver``, bit-equal to
        ``route_queries``); a query batch over ``DRIVER_ROWS`` fails.
-    2. Open ONLY the probed shard directories (``open_probed_shards``,
-       no full-layout listing walk) and resolve the mutation ledger
-       (``vector_ops.live_probed_scan``, memoized per ledger state: an
-       unchanged ledger costs no Spark job).
+    2. Take the layout's live frame (``vector_ops.live_frame``: every
+       base shard plus the resolved mutation winners, memoized per
+       layout state, so an unchanged layout costs no Spark job and no
+       listing) and keep the probed shards with one ``shard_id IN``
+       partition filter.
     3. One ``mapInArrow`` candidate scan (``_arrow_nominating_pool``)
-       drops dead base rows, scores each (query, shard) group against
-       the broadcast queries and keeps a per-query top-k; one window
-       merges them.
+       drops dead base rows and scores each (query, shard) group against
+       the broadcast queries; each task keeps its top-k per query and
+       the driver merges those partials.
 
-    ``codec="raw"`` scores raw vectors by ``_fold_pool``, so results
-    equal ``ivf_search`` over the fully listed layout bit for bit: four
-    Spark jobs once the ledger state is resolved (query collect,
-    centroid collect, the scan's two stages).
+    The candidate scan runs at call time. ``codec="raw"`` scores raw
+    vectors by ``_fold_pool``, so results equal ``ivf_search`` over the
+    fully listed layout bit for bit, and the frame returned is local:
+    two Spark jobs in all once the layout state is resolved (the query
+    collect and the candidate scan), and its ``collect()`` starts none.
 
     ``codec="sq8"``/``"pq"``/``"opq"``/``"binary"`` (refine layouts)
     scan ONLY the code column of the probed shards — parquet column
     pruning keeps the raw vectors out of the dominant phase — through
     ``sq8_pool``/``pq_pool``/``binary_pool``; the
-    top-``k·rerank_factor`` candidates are then re-ranked exactly.
-    While the pool holds at most ``max_id_pushdown`` rows (the BM25
-    MAX_PUSHDOWN_TERMS lesson) their ids are In-pushed and fetch raw
-    vectors from the id-sorted shard files with row-group/page
-    skipping; a larger pool is never collected and joins the probed
-    shards distributed instead.
+    top-``k·rerank_factor`` candidates are then re-ranked exactly
+    (``_exact_rerank``, lazy). While the pool holds at most
+    ``max_id_pushdown`` rows (the BM25 MAX_PUSHDOWN_TERMS lesson) their
+    ids are In-pushed and fetch raw vectors from the id-sorted shard
+    files with row-group/page skipping; a larger pool is joined to the
+    probed shards without the In list.
 
     ``as_of``: SNAPSHOT search — the layout as of committed mutation op
     ``as_of`` (``operators.vector_ops``; −1 = the base build, ``None`` =
@@ -374,7 +368,7 @@ def ivf_search_from_disk(
 
     ``_routed``: a caller-provided, materialized (qid, qvec, shard_id)
     routing table (``ivf_search``'s contract) replaces step 1."""
-    from big_ann_spark.operators.vector_ops import live_probed_scan, live_probed_view
+    from big_ann_spark.operators.vector_ops import live_frame
 
     if codec not in ("raw", "sq8", "pq", "opq", "binary"):
         raise ValueError(
@@ -407,12 +401,7 @@ def ivf_search_from_disk(
                 queries, centroids, nprobe, query_id=query_id, query_vec=query_vec
             )
         )
-        probe_ids = sorted(routing.shard_to_q)
-        base = open_probed_shards(spark, path, probe_ids)
-        live, dead = live_probed_scan(
-            spark, path, base, probe_ids, as_of=as_of, id_col=id_col, vec_col=vec_col
-        )
-        routing = routing._replace(dead=dead)
+        frame, dead = live_frame(spark, path, as_of=as_of, id_col=id_col, vec_col=vec_col)
         if sidecar_fut is not None:
             sidecars = sidecar_fut.result()
     finally:
@@ -421,6 +410,10 @@ def ivf_search_from_disk(
         # the one that propagates)
         if sidecar_fut is not None and not sidecar_fut.cancel():
             sidecar_fut.exception()
+    # one parsed predicate, not one py4j literal per probed shard
+    probed = ",".join(str(s) for s in sorted(routing.shard_to_q))
+    live = frame.filter(F.expr(f"shard_id IN ({probed})") if probed else F.lit(False))
+    routing = routing._replace(dead=dead)
     if codec == "raw":
         return _fold_pool(
             None, live, k, vec_col, lambda X: X, id_col=id_col, routed_rows=routing
@@ -450,38 +443,62 @@ def ivf_search_from_disk(
         pool = binary_pool(
             None, live, path, k * rerank_factor, id_col=id_col, routed_rows=routing
         )
-    # ONE pool collect, bounded at max_id_pushdown + 1 rows, feeds both
-    # the id pushdown and the rerank's broadcast pair table; past the
-    # bound the rerank joins the pool DataFrame, distributed
-    pool_pairs = pool.select("qid", "neighbor_id")
-    pool_rows = pool_pairs.limit(max_id_pushdown + 1).collect()
+    # the pool is local: up to max_id_pushdown of its ids are In-pushed
+    # to the raw scan beside a broadcast of its pairs; a larger pool is
+    # joined to the probed shards without the In list
+    pairs = pool.select("qid", "neighbor_id")
+    pool_rows = pairs.limit(max_id_pushdown + 1).collect()
+    raw = live
     if len(pool_rows) <= max_id_pushdown:
         cand = np.unique(np.array([r["neighbor_id"] for r in pool_rows], dtype=np.int64))
-        contested = np.isin(cand, routing.dead)
-        keep = _isin_ids(id_col, cand[~contested].tolist())
-        if contested.any():
-            # the pool nominated a contested id by its resolved row
-            keep = keep | (F.col("_resolved") & _isin_ids(id_col, cand[contested].tolist()))
-        raw = live.filter(keep)
-        pairs = F.broadcast(spark.createDataFrame(pool_rows, pool_pairs.schema))
-    else:
-        raw = live_probed_view(
-            spark, path, base, probe_ids, as_of=as_of, id_col=id_col, vec_col=vec_col
-        )
-        pairs = pool_pairs
-    q = queries.select(
-        F.col(query_id).alias("qid"), F.col(query_vec).alias("_qv")
-    )
-    exact = (
-        raw.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
+        raw, pairs = live.filter(_isin_ids(id_col, cand.tolist())), F.broadcast(pairs)
+    return _exact_rerank(raw, pairs, routing, k, id_col=id_col, vec_col=vec_col, dim=dim)
+
+
+def _exact_rerank(
+    raw: DataFrame,
+    pairs: DataFrame,
+    routing: Routing,
+    k: int,
+    *,
+    id_col: str,
+    vec_col: str,
+    dim: int | None,
+) -> DataFrame:
+    """The exact top-``k`` of each query among its pool ``pairs`` (qid,
+    neighbor_id): the rows of ``raw``, a probed live frame, joined to the
+    pairs and scored in one ``mapInArrow`` by ``knn.fold_l2`` against the
+    routed query vectors — ``l2_distance``'s fold bit for bit, over the
+    first ``dim`` dimensions when given — dropping dead base rows as the
+    candidate scan does; one window ranks by (dist, id)."""
+    bc = raw.sparkSession.sparkContext.broadcast((routing.qids, routing.qmat, routing.dead))
+
+    def score(batches):
+        import pyarrow as pa
+
+        from big_ann_spark.functions.arrowio import int_col, list_col_matrix
+
+        qids, qmat, dead = bc.value
+        for rb in batches:
+            rb, ids = _drop_dead(rb, int_col(rb, "neighbor_id"), dead)
+            if rb.num_rows == 0:
+                continue
+            q = int_col(rb, "qid")
+            Q, X = qmat[np.searchsorted(qids, q)], list_col_matrix(rb, vec_col)
+            if dim is not None:
+                Q, X = Q[:, :dim], X[:, :dim]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(q), pa.array(ids), pa.array(fold_l2(Q, X))],
+                names=["qid", "neighbor_id", "dist"],
+            )
+
+    scored = (
+        raw.select(F.col(id_col).alias("neighbor_id"), vec_col, "_resolved")
         .join(pairs, "neighbor_id")
-        .join(F.broadcast(q), "qid")
-        .select(
-            "qid", "neighbor_id", l2_distance("_qv", vec_col, dim).alias("dist")
-        )
+        .mapInArrow(score, schema=_POOL_SCHEMA)
     )
     return top_k_per_group(
-        exact, ["qid"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
+        scored, ["qid"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
     )
 
 
@@ -504,18 +521,13 @@ def sq8_pool(
     ~6× the expression fold on 2M×64 (SCALE.md).
 
     ``ranges``: the layout's (mins, maxs) sidecar values when the
-    caller already holds them (one driver read fewer).
+    caller already holds them; otherwise they are read once per state
+    of the sidecar (``pq.load_sq8_ranges``).
     ``routed``/``routed_rows``: see ``_arrow_nominating_pool``."""
-    spark = shards.sparkSession
+    from big_ann_spark.operators.pq import load_sq8_ranges
+
     if ranges is None:
-        # explicit schema (write_sharded's sidecar schema): no footer
-        # inference job on the serving path
-        rng = (
-            spark.read.schema("mins array<double>, maxs array<double>")
-            .parquet(f"{path}/sq8_ranges.parquet")
-            .collect()[0]
-        )
-        ranges = (rng["mins"], rng["maxs"])
+        ranges = load_sq8_ranges(shards.sparkSession, f"{path}/sq8_ranges.parquet")
     mn = np.array(ranges[0], dtype=np.float64)
     mx = np.array(ranges[1], dtype=np.float64)
     return _fold_pool(
@@ -541,6 +553,46 @@ def _fold_pool(routed, shards, k_pool, payload_col, decode, **kw) -> DataFrame:
     )
 
 
+def _drop_dead(rb, ids, dead):
+    """An Arrow batch of a ``vector_ops.live_frame`` and its ``ids``
+    without the dead base rows: ids in ``dead`` (sorted contested ids)
+    whose row is not a resolved winner (``_resolved``)."""
+    import pyarrow as pa
+
+    if not len(dead):
+        return rb, ids
+    keep = ~np.isin(ids, dead)
+    keep |= rb.column("_resolved").to_numpy(zero_copy_only=False)
+    return rb.filter(pa.array(keep)), ids[keep]
+
+
+def _first_k(q, n, d, k):
+    """The first ``k`` rows of each query id ``q`` by (dist ``d``, id
+    ``n``), the order of the ``row_number`` window this replaces:
+    (q, n, d, 1-based rank), sorted by (q, d, n)."""
+    order = np.lexsort((n, d, q))
+    q, n, d = q[order], n[order], d[order]
+    rank = np.arange(len(q)) - np.searchsorted(q, q)
+    keep = rank < k
+    return q[keep], n[keep], d[keep], rank[keep] + 1
+
+
+def _collect_partials(scan: DataFrame, n_queries: int, k_pool: int):
+    """The per-task partials of a candidate scan over ``n_queries``
+    queries, as an Arrow table read in one job. A task emits at most
+    ``k_pool`` rows per query, so a batch of at most ``DRIVER_ROWS``
+    queries bounds the collect at ``DRIVER_ROWS · k_pool`` rows per
+    task; a larger batch fails loudly before the scan runs, and nothing
+    is ever truncated."""
+    if n_queries > DRIVER_ROWS:
+        raise ValueError(
+            f"the candidate scan's query batch has more than {DRIVER_ROWS:,} "
+            f"rows, and their top-{k_pool} of every scan task is collected to "
+            "the driver: split the batch into smaller calls"
+        )
+    return scan.toArrow()
+
+
 def _arrow_nominating_pool(
     routed: DataFrame | None,
     shards: DataFrame,
@@ -553,24 +605,37 @@ def _arrow_nominating_pool(
     score_shard,
     routed_rows: Routing | None = None,
 ) -> DataFrame:
-    """The one candidate scan of the from-disk search: ONE broadcast
-    carries the routing (sorted query ids, per-query state
+    """The one candidate scan of the from-disk search, run at call time:
+    ONE broadcast carries the routing (sorted query ids, per-query state
     ``make_state(qids, qmat)``, shard → query rows, dead ids). Each
-    Arrow batch drops its dead base rows (``np.isin``; rows a
-    ``vector_ops.live_probed_scan`` union marks ``_resolved`` stay),
-    extracts the payload matrix once, and per (probed shard ∩ batch)
-    group and block of queries ``score_shard(state, qidx, payload_rows,
-    id_rows)`` returns aligned (query row, neighbor id, dist) arrays;
-    one window keeps the top-``k_pool`` per query by (dist, id).
+    Arrow batch drops its dead base rows (``_drop_dead``), extracts the
+    payload matrix once, and per (probed shard ∩ batch) group and block
+    of queries ``score_shard(state, qidx, payload_rows, id_rows)``
+    returns aligned (query row, neighbor id, dist) arrays. Each of the
+    at most ``defaultParallelism`` tasks keeps its own top-``k_pool``
+    per query; the driver collects those partials, bounded through the
+    batch size (``_collect_partials``), and merges them with one
+    ``lexsort`` by (qid, dist, id) (``_first_k``). Returns the merged pool (qid,
+    neighbor_id, dist, rank) as a local, Arrow-built frame: its
+    ``collect()`` starts no Spark job.
+
+    With one file per shard a query's partials come only from the tasks
+    that scan its probed shards, so they stay within a small multiple of
+    the pool itself.
 
     ``routed_rows``: the search's ``Routing`` when the caller holds it;
     otherwise the (qid, qvec, shard_id) table ``routed`` is collected."""
+    import pyarrow as pa
+
+    from big_ann_spark.functions.arrowio import int_col
+
     routing = routed_rows if routed_rows is not None else _routing_of_table(routed)
     state = make_state(routing.qids, routing.qmat)
-    bc = shards.sparkSession.sparkContext.broadcast(
+    spark = shards.sparkSession
+    bc = spark.sparkContext.broadcast(
         (routing.qids, state, routing.shard_to_q, routing.dead)
     )
-    # dead ids come with a live_probed_scan union and its _resolved column
+    # dead ids come with a live_frame and its _resolved column
     cols = [id_col, payload_col, "shard_id"] + (["_resolved"] if len(routing.dead) else [])
 
     def part(batches):
@@ -579,12 +644,9 @@ def _arrow_nominating_pool(
         from big_ann_spark.functions.arrowio import int_col, list_col_matrix
 
         qids, state, shard_to_q, dead = bc.value
+        top = None  # this task's (qid, id, dist) top-k_pool per query so far
         for rb in batches:
-            ids = int_col(rb, id_col)
-            if len(dead):
-                keep = ~np.isin(ids, dead)
-                keep |= rb.column("_resolved").to_numpy(zero_copy_only=False)
-                rb, ids = rb.filter(pa.array(keep)), ids[keep]
+            rb, ids = _drop_dead(rb, int_col(rb, id_col), dead)
             if rb.num_rows == 0:
                 continue
             sh = int_col(rb, "shard_id")
@@ -605,22 +667,34 @@ def _arrow_nominating_pool(
                     out_d.append(dists)
             if not out_q:
                 continue
+            cand = [np.concatenate(c) for c in (out_q, out_n, out_d)]
+            if top is not None:
+                cand = [np.concatenate(c) for c in zip(top, cand)]
+            top = _first_k(*cand, k_pool)[:3]
+        if top is not None:
             yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(c)) for c in (out_q, out_n, out_d)],
-                names=["qid", "neighbor_id", "dist"],
+                [pa.array(c) for c in top], names=["qid", "neighbor_id", "dist"]
             )
 
     # at most one task per core: the resolved winners' checkpoint
     # partition would otherwise start a second wave of Python tasks;
     # Arrow batches stream, so a task's memory stays flat
-    partial = (
+    scan = (
         shards.select(*cols)
-        .coalesce(shards.sparkSession.sparkContext.defaultParallelism)
-        .mapInArrow(part, schema="qid long, neighbor_id long, dist double")
+        .coalesce(spark.sparkContext.defaultParallelism)
+        .mapInArrow(part, schema=_POOL_SCHEMA)
     )
-    return top_k_per_group(
-        partial, ["qid"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k_pool
+    t = _collect_partials(scan, len(routing.qids), k_pool)
+    q, n, d, rank = _first_k(
+        int_col(t, "qid"),
+        int_col(t, "neighbor_id"),
+        t.column("dist").to_numpy().astype(np.float64, copy=False),
+        k_pool,
     )
+    merged = pa.table(
+        {"qid": q, "neighbor_id": n, "dist": d, "rank": rank.astype(np.int32)}
+    )
+    return spark.createDataFrame(merged, schema=_RANKED_POOL_SCHEMA)
 
 
 def pq_pool(
@@ -702,14 +776,10 @@ def binary_pool(
     against query codes packed on the driver as ``pq.binarize_col`` packs
     rows. Integer-exact, so ``knn.band_select`` selects with a zero-width
     band: top-``k_pool`` per query by (hamming, id), for the exact rerank."""
-    from big_ann_spark.operators.pq import BINARY_WORD_BITS
+    from big_ann_spark.operators.pq import BINARY_WORD_BITS, load_binary_thresholds
 
-    spark = shards.sparkSession
-    # explicit schema: no footer inference job on the serving path
     thr = np.array(
-        spark.read.schema("thresholds array<double>")
-        .parquet(f"{path}/binary_thresholds.parquet")
-        .collect()[0]["thresholds"],
+        load_binary_thresholds(shards.sparkSession, f"{path}/binary_thresholds.parquet"),
         dtype=np.float64,
     )
 

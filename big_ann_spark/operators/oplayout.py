@@ -67,11 +67,19 @@ from pyspark.sql import functions as F
 BASE_EPOCH = -1
 
 
+# (JVM view, its org.apache.hadoop.fs.Path class): py4j resolves a
+# class name with one round trip per package segment, so ``fs_path``
+# resolves it once per gateway
+_path_class: list = [None, None]
+
+
 def fs_path(spark, p: str):
     """Hadoop FileSystem + Path for ``p`` — works on local paths and
     object-store URIs alike."""
     jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(p)
+    if _path_class[0] is not jvm:
+        _path_class[:] = [jvm, jvm.org.apache.hadoop.fs.Path]
+    jpath = _path_class[1](p)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
@@ -242,23 +250,36 @@ def invalidate_contested_memo(path: str) -> None:
 
 
 def ledger_entry(
-    spark, path: str, context: str, build, *, as_of: int | None = None
+    spark,
+    path: str,
+    context: str,
+    build,
+    *,
+    as_of: int | None = None,
+    derived_from: tuple | None = None,
 ) -> LedgerEntry:
     """The memoized ``context`` state of ``path`` under its current
     ledger token: the Spark application (checkpoints live in it) and
     the (op id, commit-marker mtime) set filtered by ``as_of``, from one
     ``_ops`` listing — so a foreign commit busts it the moment its marker
     is visible, and a foreign compaction too (op ids restart at 0 after
-    ``compact_in_place``; the mtimes differ). On a miss ``build()``
-    returns (count, state, checkpoint). Past ``LEDGER_MEMO_ENTRIES`` the
-    least recently used entry is dropped and its checkpoint unpersisted."""
+    ``compact_in_place``; the mtimes differ). State derived from other
+    state that already tracks the ledger passes what it was derived
+    from as ``derived_from``, which replaces the listing. On a miss
+    ``build()`` returns (count, state, checkpoint). Past
+    ``LEDGER_MEMO_ENTRIES`` the least recently used entry is dropped and
+    its checkpoint unpersisted."""
     base = path.rstrip("/")
     key = (base, as_of, context)
-    token = spark.sparkContext.applicationId, frozenset(
-        (i, t)
-        for i, t in commit_markers(spark, base).items()
-        if as_of is None or i <= as_of
-    )
+    token = spark.sparkContext.applicationId, derived_from
+    if derived_from is None:
+        token += (
+            frozenset(
+                (i, t)
+                for i, t in commit_markers(spark, base).items()
+                if as_of is None or i <= as_of
+            ),
+        )
     # pop + insert, each atomic, (re)files the entry as most recent
     entry = _contested_count_memo.pop(key, None)
     if entry is None or entry.token != token:
@@ -419,11 +440,55 @@ def write_op_partitions(df: DataFrame, target: str, cols: list[str]) -> None:
     )
 
 
+# (kind, ((path, size, mtime) of each data file, ...)) -> what was read
+# from those files, least recently used first: the centroid matrix and
+# the codec sidecars (``memo_by_files``)
+_file_memo: OrderedDict[tuple, object] = OrderedDict()
+FILE_MEMO_ENTRIES = 32
+
+
+def file_stamps(statuses) -> tuple:
+    """Sorted (path, size, mtime) of the data files among Hadoop
+    ``FileStatus``es; files named ``_*``/``.*`` (markers, checksums)
+    are not data."""
+    return tuple(
+        sorted(
+            (str(st.getPath()), int(st.getLen()), int(st.getModificationTime()))
+            for st in statuses
+            if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        )
+    )
+
+
+def memo_by_files(kind: str, stamps: tuple, read):
+    """``read()``, memoized under ``(kind, stamps)``: every Spark write
+    names its files anew, so a rewritten table misses, and a
+    byte-identical copy that keeps the mtimes (``copy_dir``) hits. No
+    stamps (no data file seen) reads every time. Past
+    ``FILE_MEMO_ENTRIES`` the least recently used entry is dropped."""
+    if not stamps:
+        return read()
+    key = (kind, stamps)
+    # pop + insert, each atomic, (re)files the entry as most recent
+    hit = _file_memo.pop(key, _file_memo)
+    value = read() if hit is _file_memo else hit
+    _file_memo[key] = value
+    while len(_file_memo) > FILE_MEMO_ENTRIES:
+        _file_memo.popitem(last=False)
+    return value
+
+
+def read_dir_memo(spark, path: str, kind: str, read):
+    """``memo_by_files`` for the flat directory ``path``: one listing,
+    no Spark job on a hit."""
+    fs, jp = fs_path(spark, path)
+    return memo_by_files(kind, file_stamps(fs.listStatus(jp)), read)
+
+
 def copy_dir(spark, src: str, dst: str) -> None:
     """Replace ``dst`` with a copy of the flat directory ``src`` through
     the Hadoop FS API (no Spark job); each file keeps its modification
-    time, so a byte-identical copy keeps the (path, size, mtime) key of
-    ``ann.centroid_matrix``."""
+    time, so a byte-identical copy keeps its ``memo_by_files`` key."""
     jvm = spark._jvm
     sfs, jsrc = fs_path(spark, src)
     dfs, jdst = fs_path(spark, dst)

@@ -130,8 +130,42 @@ def save_rotation(spark, path: str, R: list[list[float]]) -> None:
 
 
 def load_rotation(spark, path: str) -> list[list[float]]:
-    rows = sorted(spark.read.parquet(path).collect(), key=lambda r: r["i"])
-    return [list(r["row"]) for r in rows]
+    """The rotation ``save_rotation`` wrote, read once per state of its
+    files (``oplayout.read_dir_memo``)."""
+    from big_ann_spark.operators.oplayout import read_dir_memo
+
+    def read():
+        rows = spark.read.schema("i int, row array<double>").parquet(path).collect()
+        return [list(r["row"]) for r in sorted(rows, key=lambda r: r["i"])]
+
+    return read_dir_memo(spark, path, "opq_rotation", read)
+
+
+def load_sq8_ranges(spark, path: str) -> tuple[list[float], list[float]]:
+    """The (mins, maxs) ``write_sharded`` wrote for ``sq8_ranges``, read
+    once per state of its files, with the schema it was written with."""
+    from big_ann_spark.operators.oplayout import read_dir_memo
+
+    def read():
+        row = spark.read.schema("mins array<double>, maxs array<double>").parquet(
+            path
+        ).collect()[0]
+        return list(row["mins"]), list(row["maxs"])
+
+    return read_dir_memo(spark, path, "sq8_ranges", read)
+
+
+def load_binary_thresholds(spark, path: str) -> list[float]:
+    """The per-dimension thresholds ``write_sharded`` wrote for
+    ``binary_thresholds``, read once per state of its files, with the
+    schema it was written with."""
+    from big_ann_spark.operators.oplayout import read_dir_memo
+
+    def read():
+        row = spark.read.schema("thresholds array<double>").parquet(path).collect()[0]
+        return list(row["thresholds"])
+
+    return read_dir_memo(spark, path, "binary_thresholds", read)
 
 
 def with_pq_codes_arrow(
@@ -225,18 +259,23 @@ def save_pq_codebooks(spark, path: str, codebooks: list[list[list[float]]]) -> N
 
 
 def load_pq_codebooks(spark, path: str) -> list[list[list[float]]]:
-    # explicit schema (r14): the sidecar is written by save_pq_codebooks
-    # with exactly this schema — skipping footer inference cuts one
-    # driver job from every serving call that loads codebooks
-    rows = spark.read.schema("j int, c int, centroid array<double>").parquet(
-        path
-    ).collect()
-    m = max(r["j"] for r in rows) + 1
-    out: list[list[list[float]]] = [[] for _ in range(m)]
-    for j in range(m):
-        sub = sorted((r for r in rows if r["j"] == j), key=lambda r: r["c"])
-        out[j] = [list(r["centroid"]) for r in sub]
-    return out
+    """The codebooks ``save_pq_codebooks`` wrote, read once per state of
+    their files (``oplayout.read_dir_memo``) with the schema they were
+    written with: no footer-inference job."""
+    from big_ann_spark.operators.oplayout import read_dir_memo
+
+    def read():
+        rows = spark.read.schema("j int, c int, centroid array<double>").parquet(
+            path
+        ).collect()
+        m = max(r["j"] for r in rows) + 1
+        out: list[list[list[float]]] = [[] for _ in range(m)]
+        for j in range(m):
+            sub = sorted((r for r in rows if r["j"] == j), key=lambda r: r["c"])
+            out[j] = [list(r["centroid"]) for r in sub]
+        return out
+
+    return read_dir_memo(spark, path, "pq_codebooks", read)
 
 
 def pq_lut_rows(

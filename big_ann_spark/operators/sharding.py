@@ -475,11 +475,13 @@ def write_sharded(
     # the read-side schema memo, under the exact (base, mtime) key
     # open_probed_shards computes: the first search of a fresh layout
     # then runs no footer-inference job. A same-path rebuild (e.g. a
-    # codec change) drops every older entry for this base: the mtime
-    # alone is unsafe on filesystems with 1 s mtime granularity.
+    # codec change) drops every older entry for this base, and the
+    # layout's memoized live frames: the mtime alone is unsafe on
+    # filesystems with 1 s mtime granularity.
     from big_ann_spark.operators import ann as _ann
     from big_ann_spark.operators import oplayout
 
+    oplayout.invalidate_contested_memo(path)
     base = f"{path}/shards"
     for k in [k for k in _ann._SHARDS_SCHEMA_MEMO if k[0] == base]:
         _ann._SHARDS_SCHEMA_MEMO.pop(k, None)

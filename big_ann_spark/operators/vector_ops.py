@@ -31,14 +31,16 @@ Layout extension (backward compatible — a pristine layout has no
   half-writes, O(in-flight) NOT-IN for readers).
 
 Read-side resolution mirrors ``streaming/vector_index.prepare_search``:
-the ops table — op-count-sized, not corpus-sized — resolves per-id
-winners with one ``max_by``, and the CONTESTED set (ids touched by any
-committed op — small between compactions by construction) removes the
-stale base rows: inside the from-disk search's candidate scan
-(``live_probed_scan``), or by a broadcast anti-join
-(``live_probed_view``). Both are memoized per ledger state
-(``mutation_state``). The base scan stays partition-pruned;
-uncontested vectors never shuffle.
+the ops table — op-count-sized, not corpus-sized, read with the op
+rows' explicit schema — resolves per-id winners with one ``max_by``,
+memoized per ledger state (``mutation_state``), and the CONTESTED set
+(ids touched by any committed op — small between compactions by
+construction) marks the stale base rows. The from-disk search reads
+one ``live_frame`` per layout state — every base shard opened once,
+unioned with the resolved winners — and its candidate scan drops the
+stale base rows itself; compaction drops them by a broadcast anti-join
+(``live_probed_view``). A search keeps only its probed shards with a
+partition filter; uncontested vectors never shuffle.
 
 Each mutation lands in one write job as one file (an upsert first
 collects its batch in one more job; a DataFrame of ids to delete is
@@ -103,12 +105,22 @@ def _has_sq8(spark, path: str) -> bool:
     return oplayout.path_exists(spark, f"{path}/sq8_ranges.parquet")
 
 
-def _sq8_ranges(spark, path: str) -> tuple[list[float], list[float]]:
-    # write_sharded's sidecar schema: no footer-inference job
-    row = spark.read.schema("mins array<double>, maxs array<double>").parquet(
-        f"{path}/sq8_ranges.parquet"
-    ).collect()[0]
-    return list(row["mins"]), list(row["maxs"])
+# the code column each codec sidecar calls for, and its type in op rows
+_CODE_COLUMNS = (
+    ("sq8_ranges", "codes", "array<smallint>"),
+    ("pq_codebooks", "pq_codes", "array<smallint>"),
+    ("binary_thresholds", "bcodes", "array<bigint>"),
+)
+
+
+def _op_code_columns(spark, path: str) -> list[tuple[str, str]]:
+    """(name, type) of the code columns the layout's op rows carry: one
+    per codec sidecar present, as the build wrote them."""
+    return [
+        (col, typ)
+        for sidecar, col, typ in _CODE_COLUMNS
+        if oplayout.path_exists(spark, f"{path}/{sidecar}.parquet")
+    ]
 
 
 def has_per_shard_ops(spark, path: str) -> bool:
@@ -183,15 +195,19 @@ def _land_vector_op(
 def _code_columns(spark, path: str, E: np.ndarray) -> dict:
     """The code columns the layout's sidecars call for, encoded on the
     driver from the stored float32 vectors ``E`` (widened to float64)
-    with the numpy kernels bit-equal to the build's encoders."""
+    with the numpy kernels bit-equal to the build's encoders. Each
+    sidecar is read once per state of its files (the ``pq.load_*``
+    readers)."""
     from big_ann_spark.functions.arrowio import matrix_list_col
     from big_ann_spark.operators import pq as PQ
 
     X = E.astype(np.float64)
+    present = {col for col, _ in _op_code_columns(spark, path)}
     out = {}
-    if _has_sq8(spark, path):
-        out["codes"] = PQ.sq8_encode_matrix(X, *_sq8_ranges(spark, path))
-    if oplayout.path_exists(spark, f"{path}/pq_codebooks.parquet"):
+    if "codes" in present:
+        ranges = PQ.load_sq8_ranges(spark, f"{path}/sq8_ranges.parquet")
+        out["codes"] = PQ.sq8_encode_matrix(X, *ranges)
+    if "pq_codes" in present:
         books = PQ.load_pq_codebooks(spark, f"{path}/pq_codebooks.parquet")
         rot = None
         if oplayout.path_exists(spark, f"{path}/opq_rotation.parquet"):
@@ -200,11 +216,9 @@ def _code_columns(spark, path: str, E: np.ndarray) -> dict:
             )
         books = [np.asarray(b, dtype=np.float64) for b in books]
         out["pq_codes"] = PQ.pq_encode_matrix(X, books, rot)
-    if oplayout.path_exists(spark, f"{path}/binary_thresholds.parquet"):
-        thr = spark.read.schema("thresholds array<double>").parquet(
-            f"{path}/binary_thresholds.parquet"
-        ).collect()[0]
-        out["bcodes"] = PQ.binarize_matrix(X, list(thr["thresholds"]))
+    if "bcodes" in present:
+        thr = PQ.load_binary_thresholds(spark, f"{path}/binary_thresholds.parquet")
+        out["bcodes"] = PQ.binarize_matrix(X, thr)
     return {c: matrix_list_col(M) for c, M in out.items()}
 
 
@@ -318,13 +332,8 @@ def delete_vectors(
         "vec_id",
         F.lit(None).cast("double").alias("dist"),
         F.lit(None).cast("array<float>").alias("embedding"),
+        *[F.lit(None).cast(typ).alias(col) for col, typ in _op_code_columns(spark, path)],
     )
-    if _has_sq8(spark, path):
-        rows = rows.withColumn("codes", F.lit(None).cast("array<smallint>"))
-    if oplayout.path_exists(spark, f"{path}/pq_codebooks.parquet"):
-        rows = rows.withColumn("pq_codes", F.lit(None).cast("array<smallint>"))
-    if oplayout.path_exists(spark, f"{path}/binary_thresholds.parquet"):
-        rows = rows.withColumn("bcodes", F.lit(None).cast("array<bigint>"))
     rows = rows.withColumn("op", F.lit(OP_DELETE)).withColumn(
         "shard_id", F.lit(TOMBSTONE_SHARD).cast("int")
     )
@@ -336,9 +345,13 @@ def committed_op_scan(
 ) -> DataFrame | None:
     """Scan of every committed op row, or None when the layout has no
     ``ops/`` directory at all (pristine layout — readers short-circuit
-    with ZERO Spark jobs). ``as_of``: a RANGE predicate on the ``_mb``
-    partition column (snapshots cost the same as the head); in-flight
-    ids excluded by a NOT-IN over the tiny uncommitted set."""
+    with ZERO Spark jobs). Read with the op rows' schema as
+    ``upsert_vectors``/``delete_vectors`` write them, so no
+    footer-inference job runs; a ledger of ``_mb=<op>/shard_id=S/``
+    directories reads ``shard_id`` from its partition values.
+    ``as_of``: a RANGE predicate on the ``_mb`` partition column
+    (snapshots cost the same as the head); in-flight ids excluded by a
+    NOT-IN over the tiny uncommitted set."""
     if not has_vector_ops(spark, path):
         return None
     if not oplayout.glob_op_ids(spark, f"{path}/ops/_mb=*"):
@@ -351,7 +364,12 @@ def committed_op_scan(
         # errors instead of ignoring the crashed op like every other
         # crash window does.
         return None
-    raw = spark.read.parquet(f"{path}/ops")
+    schema = ", ".join(
+        ["vec_id long", "dist double", "embedding array<float>"]
+        + [f"{col} {typ}" for col, typ in _op_code_columns(spark, path)]
+        + ["op string", "shard_id int", "_mb int"]
+    )
+    raw = spark.read.schema(schema).parquet(f"{path}/ops")
     uncommitted = uncommitted_vector_ops(spark, path)
     if as_of is not None:
         raw = raw.filter(F.col("_mb") <= int(as_of))
@@ -466,30 +484,49 @@ def live_probed_view(
     )
 
 
-def live_probed_scan(
+def live_frame(
     spark,
     path: str,
-    base: DataFrame,
-    probe_ids: list[int],
     *,
     as_of: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, np.ndarray]:
-    """``live_probed_view`` for a reader that drops dead base rows itself
-    (the Arrow candidate scan), with no join and so no broadcast job:
-    ``base`` plus a false ``_resolved`` column, unioned with the probed
-    resolved winners (``_resolved`` true), and the sorted contested ids.
-    A base row is live iff its id is not contested. A pristine layout
-    returns ``(base, [])``."""
+    """The live frame of a layout state, for a reader that drops dead
+    base rows itself (the Arrow candidate scan): every base shard,
+    opened once with the memoized schema in one listing
+    (``ann.open_probed_shards``) plus a false ``_resolved`` column,
+    unioned with the resolved winners of every live shard (``_resolved``
+    true), typed like the base; and the sorted contested ids. A base row
+    is live iff its id is not contested. A reader keeps its shards with
+    one ``shard_id`` partition filter.
+
+    Memoized in ``oplayout.ledger_entry`` per (layout, ``as_of``): valid
+    while the ``mutation_state`` it unions (one per ledger token) and
+    the state of the ``shards/`` directory are, so a commit, a
+    compaction or a rebuild of the layout — in this process or another
+    — is seen by the next call."""
+    from big_ann_spark.operators.ann import open_probed_shards
+
     state = mutation_state(spark, path, as_of)
-    if state is None:
-        return base, np.empty(0, dtype=np.int64)
-    winners = _probed_winners(state, base, probe_ids, id_col, vec_col)
-    live = base.withColumn("_resolved", F.lit(False)).unionByName(
-        winners.withColumn("_resolved", F.lit(True))
+    fs, jp = oplayout.fs_path(spark, f"{path}/shards")
+    shards = int(fs.getFileStatus(jp).getModificationTime()) if fs.exists(jp) else None
+
+    def build():
+        base = open_probed_shards(spark, path, None)
+        live = base.withColumn("_resolved", F.lit(False))
+        if state is None:
+            return 0, (live, np.empty(0, dtype=np.int64), None), None
+        winners = _probed_winners(state, base, None, id_col, vec_col)
+        live = live.unionByName(winners.withColumn("_resolved", F.lit(True)))
+        # holding ``state`` keeps its id, part of the token, unique
+        return len(state.contested_ids), (live, state.contested_ids, state), None
+
+    entry = oplayout.ledger_entry(
+        spark, path, f"live_frame:{id_col}:{vec_col}", build,
+        as_of=as_of, derived_from=(shards, id(state)),
     )
-    return live, state.contested_ids
+    return entry.state[:2]
 
 
 def compact_vector_layout(
@@ -513,6 +550,7 @@ def compact_vector_layout(
     re-encoded under the frozen sidecars) AND codes-only ``--sq8``
     layouts (no raw column → the stored codes are carried as the
     payload and the ranges sidecar is copied verbatim)."""
+    from big_ann_spark.operators import pq as PQ
     from big_ann_spark.operators.ann import open_probed_shards
     from big_ann_spark.operators.sharding import write_sharded
 
@@ -531,24 +569,18 @@ def compact_vector_layout(
     thr = None
     if has_raw:
         # refine layouts: re-encode code columns from the raw vectors
-        # under the frozen sidecars (deterministic — codes identical)
-        if _has_sq8(spark, src_path):
-            ranges = _sq8_ranges(spark, src_path)
-        if oplayout.path_exists(spark, f"{src_path}/pq_codebooks.parquet"):
-            from big_ann_spark.operators.pq import load_pq_codebooks
-
-            books = load_pq_codebooks(spark, f"{src_path}/pq_codebooks.parquet")
-        if oplayout.path_exists(spark, f"{src_path}/binary_thresholds.parquet"):
-            thr = list(
-                spark.read.parquet(
-                    f"{src_path}/binary_thresholds.parquet"
-                ).collect()[0]["thresholds"]
-            )
+        # under the frozen sidecars (deterministic — codes identical),
+        # each read once per state of its files
+        present = {col for col, _ in _op_code_columns(spark, src_path)}
+        if "codes" in present:
+            ranges = PQ.load_sq8_ranges(spark, f"{src_path}/sq8_ranges.parquet")
+        if "pq_codes" in present:
+            books = PQ.load_pq_codebooks(spark, f"{src_path}/pq_codebooks.parquet")
+        if "bcodes" in present:
+            thr = PQ.load_binary_thresholds(spark, f"{src_path}/binary_thresholds.parquet")
     rot = None
     if has_raw and oplayout.path_exists(spark, f"{src_path}/opq_rotation.parquet"):
-        from big_ann_spark.operators.pq import load_rotation
-
-        rot = load_rotation(spark, f"{src_path}/opq_rotation.parquet")
+        rot = PQ.load_rotation(spark, f"{src_path}/opq_rotation.parquet")
     write_sharded(
         assignments, assignments, dst_path,
         id_col=id_col, vec_col=payload,

@@ -24,6 +24,20 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture
+def candidate_scans(monkeypatch) -> list:
+    """The candidate-scan frames the from-disk pools collect to the
+    driver during the test: a pool function returns a local frame, so
+    plan pins inspect these."""
+    from big_ann_spark.operators import ann
+
+    scans, real = [], ann._collect_partials
+    monkeypatch.setattr(
+        ann, "_collect_partials", lambda df, *a: scans.append(df) or real(df, *a)
+    )
+    return scans
+
+
 # ---- slow tier --------------------------------------------------------
 # A plain `pytest tests/` must finish inside the CI window, so the
 # multi-minute scale/stream/runbook/CLI tests carry `@pytest.mark.slow`

@@ -151,6 +151,30 @@ def test_query_batch_past_the_driver_bound_fails_loudly(spark, sf_dir, monkeypat
     ).count() == 0
 
 
+def test_candidate_partials_past_the_driver_bound_fail_loudly(spark, sf_dir, monkeypatch):
+    """The candidate scan's per-task top-k partials are collected to the
+    driver under a bound derived from DRIVER_ROWS and k_pool (each task
+    keeps k_pool rows per query): past it the pool fails with a message
+    that says to split the batch, never a truncated pool; within it the
+    pool is served whole."""
+    emb, cents, path, _ = _sq8_layout(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    routed = ANN.route_queries(queries, cents, 2).localCheckpoint()
+    probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
+    shards = ANN.open_probed_shards(spark, path, probe_ids)
+    want = sorted(map(tuple, ANN.sq8_pool(routed, shards, path, 20).collect()))
+    assert len(want) == 160
+    # room for 20 rows per scan task: fewer than the 8 queries keep
+    monkeypatch.setattr(ANN, "DRIVER_ROWS", 1)
+    with pytest.raises(ValueError, match="split the batch"):
+        ANN.sq8_pool(routed, shards, path, 20)
+    # a bound sized for the batch's 8 queries serves all of it
+    monkeypatch.setattr(ANN, "DRIVER_ROWS", 8)
+    assert sorted(map(tuple, ANN.sq8_pool(routed, shards, path, 20).collect())) == want
+
+
 def test_cli_build_index_and_search(spark, sf_dir, tmp_path):
     """The reference's main workflow as two CLI calls: build-index
     (K-Means shard -> partitioned parquet + centroids) then search;
@@ -533,7 +557,7 @@ def test_sq8_from_disk_matches_exact_rerank_semantics(spark, sf_dir):
         assert (r["qid"], assigned[r["neighbor_id"]]) in allowed
 
 
-def test_sq8_scan_plans(spark, sf_dir):
+def test_sq8_scan_plans(spark, sf_dir, candidate_scans):
     """100 TB posture pins: the quantized pool scan must read codes and
     NOT the raw embedding column; the rerank scan must read embedding,
     NOT codes, with the bounded candidate-id In pushed to parquet."""
@@ -546,9 +570,8 @@ def test_sq8_scan_plans(spark, sf_dir):
     routed = ANN.route_queries(queries, cents, 2).localCheckpoint()
     probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
     shards = ANN.open_probed_shards(spark, path, probe_ids)
-    pool_plan = formatted_plan(
-        ANN.sq8_pool(routed, shards, path, 20)
-    )
+    ANN.sq8_pool(routed, shards, path, 20)
+    pool_plan = formatted_plan(candidate_scans[-1])
     scan = [
         seg for seg in pool_plan.split("Scan parquet") if "codes" in seg
     ]

@@ -136,7 +136,7 @@ def test_pq_default_rf_recall(spark, sf_dir):
         assert gd[key] == wd[key]
 
 
-def test_pq_candidate_scan_reads_codes_only(spark, sf_dir):
+def test_pq_candidate_scan_reads_codes_only(spark, sf_dir, candidate_scans):
     """Column pruning: the ADC candidate pass must not read the raw
     vector column — that is the entire point of the layout."""
     emb, cents, path, _ = _pq_layout(spark, sf_dir)
@@ -144,8 +144,8 @@ def test_pq_candidate_scan_reads_codes_only(spark, sf_dir):
     routed = ANN.route_queries(queries, cents, 2).localCheckpoint()
     probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
     shards = ANN.open_probed_shards(spark, path, probe_ids)
-    pool = ANN.pq_pool(routed, shards, path, 20)
-    plan = pool._jdf.queryExecution().executedPlan().toString()
+    ANN.pq_pool(routed, shards, path, 20)
+    plan = candidate_scans[-1]._jdf.queryExecution().executedPlan().toString()
     seg = plan.split("ReadSchema")[1].splitlines()[0]
     assert "pq_codes" in seg and "embedding" not in seg
 
@@ -333,14 +333,14 @@ def test_binary_from_disk_exhaustive_pool_equals_exact(spark, sf_dir):
     assert a == b and len(a) == 40
 
 
-def test_binary_candidate_scan_reads_bcodes_only(spark, sf_dir):
+def test_binary_candidate_scan_reads_bcodes_only(spark, sf_dir, candidate_scans):
     emb, cents, path = _binary_layout(spark, sf_dir)
     queries = _queries(emb)
     routed = ANN.route_queries(queries, cents, 2).localCheckpoint()
     probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
     shards = ANN.open_probed_shards(spark, path, probe_ids)
-    pool = ANN.binary_pool(routed, shards, path, 20)
-    plan = pool._jdf.queryExecution().executedPlan().toString()
+    ANN.binary_pool(routed, shards, path, 20)
+    plan = candidate_scans[-1]._jdf.queryExecution().executedPlan().toString()
     seg = plan.split("ReadSchema")[1].splitlines()[0]
     assert "bcodes" in seg and "embedding" not in seg
 

@@ -555,11 +555,11 @@ def test_search_sees_same_process_and_foreign_commits(spark, sf_dir, monkeypatch
     assert search() == _rows(_expected(spark, emb, cents, live, queries))
 
 
-def test_repeat_search_of_unchanged_mutated_layout_runs_four_jobs(spark, sf_dir):
-    """A search whose ledger state is already resolved runs at most four
-    Spark jobs — the query collect, the centroid collect and the
-    candidate scan's two stages — and still serves the upsert and hides
-    the delete."""
+def test_repeat_search_of_unchanged_mutated_layout_runs_two_jobs(spark, sf_dir):
+    """A search whose layout state is already resolved runs at most two
+    Spark jobs — the query collect and the candidate scan, whose
+    per-task top-k the driver merges — and still serves the upsert and
+    hides the delete."""
     emb, _, path = _build_layout(spark, sf_dir)
     cents = spark.read.parquet(f"{path}/centroids.parquet")
     VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") % 3 == 0))
@@ -575,10 +575,120 @@ def test_repeat_search_of_unchanged_mutated_layout_runs_four_jobs(spark, sf_dir)
     finally:
         sc.setJobGroup("", "")
     jobs = sc.statusTracker().getJobIdsForGroup("ivf-from-disk-jobcount")
-    assert len(jobs) <= 4, f"a repeat search ran {len(jobs)} jobs"
+    assert len(jobs) <= 2, f"a repeat search ran {len(jobs)} jobs"
     top = {r.qid: r.neighbor_id for r in rows if r["rank"] == 1}
     assert top[3] == 3 and top[6] == 6  # upserted ids find themselves
     assert not {r.neighbor_id for r in rows} & {1, 2}
+
+
+def _live_ids(spark, path, as_of=None):
+    """(live frame, the ids it serves) of the layout state."""
+    frame, dead = VO.live_frame(spark, path, as_of=as_of)
+    dead = set(dead.tolist())
+    rows = frame.select("vec_id", "_resolved").collect()
+    return frame, {r.vec_id for r in rows if r._resolved or r.vec_id not in dead}
+
+
+def test_live_frame_is_rebuilt_for_each_new_layout_state(spark, sf_dir, monkeypatch):
+    """The memoized live frame serves its layout state until that state
+    changes: a same-process upsert, delete or compact_in_place, a
+    foreign commit and a write_sharded rebuild at the same path (both
+    without this process's invalidation) each give the next read a new
+    frame holding the new live set; an as_of snapshot has its own."""
+    emb, cents, path = _build_layout(spark, sf_dir)
+    all_ids = {r.vec_id for r in emb.select("vec_id").collect()}
+    base_ids = {i for i in all_ids if i % 3 != 0}
+    frame, ids = _live_ids(spark, path)
+    assert ids == base_ids and VO.live_frame(spark, path)[0] is frame
+
+    def changed(expected, as_of=None):
+        nonlocal frame
+        new, got = _live_ids(spark, path, as_of)
+        assert new is not frame and got == expected
+        frame = new
+
+    VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id").isin(0, 3)))
+    changed(base_ids | {0, 3})
+    VO.delete_vectors(spark, path, [1, 3])
+    changed((base_ids | {0}) - {1})
+    snap, snap_ids = _live_ids(spark, path, as_of=0)
+    assert snap is not frame and snap_ids == base_ids | {0, 3}
+    assert VO.live_frame(spark, path)[0] is frame
+    monkeypatch.setattr(oplayout, "invalidate_contested_memo", lambda p: None)
+    VO.delete_vectors(spark, path, [2])
+    changed((base_ids | {0}) - {1, 2})
+    rebuilt = emb.filter(F.col("vec_id") % 3 == 1)
+    SH.write_sharded(
+        SH.assign_to_centroids(rebuilt, cents, extra_cols=["embedding"]), rebuilt, path
+    )
+    # the ledger still holds op 0's upsert and the deletes of 1, 2 and 3
+    changed(({i for i in all_ids if i % 3 == 1} | {0}) - {1, 2})
+    monkeypatch.undo()
+    VO.compact_in_place(spark, path)
+    changed(({i for i in all_ids if i % 3 == 1} | {0}) - {1, 2})
+    assert len(VO.live_frame(spark, path)[1]) == 0
+
+
+def test_live_frame_memo_stays_bounded_and_never_reads_an_evicted_state(
+    spark, sf_dir, monkeypatch
+):
+    """The live frames share the ledger memo's bound; a frame whose
+    mutation state was evicted (its checkpoint unpersisted) is rebuilt
+    on the state rebuilt in its place, never served stale."""
+    from collections import OrderedDict
+
+    emb, cents, path = _build_layout(spark, sf_dir)
+    VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id").isin(0, 3)))
+    VO.delete_vectors(spark, path, [1])
+    memo = OrderedDict()
+    monkeypatch.setattr(oplayout, "_contested_count_memo", memo)
+    monkeypatch.setattr(oplayout, "LEDGER_MEMO_ENTRIES", 3)
+    head, want = _live_ids(spark, path)  # head's state and frame
+    _live_ids(spark, path, as_of=0)  # evicts head's mutation state
+    assert len(memo) == 3
+    again, got = _live_ids(spark, path)
+    assert again is not head and got == want and len(memo) == 3
+
+
+def test_first_read_of_a_ledger_state_runs_no_inference_job(spark, sf_dir):
+    """committed_op_scan reads ops/ with the op rows' explicit schema, so
+    the first contested_count of each ledger state runs two Spark jobs —
+    the winners' group-by and the id collect — and no footer-inference
+    job."""
+    emb, cents, path = _build_layout(spark, sf_dir)
+    VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") % 3 == 0))
+    n_up = emb.filter(F.col("vec_id") % 3 == 0).count()
+    assert _job_count(spark, lambda: VO.contested_count(spark, path)) == (n_up, 2)
+    VO.delete_vectors(spark, path, [1, 2])
+    assert _job_count(spark, lambda: VO.contested_count(spark, path)) == (n_up + 2, 2)
+
+
+def test_sq8_upsert_reads_its_ranges_once_per_sidecar_state(spark, sf_dir):
+    """An SQ8 refine upsert encodes under the ranges sidecar read once
+    per state of its files: with them in memory an upsert runs two Spark
+    jobs (batch collect, write), and a rewritten sidecar is seen by the
+    next upsert."""
+    import numpy as np
+
+    from big_ann_spark.operators import pq as PQ
+
+    emb, cents, path = _build_layout(spark, sf_dir, sq8=True)
+    batch = emb.filter(F.col("vec_id") % 3 == 0)
+    VO.upsert_vectors(spark, path, batch.filter(F.col("vec_id") % 2 == 0))
+    _, n_up = _job_count(
+        spark, lambda: VO.upsert_vectors(spark, path, batch.filter(F.col("vec_id") % 2 == 1))
+    )
+    assert n_up == 2
+    mins, maxs = PQ.load_sq8_ranges(spark, f"{path}/sq8_ranges.parquet")
+    wide = ([v - 1.0 for v in mins], [v + 1.0 for v in maxs])
+    spark.createDataFrame([wide], "mins array<double>, maxs array<double>").coalesce(
+        1
+    ).write.mode("overwrite").parquet(f"{path}/sq8_ranges.parquet")
+    assert VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") == 3)) == 2
+    row = spark.read.parquet(f"{path}/ops").filter("_mb = 2").collect()[0]
+    X = np.asarray(row["embedding"], dtype=np.float32).astype(np.float64)[None]
+    assert list(row["codes"]) == PQ.sq8_encode_matrix(X, *wide)[0].tolist()
+    assert list(row["codes"]) != PQ.sq8_encode_matrix(X, mins, maxs)[0].tolist()
 
 
 def test_compact_swap_lock_guards_rename_window(spark, sf_dir, monkeypatch):
@@ -857,7 +967,7 @@ def test_each_op_lands_one_file_in_one_write_job(spark, sf_dir):
 def test_search_after_compact_in_place_runs_no_inference_job(spark, sf_dir):
     """compact_in_place files the new layout's shards schema under the
     swapped-in path, so the first search after it runs as many jobs as
-    a repeat search — the query collect and the scan's two stages, the
+    a repeat search — the query collect and the candidate scan, the
     centroid matrix served from memory (the copied centroid files keep
     their mtime) — and no .compacting entry is left behind."""
     emb, _, path = _build_layout(spark, sf_dir)
@@ -875,7 +985,7 @@ def test_search_after_compact_in_place_runs_no_inference_job(spark, sf_dir):
     assert VO.compact_in_place(spark, path) == 2
     rows, n_first = _job_count(spark, search())
     _, n_repeat = _job_count(spark, search())
-    assert n_first == n_repeat <= 3, (n_first, n_repeat)
+    assert n_first == n_repeat <= 2, (n_first, n_repeat)
     assert sorted(map(tuple, rows)) == before
     assert not [k for k in ANN._SHARDS_SCHEMA_MEMO if ".compacting" in k[0]]
 
