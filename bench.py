@@ -320,9 +320,7 @@ def measure_cold_disk_qps(
         assign = SH.assign_to_centroids(emb, cents)
         layout = tmp_root + "/layout"
         books = train_pq(emb.limit(20_000), m=8, k=16)
-        SH.write_sharded(
-            assign, emb, layout, pq_codebooks=books, pq_encode_impl="arrow"
-        )
+        SH.write_sharded(assign, emb, layout, pq_codebooks=books)
         queries = emb.filter(F.col("vec_id") < n_queries).select(
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
         ).localCheckpoint()

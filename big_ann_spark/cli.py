@@ -948,7 +948,6 @@ def main(argv: list[str] | None = None) -> int:
                 pq_codebooks=PQ.train_pq(
                     emb, m=args.pq_m, k=args.pq_k, vec_col=args.vec_col, dim=dim
                 ),
-                pq_encode_impl="arrow",
             )
         elif args.binary_refine:
             from big_ann_spark.operators import pq as PQ
@@ -970,7 +969,7 @@ def main(argv: list[str] | None = None) -> int:
             )
             SH.write_sharded(
                 assign, emb, args.dst, id_col=args.id_col, vec_col=args.vec_col,
-                pq_codebooks=books, opq_rotation=R, pq_encode_impl="arrow",
+                pq_codebooks=books, opq_rotation=R,
             )
         else:
             SH.write_sharded(

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 from big_ann_spark.functions.vector import l2_distance
-from big_ann_spark.operators.knn import band_select, fold_l2, fold_l2_topk
+from big_ann_spark.operators.knn import band_select, fold_l2, fold_l2_topk, nearest_centroids
 from big_ann_spark.operators.topk import top_k_per_group
 
 
@@ -176,8 +176,8 @@ def detect_refine_codec(spark, path: str, vec_col: str = "embedding") -> str:
 # a from-disk search routes on the driver.
 DRIVER_ROWS = 100_000
 
-# Cells of a (query × row) or (query × centroid) distance matrix that
-# one numpy scoring block holds at once.
+# Cells of a (query × row) distance matrix that one numpy scoring block
+# holds at once.
 _SCORE_BLOCK = 1 << 20
 
 # popcount of every byte value: the binary pool's Hamming kernel
@@ -269,27 +269,6 @@ def centroid_matrix(spark, centroids: DataFrame | str) -> tuple[np.ndarray, np.n
         return int_col(c, "shard_id"), list_col_matrix(c, "centroid")
 
     return oplayout.memo_by_files("centroids", oplayout.file_stamps(sts), read)
-
-
-def nearest_centroids(
-    X: np.ndarray, cids: np.ndarray, cmat: np.ndarray, n: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Row indices into ``cids`` of the first ``n`` centroids of each
-    row of ``X`` by (distance, shard id), and those distances: the
-    ``l2_distance`` arithmetic (``knn.fold_l2``) and the order of
-    ``array_min``/``array_sort`` over ``struct(dist, shard_id)``, so
-    ``route_queries`` and ``assign_to_centroids`` pick the same shards
-    bit for bit, near-ties included."""
-    k = min(max(n, 0), len(cids))
-    if not len(X) or not k:
-        return np.empty((len(X), k), np.int64), np.empty((len(X), k))
-    step, top, dist = max(1, _SCORE_BLOCK // len(cids)), [], []
-    for s in range(0, len(X), step):
-        cd = fold_l2(X[s : s + step, None], cmat[None])  # (block, m)
-        order = np.lexsort((np.broadcast_to(cids, cd.shape), cd), axis=1)[:, :n]
-        top.append(order)
-        dist.append(np.take_along_axis(cd, order, axis=1))
-    return np.concatenate(top), np.concatenate(dist)
 
 
 def _route_on_driver(
@@ -1157,15 +1136,17 @@ def route_queries(
     """J3: top-``nprobe`` nearest centroids per query →
     (qid, qvec, shard_id, probe_rank).
 
-    Zero-exchange form (mirrors assign_to_centroids): the centroid
-    table collapses to ONE broadcast array row; per query, the probe
-    list is ``array_sort(struct(cdist, shard_id))[:nprobe]`` exploded —
-    a pure projection fused into the query scan. The r1 window form
+    Zero-exchange form: the centroid table collapses to ONE broadcast
+    array row; per query, the probe list is
+    ``array_sort(struct(cdist, shard_id))[:nprobe]`` exploded — a pure
+    projection fused into the query scan. The r1 window form
     hash-exchanged all Q×M scored rows by qid before WindowGroupLimit
     could trim them; with batch-ANN query sets in the millions that
     exchange is the routing cost. Sort cost is M·log M per row — fine
     for M ≤ 10^5 broadcastable centroids; ties break on shard_id
-    (struct field order), identical to the window form."""
+    (struct field order), identical to the window form. It stays the
+    Spark-expression reference that ``knn.nearest_centroids`` is
+    tested against."""
     cents = centroids.agg(
         F.collect_list(
             F.struct(F.col("shard_id").alias("_sid"), F.col("centroid").alias("_cv"))
@@ -1756,61 +1737,35 @@ def _assign_top_probes(
     *,
     id_col: str,
     vec_col: str,
-    row_block: int = 1024,
 ) -> DataFrame:
     """Each point duplicated onto its ``probes`` nearest centroids —
-    ``(id, vec, _sid)``, one mapInArrow pass over a broadcast centroid
-    matrix (the ``sharding._assign_arrow`` shape, specialized to
-    top-p). Exact f64 distances; WHICH p at an equal-distance boundary
-    is argpartition-arbitrary but deterministic for identical input
-    (all p assignments are emitted, so intra-p order is moot)."""
+    ``(id, vec, _sid)``, one mapInArrow pass that picks them with
+    ``knn.nearest_centroids`` (exact fold distances, ties to the lower
+    shard id) against the centroid matrix shipped in the closure."""
 
     sids = np.array([c[0] for c in centroids], dtype=np.int64)
     C = np.array([c[1] for c in centroids], dtype=np.float64)
-    c_sq = (C * C).sum(axis=1)
     p = max(1, min(int(probes), len(sids)))
     idt = points.schema[id_col].dataType.simpleString()
     vct = points.schema[vec_col].dataType.simpleString()
     out_schema = f"{id_col} {idt}, {vec_col} {vct}, _sid int"
 
     def run(batches):
-        # self-contained closure: no repo imports — the worker process
-        # need not have the package importable (driver-contract runs
-        # launch from an arbitrary cwd); this is arrowio's
-        # list_col_matrix inlined (flatten honors offsets/slices)
         import pyarrow as pa
+
+        from big_ann_spark.functions.arrowio import list_col_matrix
 
         for rb in batches:
             n = rb.num_rows
             if not n:
                 continue
-            arr = rb.column(vec_col)
-            if isinstance(arr, pa.ChunkedArray):
-                arr = arr.combine_chunks()
-            if arr.null_count:
-                raise ValueError(f"{vec_col}: null vectors are not supported")
-            V = np.asarray(arr.flatten()).reshape(n, -1).astype(np.float64)
-            tops = np.empty((n, p), dtype=np.int32)
-            for lo in range(0, n, row_block):
-                hi = min(lo + row_block, n)
-                blk = V[lo:hi]
-                d2 = (
-                    (blk * blk).sum(axis=1)[:, None]
-                    - 2.0 * (blk @ C.T)
-                    + c_sq[None, :]
-                )
-                m = d2.shape[1]
-                if p < m:
-                    part = np.argpartition(d2, p - 1, axis=1)[:, :p]
-                else:
-                    part = np.tile(np.arange(m), (hi - lo, 1))
-                tops[lo:hi] = sids[part].astype(np.int32)
+            top, _ = nearest_centroids(list_col_matrix(rb, vec_col), sids, C, p)
             idx = pa.array(np.repeat(np.arange(n, dtype=np.int64), p))
             yield pa.RecordBatch.from_arrays(
                 [
                     rb.column(id_col).take(idx),
                     rb.column(vec_col).take(idx),
-                    pa.array(tops.ravel(), type=pa.int32()),
+                    pa.array(sids[top].ravel().astype(np.int32), type=pa.int32()),
                 ],
                 names=[id_col, vec_col, "_sid"],
             )
@@ -1937,12 +1892,7 @@ def _seed_cell_centroids(
         h = ids.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)
         C = V[np.sort(np.argsort(h, kind="stable")[:k_i])].copy()
         for _ in range(iters):
-            d2 = (
-                (V * V).sum(axis=1)[:, None]
-                - 2.0 * (V @ C.T)
-                + (C * C).sum(axis=1)[None, :]
-            )
-            a = d2.argmin(axis=1)
+            a = nearest_centroids(V, np.arange(k_i), C, 1)[0][:, 0]
             S = np.zeros_like(C)
             np.add.at(S, a, V)
             cnt = np.bincount(a, minlength=k_i).astype(np.float64)

@@ -79,7 +79,7 @@ def band_select(est, ids, kk, slack, exact):
     have an exact distance of at most kth + slack/2, and a row's
     estimate exceeds its exact distance by at most slack/2."""
     kk = min(kk, est.shape[1])
-    kth = np.partition(est, kk - 1, axis=1)[:, kk - 1]
+    kth = est.min(axis=1) if kk == 1 else np.partition(est, kk - 1, axis=1)[:, kk - 1]
     qi, ci = np.nonzero(est <= (kth + slack(kth))[:, None])
     dist = exact(qi, ci)
     order = np.lexsort((ids[ci], dist, qi))
@@ -108,6 +108,49 @@ def fold_l2_topk(Q: np.ndarray, X: np.ndarray, ids: np.ndarray, kk: int):
     )
 
 
+# rows of X that one ``nearest_centroids`` block scores at once
+_CENTROID_BLOCK = 1024
+
+
+def nearest_centroids(
+    X: np.ndarray, cids: np.ndarray, cmat: np.ndarray, n: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Row indices into ``cids`` of the first ``n`` centroids of each
+    row of ``X`` by (distance, shard id), and those distances:
+    ``fold_l2_topk`` over blocks of ``_CENTROID_BLOCK`` rows. The
+    distance is the ``l2_distance`` fold bit for bit, and the order is
+    that of ``array_min``/``array_sort`` over ``struct(dist, shard_id)``
+    in ``ann.route_queries``. Every centroid pick in the package goes
+    through here: the build's ``assign_to_centroids``, upserts, search
+    routing and the graph build's cell probes, so a vector lands in the
+    shard a search for it probes first.
+
+    A row of ``X`` or ``cmat`` that is not finite raises ``ValueError``:
+    it has no nearest centroid, and a NaN row would otherwise be dropped
+    or land anywhere."""
+    k = min(max(n, 0), len(cids))
+    if not len(X) or not k:
+        return np.empty((len(X), k), np.int64), np.empty((len(X), k))
+    for what, M in (("vector", X), ("centroid", cmat)):
+        bad = np.flatnonzero(~np.isfinite(M).all(axis=1))
+        if len(bad):
+            raise ValueError(
+                f"{what} row {bad[0]} is not finite (NaN or Inf): it has no nearest centroid"
+            )
+    # positions in shard-id order: band_select breaks ties on them
+    perm = np.argsort(cids, kind="stable")
+    C, pos = cmat[perm], np.arange(len(cids))
+    top, dist = [], []
+    for s in range(0, len(X), _CENTROID_BLOCK):
+        blk = X[s : s + _CENTROID_BLOCK]
+        _, p, d = fold_l2_topk(blk, C, pos, k)
+        if len(p) != len(blk) * k:
+            raise ValueError("a vector's distance to the centroids overflows to a non-finite value")
+        top.append(perm[p].reshape(-1, k))
+        dist.append(d.reshape(-1, k))
+    return np.concatenate(top), np.concatenate(dist)
+
+
 def exact_knn(
     queries: DataFrame,
     base: DataFrame,
@@ -132,7 +175,7 @@ def exact_knn(
     qrows = queries.select(query_id, query_vec).collect()
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    bc = _broadcast_query_matrix(queries.sparkSession.sparkContext, qids, qmat)
+    bc = broadcast_matrix(queries.sparkSession.sparkContext, qids, qmat)
 
     def part_topk(batches):
         import pyarrow as pa
@@ -156,27 +199,27 @@ def exact_knn(
     return top_k_per_group(partial, ["qid"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k)
 
 
-def _broadcast_query_matrix(sc, qids, qmat):
-    """Session-cached ``sc.broadcast`` of the (qids, qmat) pair: repeated
-    calls with the same query batch (bench loops, recall A/Bs,
-    long-lived sessions) reuse one broadcast instead of accumulating
-    blocks on executors. A tiny LRU evicts with ``unpersist()`` — safe
-    even if a stale plan re-reads an evicted broadcast, Spark re-ships
-    it on demand."""
+def broadcast_matrix(sc, ids, mat):
+    """Session-cached ``sc.broadcast`` of an (ids, matrix) pair — a
+    query batch, or a centroid table: repeated calls with the same
+    pair (bench loops, recall A/Bs, long-lived sessions) reuse one
+    broadcast instead of accumulating blocks on executors. A tiny LRU
+    evicts with ``unpersist()`` — safe even if a stale plan re-reads an
+    evicted broadcast, Spark re-ships it on demand."""
     import hashlib
 
     h = hashlib.sha1()
-    h.update(str(qmat.shape).encode())
-    h.update(qids.tobytes())
-    h.update(qmat.tobytes())
+    h.update(str(mat.shape).encode())
+    h.update(ids.tobytes())
+    h.update(mat.tobytes())
     key = h.digest()
-    cache = getattr(sc, "_big_ann_query_bc", None)
+    cache = getattr(sc, "_big_ann_matrix_bc", None)
     if cache is None:
         cache = {}
-        sc._big_ann_query_bc = cache
+        sc._big_ann_matrix_bc = cache
     bc = cache.pop(key, None)
     if bc is None:
-        bc = sc.broadcast((qids, qmat))
+        bc = sc.broadcast((ids, mat))
     cache[key] = bc  # re-insert refreshes LRU position
     while len(cache) > 4:
         cache.pop(next(iter(cache))).unpersist()

@@ -12,9 +12,9 @@ lookups.
 Spark-first shape:
 - codebooks are tiny (m·k·(d/m) floats) → trained via MLlib KMeans per
   subspace, broadcast everywhere;
-- encoding is a pure projection (argmin per subvector via
-  array_min(struct(dist, code)) over the broadcast codebook — the
-  assign_to_centroids pattern, zero exchanges);
+- encoding is one ``mapInArrow`` pass of a numpy kernel (argmin per
+  subvector over the broadcast codebooks, lowest code on ties), zero
+  exchanges;
 - ADC search precomputes per-query lookup tables driver-side (queries
   are the contractual small side, as in exact_knn), broadcasts them,
   and scores each encoded row with ``zip_with(lut, codes) → sum`` —
@@ -61,49 +61,6 @@ def train_pq(
     return codebooks
 
 
-def _sub_dist(vec_slice, centroid_lits):
-    """Squared L2 between an array slice column and a literal centroid."""
-    d = F.aggregate(
-        F.zip_with(
-            vec_slice,
-            F.array(*[F.lit(x) for x in centroid_lits]),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return d
-
-
-def pq_encode_col(vec_col, codebooks: list[list[list[float]]]):
-    """The PQ code-assignment COLUMN: nearest code per subvector over
-    the broadcast-literal codebooks (argmin via array_min(struct(dist,
-    code)); ties break on the lower code) — a pure projection, no
-    joins, no shuffles. Composable into any scan/write (the
-    ``sq8_encode_col`` pattern)."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    v = (F.col(vec_col) if isinstance(vec_col, str) else vec_col).cast(
-        "array<double>"
-    )
-    codes = []
-    for j in range(m):
-        vs = F.slice(v, j * sub + 1, sub)
-        best = F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        _sub_dist(vs, codebooks[j][c]).alias("d"),
-                        F.lit(c).alias("c"),
-                    )
-                    for c in range(len(codebooks[j]))
-                ]
-            )
-        )
-        codes.append(best["c"])
-    return F.array(*codes)
-
-
 def pq_encode(
     emb: DataFrame,
     codebooks: list[list[list[float]]],
@@ -111,11 +68,10 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, codes array<int>[m]) — see :func:`pq_encode_col`."""
-    return emb.select(
-        F.col(id_col).alias("id"),
-        pq_encode_col(vec_col, codebooks).alias("codes"),
-    )
+    """(id, codes array<int>[m]): the codes of :func:`with_pq_codes_arrow`."""
+    return with_pq_codes_arrow(
+        emb.select(id_col, vec_col), codebooks, vec_col=vec_col, out_col="codes"
+    ).select(F.col(id_col).alias("id"), F.col("codes").cast("array<int>"))
 
 
 def save_rotation(spark, path: str, R: list[list[float]]) -> None:
@@ -177,20 +133,19 @@ def with_pq_codes_arrow(
     rotation: list[list[float]] | None = None,
 ) -> DataFrame:
     """``df`` plus the PQ code column, computed by a numpy Arrow
-    kernel — the bulk-encode path. The expression form
-    (:func:`pq_encode_col`) builds an m·k-struct codegen tree that
-    measured 6× the whole rest of a 2M layout build; the kernel does
-    the identical arithmetic (per-dim ``(a−b)²`` accumulated
-    LEFT-TO-RIGHT over the subvector — the fold's addition order — and
-    first-occurrence argmin == lowest-code tie-break), so codes are
-    bit-equal (parity-tested) at memory-bandwidth speed. All other
-    columns pass through zero-copy (``RecordBatch.append_column``).
+    kernel (:func:`pq_encode_matrix`) — the one PQ encoder: builds,
+    compactions and :func:`pq_encode` run it, upserts call the kernel
+    directly. It does the arithmetic of a
+    Spark ``array_min(struct(dist, code))`` fold (per-dim ``(a−b)²``
+    accumulated LEFT-TO-RIGHT over the subvector, and first-occurrence
+    argmin == lowest-code tie-break), so codes are bit-equal to that
+    expression (parity-tested), which made a 2M PQ build 5× slower
+    (SCALE.md, "PQ build cost"). All other columns pass through zero-copy
+    (``RecordBatch.append_column``).
 
     ``rotation``: an OPQ orthogonal d×d matrix applied (one BLAS
     matmul per batch) BEFORE the subspace split — the codebooks are
-    then in the rotated space. The expression encoder has no rotation
-    form (d² multiply-adds per row is far past the codegen budget), so
-    OPQ layouts are arrow-encode-only by construction."""
+    then in the rotated space."""
     import numpy as np
     from pyspark.sql.types import ArrayType, ShortType, StructField, StructType
 
@@ -388,24 +343,6 @@ def ivf_pq_search(
 
 # ----------------------------------------------------------------- OPQ
 
-def _pairwise_d2(X, C):
-    """(n, k) squared distances by the gemm identity — the broadcast
-    form ((X[:,None,:]-C[None,:,:])**2).sum(2) materializes an
-    (n·k·sub) tensor (~800 MB at the 50k/256/8 training shape) and was
-    the entire train_opq 6×-anomaly VERDICT r12 #3 flagged: 9 full
-    Lloyd refits × that tensor = 294 s where this form takes seconds.
-    Clamped at 0 (cancellation can go epsilon-negative)."""
-    import numpy as np
-
-    d2 = (
-        (X * X).sum(axis=1)[:, None]
-        - 2.0 * (X @ C.T)
-        + (C * C).sum(axis=1)[None, :]
-    )
-    np.maximum(d2, 0.0, out=d2)
-    return d2
-
-
 def _lloyd(X, C, n_iter: int = 8):
     """Warm-started Lloyd for OPQ's inner loop (driver-side on a
     bounded sample — the same place FAISS trains OPQ). Starting from
@@ -416,14 +353,17 @@ def _lloyd(X, C, n_iter: int = 8):
     Returns (C, assignments)."""
     import numpy as np
 
+    from big_ann_spark.operators.knn import nearest_centroids
+
     C = C.copy()
+    codes = np.arange(len(C))
     for _ in range(n_iter):
-        d2 = _pairwise_d2(X, C)
-        a = d2.argmin(axis=1)
+        top, dist = nearest_centroids(X, codes, C, 1)
+        a = top[:, 0]
         # r-th empty cluster takes the r-th farthest point — a single
         # shared argmax would collapse every empty cluster onto the
         # same point, producing duplicate centroids and wasted codes
-        far_order = np.argsort(-d2.min(axis=1))
+        far_order = np.argsort(-dist[:, 0])
         n_relocated = 0
         for c in range(len(C)):
             members = X[a == c]
@@ -432,7 +372,7 @@ def _lloyd(X, C, n_iter: int = 8):
             else:
                 C[c] = X[far_order[min(n_relocated, len(X) - 1)]]
                 n_relocated += 1
-    return C, _pairwise_d2(X, C).argmin(axis=1)
+    return C, nearest_centroids(X, codes, C, 1)[0][:, 0]
 
 
 def train_opq(
@@ -479,7 +419,7 @@ def train_opq(
     trains in 27 s but INVERTED the serving-recall ordering at 200k
     (OPQ 0.305 < PQ 0.315 — sample distortion matched, recall did
     not), so the default stays at the full 8: same training dynamics
-    as always, 46 s after the ``_pairwise_d2`` gemm fix (was 294 s).
+    as always, 46 s after the gemm-form assignment fix (was 294 s).
     Lower it only with a recall A/B on your data.
 
     ``init_books``: where the R = I baseline fit starts. The DEFAULT

@@ -27,10 +27,14 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
 
 from big_ann_spark.functions.vector import l2_distance
-from big_ann_spark.operators.knn import median_pairwise_distance
+from big_ann_spark.operators.knn import (
+    broadcast_matrix,
+    median_pairwise_distance,
+    nearest_centroids,
+)
 
 RANDOM_SEED = 505  # reference config_bigann_small.py:11
 
@@ -65,182 +69,75 @@ def assign_to_centroids(
     vec_col: str = "embedding",
     centroid_id: str = "shard_id",
     centroid_vec: str = "centroid",
-    dim: int | None = None,
     extra_cols: list[str] | None = None,
-    impl: str = "fold",
 ) -> DataFrame:
-    """J2: nearest-centroid assignment — broadcast the (tiny) centroid
-    table collapsed to ONE array row, then the per-point argmin is a
-    pure projection: ``array_min`` over ``struct(dist, shard_id)``
-    (struct comparison is field-ordered, so ties break on the lower
-    shard id — identical semantics to a (dist, id)-ordered rank-1
-    window). Returns (id, shard_id, dist) — plus ``extra_cols``
-    carried through the projection, which is how callers keep payload
+    """J2: nearest-centroid assignment → (id, shard_id, dist), plus
+    ``extra_cols`` carried through, which is how callers keep payload
     columns aligned with their row's assignment WITHOUT a join-back on
     a possibly-non-unique id (a join-back cross-multiplies duplicate
-    ids and can pair a row with the OTHER duplicate's shard). This is ``kmeans.predict`` +
-    the per-point distance loop of ``shard.py:117-131`` with ZERO
-    exchanges: the previous window formulation hash-partitioned the
-    N×M scored rows by point id before WindowGroupLimit could trim
-    them; at 100 TB that exchange is the whole cost.
+    ids and can pair a row with the OTHER duplicate's shard). This is
+    ``kmeans.predict`` + the per-point distance loop of
+    ``shard.py:117-131`` with ZERO exchanges.
 
-    ``impl``: ``"fold"`` (default) is the codegen projection above —
-    O(m·d) scalar work per row, the right plan for routing tables up
-    to m ≈ 10³. ``"arrow"`` is the large-m scale path (the exact-kNN
-    arrow pattern): mapInPandas scores each Arrow batch against the
-    broadcast centroid matrix with one blocked float64 GEMM — at
-    m = 10⁴/d = 64 the fold's 640k-op per-row expression is
-    CPU-bound while BLAS does the same work at memory bandwidth
-    (measured: the 20M×10⁴ assignment in SCALE.md). Same tie-break
-    (argmin first occurrence over sid-sorted centroids == struct
-    ordering); distances in float64 like the fold, so assignments
-    agree except on exact-tie float noise the fixtures pin."""
-    if impl == "arrow":
-        return _assign_arrow(
-            points, centroids,
-            id_col=id_col, vec_col=vec_col,
-            centroid_id=centroid_id, centroid_vec=centroid_vec,
-            extra_cols=extra_cols,
+    One ``mapInArrow`` pass: the centroid matrix
+    (``ann.centroid_matrix``) is broadcast once, and each Arrow batch
+    picks its rows' nearest centroid with ``knn.nearest_centroids``, the
+    kernel search routing and upserts use — so a vector lands in the
+    shard a search for it probes first. Ties go to the lower shard id;
+    ``dist`` is the ``l2_distance`` fold bit for bit; the id and extra
+    columns pass through as Arrow buffers. A vector that is not finite
+    fails its task."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from big_ann_spark.operators.ann import centroid_matrix
+
+    spark = points.sparkSession
+    if (centroid_id, centroid_vec) != ("shard_id", "centroid"):
+        centroids = centroids.select(
+            F.col(centroid_id).alias("shard_id"), F.col(centroid_vec).alias("centroid")
         )
-    if impl != "fold":
-        raise ValueError(f"impl must be 'fold' or 'arrow', got {impl!r}")
-    cents = centroids.agg(
-        F.collect_list(
-            F.struct(
-                F.col(centroid_id).alias("_sid"), F.col(centroid_vec).alias("_cv")
-            )
-        ).alias("_cents")
-    )
-    carry = [c for c in (extra_cols or []) if c not in (id_col, vec_col)]
-    joined = points.select(id_col, vec_col, *carry).crossJoin(F.broadcast(cents))
-    best = F.array_min(
-        F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                l2_distance(F.col(vec_col), c["_cv"], dim).alias("dist"),
-                c["_sid"].alias("_sid"),
-            ),
-        )
-    )
-    out_extra = [
-        c for c in (extra_cols or []) if c not in (id_col, centroid_id, "dist")
-    ]
-    return joined.select(
-        F.col(id_col),
-        best["_sid"].alias(centroid_id),
-        best["dist"].alias("dist"),
-        *out_extra,
-    )
-
-
-def _assign_arrow(
-    points: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    centroid_id: str,
-    centroid_vec: str,
-    extra_cols: list[str] | None,
-    row_block: int = 1024,
-) -> DataFrame:
-    """BLAS argmin assignment (see ``assign_to_centroids(impl="arrow")``).
-    Row blocks bound the (block × m) distance matrix (~80 MB at
-    m = 10⁴), so per-task memory is independent of batch size.
-    ``mapInArrow``, not ``mapInPandas``: id and carry columns (often
-    the vector itself, for ``write_sharded``) pass through as raw
-    Arrow buffers and the matrix is one ``flatten().reshape`` — see
-    ``functions/arrowio.py`` for the measured boundary tax."""
-    import numpy as np
-
-    from big_ann_spark.functions.arrowio import list_col_matrix
-
-    crows = sorted(
-        ((r[centroid_id], r[centroid_vec]) for r in centroids.collect()),
-        key=lambda t: t[0],
-    )
-    sids = np.array([t[0] for t in crows], dtype=np.int64)
-    C64 = np.array([t[1] for t in crows], dtype=np.float64)  # (m, d)
-    C32 = C64.astype(np.float32)
-    c_sq32 = (C32 * C32).sum(axis=1)
-    c_sq32_max = float(c_sq32.max()) if len(crows) else 0.0
+    sid_type = centroids.schema["shard_id"].dataType
+    cids, cmat = centroid_matrix(spark, centroids)
+    if not len(cids):
+        raise ValueError("assign_to_centroids: the centroid table is empty")
+    bc = broadcast_matrix(spark.sparkContext, cids, cmat)
 
     carry = [c for c in (extra_cols or []) if c not in (id_col, vec_col)]
     out_extra = [
         c for c in (extra_cols or []) if c not in (id_col, centroid_id, "dist")
     ]
     src = points.select(id_col, vec_col, *carry)
-    id_type = src.schema[id_col].dataType.simpleString()
-    extra_ddl = "".join(
-        f", {c} {src.schema[c].dataType.simpleString()}" for c in out_extra
+    schema = StructType(
+        [
+            src.schema[id_col],
+            StructField(centroid_id, sid_type),
+            StructField("dist", DoubleType()),
+            *(src.schema[c] for c in out_extra),
+        ]
     )
-    out_schema = f"{id_col} {id_type}, {centroid_id} int, dist double{extra_ddl}"
+    sid_arrow = to_arrow_type(sid_type)
 
     def part(batches):
         import pyarrow as pa
 
-        for rb in batches:
-            n = rb.num_rows
-            if not n:
-                continue
-            # f64 is the source of truth (an array<double> input must
-            # not round-trip through f32); the f32 copy only nominates
-            V64 = list_col_matrix(rb, vec_col, np.float64)  # (n, d)
-            V32 = V64.astype(np.float32)
-            v_sq32 = (V32 * V32).sum(axis=1)
-            best_i = np.empty(n, dtype=np.int64)
-            best_d = np.empty(n, dtype=np.float64)
-            for lo in range(0, n, row_block):
-                hi = min(lo + row_block, n)
-                b = hi - lo
-                blk = V32[lo:hi]
-                # float32 sgemm NOMINATES candidates; exactness comes
-                # from the f64 rerank below. Selection is min + an
-                # epsilon band, NOT a fixed top-k argpartition: the
-                # per-row partition of the (block × m) matrix measured
-                # 10× the sgemm itself at m = 10⁴, while min + compare
-                # are single cheap passes. The band provably contains
-                # the true f64 argmin: f32 rounding of the inputs plus
-                # d-term f32 accumulation perturb d² by at most
-                # ~d·ε₃₂·2(‖v‖²+max‖c‖²) ≈ 8e-6·(v_sq+c_sq_max); the
-                # 1e-3 band is a 100× margin, and any centroid inside
-                # it gets the exact rerank anyway (typically 1 row).
-                d2 = (
-                    (blk * blk).sum(axis=1)[:, None]
-                    - 2.0 * (blk @ C32.T)
-                    + c_sq32[None, :]
-                )
-                thr = d2.min(axis=1) + (
-                    1e-3 * (v_sq32[lo:hi] + c_sq32_max) + 1e-6
-                )
-                rows, cols = np.nonzero(d2 <= thr[:, None])
-                # exact f64 rerank of the band; winner by (dist, sid) —
-                # identical tie-break to the fold's struct ordering
-                diff = V64[lo:hi][rows] - C64[cols]
-                d64 = (diff * diff).sum(axis=1)
-                order = np.lexsort((cols, d64, rows))
-                uniq, first = np.unique(rows[order], return_index=True)
-                if len(uniq) != b:
-                    raise ValueError(
-                        "assign_to_centroids(impl='arrow'): non-finite "
-                        "distance for some rows (NaN/Inf embedding or "
-                        "centroid?)"
-                    )
-                win = order[first]
-                best_i[lo:hi] = cols[win]
-                best_d[lo:hi] = np.sqrt(np.maximum(d64[win], 0.0))
-            arrays = [
-                rb.column(id_col),  # pass-through, original type
-                pa.array(sids[best_i].astype(np.int32), type=pa.int32()),
-                pa.array(best_d, type=pa.float64()),
-            ]
-            names = [id_col, centroid_id, "dist"]
-            for c in out_extra:
-                arrays.append(rb.column(c))  # zero-copy pass-through
-                names.append(c)
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+        from big_ann_spark.functions.arrowio import list_col_matrix
 
-    return src.mapInArrow(part, schema=out_schema)
+        cids, cmat = bc.value
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            top, dist = nearest_centroids(list_col_matrix(rb, vec_col), cids, cmat, 1)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(id_col),
+                    pa.array(cids[top[:, 0]], type=sid_arrow),
+                    pa.array(dist[:, 0], type=pa.float64()),
+                    *(rb.column(c) for c in out_extra),
+                ],
+                names=[id_col, centroid_id, "dist", *out_extra],
+            )
+
+    return src.mapInArrow(part, schema=schema)
 
 
 def shard_histogram(assignments: DataFrame) -> DataFrame:
@@ -305,7 +202,6 @@ def write_sharded(
     vec_col: str = "embedding",
     sq8_ranges: tuple[list[float], list[float]] | None = None,
     pq_codebooks: list[list[list[float]]] | None = None,
-    pq_encode_impl: str = "fold",
     opq_rotation: list[list[float]] | None = None,
     binary_thresholds: list[float] | None = None,
 ) -> None:
@@ -365,35 +261,19 @@ def write_sharded(
     # candidate pass then scans pq_codes ONLY (~d·4/m× less IO than
     # raw) and the rerank point-fetches raw rows, like SQ8 but one
     # compression decade further. Composes with sq8_ranges (both code
-    # columns land; search picks by codec).
+    # columns land; search picks by codec). The codes come from the
+    # numpy kernel upserts encode with (pq.with_pq_codes_arrow), after
+    # the optional OPQ rotation.
     if pq_codebooks is not None:
         from big_ann_spark.operators.pq import (
-            pq_encode_col,
             save_pq_codebooks,
             save_rotation,
             with_pq_codes_arrow,
         )
 
-        if opq_rotation is not None and pq_encode_impl != "arrow":
-            # no expression form exists for rotate-then-encode (d²
-            # multiply-adds per row is past the codegen budget)
-            raise ValueError("opq_rotation requires pq_encode_impl='arrow'")
-        if pq_encode_impl == "arrow":
-            # bulk-encode path: the expression tree's m·k structs
-            # measured 6× the rest of a 2M build; the numpy kernel is
-            # bit-equal (parity-tested) at memory bandwidth
-            with_vec = with_pq_codes_arrow(
-                with_vec, pq_codebooks, vec_col=vec_col, rotation=opq_rotation
-            )
-        elif pq_encode_impl == "fold":
-            with_vec = with_vec.withColumn(
-                "pq_codes",
-                pq_encode_col(vec_col, pq_codebooks).cast("array<smallint>"),
-            )
-        else:
-            raise ValueError(
-                f"pq_encode_impl must be 'fold' or 'arrow', got {pq_encode_impl!r}"
-            )
+        with_vec = with_pq_codes_arrow(
+            with_vec, pq_codebooks, vec_col=vec_col, rotation=opq_rotation
+        )
         save_pq_codebooks(
             assignments.sparkSession, f"{path}/pq_codebooks.parquet", pq_codebooks
         )
@@ -604,8 +484,7 @@ def kanndi_shard(
     Each round opens ``seeds_per_round`` shards at once (the reference
     also fills many shards per batch pass): S seeds = first S unassigned
     ids → ``nearest_admitting_seed`` (a zero-exchange broadcast-argmin
-    projection — the assign_to_centroids pattern; seeds pinned to their
-    own shard) → per-shard capacity cap (W5: row_number over distance ≤
+    projection; seeds pinned to their own shard) → per-shard capacity cap (W5: row_number over distance ≤
     capacity — the ONE genuinely-windowed step, bounded by capacity) →
     anti-join. ⌈M/S⌉ rounds of bounded DataFrame jobs, no per-point
     Python loop, one exchange per round instead of three. Exact output equality with the reference is
@@ -655,8 +534,8 @@ def kanndi_shard(
             ],
             "_cell int, centroid array<float>",
         )
-        # zero-exchange argmin projection; vec rides the projection so
-        # no join-back is needed
+        # zero-exchange argmin pass; vec rides along, so no join-back
+        # is needed
         pts = assign_to_centroids(
             pts, cells, id_col="id", vec_col="vec",
             centroid_id="_cell", extra_cols=["vec"],

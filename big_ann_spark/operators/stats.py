@@ -152,76 +152,43 @@ def ks_two_sample(
     *,
     x_col: str = "x",
     grp_col: str = "grp",
-    ranged: bool = True,
     n_bins: int = 64,
-    lazy_counts: bool = False,
 ) -> DataFrame:
     """A10: two-sample KS statistic over a tagged value table
     (x, grp∈{0,1}) → one row (ks_stat). D = sup_x |ECDF_0 - ECDF_1|,
-    ECDFs via RANGE windows so tied values count correctly.
+    ECDFs via RANGE windows so tied values count correctly. The
+    running counts decompose into per-value-bin RANGE windows plus
+    driver-prefix carries (operators.ranged), so the ECDF never sorts
+    on a single task; the counts are integers, so D is exact.
 
-    ``ranged=True`` (default): the running counts decompose into
-    per-value-bin RANGE windows plus driver-prefix carries
-    (operators.ranged) — the ECDF never sorts on a single task. The
-    counts are integers either way, so the statistic is bit-identical
-    to the global-window form.
-
-    ``lazy_counts=True`` (r14): the group totals fold into the plan as
-    a broadcast one-row aggregate instead of an EAGER driver collect —
-    one fewer serial job per call. Identical arithmetic (the same
-    double divisors); the only behavioral difference is the empty-group
-    guard: the eager path raises at build time, the lazy path yields a
-    NULL ks_stat at execution — pass it only where both groups are
-    non-empty by construction."""
+    The group totals are collected first: an empty group raises
+    ``ValueError`` instead of dividing to a NULL statistic."""
     from pyspark.sql import Window
 
-    if lazy_counts:
-        cnts = v.agg(
-            F.count(F.when(F.col(grp_col) == 0, 1)).cast("double").alias("_ks_n0"),
-            F.count(F.when(F.col(grp_col) == 1, 1)).cast("double").alias("_ks_n1"),
+    from big_ann_spark.operators.ranged import add_value_bins, bin_prefix_table
+
+    counts = v.agg(
+        F.count(F.when(F.col(grp_col) == 0, 1)).cast("double").alias("n0"),
+        F.count(F.when(F.col(grp_col) == 1, 1)).cast("double").alias("n1"),
+    ).collect()[0]
+    if not counts["n0"] or not counts["n1"]:
+        raise ValueError(
+            f"ks_two_sample: both groups must be non-empty "
+            f"(n0={int(counts['n0'])}, n1={int(counts['n1'])})"
         )
-        n0_col, n1_col = F.col("_ks_n0"), F.col("_ks_n1")
-    else:
-        counts = v.agg(
-            F.count(F.when(F.col(grp_col) == 0, 1)).cast("double").alias("n0"),
-            F.count(F.when(F.col(grp_col) == 1, 1)).cast("double").alias("n1"),
-        ).collect()[0]
-        if not counts["n0"] or not counts["n1"]:
-            # an empty side would silently divide to null downstream
-            raise ValueError(
-                f"ks_two_sample: both groups must be non-empty "
-                f"(n0={int(counts['n0'])}, n1={int(counts['n1'])})"
-            )
-        cnts = None
-        n0_col, n1_col = F.lit(counts["n0"]), F.lit(counts["n1"])
     is0 = F.when(F.col(grp_col) == 0, 1).otherwise(0)
     is1 = F.when(F.col(grp_col) == 1, 1).otherwise(0)
-    if ranged:
-        from big_ann_spark.operators.ranged import add_value_bins, bin_prefix_table
-
-        b = add_value_bins(v, x_col, n_bins)
-        carry = bin_prefix_table(
-            b, {"c0": (F.sum(is0), "sum"), "c1": (F.sum(is1), "sum")}
-        )
-        w_loc = (
-            Window.partitionBy("_bin")
-            .orderBy(x_col)
-            .rangeBetween(Window.unboundedPreceding, 0)
-        )
-        e = b.join(F.broadcast(carry), "_bin", "left").select(
-            (F.sum(is0).over(w_loc) + F.coalesce(F.col("_pfx_c0"), F.lit(0))).alias("c0"),
-            (F.sum(is1).over(w_loc) + F.coalesce(F.col("_pfx_c1"), F.lit(0))).alias("c1"),
-        )
-    else:
-        w = Window.orderBy(x_col).rangeBetween(Window.unboundedPreceding, 0)
-        e = v.select(
-            F.sum(is0).over(w).alias("c0"),
-            F.sum(is1).over(w).alias("c1"),
-        )
-    if cnts is not None:
-        e = e.crossJoin(F.broadcast(cnts))
+    b = add_value_bins(v, x_col, n_bins)
+    carry = bin_prefix_table(b, {"c0": (F.sum(is0), "sum"), "c1": (F.sum(is1), "sum")})
+    w_loc = Window.partitionBy("_bin").orderBy(x_col).rangeBetween(Window.unboundedPreceding, 0)
+    e = b.join(F.broadcast(carry), "_bin", "left").select(
+        (F.sum(is0).over(w_loc) + F.coalesce(F.col("_pfx_c0"), F.lit(0))).alias("c0"),
+        (F.sum(is1).over(w_loc) + F.coalesce(F.col("_pfx_c1"), F.lit(0))).alias("c1"),
+    )
     return e.agg(
-        F.max(F.abs(F.col("c0") / n0_col - F.col("c1") / n1_col)).alias("ks_stat")
+        F.max(
+            F.abs(F.col("c0") / F.lit(counts["n0"]) - F.col("c1") / F.lit(counts["n1"]))
+        ).alias("ks_stat")
     )
 
 

@@ -240,10 +240,11 @@ def upsert_vectors(
     ``centroids.parquet`` written at build — upserts never move the
     centroids, exactly like adding to a trained IVF index; recall for
     upserted points is a property of that frozen routing), by
-    ``ann.nearest_centroids``: the shard and distance
-    ``assign_to_centroids`` computes, bit for bit. The centroid matrix
-    is read once per state of ``centroids.parquet``
-    (``ann.centroid_matrix``). Code columns (SQ8/PQ/OPQ/binary) are
+    ``knn.nearest_centroids``, the kernel of ``assign_to_centroids`` and
+    of search routing: the upsert lands in the shard a search for the
+    vector probes first. A vector that is not finite fails the upsert
+    before anything is written. The centroid matrix is read once per
+    state of ``centroids.parquet`` (``ann.centroid_matrix``). Code columns (SQ8/PQ/OPQ/binary) are
     encoded on the driver under the frozen sidecars, bit-equal to the
     build's encoders. The op lands in one write job. Duplicate ids
     WITHIN one batch collapse to their first row — between batches,
@@ -258,11 +259,8 @@ def upsert_vectors(
 
     from big_ann_spark.functions.arrowio import int_col, list_col_matrix, matrix_list_col
     from big_ann_spark.operators import tag_ops
-    from big_ann_spark.operators.ann import (
-        centroid_matrix,
-        collect_to_driver,
-        nearest_centroids,
-    )
+    from big_ann_spark.operators.ann import centroid_matrix, collect_to_driver
+    from big_ann_spark.operators.knn import nearest_centroids
 
     if tags_col is not None:
         if not tag_ops.has_tag_artifacts(spark, path):
@@ -586,7 +584,6 @@ def compact_vector_layout(
         id_col=id_col, vec_col=payload,
         sq8_ranges=ranges, pq_codebooks=books, binary_thresholds=thr,
         opq_rotation=rot,
-        pq_encode_impl="arrow" if rot is not None else "fold",
     )
     if not has_raw and _has_sq8(spark, src_path):
         # codes-only layout: the codes ARE the payload; carry the

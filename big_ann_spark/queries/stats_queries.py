@@ -171,8 +171,8 @@ def dim_pair_stats(spark, sf_dir):
       84-113``); exact count/n ECDF ratios hash-match the SQL window
       form bit-for-bit.
     - ``ks_ranged``: the SAME (0,1) statistic via the range-binned
-      two-pass ECDF (operators.stats.ks_two_sample, ranged=True — no
-      global sort anywhere); equality with the window value in one
+      two-pass ECDF (operators.stats.ks_two_sample — no global sort
+      anywhere); equality with the window value in one
       hash is exactly the equivalence the 100 TB path needs.
     - ``union_var``: the reference's "covariance" (``variance.py:
       112-135``: np.var of two concatenated dim columns) via combined
@@ -192,10 +192,7 @@ def dim_pair_stats(spark, sf_dir):
     v = emb.select(F.col("embedding")[0].cast("double").alias("x"), F.lit(0).alias("grp")).union(
         emb.select(F.col("embedding")[1].cast("double").alias("x"), F.lit(1).alias("grp"))
     )
-    # lazy_counts: both groups are embedding dims of a non-empty
-    # table, so the eager empty-group guard buys nothing here and its
-    # collect was a serial driver job per build
-    ks_r = ks_two_sample(v, ranged=True, lazy_counts=True).select(
+    ks_r = ks_two_sample(v).select(
         F.lit("ks_ranged").alias("variant"),
         F.lit(0).alias("pos_i"),
         F.lit(1).alias("pos_j"),

@@ -319,7 +319,6 @@ def _live_view_variant(spark, events):
             idx,
             cents,
             op_col="op",
-            dim=2,
         )
     return VI.live_vectors(spark, idx).select(
         F.lit("live_view").alias("variant"),

@@ -7,7 +7,7 @@ layout once, offline (``shard_by_distance.py``); the streaming track is
 the companion benchmark the same family defines for indexes that must
 absorb updates. This module composes pieces that already exist:
 
-- **assignment** is the zero-Exchange broadcast-argmin projection from
+- **assignment** is the zero-Exchange broadcast-argmin pass of
   ``operators/sharding.assign_to_centroids`` (centroids are the fixed,
   contractually-small routing table — same contract as batch IVF);
 - **landing** is the engine-wide exactly-once foreachBatch protocol
@@ -54,7 +54,6 @@ def stream_vector_index_ingest(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     op_col: str | None = None,
-    dim: int | None = None,
     _fault_point=None,
 ) -> None:
     """Drive a vector stream into the index at ``path`` (availableNow).
@@ -92,7 +91,7 @@ def stream_vector_index_ingest(
         # cross-multiply duplicate same-batch inserts and could land a
         # vector under the other duplicate's shard
         ins = assign_to_centroids(
-            ins, cent, id_col="vec_id", vec_col="embedding", dim=dim,
+            ins, cent, id_col="vec_id", vec_col="embedding",
             extra_cols=["embedding", "op"],
         ).select("vec_id", "embedding", "op", "shard_id")
         dels = b.filter(F.col("op") == OP_DELETE).select(
@@ -479,7 +478,6 @@ def export_vector_index(
         sq8_ranges=ranges,
         pq_codebooks=books,
         opq_rotation=rotation,
-        pq_encode_impl="arrow" if books is not None else "fold",
         binary_thresholds=thr,
     )
     (

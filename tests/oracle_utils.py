@@ -8,8 +8,20 @@ from __future__ import annotations
 import math
 
 import duckdb
+import numpy as np
 
 from big_ann_spark.catalog import TABLES
+
+
+def ks_two_sample_numpy(x0, x1) -> float:
+    """Two-sample KS statistic sup_x |ECDF_0(x) − ECDF_1(x)| over the
+    merged sample, with ``searchsorted(side="right")`` counts so tied
+    values count together (the statistic of scipy's ``ks_2samp``)."""
+    a, b = np.sort(np.asarray(x0, dtype=np.float64)), np.sort(np.asarray(x1, dtype=np.float64))
+    x = np.concatenate([a, b])
+    ecdf0 = np.searchsorted(a, x, side="right") / len(a)
+    ecdf1 = np.searchsorted(b, x, side="right") / len(b)
+    return float(np.max(np.abs(ecdf0 - ecdf1)))
 
 
 def run_oracle(sql: str, sf_dir: str):

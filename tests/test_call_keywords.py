@@ -1,8 +1,8 @@
-"""Every keyword passed to the exact-kNN, quantized-serving, layout
-write and mutation entry points must exist in the callee's signature — including in scripts
-that no test runs (``tools/``, ``bench.py``), where a deleted parameter
-would otherwise only surface as a TypeError the next time someone
-measures. Static (stdlib ``ast`` + ``inspect.signature``); starts no
+"""Every keyword passed to the exact-kNN, quantized-serving, centroid
+assignment, PQ encode, KS, layout write and mutation entry points must
+exist in the callee's signature — including in scripts that no test
+runs (``tools/``, ``bench.py``), where a deleted parameter would
+otherwise only surface as a TypeError the next time someone measures. Static (stdlib ``ast`` + ``inspect.signature``); starts no
 Spark session."""
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ import ast
 import inspect
 import pathlib
 
-from big_ann_spark.operators import ann, knn, sharding, vector_ops
+from big_ann_spark.operators import ann, knn, pq, sharding, stats, vector_ops
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 CALLEES = {
@@ -20,6 +20,9 @@ CALLEES = {
     "sq8_pool": ann.sq8_pool,
     "pq_pool": ann.pq_pool,
     "write_sharded": sharding.write_sharded,
+    "assign_to_centroids": sharding.assign_to_centroids,
+    "pq_encode": pq.pq_encode,
+    "ks_two_sample": stats.ks_two_sample,
     "upsert_vectors": vector_ops.upsert_vectors,
     "delete_vectors": vector_ops.delete_vectors,
     "compact_in_place": vector_ops.compact_in_place,
@@ -73,10 +76,17 @@ def test_stale_keyword_is_reported():
         "ANN.sq8_pool(r, s, p, 20, routed_rows=None)\n"
         "VO.upsert_vectors(s, p, v, assign_impl='arrow')\n"
         "write_sharded(a, e, p, repartition_to=256, sq8_ranges=r)\n"
+        "SH.assign_to_centroids(e, c, impl='arrow', extra_cols=['v'])\n"
+        "write_sharded(a, e, p, pq_codebooks=b, pq_encode_impl='arrow')\n"
+        "ks_two_sample(v, ranged=True, lazy_counts=True, n_bins=13)\n"
     )
     assert stale_keywords(src, "x.py") == [
         "x.py:1: exact_knn(metric=)",
         "x.py:2: ivf_search_from_disk(max_pushdown=)",
         "x.py:4: upsert_vectors(assign_impl=)",
         "x.py:5: write_sharded(repartition_to=)",
+        "x.py:6: assign_to_centroids(impl=)",
+        "x.py:7: write_sharded(pq_encode_impl=)",
+        "x.py:8: ks_two_sample(ranged=)",
+        "x.py:8: ks_two_sample(lazy_counts=)",
     ]

@@ -147,14 +147,15 @@ def test_ranged_ks_equivalence(spark, sf_dir):
 
     from big_ann_spark.catalog import load_table
     from big_ann_spark.operators.stats import ks_two_sample
+    from tests.oracle_utils import ks_two_sample_numpy
 
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select(F.col("embedding")[0].cast("double").alias("x"), F.lit(0).alias("grp")).union(
         emb.select(F.col("embedding")[1].cast("double").alias("x"), F.lit(1).alias("grp"))
     )
-    g = ks_two_sample(v, ranged=False).collect()[0]["ks_stat"]
-    r = ks_two_sample(v, ranged=True, n_bins=13).collect()[0]["ks_stat"]
-    assert g == r
+    x = {g: [r["x"] for r in v.filter(F.col("grp") == g).collect()] for g in (0, 1)}
+    r = ks_two_sample(v, n_bins=13).collect()[0]["ks_stat"]
+    assert r == ks_two_sample_numpy(x[0], x[1])
 
 
 def test_merge_islands_multi_matches_singles(spark, sf_dir):

@@ -172,22 +172,50 @@ def test_cli_build_pq_refine_and_search(spark, sf_dir, tmp_path):
     assert res.count() == res.select("qid").distinct().count() * 5
 
 
+def _pq_encode_fold(vec_col: str, codebooks):
+    """The reference PQ encoder as a Spark expression: per subvector,
+    ``array_min(struct(d, c))`` over the literal codebook, ``d`` the
+    squared L2 folded left to right from 0.0, ties to the lower code."""
+    sub = len(codebooks[0][0])
+    v = F.col(vec_col).cast("array<double>")
+    codes = []
+    for j, book in enumerate(codebooks):
+        vs = F.slice(v, j * sub + 1, sub)
+        dists = [
+            F.struct(
+                F.aggregate(
+                    F.zip_with(
+                        vs, F.array(*[F.lit(x) for x in cent]), lambda a, b: (a - b) * (a - b)
+                    ),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ).alias("d"),
+                F.lit(c).alias("c"),
+            )
+            for c, cent in enumerate(book)
+        ]
+        codes.append(F.array_min(F.array(*dists))["c"])
+    return F.array(*codes)
+
+
 def test_pq_encode_arrow_equals_fold(spark, sf_dir):
-    """Bulk (numpy) encode must assign the IDENTICAL code per
-    subvector as the expression form — same left-to-right arithmetic,
-    same lowest-code tie-break."""
+    """The numpy encoder (``pq_encode``, and ``with_pq_codes_arrow``
+    that builds and upserts use) assigns the IDENTICAL code per
+    subvector as the Spark-expression fold — same left-to-right
+    arithmetic, same lowest-code tie-break."""
     from big_ann_spark.operators.pq import pq_encode, with_pq_codes_arrow
 
     emb, cents, path, books = _pq_layout(spark, sf_dir)
     fold = {
-        r["id"]: list(r["codes"])
-        for r in pq_encode(emb, books).collect()
+        r["vec_id"]: list(r["codes"])
+        for r in emb.select("vec_id", _pq_encode_fold("embedding", books).alias("codes")).collect()
     }
+    encoded = {r["id"]: list(r["codes"]) for r in pq_encode(emb, books).collect()}
     arrow = {
         r["vec_id"]: list(r["pq_codes"])
         for r in with_pq_codes_arrow(emb, books).select("vec_id", "pq_codes").collect()
     }
-    assert fold == {k: v for k, v in arrow.items()}
+    assert fold == encoded == arrow
     assert len(fold) == emb.count()
 
 
@@ -208,7 +236,7 @@ def _opq_layout(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="big_ann_opq_disk_") + "/layout"
     SH.write_sharded(
         assign, emb, path,
-        pq_codebooks=books, opq_rotation=R, pq_encode_impl="arrow",
+        pq_codebooks=books, opq_rotation=R,
     )
     cents.write.mode("overwrite").parquet(f"{path}/centroids.parquet")
     got = (emb, cents, path)

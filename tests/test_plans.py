@@ -140,21 +140,19 @@ def test_whole_stage_codegen_on_relational(spark, sf_dir):
 
 
 def test_centroid_assignment_zero_exchange(spark, sf_dir):
-    """assign_to_centroids must be broadcast + projection only: no
-    Exchange, no Window (VERDICT r1 §4 — the rank-1 window formulation
-    hash-partitioned N×M scored rows by point id)."""
+    """assign_to_centroids must be one pass over the scan: no Exchange,
+    no Window (a rank-1 window formulation hash-partitions the N×M
+    scored rows by point id)."""
     from big_ann_spark.catalog import load_table
     from big_ann_spark.operators import sharding as SH
 
     emb = load_table(spark, sf_dir, "embeddings")
     assign = SH.assign_to_centroids(emb, SH.label_centroids(emb))
     plan = _plan(assign)
-    # the centroid build aggregates (its own tiny exchange); the
-    # assignment side after BroadcastExchange must project straight off
-    # the scan — no hash exchange of the scored rows, no window
-    after_bcast = plan.split("BroadcastExchange")[0]
+    # the centroid table is read on the driver and broadcast as a
+    # matrix, so no exchange of any kind is left in the plan
     assert "Window" not in plan
-    assert "Exchange hashpartitioning" not in after_bcast
+    assert "Exchange" not in plan
 
 
 def test_kanndi_round_selection_zero_exchange(spark, sf_dir):

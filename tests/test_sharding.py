@@ -33,23 +33,18 @@ def test_assignment_matches_numpy_argmin(spark, emb):
         assert abs(r["dist"] - dists[best]) < 1e-9
 
 
-def test_assignment_arrow_matches_fold(spark, emb):
-    """The BLAS arrow assignment (large-m scale path) must agree with
-    the codegen fold on shards, distances, and carried payload."""
-    cents = SH.label_centroids(emb)
-
-    def norm(df):
-        return sorted(
-            (r["vec_id"], r["shard_id"], round(r["dist"], 9), r["lab"])
-            for r in df.collect()
-        )
-
-    pts = emb.withColumn("lab", (F.col("vec_id") % 5).cast("int"))
-    fold = SH.assign_to_centroids(pts, cents, extra_cols=["lab"])
-    arrow = SH.assign_to_centroids(pts, cents, extra_cols=["lab"], impl="arrow")
-    assert norm(fold) == norm(arrow)
-    with pytest.raises(ValueError, match="impl"):
-        SH.assign_to_centroids(pts, cents, impl="nope")
+def test_assignment_of_a_non_finite_vector_fails(spark):
+    """A vector that is not finite has no nearest centroid: the
+    assignment fails loudly instead of landing it in some shard."""
+    cents = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 1.0])], "shard_id int, centroid array<double>"
+    )
+    pts = spark.createDataFrame(
+        [(1, [0.1, 0.2]), (2, [float("inf"), 0.0]), (3, [0.9, 0.8])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(Exception, match="not finite"):
+        SH.assign_to_centroids(pts, cents).collect()
 
 
 def test_kmeans_shard_shapes(spark, emb):

@@ -64,7 +64,7 @@ def test_live_view_insert_delete_reinsert(spark):
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
     VI.stream_vector_index_ingest(
-        _stream(spark, src), path, _centroids(spark), op_col="op", dim=4
+        _stream(spark, src), path, _centroids(spark), op_col="op"
     )
     live = {r.vec_id for r in VI.live_vectors(spark, path).collect()}
     assert live == {1, 2, 3, 101, 201}  # 102 deleted, 2 revived
@@ -72,7 +72,7 @@ def test_live_view_insert_delete_reinsert(spark):
     # delete-wins inside one batch: insert+delete of the same id
     _write_batches(spark, src, [_rows([301]) + _rows([301], op="delete")])
     VI.stream_vector_index_ingest(
-        _stream(spark, src), path, _centroids(spark), op_col="op", dim=4
+        _stream(spark, src), path, _centroids(spark), op_col="op"
     )
     live = {r.vec_id for r in VI.live_vectors(spark, path).collect()}
     assert 301 not in live
@@ -94,7 +94,7 @@ def test_search_matches_batch_ivf_on_live_rows(spark):
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
     cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op", dim=4)
+    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
 
     queries = spark.createDataFrame(
         [(0, _vec(1)), (1, _vec(101))], "qid long, qvec array<float>"
@@ -116,7 +116,7 @@ def test_search_matches_batch_ivf_on_live_rows(spark):
     batch = spark.createDataFrame(
         [(i, _vec(i), "insert") for i in sorted(live_ids)], _SCHEMA
     ).drop("op")
-    asg = assign_to_centroids(batch, cents, dim=4).select("vec_id", "shard_id")
+    asg = assign_to_centroids(batch, cents).select("vec_id", "shard_id")
     sharded = batch.join(asg, "vec_id")
     want = sorted(
         map(
@@ -145,7 +145,7 @@ def test_search_plan_is_partition_pruned(spark):
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
     cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op", dim=4)
+    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
 
     queries = spark.createDataFrame([(0, _vec(1))], "qid long, qvec array<float>")
     out = VI.search_index(spark, path, queries, cents, k=3, nprobe=2, dim=4)
@@ -177,7 +177,7 @@ def test_search_state_reuse_and_full_resolution_agree(spark):
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
     cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op", dim=4)
+    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
 
     state = VI.prepare_search(spark, path)
     contested, resolved = state
@@ -229,7 +229,7 @@ def test_live_view_many_batches_and_crashed_tail(spark):
     _write_batches(spark, src, batches)
     path = tempfile.mkdtemp(prefix="vi_idx_")
     cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op", dim=4)
+    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
 
     from big_ann_spark.streaming.sink import uncommitted_batch_ids
 
@@ -262,7 +262,7 @@ def test_duplicate_same_batch_insert_keeps_vector_shard_consistent(spark):
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
     VI.stream_vector_index_ingest(
-        _stream(spark, src), path, _centroids(spark), op_col="op", dim=4
+        _stream(spark, src), path, _centroids(spark), op_col="op"
     )
     raw = spark.read.parquet(f"{path}/data").filter(F.col("vec_id") == 7).collect()
     assert len(raw) == 2
@@ -284,7 +284,7 @@ def test_empty_index_and_unknown_op(spark):
     _write_batches(spark, src, [[(1, _vec(1), "Insert")]])
     with pytest.raises(Exception, match="unknown op"):
         VI.stream_vector_index_ingest(
-            _stream(spark, src), fresh, _centroids(spark), op_col="op", dim=4
+            _stream(spark, src), fresh, _centroids(spark), op_col="op"
         )
 
 
@@ -293,7 +293,7 @@ def test_compact_fully_deleted_index_is_empty_not_broken(spark):
     _write_batches(spark, src, [_rows([1, 2]), _rows([1, 2], op="delete")])
     path = tempfile.mkdtemp(prefix="vi_idx_")
     VI.stream_vector_index_ingest(
-        _stream(spark, src), path, _centroids(spark), op_col="op", dim=4
+        _stream(spark, src), path, _centroids(spark), op_col="op"
     )
     dst = tempfile.mkdtemp(prefix="vi_cmp_") + "/idx"
     assert VI.compact_index(spark, path, dst) == 0
@@ -309,7 +309,7 @@ def test_compact_folds_tombstones_and_preserves_live_view(spark):
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
     cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op", dim=4)
+    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
     before = sorted(map(tuple, VI.live_vectors(spark, path).collect()))
 
     dst = tempfile.mkdtemp(prefix="vi_cmp_") + "/idx"
@@ -326,7 +326,7 @@ def test_compact_folds_tombstones_and_preserves_live_view(spark):
     # and must NOT be skip-replayed as the epoch base
     src2 = tempfile.mkdtemp(prefix="vi_src_")
     _write_batches(spark, src2, [_rows([301]) + _rows([1], op="delete")])
-    VI.stream_vector_index_ingest(_stream(spark, src2), dst, cents, op_col="op", dim=4)
+    VI.stream_vector_index_ingest(_stream(spark, src2), dst, cents, op_col="op")
     live = {r.vec_id for r in VI.live_vectors(spark, dst).collect()}
     assert live == ({t[0] for t in before} - {1}) | {301}
 
@@ -367,7 +367,7 @@ def test_compact_if_needed_threshold(spark, tmp_path):
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
     cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op", dim=4)
+    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
 
     # 3 contested of 13 committed rows (~23%): healthy at a 0.5
     # threshold, compacts at 0.05
@@ -426,13 +426,13 @@ def test_crash_restart_exactly_once(spark, crash_point):
 
     try:
         VI.stream_vector_index_ingest(
-            _stream(spark, src), path, cents, op_col="op", dim=4, _fault_point=fault
+            _stream(spark, src), path, cents, op_col="op", _fault_point=fault
         )
     except Exception:
         pass  # the injected crash surfaces through the stream
 
     VI.stream_vector_index_ingest(
-        _stream(spark, src), path, cents, op_col="op", dim=4
+        _stream(spark, src), path, cents, op_col="op"
     )
     live = {r.vec_id for r in VI.live_vectors(spark, path).collect()}
     assert live == {1, 10, 20}
@@ -464,7 +464,7 @@ def test_live_view_as_of_snapshots(spark):
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
     VI.stream_vector_index_ingest(
-        _stream(spark, src), path, _centroids(spark), op_col="op", dim=4
+        _stream(spark, src), path, _centroids(spark), op_col="op"
     )
 
     want = {
@@ -503,7 +503,7 @@ def test_export_to_batch_layout(spark, tmp_path):
     )
     path = tempfile.mkdtemp(prefix="vi_exp_idx_")
     cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op", dim=4)
+    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
 
     dst = str(tmp_path / "batch_idx")
     n = VI.export_vector_index(spark, path, dst, cents)

@@ -859,11 +859,14 @@ def _op_files(path, op_id):
 
 
 def test_upsert_assignment_bit_equal_to_fold_on_near_ties(spark):
-    """Driver assignment equals assign_to_centroids' fold, shard and
-    distance bit for bit: points 1e-16 apart around the plane
-    equidistant from two centroids (ties go to the lower shard id), and
-    a batch-internal duplicate id keeps its first row."""
+    """Upserts and the build's assign_to_centroids both pick the shard
+    and distance of ``route_queries``' Spark ``l2_distance`` fold, bit
+    for bit: points 1e-16 apart around the plane equidistant from two
+    centroids (ties go to the lower shard id), and a batch-internal
+    duplicate id keeps its first row."""
     import numpy as np
+
+    from big_ann_spark.functions.vector import l2_distance
 
     d = 8
     e = np.eye(d)
@@ -884,17 +887,34 @@ def test_upsert_assignment_bit_equal_to_fold_on_near_ties(spark):
         "vec_id long, embedding array<double>",
     )
     VO.upsert_vectors(spark, path, vecs)
-    want = SH.assign_to_centroids(
-        spark.createDataFrame([(int(i), [float(x) for x in v]) for i, v in rows], vecs.schema),
-        cents,
+    ladder = spark.createDataFrame([(int(i), [float(x) for x in v]) for i, v in rows], vecs.schema)
+    queries = ladder.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
+    want = ANN.route_queries(queries, cents, 1).join(cents, "shard_id").select(
+        "qid", "shard_id", l2_distance("qvec", "centroid").alias("dist")
     )
-    want = sorted((r["vec_id"], r["shard_id"], r["dist"]) for r in want.collect())
+    want = sorted(map(tuple, want.collect()))
     ops = spark.read.parquet(f"{path}/ops")
     got = sorted((r["vec_id"], r["shard_id"], r["dist"]) for r in ops.collect())
     assert got == want
+    built = SH.assign_to_centroids(ladder, cents).collect()
+    assert sorted((r["vec_id"], r["shard_id"], r["dist"]) for r in built) == want
     shard = {i: s for i, s, _ in got}
     assert shard[13] == 0  # an exact tie goes to the lower shard id
     assert {shard[i] for i in range(10, 17)} == {0, 1}  # the ladder crosses over
+
+
+def test_upsert_of_a_non_finite_vector_fails_before_writing(spark, sf_dir):
+    """A NaN vector has no nearest centroid: the upsert fails loudly and
+    leaves no op, commit marker or ops/_mb= directory in the ledger."""
+    import os
+
+    emb, _, path = _build_layout(spark, sf_dir)
+    d = len(emb.first()["embedding"])
+    nan = spark.createDataFrame([(10**9, [float("nan")] * d)], emb.schema)
+    with pytest.raises(ValueError, match="not finite"):
+        VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") < 3).unionByName(nan))
+    assert not os.path.exists(f"{path}/ops") and not os.path.exists(f"{path}/_ops")
+    assert VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") < 3)) == 0
 
 
 @pytest.mark.parametrize("codec", ["sq8", "pq", "opq", "binary"])
@@ -918,7 +938,6 @@ def test_upserted_codes_equal_build_encoders(spark, sf_dir, codec):
         kw["pq_codebooks"] = rng.normal(size=(8, 16, 8)).tolist()
         if codec == "opq":
             kw["opq_rotation"] = np.linalg.qr(rng.normal(size=(64, 64)))[0].tolist()
-            kw["pq_encode_impl"] = "arrow"
     path = tempfile.mkdtemp(prefix=f"big_ann_vec_{codec}_") + "/layout"
     SH.write_sharded(assign, emb, path, **kw)
     cents.write.parquet(f"{path}/centroids.parquet")

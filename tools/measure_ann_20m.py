@@ -86,7 +86,7 @@ def main() -> None:
         emb = spark.read.parquet(emb_path)
         t0 = time.perf_counter()
         asg = assign_to_centroids(
-            emb, cents, impl="arrow", extra_cols=["embedding"]
+            emb, cents, extra_cols=["embedding"]
         )
         write_sharded(asg, emb, idx_path)
         print(f"build n={n} m={m}: {time.perf_counter()-t0:.1f}s")

@@ -138,7 +138,7 @@ def main() -> None:
 
         emb = spark.read.parquet(emb_path)
         t0 = time.perf_counter()
-        asg = assign_to_centroids(emb, cents, impl="arrow", extra_cols=["embedding"])
+        asg = assign_to_centroids(emb, cents, extra_cols=["embedding"])
         write_sharded(asg, emb, pristine)
         cents.coalesce(4).write.mode("overwrite").parquet(
             f"{pristine}/centroids.parquet"

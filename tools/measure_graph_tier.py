@@ -248,7 +248,7 @@ def main() -> None:
         emb = spark.read.parquet(emb_path)
         t0 = time.perf_counter()
         asg = assign_to_centroids(
-            emb, cents, impl="arrow", extra_cols=["embedding"]
+            emb, cents, extra_cols=["embedding"]
         ).localCheckpoint()
         write_sharded(asg, emb, ivf)
         cents.coalesce(4).write.mode("overwrite").parquet(f"{ivf}/centroids.parquet")
@@ -264,7 +264,7 @@ def main() -> None:
         books = train_pq(sample, m=8, k=256)
         write_sharded(
             asg, emb, ivf_pq,
-            pq_codebooks=books, pq_encode_impl="arrow",
+            pq_codebooks=books,
         )
         cents.coalesce(4).write.mode("overwrite").parquet(
             f"{ivf_pq}/centroids.parquet"
@@ -277,7 +277,7 @@ def main() -> None:
         print(f"train_opq: plain mse {pmse:.4f} -> opq mse {omse:.4f}")
         write_sharded(
             asg, emb, ivf_opq,
-            pq_codebooks=obooks, opq_rotation=R, pq_encode_impl="arrow",
+            pq_codebooks=obooks, opq_rotation=R,
         )
         cents.coalesce(4).write.mode("overwrite").parquet(
             f"{ivf_opq}/centroids.parquet"

@@ -164,14 +164,14 @@ def main() -> None:
 
         emb = spark.read.parquet(emb_path)
         t0 = time.perf_counter()
-        asg = assign_to_centroids(emb, cents, impl="arrow", extra_cols=["embedding"])
+        asg = assign_to_centroids(emb, cents, extra_cols=["embedding"])
         write_sharded(asg, emb, raw_path)
         t1 = time.perf_counter()
         print(f"build raw n={n} m={m}: {t1-t0:.1f}s")
         ranges = train_sq8(emb)
         t2 = time.perf_counter()
         print(f"train_sq8: {t2-t1:.1f}s")
-        asg2 = assign_to_centroids(emb, cents, impl="arrow", extra_cols=["embedding"])
+        asg2 = assign_to_centroids(emb, cents, extra_cols=["embedding"])
         write_sharded(asg2, emb, sq8_path, sq8_ranges=ranges)
         t3 = time.perf_counter()
         print(f"build sq8 n={n} m={m}: {t3-t2:.1f}s")
@@ -182,17 +182,17 @@ def main() -> None:
         books = train_pq(emb.limit(200_000), m=8, k=16)
         t4 = time.perf_counter()
         print(f"train_pq (200k sample): {t4-t3:.1f}s")
-        asg3 = assign_to_centroids(emb, cents, impl="arrow", extra_cols=["embedding"])
+        asg3 = assign_to_centroids(emb, cents, extra_cols=["embedding"])
         write_sharded(
             asg3, emb, pq_path,
-            pq_codebooks=books, pq_encode_impl="arrow",
+            pq_codebooks=books,
         )
         t5 = time.perf_counter()
         print(f"build pq n={n} m={m}: {t5-t4:.1f}s")
         from big_ann_spark.operators.pq import train_binary
 
         thr = train_binary(emb)
-        asg4 = assign_to_centroids(emb, cents, impl="arrow", extra_cols=["embedding"])
+        asg4 = assign_to_centroids(emb, cents, extra_cols=["embedding"])
         write_sharded(
             asg4, emb, f"{BASE}/bin_{n}_{m}",
             binary_thresholds=thr,
