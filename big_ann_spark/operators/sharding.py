@@ -205,11 +205,57 @@ def write_sharded(
     opq_rotation: list[list[float]] | None = None,
     binary_thresholds: list[float] | None = None,
 ) -> None:
-    """S7/S9 analog: persist the sharded layout —
-    ``partitionBy(shard_id)`` parquet of (id, vec, dist) plus the
-    assignment histogram. Partition pruning then makes a probe of T
-    shards read only T directories, the Spark-native replacement for
-    per-shard HNSW files.
+    """S7/S9 analog: build the sharded layout — ``write_shards``, then
+    the assignment histogram ``distribution/`` (``_write_distribution``,
+    the reference's distribution CSV, written once when it shards).
+    ``distribution/`` describes the build only: compaction rewrites the
+    shards with ``write_shards`` and leaves none, where a copied one
+    would report stale sizes."""
+    read_schema = write_shards(
+        assignments, emb, path,
+        id_col=id_col, vec_col=vec_col,
+        sq8_ranges=sq8_ranges, pq_codebooks=pq_codebooks,
+        opq_rotation=opq_rotation, binary_thresholds=binary_thresholds,
+    )
+    _write_distribution(assignments.sparkSession, path, read_schema)
+
+
+def _write_distribution(spark, path: str, read_schema: StructType) -> None:
+    """``{path}/distribution/``: the per-shard size and median distance
+    (``shard_histogram``) of the shards just written, as CSV — two Spark
+    jobs. Read back from the layout, not the assignment lineage:
+    ``assignments`` is typically an uncached mapInArrow / KMeans plan,
+    and re-collecting it here silently re-ran the whole assignment a
+    second time (measured: a full extra 20M-row BLAS pass at m = 10⁴).
+    Reading back shard_id+dist is a 2-column pruned scan of what
+    actually landed — with the EXPLICIT schema ``write_shards``
+    returned, so an all-deleted (zero-file) layout yields an empty
+    histogram instead of an inference error."""
+    shard_histogram(
+        spark.read.schema(read_schema)
+        .option("basePath", f"{path}/shards")
+        .parquet(f"{path}/shards")
+        .select("shard_id", "dist")
+    ).write.mode("overwrite").csv(f"{path}/distribution", header=True)
+
+
+def write_shards(
+    assignments: DataFrame,
+    emb: DataFrame,
+    path: str,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    sq8_ranges: tuple[list[float], list[float]] | None = None,
+    pq_codebooks: list[list[list[float]]] | None = None,
+    opq_rotation: list[list[float]] | None = None,
+    binary_thresholds: list[float] | None = None,
+) -> StructType:
+    """Persist the shards of a layout — ``partitionBy(shard_id)``
+    parquet of (id, vec, dist[, codes]) plus the codec sidecars and the
+    schema sidecar — and return the schema a read of the shards infers.
+    Partition pruning then makes a probe of T shards read only T
+    directories, the Spark-native replacement for per-shard HNSW files.
 
     ``assignments`` that already carry ``vec_col`` (the
     ``extra_cols=[vec_col]`` pattern) skip the join-back on ``emb`` —
@@ -225,8 +271,9 @@ def write_sharded(
     shards.
 
     Schemas it already holds are not inferred again: the schema
-    sidecar, the histogram read-back and the read-side schema memo all
-    use the schema of the rows it wrote."""
+    sidecar, the read-side schema memo and the returned schema (which
+    ``_write_distribution`` reads back with) all use the schema of the
+    rows it wrote."""
     with_vec = (
         assignments
         if vec_col in assignments.columns
@@ -337,30 +384,21 @@ def write_sharded(
     # dir schema-uninferable — legal state when compaction folds a
     # layout whose every vector was deleted. One empty parquet file
     # carries the row schema, written from the driver (no Spark job).
-    _write_empty_parquet(spark, with_vec.schema, f"{path}/schema.parquet")
-    # histogram from the JUST-WRITTEN layout, not the assignment
-    # lineage: `assignments` is typically an uncached mapInPandas /
-    # KMeans plan, and re-collecting it here silently re-ran the whole
-    # assignment a second time (measured: a full extra 20M-row BLAS
-    # pass at m = 10⁴). Reading back shard_id+dist is a 2-column
-    # pruned scan of what actually landed — with the EXPLICIT schema,
-    # so an all-deleted (zero-file) layout yields an empty histogram
-    # instead of an inference error.
-    shard_histogram(
-        spark.read.schema(read_schema)
-        .option("basePath", f"{path}/shards")
-        .parquet(f"{path}/shards")
-        .select("shard_id", "dist")
-    ).write.mode("overwrite").csv(f"{path}/distribution", header=True)
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from big_ann_spark.operators import ann as _ann
+    from big_ann_spark.operators import oplayout
+
+    oplayout.write_table_dir(
+        spark, to_arrow_schema(with_vec.schema).empty_table(),
+        f"{path}/schema.parquet", with_vec.schema,
+    )
     # the read-side schema memo, under the exact (base, mtime) key
     # open_probed_shards computes: the first search of a fresh layout
     # then runs no footer-inference job. A same-path rebuild (e.g. a
     # codec change) drops every older entry for this base, and the
     # layout's memoized live frames: the mtime alone is unsafe on
     # filesystems with 1 s mtime granularity.
-    from big_ann_spark.operators import ann as _ann
-    from big_ann_spark.operators import oplayout
-
     oplayout.invalidate_contested_memo(path)
     base = f"{path}/shards"
     for k in [k for k in _ann._SHARDS_SCHEMA_MEMO if k[0] == base]:
@@ -369,6 +407,7 @@ def write_sharded(
     if fs.exists(jbase):
         mtime = int(fs.getFileStatus(jbase).getModificationTime())
         _ann._SHARDS_SCHEMA_MEMO[(base, mtime)] = read_schema
+    return read_schema
 
 
 def _nullable(dt):
@@ -381,27 +420,6 @@ def _nullable(dt):
     if isinstance(dt, ArrayType):
         return ArrayType(_nullable(dt.elementType), True)
     return dt
-
-
-def _write_empty_parquet(spark, schema: StructType, path: str) -> None:
-    """Replace ``path`` with a directory holding one empty parquet file
-    of ``schema``, written through the Hadoop FS API from the driver."""
-    import io
-
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from big_ann_spark.operators import oplayout
-
-    buf = io.BytesIO()
-    pq.write_table(to_arrow_schema(schema).empty_table(), buf)
-    fs, jp = oplayout.fs_path(spark, path)
-    fs.delete(jp, True)
-    out = fs.create(spark._jvm.org.apache.hadoop.fs.Path(jp, "part-00000.parquet"))
-    try:
-        out.write(bytearray(buf.getvalue()))
-    finally:
-        out.close()
 
 
 # --------------------------------------------------------------- KANNDI

@@ -15,8 +15,8 @@ Layout extension (backward compatible — a pristine layout has no
 ``ops/`` directory and every reader short-circuits to the base):
 
 - ``{path}/shards/shard_id=S/…``  — the base build (epoch −1);
-- ``{path}/ops/_mb=<op>/`` — one dir per committed mutation, one file
-  for a batch the driver built, ``shard_id`` a data column: upserts
+- ``{path}/ops/_mb=<op>/`` — one dir per committed mutation holding
+  one file, ``shard_id`` a data column: upserts
   land rows ``(vec_id, dist, embedding[, codes], op='insert',
   shard_id)`` with their assigned shard (routed on the driver);
   deletes land tombstones ``op='delete'`` with the RESERVED shard −1
@@ -26,9 +26,11 @@ Layout extension (backward compatible — a pristine layout has no
   ``_mb=<op>/shard_id=S/`` dirs: they are read and compacted as
   before, and a new op on them is refused until they are compacted
   (Spark cannot infer one table over both layouts);
-- ``{path}/_ops/<op>`` — commit markers (oplayout protocol: dynamic
-  partition overwrite + marker = idempotent replay, crash-invisible
-  half-writes, O(in-flight) NOT-IN for readers).
+- ``{path}/ops/_staging/_mb=<op>/`` — an op file being landed, hidden
+  from readers until one rename moves it into ``ops/_mb=<op>/``;
+- ``{path}/_ops/<op>`` — commit markers (oplayout protocol: a landing
+  that replaces what the id held + marker = idempotent replay,
+  crash-invisible half-writes, O(in-flight) NOT-IN for readers).
 
 Read-side resolution mirrors ``streaming/vector_index.prepare_search``:
 the ops table — op-count-sized, not corpus-sized, read with the op
@@ -42,10 +44,11 @@ stale base rows itself; compaction drops them by a broadcast anti-join
 (``live_probed_view``). A search keeps only its probed shards with a
 partition filter; uncontested vectors never shuffle.
 
-Each mutation lands in one write job as one file (an upsert first
-collects its batch in one more job; a DataFrame of ids to delete is
-deduplicated distributed instead), and compaction rewrites the base
-as one file per shard.
+Each mutation lands as one file. An upsert (whose batch is collected
+in one job) and a delete of listed ids write it from the driver with
+no Spark job (``oplayout.write_table_dir``); a DataFrame of ids to
+delete is deduplicated distributed and lands in one write job.
+Compaction rewrites the base as one file per shard.
 
 At 100 TB: ops cost O(batch) writes; search cost gains an O(contested)
 id filter in the probed scan plus an O(ops-size) side scan —
@@ -60,6 +63,10 @@ from typing import NamedTuple
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType,
+    StringType, StructField, StructType,
+)
 
 from big_ann_spark.operators import oplayout
 
@@ -88,7 +95,8 @@ def _all_op_dirs(path: str, op_id: int) -> list[str]:
     commit marker lands."""
     from big_ann_spark.operators import tag_ops
 
-    return [f"{path}/ops/_mb={op_id}"] + tag_ops.tag_op_dirs(path, op_id)
+    op_dir = f"{path}/ops/_mb={op_id}"
+    return [op_dir, oplayout.staging_dir(op_dir)] + tag_ops.tag_op_dirs(path, op_id)
 
 
 def uncommitted_vector_ops(spark, path: str) -> list[int]:
@@ -107,13 +115,13 @@ def _has_sq8(spark, path: str) -> bool:
 
 # the code column each codec sidecar calls for, and its type in op rows
 _CODE_COLUMNS = (
-    ("sq8_ranges", "codes", "array<smallint>"),
-    ("pq_codebooks", "pq_codes", "array<smallint>"),
-    ("binary_thresholds", "bcodes", "array<bigint>"),
+    ("sq8_ranges", "codes", ArrayType(ShortType())),
+    ("pq_codebooks", "pq_codes", ArrayType(ShortType())),
+    ("binary_thresholds", "bcodes", ArrayType(LongType())),
 )
 
 
-def _op_code_columns(spark, path: str) -> list[tuple[str, str]]:
+def _op_code_columns(spark, path: str) -> list[tuple[str, DataType]]:
     """(name, type) of the code columns the layout's op rows carry: one
     per codec sidecar present, as the build wrote them."""
     return [
@@ -121,6 +129,22 @@ def _op_code_columns(spark, path: str) -> list[tuple[str, str]]:
         for sidecar, col, typ in _CODE_COLUMNS
         if oplayout.path_exists(spark, f"{path}/{sidecar}.parquet")
     ]
+
+
+def op_schema(spark, path: str) -> StructType:
+    """The schema of the layout's op rows: how ``upsert_vectors`` and
+    ``delete_vectors`` write them and ``committed_op_scan`` reads them
+    (plus the ``_mb`` partition column)."""
+    return StructType(
+        [
+            StructField("vec_id", LongType()),
+            StructField("dist", DoubleType()),
+            StructField("embedding", ArrayType(FloatType())),
+            *[StructField(col, typ) for col, typ in _op_code_columns(spark, path)],
+            StructField("op", StringType()),
+            StructField("shard_id", IntegerType()),
+        ]
+    )
 
 
 def has_per_shard_ops(spark, path: str) -> bool:
@@ -133,15 +157,18 @@ def has_per_shard_ops(spark, path: str) -> bool:
 def _land_vector_op(
     spark,
     path: str,
-    rows: DataFrame,
+    rows,
     op_id: int | None,
     tag_batch: DataFrame | None = None,
 ) -> int:
     """Purge-first landing of one op's rows as ``ops/_mb=<id>/`` +
-    commit marker, ``shard_id`` a data column (−1 for tombstones). A
-    batch the driver built lands as one file in one Spark job
-    (``oplayout.write_op_partitions``). ``rows`` must carry (vec_id,
-    dist, embedding[, codes], op, shard_id). ``tag_batch``: optional
+    commit marker, ``shard_id`` a data column (−1 for tombstones).
+    ``rows`` carry (vec_id, dist, embedding[, codes], op, shard_id): an
+    Arrow table the driver holds lands as one staged file with no Spark
+    job (``oplayout.write_table_dir``, cast to ``op_schema``); a
+    DataFrame lands as one file in one write job
+    (``oplayout.write_op_partitions``). Either replaces what the id
+    held. ``tag_batch`` (with an Arrow ``rows`` only): optional
     (neighbor_id, _btags) landed as the SAME op (one marker — the
     vectors and their tags become visible atomically).
 
@@ -174,17 +201,24 @@ def _land_vector_op(
         )
         if int(op_id) not in oplayout.committed_ops(spark, path):
             oplayout.purge_op_dirs(spark, _all_op_dirs(path, int(op_id)))
-        oplayout.write_op_partitions(
-            rows.withColumn("_mb", F.lit(int(op_id))), f"{path}/ops", ["_mb"]
-        )
+        if isinstance(rows, DataFrame):
+            oplayout.write_op_partitions(
+                rows.withColumn("_mb", F.lit(int(op_id))), f"{path}/ops", ["_mb"]
+            )
+        else:
+            oplayout.write_table_dir(
+                spark, rows, f"{path}/ops/_mb={int(op_id)}", op_schema(spark, path)
+            )
         if tag_batch is not None:
+            import pyarrow as pa
+
             from big_ann_spark.operators import tag_ops
 
-            cols = [F.col("vec_id").alias("neighbor_id"), F.col("shard_id")]
+            cols = {"neighbor_id": rows["vec_id"], "shard_id": rows["shard_id"]}
             if tag_ops.tag_meta(spark, path)[1]:
                 # payload layout: the op's postings carry the NEW vector
-                cols.append(F.col("embedding").alias("_bvec"))
-            shard_of = rows.select(*cols)
+                cols["_bvec"] = rows["embedding"]
+            shard_of = spark.createDataFrame(pa.table(cols))
             tag_ops.land_tag_partitions(
                 spark, path, tag_batch, int(op_id), shard_of
             )
@@ -246,7 +280,8 @@ def upsert_vectors(
     before anything is written. The centroid matrix is read once per
     state of ``centroids.parquet`` (``ann.centroid_matrix``). Code columns (SQ8/PQ/OPQ/binary) are
     encoded on the driver under the frozen sidecars, bit-equal to the
-    build's encoders. The op lands in one write job. Duplicate ids
+    build's encoders. The op lands from the driver as one file, with no
+    Spark job beyond the batch collect. Duplicate ids
     WITHIN one batch collapse to their first row — between batches,
     the higher op id wins.
 
@@ -295,13 +330,12 @@ def upsert_vectors(
             "shard_id": pa.array(cids[near[:, 0]], pa.int32()),
         }
     )
-    rows = spark.createDataFrame(table)
     tag_batch = None
     if tags_col is not None:
         tag_batch = spark.createDataFrame(
             pa.table({"neighbor_id": table["vec_id"], "_btags": batch.column(tags_col)})
         )
-    return _land_vector_op(spark, path, rows, op_id, tag_batch=tag_batch)
+    return _land_vector_op(spark, path, table, op_id, tag_batch=tag_batch)
 
 
 def delete_vectors(
@@ -317,23 +351,32 @@ def delete_vectors(
     it, so a tombstone can never surface as a candidate; it only KILLS
     base/earlier-op rows via latest-op-wins resolution. Deleting an id
     that was never inserted is a legal no-op row. An iterable lands
-    from the driver in one Spark job; a DataFrame is deduplicated
-    distributed. Returns the committed op id."""
+    from the driver as one file with no Spark job; a DataFrame (which
+    may hold more ids than the driver should) is deduplicated
+    distributed and lands in one write job. Returns the committed op
+    id."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    schema = op_schema(spark, path)
     if isinstance(ids, DataFrame):
         id_df = ids.select(F.col(ids.columns[0]).cast("long").alias("vec_id")).distinct()
-    else:
-        uniq = np.unique(np.fromiter((int(i) for i in ids), dtype=np.int64))
-        id_df = spark.createDataFrame(pa.table({"vec_id": uniq}))
-    rows = id_df.select(
-        "vec_id",
-        F.lit(None).cast("double").alias("dist"),
-        F.lit(None).cast("array<float>").alias("embedding"),
-        *[F.lit(None).cast(typ).alias(col) for col, typ in _op_code_columns(spark, path)],
-    )
-    rows = rows.withColumn("op", F.lit(OP_DELETE)).withColumn(
-        "shard_id", F.lit(TOMBSTONE_SHARD).cast("int")
+        fill = {
+            "vec_id": F.col("vec_id"), "op": F.lit(OP_DELETE), "shard_id": F.lit(TOMBSTONE_SHARD)
+        }
+        rows = id_df.select(
+            *[fill.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name) for f in schema.fields]
+        )
+        return _land_vector_op(spark, path, rows, op_id)
+    uniq = np.unique(np.fromiter((int(i) for i in ids), dtype=np.int64))
+    n = len(uniq)
+    fixed = {
+        "vec_id": pa.array(uniq, pa.int64()),
+        "op": pa.array([OP_DELETE] * n, pa.string()),
+        "shard_id": pa.array(np.full(n, TOMBSTONE_SHARD, np.int32)),
+    }
+    rows = pa.table(
+        {f.name: fixed.get(f.name, pa.nulls(n, f.type)) for f in to_arrow_schema(schema)}
     )
     return _land_vector_op(spark, path, rows, op_id)
 
@@ -354,19 +397,15 @@ def committed_op_scan(
         return None
     if not oplayout.glob_op_ids(spark, f"{path}/ops/_mb=*"):
         # ops/ exists but holds no completed _mb partition — the very
-        # FIRST op crashed mid-write (only _temporary inside), or a
-        # reclaiming TAG op purged the crashed vector partitions
-        # (_ops_on_disk unions the tag-delta ledger, so it must NOT be
-        # the emptiness probe here). There is nothing readable and
-        # nothing visible; reading the dir would throw schema-inference
-        # errors instead of ignoring the crashed op like every other
-        # crash window does.
+        # FIRST op crashed mid-write (only _temporary or _staging
+        # inside), or a reclaiming TAG op purged the crashed vector
+        # partitions (_ops_on_disk unions the tag-delta ledger, so it
+        # must NOT be the emptiness probe here). There is nothing
+        # readable and nothing visible; reading the dir would throw
+        # schema-inference errors instead of ignoring the crashed op
+        # like every other crash window does.
         return None
-    schema = ", ".join(
-        ["vec_id long", "dist double", "embedding array<float>"]
-        + [f"{col} {typ}" for col, typ in _op_code_columns(spark, path)]
-        + ["op string", "shard_id int", "_mb int"]
-    )
+    schema = op_schema(spark, path).add("_mb", IntegerType())
     raw = spark.read.schema(schema).parquet(f"{path}/ops")
     uncommitted = uncommitted_vector_ops(spark, path)
     if as_of is not None:
@@ -537,10 +576,12 @@ def compact_vector_layout(
 ) -> int:
     """Fold every committed op into a fresh pristine base at
     ``dst_path`` (write-new-then-swap orchestration, like
-    ``compact_bm25_index``): resolved live rows are re-written as a
-    ``write_sharded`` layout with the SAME frozen centroids and
-    quantization sidecars — search results are identical before and
-    after, and the contested set resets to empty. Returns the number
+    ``compact_bm25_index``): resolved live rows are re-written as the
+    shards of a ``write_sharded`` layout (``write_shards``) with the
+    SAME frozen centroids and quantization sidecars — search results
+    are identical before and after, and the contested set resets to
+    empty. The build's ``distribution/`` histogram is not rewritten:
+    the compacted layout has none. Returns the number
     of ops folded. A crash mid-compact leaves ``src_path`` untouched
     and ``dst_path`` an obviously incomplete re-runnable write.
 
@@ -550,7 +591,7 @@ def compact_vector_layout(
     payload and the ranges sidecar is copied verbatim)."""
     from big_ann_spark.operators import pq as PQ
     from big_ann_spark.operators.ann import open_probed_shards
-    from big_ann_spark.operators.sharding import write_sharded
+    from big_ann_spark.operators.sharding import write_shards
 
     base = open_probed_shards(spark, src_path, None)
     live = live_probed_view(
@@ -579,7 +620,7 @@ def compact_vector_layout(
     rot = None
     if has_raw and oplayout.path_exists(spark, f"{src_path}/opq_rotation.parquet"):
         rot = PQ.load_rotation(spark, f"{src_path}/opq_rotation.parquet")
-    write_sharded(
+    write_shards(
         assignments, assignments, dst_path,
         id_col=id_col, vec_col=payload,
         sq8_ranges=ranges, pq_codebooks=books, binary_thresholds=thr,

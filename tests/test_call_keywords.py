@@ -20,6 +20,7 @@ CALLEES = {
     "sq8_pool": ann.sq8_pool,
     "pq_pool": ann.pq_pool,
     "write_sharded": sharding.write_sharded,
+    "write_shards": sharding.write_shards,
     "assign_to_centroids": sharding.assign_to_centroids,
     "pq_encode": pq.pq_encode,
     "ks_two_sample": stats.ks_two_sample,

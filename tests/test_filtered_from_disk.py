@@ -342,23 +342,20 @@ def test_tag_op_crash_window_and_replay(spark, sf_dir, tmp_path, monkeypatch):
     pristine = _filtered_want(queries, tagged.filter(F.col("vec_id") % 3 != 0))
 
     # crash a COMBINED upsert after the vector rows but before the tag
-    # partitions finish: the op must be invisible end-to-end
-    calls = {"n": 0}
-    real = oplayout.write_op_partitions
+    # partitions land: the op must be invisible end-to-end
+    real = oplayout.write_table_dir
 
-    def crashy(df, target, cols):
-        calls["n"] += 1
-        if calls["n"] >= 2:  # ops table lands, first tag table dies
-            raise RuntimeError("injected tag-partition crash")
-        return real(df, target, cols)
+    def crashy(spark, table, directory, schema):
+        real(spark, table, directory, schema)  # ops file lands, tags die
+        raise RuntimeError("injected tag-partition crash")
 
-    monkeypatch.setattr(oplayout, "write_op_partitions", crashy)
+    monkeypatch.setattr(oplayout, "write_table_dir", crashy)
     newbies = tagged.filter(F.col("vec_id") % 3 == 0)
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="injected"):
         VO.upsert_vectors(spark, path, newbies, tags_col="tags")
-    monkeypatch.setattr(oplayout, "write_op_partitions", real)
+    monkeypatch.setattr(oplayout, "write_table_dir", real)
     _cmp(ANN.filtered_search_from_disk(queries, path, k=3), pristine)
 
     # the crashed id is reclaimable: a TAG-ONLY op lands at the same

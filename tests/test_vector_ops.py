@@ -364,15 +364,15 @@ def test_writer_lock_released_on_failed_op(spark, sf_dir, monkeypatch):
     emb, cents, path = _build_layout(spark, sf_dir)
     batch = emb.filter(F.col("vec_id") % 3 == 0)
 
-    real = oplayout.write_op_partitions
+    real = oplayout.write_table_dir
 
-    def boom(df, target, cols):
+    def boom(spark, table, directory, schema):
         raise RuntimeError("injected mid-op crash")
 
-    monkeypatch.setattr(oplayout, "write_op_partitions", boom)
+    monkeypatch.setattr(oplayout, "write_table_dir", boom)
     with pytest.raises(RuntimeError, match="injected"):
         VO.upsert_vectors(spark, path, batch)
-    monkeypatch.setattr(oplayout, "write_op_partitions", real)
+    monkeypatch.setattr(oplayout, "write_table_dir", real)
     assert not oplayout.path_exists(
         spark, f"{path}/_ops/{oplayout.WRITER_LOCK}"
     )
@@ -665,9 +665,9 @@ def test_first_read_of_a_ledger_state_runs_no_inference_job(spark, sf_dir):
 
 def test_sq8_upsert_reads_its_ranges_once_per_sidecar_state(spark, sf_dir):
     """An SQ8 refine upsert encodes under the ranges sidecar read once
-    per state of its files: with them in memory an upsert runs two Spark
-    jobs (batch collect, write), and a rewritten sidecar is seen by the
-    next upsert."""
+    per state of its files: with them in memory an upsert runs one Spark
+    job (the batch collect; the op lands from the driver), and a
+    rewritten sidecar is seen by the next upsert."""
     import numpy as np
 
     from big_ann_spark.operators import pq as PQ
@@ -678,7 +678,7 @@ def test_sq8_upsert_reads_its_ranges_once_per_sidecar_state(spark, sf_dir):
     _, n_up = _job_count(
         spark, lambda: VO.upsert_vectors(spark, path, batch.filter(F.col("vec_id") % 2 == 1))
     )
-    assert n_up == 2
+    assert n_up == 1
     mins, maxs = PQ.load_sq8_ranges(spark, f"{path}/sq8_ranges.parquet")
     wide = ([v - 1.0 for v in mins], [v + 1.0 for v in maxs])
     spark.createDataFrame([wide], "mins array<double>, maxs array<double>").coalesce(
@@ -920,7 +920,8 @@ def test_upsert_of_a_non_finite_vector_fails_before_writing(spark, sf_dir):
 @pytest.mark.parametrize("codec", ["sq8", "pq", "opq", "binary"])
 def test_upserted_codes_equal_build_encoders(spark, sf_dir, codec):
     """An upsert of vectors the build already encoded lands the same
-    codes, shard and distance as the build wrote for them."""
+    codes, shard and distance as the build wrote for them, and a
+    tombstone lands the layout's code column as a typed null."""
     import numpy as np
 
     from big_ann_spark.operators.pq import train_binary, train_sq8
@@ -947,6 +948,18 @@ def test_upserted_codes_equal_build_encoders(spark, sf_dir, codec):
     ops = spark.read.parquet(f"{path}/ops").select(*cols).collect()
     assert len(ops) == len([i for i in base if i % 2 == 0]) > 0
     assert all(tuple(r) == base[r["vec_id"]] for r in ops)
+    # a listed delete lands typed null codes, read back alike with the
+    # ledger's explicit schema and by a schema-inferring read
+    VO.delete_vectors(spark, path, [1, 2])
+    typ = VO.op_schema(spark, path)[col].dataType
+    for ops in (VO.committed_op_scan(spark, path), spark.read.parquet(f"{path}/ops")):
+        assert ops.schema[col].dataType == typ
+        tomb = ops.filter("_mb = 1").select("vec_id", "shard_id", "op", "dist", col)
+        assert sorted(map(tuple, tomb.collect())) == [
+            (i, VO.TOMBSTONE_SHARD, VO.OP_DELETE, None, None) for i in (1, 2)
+        ]
+        up = ops.filter("_mb = 0").select(*cols).collect()
+        assert len(up) > 0 and all(tuple(r) == base[r["vec_id"]] for r in up)
 
 
 def test_upsert_past_driver_rows_fails_before_writing(spark, sf_dir, monkeypatch):
@@ -962,11 +975,12 @@ def test_upsert_past_driver_rows_fails_before_writing(spark, sf_dir, monkeypatch
     assert VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") < 5)) == 0
 
 
-def test_each_op_lands_one_file_in_one_write_job(spark, sf_dir):
+def test_each_op_lands_one_file_from_the_driver(spark, sf_dir):
     """An upsert over many shards and a delete each land one file under
     their ops/_mb=<op>/ directory, shard_id a column (−1 for
-    tombstones); with the centroid matrix read once, an upsert runs two
-    Spark jobs (batch collect, write) and a delete of listed ids one."""
+    tombstones); with the centroid matrix read once, an upsert runs one
+    Spark job (the batch collect) and a delete of listed ids none: both
+    write their file from the driver."""
     emb, cents, path = _build_layout(spark, sf_dir)
     batch = emb.filter(F.col("vec_id") % 3 == 0)
     VO.upsert_vectors(spark, path, batch.filter(F.col("vec_id") % 2 == 0))
@@ -974,13 +988,79 @@ def test_each_op_lands_one_file_in_one_write_job(spark, sf_dir):
         spark, lambda: VO.upsert_vectors(spark, path, batch.filter(F.col("vec_id") % 2 == 1))
     )
     _, n_del = _job_count(spark, lambda: VO.delete_vectors(spark, path, [1, 2, 2, 4]))
-    assert (n_up, n_del) == (2, 1)
+    assert (n_up, n_del) == (1, 0)
     for op in (0, 1, 2):
         assert len(_op_files(path, op)) == 1
     ops = spark.read.parquet(f"{path}/ops")
     assert ops.filter("_mb = 1").select("shard_id").distinct().count() > 3
     tomb = ops.filter("_mb = 2").select("vec_id", "shard_id", "op").collect()
     assert sorted(map(tuple, tomb)) == [(i, -1, VO.OP_DELETE) for i in (1, 2, 4)]
+
+
+def test_landing_killed_before_its_rename_stays_invisible(spark, sf_dir, monkeypatch):
+    """A landing killed after its file is staged but before the staged
+    directory moves into ops/_mb=<op>/: searches serve the pre-crash
+    results and no read sees the staged rows; the next upsert reclaims
+    the id, its purge removes the staged leftovers, and every row lands
+    once."""
+    import os
+
+    emb, cents, path = _build_layout(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+
+    def search():
+        return _rows(ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3))
+
+    assert VO.delete_vectors(spark, path, [1]) == 0
+    before = search()
+    real = oplayout.write_parquet_file
+
+    def killed(spark, table, p):
+        real(spark, table, p)
+        raise OSError("killed after staging")
+
+    batch = emb.filter(F.col("vec_id") % 3 == 0)
+    monkeypatch.setattr(oplayout, "write_parquet_file", killed)
+    with pytest.raises(OSError, match="after staging"):
+        VO.upsert_vectors(spark, path, batch)
+    monkeypatch.undo()
+    staged = oplayout.staging_dir(f"{path}/ops/_mb=1")
+    assert [f for f in os.listdir(staged) if f.endswith(".parquet")]
+    assert not os.path.exists(f"{path}/ops/_mb=1")
+    assert search() == before
+    assert spark.read.parquet(f"{path}/ops").count() == 1
+    assert VO.committed_op_scan(spark, path).count() == 1
+
+    assert VO.upsert_vectors(spark, path, batch) == 1
+    assert not os.path.exists(staged) and len(_op_files(path, 1)) == 1
+    ops = spark.read.parquet(f"{path}/ops")
+    assert ops.count() == ops.select("vec_id").distinct().count() == batch.count() + 1
+    live = F.col("vec_id") != 1
+    assert search() == _rows(_expected(spark, emb, cents, live, queries))
+
+
+def test_compact_in_place_runs_three_jobs_and_writes_no_histogram(spark, sf_dir):
+    """Compaction rewrites only the shards: on a mutated layout whose
+    mutation state is resolved it runs three Spark jobs (the contested
+    ids' broadcast, the clustering shuffle, the partitioned write), and
+    the compacted layout has no distribution/ — the build's histogram
+    describes the build only."""
+    import os
+
+    emb, cents, path = _build_layout(spark, sf_dir)
+    assert os.path.isdir(f"{path}/distribution")
+    VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id") % 3 == 0))
+    VO.delete_vectors(spark, path, [1, 2])
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    before = _rows(ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3))
+    n_ops, n_jobs = _job_count(spark, lambda: VO.compact_in_place(spark, path))
+    assert (n_ops, n_jobs) == (2, 3)
+    assert not os.path.exists(f"{path}/distribution")
+    assert _rows(ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3)) == before
 
 
 def test_search_after_compact_in_place_runs_no_inference_job(spark, sf_dir):
