@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_ann_spark.operators import oplayout
+
 TABLES = (
     "region",
     "nation",
@@ -23,18 +25,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-# schema metadata memo (r14 optimization): every bare
-# ``spark.read.parquet(path)`` runs a one-task footer-inference job on
-# the driver before the real query — ~40 such loads per bench pass made
-# it a measurable fixed cost (guide §6: listing/planning is driver-side
-# work). The parquet fixtures are immutable, so the inferred schema is
-# cached per (resolved dir, table) and passed explicitly on later
-# loads. This caches SCHEMA only — never rows or results — and the
-# events table is excluded because its ts type depends on the
-# session's nanosAsLong conf.
-_SCHEMA_CACHE: dict[tuple[str, str], "object"] = {}
 
 
 def table_file_bytes(sf_dir: str, name: str) -> int:
@@ -66,13 +56,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # truncate to microseconds exactly like DuckDB reads timestamp[ns]
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    key = (os.path.realpath(sf_dir), name)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+    # the schema is kept in the layout memo per resolved table path
+    # (``oplayout.read_parquet``), so only the first load runs a
+    # footer-inference job. The fixtures are immutable (no token); the
+    # events table is excluded above because its ts type depends on the
+    # session's nanosAsLong conf.
+    return oplayout.read_parquet(spark.read, os.path.realpath(path), None, path)
 
 
 def register_all(spark: SparkSession, sf_dir: str) -> None:

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 from big_ann_spark.functions.vector import l2_distance
+from big_ann_spark.operators import oplayout
 from big_ann_spark.operators.knn import band_select, fold_l2, fold_l2_topk, nearest_centroids
 from big_ann_spark.operators.topk import top_k_per_group
 
@@ -54,27 +55,9 @@ def _isin_ids(col: str, ids: list) -> F.Column:
     return F.col(col).isin(ids)
 
 
-# (base path, base-dir mtime) -> shards StructType; see
-# open_probed_shards. Schema only — never data.
-_SHARDS_SCHEMA_MEMO: dict[tuple[str, int], object] = {}
-
 # One shared worker for the PQ/OPQ sidecar prefetch in
 # ivf_search_from_disk (threads start lazily on the first submit).
 _SIDECAR_PREFETCH = ThreadPoolExecutor(1, thread_name_prefix="pq-sidecars")
-
-
-def rekey_shards_schema(src_path: str, dst_path: str) -> None:
-    """After ``src_path`` was renamed to ``dst_path``: file the memoized
-    shards schema of ``src_path`` under ``dst_path`` and drop the entries
-    of both old names. A rename keeps the shards directory's mtime, so
-    the moved entry is the one a reader of ``dst_path`` computes."""
-    src, dst = f"{src_path}/shards", f"{dst_path}/shards"
-    moved = {}
-    for k in [k for k in _SHARDS_SCHEMA_MEMO if k[0] in (src, dst)]:
-        schema = _SHARDS_SCHEMA_MEMO.pop(k)
-        if k[0] == src:
-            moved[(dst, k[1])] = schema
-    _SHARDS_SCHEMA_MEMO.update(moved)
 
 
 def open_probed_shards(
@@ -101,20 +84,6 @@ def open_probed_shards(
         dirs = [base] if shard_dirs else []
     else:
         dirs = [d for s in shard_ids if fs.exists(Path(d := f"{base}/shard_id={s}"))]
-    # schema memo: a bare parquet read runs a footer-inference job on
-    # the driver before the first data byte — on the serving path that
-    # is one serial job per search. Shard schema is fixed at build time
-    # (mutations append files, never columns), so memoize it per (base,
-    # base-dir mtime): a NEW shard directory bumps the base mtime and
-    # invalidates; file appends inside existing shard dirs keep the
-    # identical schema. SCHEMA only, never rows.
-    memo_key = None
-    memo_schema = None
-    try:
-        memo_key = (base, int(fs.getFileStatus(jpath).getModificationTime()))
-        memo_schema = _SHARDS_SCHEMA_MEMO.get(memo_key)
-    except Exception:
-        pass
     if not dirs:
         # preserve an empty-but-typed result. An ALL-DELETED compacted
         # layout has zero shard dirs (a partitioned write of no rows
@@ -126,15 +95,16 @@ def open_probed_shards(
             sc = spark.read.parquet(f"{path}/schema.parquet").schema
             return spark.createDataFrame([], sc)
         return spark.read.option("basePath", base).parquet(base).limit(0)
-    reader = spark.read.option("basePath", base)
-    if memo_schema is not None:
-        return reader.schema(memo_schema).parquet(*dirs)
-    df = reader.parquet(*dirs)
-    if memo_key is not None:
-        if len(_SHARDS_SCHEMA_MEMO) >= 256:  # bound growth: drop the oldest
-            del _SHARDS_SCHEMA_MEMO[next(iter(_SHARDS_SCHEMA_MEMO))]
-        _SHARDS_SCHEMA_MEMO[memo_key] = df.schema
-    return df
+    # a footer-inference job on the serving path would be one serial
+    # job per search. The shard schema is fixed at build time
+    # (mutations append files, never columns), so the layout memo
+    # keeps it per state of the shards directory: a NEW shard
+    # directory bumps its mtime, while file appends inside existing
+    # shard dirs keep the identical schema.
+    return oplayout.read_parquet(
+        spark.read.option("basePath", base), base,
+        int(fs.getFileStatus(jpath).getModificationTime()), *dirs,
+    )
 
 
 def detect_refine_codec(spark, path: str, vec_col: str = "embedding") -> str:
@@ -899,11 +869,6 @@ def write_tag_postings_layout(
         .write.mode("overwrite")
         .parquet(f"{path}/tag_meta.parquet")
     )
-    # a rebuild at the same path must not serve the old constants from
-    # the read-side memo (r14)
-    from big_ann_spark.operators import tag_ops as _to
-
-    _to._TAG_META_MEMO.pop(path, None)
 
 
 def _filtered_candidates(
@@ -2342,7 +2307,7 @@ def _purge_graph_ledger(spark, path: str) -> None:
         for st in fs.listStatus(jp):
             if st.getPath().getName() != _ol.WRITER_LOCK:
                 fs.delete(st.getPath(), True)
-    _ol.invalidate_contested_memo(path)
+    _ol.forget(path)
 
 
 def _write_graph_artifacts(

@@ -304,32 +304,21 @@ def _purge_op(spark, path: str, op_id: int) -> None:
 
 _BASE_EPOCH = -1
 
-# (path -> (meta dir mtime, n_term_buckets)): caching the bucket count
-# saves one tiny Spark job per from-disk query/op in a serving
-# session. The entry is validated against meta.parquet's modification
-# time (one FS metadata call, no Spark job) so a rebuild by ANOTHER
-# process — possibly with a different bucket count, which would make
-# cached _tb hashes prune the wrong partitions — is picked up.
-_META_CACHE: dict[str, tuple[int, int]] = {}
-
-
-def _meta_mtime(spark, path: str) -> int:
-    fs, jp = _fs(spark, f"{path}/meta.parquet")
-    return int(fs.getFileStatus(jp).getModificationTime())
-
-
 def _n_term_buckets(spark, path: str) -> int:
-    mtime = _meta_mtime(spark, path)
-    hit = _META_CACHE.get(path)
-    if hit is not None and hit[0] == mtime:
-        return hit[1]
-    v = int(spark.read.parquet(f"{path}/meta.parquet").collect()[0][0])
-    _META_CACHE[path] = (mtime, v)
-    return v
+    """The layout's bucket count, read once per state of
+    ``meta.parquet``'s files (``oplayout.read_dir_memo``): it saves one
+    tiny Spark job per from-disk query or op, and a rebuild by ANOTHER
+    process — possibly with a different bucket count, which would make
+    cached _tb hashes prune the wrong partitions — writes new files and
+    is seen by the next call."""
+    return oplayout.read_dir_memo(
+        spark, f"{path}/meta.parquet", "bm25_meta",
+        lambda: int(spark.read.parquet(f"{path}/meta.parquet").collect()[0][0]),
+    )
 
 
-# dynamic-partition-overwrite landing (the idempotence ADVICE r8 asked
-# for) — kept as a module name because the fault-injection tests patch
+# dynamic-partition-overwrite landing (a replay replaces what the op id
+# held) — kept as a module name because the fault-injection tests patch
 # it to simulate crashes between table writes
 _write_op_partitions = oplayout.write_op_partitions
 
@@ -409,7 +398,6 @@ def write_bm25_index(
     spark.createDataFrame(
         [(n_term_buckets,)], "n_term_buckets int"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta.parquet")
-    _META_CACHE[path] = (_meta_mtime(spark, path), int(n_term_buckets))
 
 
 class _DiskIndex(NamedTuple):

@@ -58,6 +58,33 @@ id per contested id — measured linear in mutation volume (+6.5 s at
 CLIs accept ``--compact-above N`` to fold the layout in place
 (``vector_ops.compact_in_place``, write-new-then-swap) when the
 contested count exceeds the budget.
+
+**The layout memo** (``memo``): every piece of state the engine reads
+from a layout is memoized in ONE least-recently-used map of at most
+``MEMO_ENTRIES`` entries, each stored with a validity token (a changed
+token rebuilds the entry) and an optional on-evict callback. Keys and
+tokens:
+
+- ledger state (``ledger_entry``: mutation winners, live frames,
+  contested counts): key (layout, ``as_of``, context), token the Spark
+  application plus the commit-marker set, or what the state was
+  derived from; eviction unpersists the entry's local checkpoint;
+- data read from files (``memo_by_files``/``read_dir_memo``: the
+  centroid matrix, the codec sidecars, the tag and BM25 layout
+  constants): key (kind, (path, size, mtime) of each data file), no
+  token — every write names new files, so a rewrite by any process
+  misses;
+- read schemas (``read_parquet``: ``ann.open_probed_shards``' shards
+  directory, ``catalog.load_table``'s fixture tables): key (table
+  directory, ``"schema"``), token the shards directory's mtime
+  (``None`` for the immutable fixtures). A commit lands outside ``shards/`` and forgets
+  only the ledger state, so the first search after a mutation runs no
+  footer-inference job.
+
+``forget(path)`` drops every entry keyed by ``path``. Each writer of
+a layout calls it for the layout's ledger state (``mark_committed``,
+the graph ledger purge) and for its shards schema when it rewrites
+the shards (``sharding.write_shards``, ``vector_ops.compact_in_place``).
 """
 
 from __future__ import annotations
@@ -65,6 +92,7 @@ from __future__ import annotations
 import contextlib
 import os
 import tempfile
+import threading
 import uuid
 from collections import OrderedDict
 from typing import NamedTuple
@@ -126,7 +154,7 @@ def committed_ops(spark, path: str) -> set[int]:
 
 
 def mark_committed(spark, path: str, op_id: int) -> None:
-    invalidate_contested_memo(path)
+    forget(path)
     fs, jp = fs_path(spark, f"{path}/_ops/{op_id}")
     fs.mkdirs(jp.getParent())
     fs.create(jp, True).close()
@@ -145,9 +173,9 @@ WRITER_LOCK = "_writer.lock"
 
 # In-place compaction's swap lock lives BESIDE the layout, not inside
 # it: the swap renames the whole tree, so an in-tree lock travels out
-# with the first rename and leaves {base} unguarded mid-swap (ADVICE
-# r12). The sibling marker survives both renames; writer_lock refuses
-# while it exists.
+# with the first rename and leaves {base} unguarded mid-swap. The
+# sibling marker survives both renames; writer_lock refuses while it
+# exists.
 COMPACT_LOCK_SUFFIX = ".compact.lock"
 
 
@@ -234,27 +262,71 @@ CONTESTED_WARN_ABOVE = 500_000
 class LedgerEntry(NamedTuple):
     """State derived from one ledger state of one layout."""
 
-    token: tuple  # the ledger state it was derived under
     count: int  # contested ids
     state: object  # the context's state, e.g. vector_ops.MutationState
     checkpoint: DataFrame | None  # the local checkpoint ``state`` reads
 
 
-# (path, as_of, context) -> LedgerEntry, least recently used first: the
-# one bounded memo of ledger-derived state (mutation_state's winners,
-# check_contested's counts), each entry valid while its token is current
-_contested_count_memo: OrderedDict[tuple[str, int | None, str], LedgerEntry] = (
-    OrderedDict()
-)
-LEDGER_MEMO_ENTRIES = 16
+# key -> (token, value, on_evict), least recently used first: the one
+# memo of state read from a layout (see the module docstring). 64
+# entries hold the ledger state, sidecars and schemas of several
+# layouts at once
+_memo: OrderedDict[tuple, tuple] = OrderedDict()
+_memo_lock = threading.Lock()
+MEMO_ENTRIES = 64
 
 
-def invalidate_contested_memo(path: str) -> None:
-    """Drop every entry of ``path``, leaving their checkpoints to Spark's
-    ContextCleaner: a search built before a mutation may still read them."""
+def memo(key: tuple, token, build, on_evict=None):
+    """``build()``, memoized under ``key`` while ``token`` is unchanged.
+    A hit refreshes the entry; a changed token rebuilds it in place.
+    Past ``MEMO_ENTRIES`` the least recently used entry is dropped and
+    ``on_evict(value)`` run on it. ``build`` runs outside the lock, so
+    two threads that miss together may both build."""
+    with _memo_lock:
+        entry = _memo.get(key)
+        if entry is not None and entry[0] == token:
+            _memo.move_to_end(key)
+            return entry[1]
+    value = build()
+    with _memo_lock:
+        _memo[key] = (token, value, on_evict)
+        _memo.move_to_end(key)
+        evicted = [_memo.popitem(last=False)[1] for _ in range(len(_memo) - MEMO_ENTRIES)]
+    for _, old, evict in evicted:
+        if evict is not None:
+            evict(old)
+    return value
+
+
+def forget(path: str) -> None:
+    """Drop every entry keyed by the layout (or table) at ``path``,
+    leaving checkpoints to Spark's ContextCleaner: a search built before
+    a mutation may still read them."""
     base = path.rstrip("/")
-    for k in [k for k in _contested_count_memo if k[0] == base]:
-        _contested_count_memo.pop(k, None)
+    with _memo_lock:
+        for k in [k for k in _memo if k[0] == base]:
+            del _memo[k]
+
+
+def read_parquet(reader, table: str, token, *paths) -> DataFrame:
+    """``reader.parquet(*paths)`` with the read schema of ``table`` kept
+    in the memo under ``(table, "schema")`` while ``token`` is
+    unchanged: a bare parquet read runs a footer-inference job on the
+    driver before the first data byte, and a read given the schema runs
+    none. Schema only, never rows."""
+    inferred = []
+
+    def infer():
+        inferred.append(reader.parquet(*paths))
+        return inferred[0].schema
+
+    schema = memo((table, "schema"), token, infer)
+    return inferred[0] if inferred else reader.schema(schema).parquet(*paths)
+
+
+def _unpersist_checkpoint(entry: LedgerEntry) -> None:
+    if entry.checkpoint is not None:
+        entry.checkpoint._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def ledger_entry(
@@ -274,11 +346,9 @@ def ledger_entry(
     ``compact_in_place``; the mtimes differ). State derived from other
     state that already tracks the ledger passes what it was derived
     from as ``derived_from``, which replaces the listing. On a miss
-    ``build()`` returns (count, state, checkpoint). Past
-    ``LEDGER_MEMO_ENTRIES`` the least recently used entry is dropped and
-    its checkpoint unpersisted."""
+    ``build()`` returns (count, state, checkpoint). An entry evicted
+    from the memo has its checkpoint unpersisted."""
     base = path.rstrip("/")
-    key = (base, as_of, context)
     token = spark.sparkContext.applicationId, derived_from
     if derived_from is None:
         token += (
@@ -288,16 +358,10 @@ def ledger_entry(
                 if as_of is None or i <= as_of
             ),
         )
-    # pop + insert, each atomic, (re)files the entry as most recent
-    entry = _contested_count_memo.pop(key, None)
-    if entry is None or entry.token != token:
-        entry = LedgerEntry(token, *build())
-    _contested_count_memo[key] = entry
-    while len(_contested_count_memo) > LEDGER_MEMO_ENTRIES:
-        _, old = _contested_count_memo.popitem(last=False)
-        if old.checkpoint is not None:
-            old.checkpoint._jdf.queryExecution().logical().rdd().unpersist(False)
-    return entry
+    return memo(
+        (base, as_of, context), token, lambda: LedgerEntry(*build()),
+        _unpersist_checkpoint,
+    )
 
 
 def check_contested(
@@ -497,13 +561,6 @@ def write_op_partitions(df: DataFrame, target: str, cols: list[str]) -> None:
     )
 
 
-# (kind, ((path, size, mtime) of each data file, ...)) -> what was read
-# from those files, least recently used first: the centroid matrix and
-# the codec sidecars (``memo_by_files``)
-_file_memo: OrderedDict[tuple, object] = OrderedDict()
-FILE_MEMO_ENTRIES = 32
-
-
 def file_stamps(statuses) -> tuple:
     """Sorted (path, size, mtime) of the data files among Hadoop
     ``FileStatus``es; files named ``_*``/``.*`` (markers, checksums)
@@ -521,18 +578,10 @@ def memo_by_files(kind: str, stamps: tuple, read):
     """``read()``, memoized under ``(kind, stamps)``: every Spark write
     names its files anew, so a rewritten table misses, and a
     byte-identical copy that keeps the mtimes (``copy_dir``) hits. No
-    stamps (no data file seen) reads every time. Past
-    ``FILE_MEMO_ENTRIES`` the least recently used entry is dropped."""
+    stamps (no data file seen) reads every time."""
     if not stamps:
         return read()
-    key = (kind, stamps)
-    # pop + insert, each atomic, (re)files the entry as most recent
-    hit = _file_memo.pop(key, _file_memo)
-    value = read() if hit is _file_memo else hit
-    _file_memo[key] = value
-    while len(_file_memo) > FILE_MEMO_ENTRIES:
-        _file_memo.popitem(last=False)
-    return value
+    return memo((kind, stamps), None, read)
 
 
 def read_dir_memo(spark, path: str, kind: str, read):

@@ -386,27 +386,25 @@ def write_shards(
     # carries the row schema, written from the driver (no Spark job).
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from big_ann_spark.operators import ann as _ann
     from big_ann_spark.operators import oplayout
 
     oplayout.write_table_dir(
         spark, to_arrow_schema(with_vec.schema).empty_table(),
         f"{path}/schema.parquet", with_vec.schema,
     )
-    # the read-side schema memo, under the exact (base, mtime) key
+    # the read schema, filed in the layout memo under the key and token
     # open_probed_shards computes: the first search of a fresh layout
     # then runs no footer-inference job. A same-path rebuild (e.g. a
-    # codec change) drops every older entry for this base, and the
-    # layout's memoized live frames: the mtime alone is unsafe on
-    # filesystems with 1 s mtime granularity.
-    oplayout.invalidate_contested_memo(path)
+    # codec change) first forgets the layout's older entries, its
+    # memoized live frames and its shards schema: the mtime alone is
+    # unsafe on filesystems with 1 s mtime granularity.
+    oplayout.forget(path)
     base = f"{path}/shards"
-    for k in [k for k in _ann._SHARDS_SCHEMA_MEMO if k[0] == base]:
-        _ann._SHARDS_SCHEMA_MEMO.pop(k, None)
+    oplayout.forget(base)
     fs, jbase = oplayout.fs_path(spark, base)
     if fs.exists(jbase):
         mtime = int(fs.getFileStatus(jbase).getModificationTime())
-        _ann._SHARDS_SCHEMA_MEMO[(base, mtime)] = read_schema
+        oplayout.memo((base, "schema"), mtime, lambda: read_schema)
     return read_schema
 
 

@@ -88,27 +88,22 @@ def tag_ops_on_disk(spark, path: str) -> set[int]:
     return oplayout.glob_op_ids(spark, f"{path}/tags_delta.parquet/_mb=*")
 
 
-# path -> (n_tag_buckets, carry_payload): tag_meta.parquet holds LAYOUT
-# CONSTANTS written once at build time (the docstring's contract), so
-# the one-row read runs once per layout per process, not once per
-# search — the filtered serving chain read it twice per call (r14).
-_TAG_META_MEMO: dict[str, tuple[int, bool]] = {}
-
-
 def tag_meta(spark, path: str) -> tuple[int, bool]:
-    """(n_tag_buckets, carry_payload) — layout constants."""
-    hit = _TAG_META_MEMO.get(path)
-    if hit is not None:
-        return hit
-    row = (
-        spark.read.schema("n_tag_buckets int, carry_payload boolean")
-        .parquet(f"{path}/tag_meta.parquet")
-        .collect()[0]
-        .asDict()
-    )
-    out = (int(row["n_tag_buckets"]), bool(row.get("carry_payload", False)))
-    _TAG_META_MEMO[path] = out
-    return out
+    """(n_tag_buckets, carry_payload) — layout constants, read once per
+    state of ``tag_meta.parquet``'s files (``oplayout.read_dir_memo``),
+    not once per search: a rebuild by any process writes new files and
+    is seen by the next call."""
+
+    def read():
+        row = (
+            spark.read.schema("n_tag_buckets int, carry_payload boolean")
+            .parquet(f"{path}/tag_meta.parquet")
+            .collect()[0]
+            .asDict()
+        )
+        return int(row["n_tag_buckets"]), bool(row.get("carry_payload", False))
+
+    return oplayout.read_dir_memo(spark, f"{path}/tag_meta.parquet", "tag_meta", read)
 
 
 def n_tag_buckets(spark, path: str) -> int:

@@ -159,14 +159,15 @@ def _land_vector_op(
     path: str,
     rows,
     op_id: int | None,
+    schema: StructType,
     tag_batch: DataFrame | None = None,
 ) -> int:
     """Purge-first landing of one op's rows as ``ops/_mb=<id>/`` +
     commit marker, ``shard_id`` a data column (−1 for tombstones).
     ``rows`` carry (vec_id, dist, embedding[, codes], op, shard_id): an
     Arrow table the driver holds lands as one staged file with no Spark
-    job (``oplayout.write_table_dir``, cast to ``op_schema``); a
-    DataFrame lands as one file in one write job
+    job (``oplayout.write_table_dir``, cast to ``schema``, the layout's
+    ``op_schema``); a DataFrame lands as one file in one write job
     (``oplayout.write_op_partitions``). Either replaces what the id
     held. ``tag_batch`` (with an Arrow ``rows`` only): optional
     (neighbor_id, _btags) landed as the SAME op (one marker — the
@@ -206,9 +207,7 @@ def _land_vector_op(
                 rows.withColumn("_mb", F.lit(int(op_id))), f"{path}/ops", ["_mb"]
             )
         else:
-            oplayout.write_table_dir(
-                spark, rows, f"{path}/ops/_mb={int(op_id)}", op_schema(spark, path)
-            )
+            oplayout.write_table_dir(spark, rows, f"{path}/ops/_mb={int(op_id)}", schema)
         if tag_batch is not None:
             import pyarrow as pa
 
@@ -226,17 +225,17 @@ def _land_vector_op(
     return int(op_id)
 
 
-def _code_columns(spark, path: str, E: np.ndarray) -> dict:
-    """The code columns the layout's sidecars call for, encoded on the
-    driver from the stored float32 vectors ``E`` (widened to float64)
-    with the numpy kernels bit-equal to the build's encoders. Each
-    sidecar is read once per state of its files (the ``pq.load_*``
-    readers)."""
+def _code_columns(spark, path: str, E: np.ndarray, schema: StructType) -> dict:
+    """The code columns of the layout's op rows (``schema``, its
+    ``op_schema``), encoded on the driver from the stored float32
+    vectors ``E`` (widened to float64) with the numpy kernels bit-equal
+    to the build's encoders. Each sidecar is read once per state of its
+    files (the ``pq.load_*`` readers)."""
     from big_ann_spark.functions.arrowio import matrix_list_col
     from big_ann_spark.operators import pq as PQ
 
     X = E.astype(np.float64)
-    present = {col for col, _ in _op_code_columns(spark, path)}
+    present = set(schema.names)
     out = {}
     if "codes" in present:
         ranges = PQ.load_sq8_ranges(spark, f"{path}/sq8_ranges.parquet")
@@ -320,12 +319,13 @@ def upsert_vectors(
     V = list_col_matrix(batch, vec_col) if len(ids) else np.empty((0, cmat.shape[1]))
     near, dist = nearest_centroids(V, cids, cmat, 1)
     E = V.astype(np.float32)  # the stored embedding is array<float>
+    schema = op_schema(spark, path)
     table = pa.table(
         {
             "vec_id": pa.array(ids, pa.int64()),
             "dist": pa.array(dist[:, 0], pa.float64()),
             "embedding": matrix_list_col(E),
-            **_code_columns(spark, path, E),
+            **_code_columns(spark, path, E, schema),
             "op": pa.array([OP_INSERT] * len(ids), pa.string()),
             "shard_id": pa.array(cids[near[:, 0]], pa.int32()),
         }
@@ -335,7 +335,7 @@ def upsert_vectors(
         tag_batch = spark.createDataFrame(
             pa.table({"neighbor_id": table["vec_id"], "_btags": batch.column(tags_col)})
         )
-    return _land_vector_op(spark, path, table, op_id, tag_batch=tag_batch)
+    return _land_vector_op(spark, path, table, op_id, schema, tag_batch=tag_batch)
 
 
 def delete_vectors(
@@ -367,7 +367,7 @@ def delete_vectors(
         rows = id_df.select(
             *[fill.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
-        return _land_vector_op(spark, path, rows, op_id)
+        return _land_vector_op(spark, path, rows, op_id, schema)
     uniq = np.unique(np.fromiter((int(i) for i in ids), dtype=np.int64))
     n = len(uniq)
     fixed = {
@@ -378,7 +378,7 @@ def delete_vectors(
     rows = pa.table(
         {f.name: fixed.get(f.name, pa.nulls(n, f.type)) for f in to_arrow_schema(schema)}
     )
-    return _land_vector_op(spark, path, rows, op_id)
+    return _land_vector_op(spark, path, rows, op_id, schema)
 
 
 def committed_op_scan(
@@ -728,8 +728,8 @@ def compact_in_place(
     stale ``{path}.compact.lock``). A fresh run refuses to start while
     either sibling exists, naming this recipe.
 
-    SINGLE-WRITER enforced by TWO locks (ADVICE r12): the in-tree
-    ``writer_lock`` detects a mutation already in flight, but it
+    SINGLE-WRITER enforced by TWO locks: the in-tree ``writer_lock``
+    detects a mutation already in flight, but it
     cannot guard the swap — the first rename moves ``{path}/_ops``
     (lock included) out with the tree, leaving ``{path}`` unguarded
     and the final delete eating the lock file. So the whole
@@ -739,8 +739,6 @@ def compact_in_place(
     create, so a mutator racing the rename window aborts and unwinds
     the phantom ``_ops`` dir its mkdirs made instead of breaking the
     swap-in."""
-    from big_ann_spark.operators.ann import rekey_shards_schema
-
     base = path.rstrip("/")
     tmp, old = base + ".compacting", base + ".precompact"
     for p in (tmp, old):
@@ -786,8 +784,18 @@ def compact_in_place(
                     f"{tmp} to {base} (the compacted layout is complete)"
                 )
             fs.delete(jold, True)
-            oplayout.invalidate_contested_memo(base)
-            rekey_shards_schema(tmp, base)
+            # the rename kept the shards directory's mtime, so the read
+            # schema write_shards filed under tmp is the one a reader of
+            # base computes: re-file it under base (a miss, the entry
+            # evicted, files None, which the last forget drops)
+            oplayout.forget(base)
+            _, jshards = oplayout.fs_path(spark, f"{base}/shards")
+            if fs.exists(jshards):
+                mtime = int(fs.getFileStatus(jshards).getModificationTime())
+                schema = oplayout.memo((f"{tmp}/shards", "schema"), mtime, lambda: None)
+                if schema is not None:
+                    oplayout.memo((f"{base}/shards", "schema"), mtime, lambda: schema)
+            oplayout.forget(f"{tmp}/shards")
     finally:
         cfs.delete(cjp, False)
     return n_ops

@@ -55,6 +55,35 @@ def register(name: str, sql: str | None = None):
     return deco
 
 
+# (kind, realpath of the fixture directory) -> (layout path, what the
+# kind's build returned); see fixture_layout
+_FIXTURE_LAYOUTS: dict[tuple[str, str], tuple[str, object]] = {}
+
+
+def fixture_layout(
+    kind: str, sf_dir: str, marker: str, build: Callable[[str], object]
+) -> tuple[str, object]:
+    """(path, value) of the persisted layout that a registry query of
+    ``kind`` serves over the fixtures in ``sf_dir``. An index's real
+    lifecycle is build-once/serve-many, so a query times the serving
+    path, not a per-run rebuild: ``build(path)`` writes the layout at a
+    fresh temp path once per session and returns a value kept with it
+    (e.g. immutable sidecar values the query passes through); it runs
+    again when ``{path}/{marker}`` is gone. Bounded by construction: at
+    most one entry per (kind, fixture directory), and the kinds are the
+    fixed names of the registry's disk-served variants."""
+    import os
+    import tempfile
+
+    key = (kind, os.path.realpath(sf_dir))
+    hit = _FIXTURE_LAYOUTS.get(key)
+    if hit is None or not os.path.isdir(f"{hit[0]}/{marker}"):
+        path = tempfile.mkdtemp(prefix=f"{kind}_q_") + "/layout"
+        hit = (path, build(path))
+        _FIXTURE_LAYOUTS[key] = hit
+    return hit
+
+
 def spread_width(
     spark, sf_dir: str, table: str = "documents", per_task_bytes: int = 64 << 10
 ) -> int:

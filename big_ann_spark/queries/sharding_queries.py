@@ -20,7 +20,7 @@ from big_ann_spark.operators import ann as ANN
 from big_ann_spark.operators import sharding as SH
 from big_ann_spark.operators.bm25 import B as _BM25_B
 from big_ann_spark.operators.bm25 import K1 as _BM25_K1
-from big_ann_spark.queries import build_concurrently, register
+from big_ann_spark.queries import build_concurrently, fixture_layout, register
 
 _BM25_K1P1 = _BM25_K1 + 1
 _BM25_1MB = 1 - _BM25_B
@@ -92,56 +92,36 @@ def centroid_assignment_stats(spark, sf_dir):
     return hist.unionByName(rec)
 
 
-# session-scoped cache of the sq8_disk variant's persisted layout —
-# an index's real lifecycle is build-once/serve-many, so the variant
-# times the serving path, not a per-run rebuild (the bm25_disk lesson).
-# The layout's (mins, maxs) sidecar values are cached WITH the path
-# (they are immutable layout metadata written at build time): serving
-# passes them through, skipping one one-row driver read job per search
-# (r14 — the serving chain is serial, every job is critical-path).
-_SQ8_DISK_CACHE: dict[str, tuple[str, list[float], list[float]]] = {}
-
-
 def _sq8_disk_layout(spark, sf_dir: str) -> tuple[str, list[float], list[float]]:
-    import os
-    import tempfile
-
+    """The sq8_disk variant's persisted layout, with its (mins, maxs)
+    sidecar values (immutable layout metadata written at build time):
+    serving passes them through, skipping one one-row driver read job
+    per search."""
     from big_ann_spark.operators.pq import train_sq8
 
-    key = os.path.realpath(sf_dir)
-    hit = _SQ8_DISK_CACHE.get(key)
-    if hit is None or not os.path.isdir(f"{hit[0]}/shards"):
-        path = tempfile.mkdtemp(prefix="sq8_disk_q_") + "/layout"
+    def build(path):
         emb = load_table(spark, sf_dir, "embeddings")
         cents = SH.label_centroids(emb)
         assign = SH.assign_to_centroids(emb, cents, extra_cols=["embedding"])
         mins, maxs = train_sq8(emb)
         SH.write_sharded(assign, emb, path, sq8_ranges=(mins, maxs))
-        hit = (path, mins, maxs)
-        _SQ8_DISK_CACHE[key] = hit
-    return hit
+        return mins, maxs
 
-
-# session-scoped cache of the mutated variant's layout: base build from
-# the vec_id % 20 != 0 rows, op 0 upserts the % 20 == 0 rows (5% —
-# mutations are a SMALL fraction of the corpus by the layout's design
-# contract; the contested set must stay broadcastable), op 1
-# tombstones the % 50 == 0 rows — so the head's live set is exactly
-# "vec_id % 50 != 0" and the as_of=0 snapshot is the FULL table, both
-# DuckDB-expressible as plain predicates over `embeddings`
-_MUTATED_CACHE: dict[str, str] = {}
+    path, (mins, maxs) = fixture_layout("sq8_disk", sf_dir, "shards", build)
+    return path, mins, maxs
 
 
 def _mutated_layout(spark, sf_dir: str) -> str:
-    import os
-    import tempfile
-
+    """The mutated variant's layout: base build from the vec_id % 20 != 0
+    rows, op 0 upserts the % 20 == 0 rows (5% — mutations are a SMALL
+    fraction of the corpus by the layout's design contract; the
+    contested set must stay broadcastable), op 1 tombstones the
+    % 50 == 0 rows — so the head's live set is exactly "vec_id % 50 !=
+    0" and the as_of=0 snapshot is the FULL table, both
+    DuckDB-expressible as plain predicates over `embeddings`."""
     from big_ann_spark.operators import vector_ops as VO
 
-    key = os.path.realpath(sf_dir)
-    path = _MUTATED_CACHE.get(key)
-    if path is None or not os.path.isdir(f"{path}/ops"):
-        path = tempfile.mkdtemp(prefix="ivf_mut_q_") + "/layout"
+    def build(path):
         emb = load_table(spark, sf_dir, "embeddings")
         cents = SH.label_centroids(emb)
         base = emb.filter(F.col("vec_id") % 20 != 0)
@@ -155,53 +135,34 @@ def _mutated_layout(spark, sf_dir: str) -> str:
         VO.delete_vectors(
             spark, path, emb.filter(F.col("vec_id") % 50 == 0).select("vec_id")
         )
-        _MUTATED_CACHE[key] = path
-    return path
 
-
-_TAG_MUT_CACHE: dict[str, str] = {}
-_HYBRID_BM25_CACHE: dict[str, str] = {}
-_GRAPH_CACHE: dict[str, str] = {}
+    return fixture_layout("ivf_mut", sf_dir, "ops", build)[0]
 
 
 def _graph_layout(spark, sf_dir: str) -> str:
     """Session-cached persisted GRAPH serving tier over the vec_id<250
     subset (NN-Descent edges → write_knn_graph_layout node records)."""
-    import os
-    import tempfile
 
-    key = os.path.realpath(sf_dir)
-    path = _GRAPH_CACHE.get(key)
-    if path is None or not os.path.isdir(f"{path}/graph.parquet"):
-        path = tempfile.mkdtemp(prefix="graph_q_") + "/layout"
+    def build(path):
         emb = load_table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") < 250
         )
         g = ANN.nn_descent_knn_graph(emb, k=6, iterations=1, dim=64)
         ANN.write_knn_graph_layout(g, emb, path, n_graph_buckets=8)
-        _GRAPH_CACHE[key] = path
-    return path
 
-
-_GRAPH_MUT_CACHE: dict[str, str] = {}
+    return fixture_layout("graph", sf_dir, "graph.parquet", build)[0]
 
 
 def _graph_mut_layout(spark, sf_dir: str) -> str:
-    """Session-cached MUTATED graph serving tier (VERDICT r12 #2):
-    the _graph_layout recipe, then exactly-once ops through
-    operators/graph_ops — one upsert (ids 100..104 shifted +25, plus
-    fresh ids 2000..2002 at half scale) and one delete (7 and the
-    just-moved 101: latest-op-wins). The live view is fully
-    deterministic, so DuckDB can rank it (the graph_mut oracle)."""
-    import os
-    import tempfile
-
+    """Session-cached MUTATED graph serving tier: the _graph_layout
+    recipe, then exactly-once ops through operators/graph_ops — one
+    upsert (ids 100..104 shifted +25, plus fresh ids 2000..2002 at half
+    scale) and one delete (7 and the just-moved 101: latest-op-wins).
+    The live view is fully deterministic, so DuckDB can rank it (the
+    graph_mut oracle)."""
     from big_ann_spark.operators import graph_ops as GO
 
-    key = os.path.realpath(sf_dir)
-    path = _GRAPH_MUT_CACHE.get(key)
-    if path is None or not os.path.isdir(f"{path}/graph.parquet"):
-        path = tempfile.mkdtemp(prefix="graph_mut_q_") + "/layout"
+    def build(path):
         emb = load_table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") < 250
         )
@@ -223,27 +184,21 @@ def _graph_mut_layout(spark, sf_dir: str) -> str:
         )
         GO.upsert_graph_vectors(spark, path, moved.unionByName(fresh))
         GO.delete_graph_nodes(spark, path, [7, 101])
-        _GRAPH_MUT_CACHE[key] = path
-    return path
+
+    return fixture_layout("graph_mut", sf_dir, "graph.parquet", build)[0]
 
 
 def _hybrid_bm25_layout(spark, sf_dir: str) -> str:
     """Session-scoped persisted BM25 index over the documents corpus —
     the lexical side of the hybrid_disk variant (built once, served
     every run: an index's real lifecycle)."""
-    import os
-    import tempfile
-
     from big_ann_spark.operators.bm25 import bm25_index, write_bm25_index
 
-    key = os.path.realpath(sf_dir)
-    path = _HYBRID_BM25_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        path = tempfile.mkdtemp(prefix="hybrid_bm25_q_") + "/idx"
+    def build(path):
         docs = load_table(spark, sf_dir, "documents")
         write_bm25_index(bm25_index(docs), path, n_term_buckets=16)
-        _HYBRID_BM25_CACHE[key] = path
-    return path
+
+    return fixture_layout("hybrid_bm25", sf_dir, "meta.parquet", build)[0]
 
 
 def _tag_mutated_layout(spark, sf_dir: str) -> str:
@@ -254,16 +209,11 @@ def _tag_mutated_layout(spark, sf_dir: str) -> str:
     ['vip:yes']; op2 = delete %50==0. The head live set is therefore
     %50 != 0, with tags ['vip:yes'] where %15==0 else the lang/src
     pair — a pure modular predicate DuckDB reproduces."""
-    import os
-    import tempfile
-
     from big_ann_spark.operators import tag_ops as TO
     from big_ann_spark.operators import vector_ops as VO
+    from big_ann_spark.operators.ann import write_tag_postings_layout
 
-    key = os.path.realpath(sf_dir)
-    path = _TAG_MUT_CACHE.get(key)
-    if path is None or not os.path.isdir(f"{path}/ops"):
-        path = tempfile.mkdtemp(prefix="ftag_mut_q_") + "/layout"
+    def build(path):
         emb = load_table(spark, sf_dir, "embeddings")
         docs = load_table(spark, sf_dir, "documents")
         tagged = emb.join(
@@ -282,8 +232,6 @@ def _tag_mutated_layout(spark, sf_dir: str) -> str:
         assign = SH.assign_to_centroids(base, cents, extra_cols=["embedding"])
         SH.write_sharded(assign, base, path)
         cents.write.mode("overwrite").parquet(f"{path}/centroids.parquet")
-        from big_ann_spark.operators.ann import write_tag_postings_layout
-
         # carry_payload: the driver row certifies the POSTING-LOCAL
         # serving mode (the 100 TB path — measured corpus-independent,
         # tools/measure_filtered_mut.py); the point-fetch mode is
@@ -305,8 +253,8 @@ def _tag_mutated_layout(spark, sf_dir: str) -> str:
         VO.delete_vectors(
             spark, path, tagged.filter(F.col("vec_id") % 50 == 0).select("vec_id")
         )
-        _TAG_MUT_CACHE[key] = path
-    return path
+
+    return fixture_layout("ftag_mut", sf_dir, "ops", build)[0]
 
 
 @register(

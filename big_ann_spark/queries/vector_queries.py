@@ -26,7 +26,7 @@ from big_ann_spark.operators.knn import (
     median_pairwise_distance,
     pairwise_distances,
 )
-from big_ann_spark.queries import register
+from big_ann_spark.queries import fixture_layout, register
 
 N_QUERIES = 20
 DIM = 64  # driver embeddings are fixed d=64 at every sf
@@ -45,24 +45,15 @@ from big_ann_spark.operators.bm25 import K1 as _BM25_K1  # noqa: E402
 _BM25_K1P1 = _BM25_K1 + 1
 _BM25_1MB = 1 - _BM25_B
 
-# session-scoped cache of the bm25_disk variant's persisted layout —
-# keyed by the (immutable) testdata dir; see the variant's comment
-_BM25_DISK_CACHE: dict[str, str] = {}
-
-
 def _bm25_disk_layout(spark, sf_dir: str, bidx) -> str:
-    import os
-    import tempfile
-
+    """The bm25_disk variant's persisted layout, built once per fixture
+    directory; see the variant's comment."""
     from big_ann_spark.operators.bm25 import write_bm25_index
 
-    key = os.path.realpath(sf_dir)
-    path = _BM25_DISK_CACHE.get(key)
-    if path is None or not os.path.isdir(f"{path}/meta.parquet"):
-        path = tempfile.mkdtemp(prefix="bm25_disk_q_") + "/idx"
-        write_bm25_index(bidx, path, n_term_buckets=32)
-        _BM25_DISK_CACHE[key] = path
-    return path
+    return fixture_layout(
+        "bm25_disk", sf_dir, "meta.parquet",
+        lambda path: write_bm25_index(bidx, path, n_term_buckets=32),
+    )[0]
 
 
 _KNN_EXACT_SQL = f"""

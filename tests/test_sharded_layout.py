@@ -38,11 +38,12 @@ def test_write_sharded_and_partition_pruning(spark, sf_dir):
 
 
 def test_write_sharded_prepopulates_schema_memo(spark, sf_dir):
-    """r15: a fresh layout's first probed open must not need a footer-
-    inference job — write_sharded stores the inferred read schema under
-    the exact (base, mtime) key open_probed_shards computes, and the
-    memoized schema equals what inference would return."""
+    """A fresh layout's first probed open must not need a footer-
+    inference job — write_sharded files the inferred read schema in the
+    layout memo under the key and token open_probed_shards computes, and
+    the memoized schema equals what inference would return."""
     from big_ann_spark.operators import ann as ANN
+    from big_ann_spark.operators import oplayout
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = SH.label_centroids(emb)
@@ -51,30 +52,13 @@ def test_write_sharded_prepopulates_schema_memo(spark, sf_dir):
     SH.write_sharded(assign, emb, path)
 
     base = f"{path}/shards"
-    memo = {k: v for k, v in ANN._SHARDS_SCHEMA_MEMO.items() if k[0] == base}
+    memo = {k: v for k, v in oplayout._memo.items() if k[0] == base}
     assert len(memo) == 1, "write_sharded must pre-populate exactly one entry"
+    fs, jp = oplayout.fs_path(spark, base)
+    token, schema, _ = memo[(base, "schema")]
+    assert token == fs.getFileStatus(jp).getModificationTime()
     inferred = spark.read.option("basePath", base).parquet(base).schema
-    assert next(iter(memo.values())) == inferred
+    assert schema == inferred
     # and the serving-path open agrees with a bare read on those dirs
     probed = ANN.open_probed_shards(spark, path, [0, 1])
     assert probed.schema == inferred
-
-
-def test_schema_memo_evicts_only_the_oldest_entry(spark, sf_dir, monkeypatch):
-    """At its 256-entry bound the schema memo drops the oldest entry
-    (insertion order), not every hot layout at once."""
-    from big_ann_spark.operators import ann as ANN
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = SH.label_centroids(emb)
-    assign = SH.assign_to_centroids(emb, cents)
-    path = tempfile.mkdtemp(prefix="big_ann_memo_") + "/layout"
-    SH.write_sharded(assign, emb, path)
-
-    memo = {(f"/other/{i}/shards", 0): None for i in range(256)}
-    monkeypatch.setattr(ANN, "_SHARDS_SCHEMA_MEMO", memo)
-    ANN.open_probed_shards(spark, path, [0])
-    assert len(memo) == 256
-    assert ("/other/0/shards", 0) not in memo
-    assert ("/other/1/shards", 0) in memo and ("/other/255/shards", 0) in memo
-    assert [k for k in memo if k[0] == f"{path}/shards"]

@@ -426,8 +426,8 @@ def test_contested_warning_and_inplace_compaction(spark, sf_dir, monkeypatch):
         VO.compact_in_place(spark, path)
 
 
-def test_contested_count_memoized_per_ledger_state(spark, sf_dir, monkeypatch):
-    """ADVICE r12 — the contested-size telemetry must not cost an
+def test_contested_count_is_memoized_per_ledger_state(spark, sf_dir, monkeypatch):
+    """The contested-size telemetry must not cost an
     extra Spark count job on EVERY search: the full count runs once
     per (path, as_of) per session (head(1) keeps the emptiness probe),
     and a mutation landing through this session busts the memo."""
@@ -446,14 +446,12 @@ def test_contested_count_memoized_per_ledger_state(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(DataFrame, "count", real)
     # a new op invalidates: the next search re-counts (and still works)
     VO.delete_vectors(spark, path, [4])
-    assert not [
-        k for k in oplayout._contested_count_memo if k[0] == path.rstrip("/")
-    ]
+    assert not [k for k in oplayout._memo if k[0] == path.rstrip("/")]
     assert VO.mutation_state(spark, path) is not None
 
 
 def test_contested_memo_busts_on_foreign_commit(spark, sf_dir, monkeypatch):
-    """ADVICE r13 — the memoized contested count must not lag a
+    """The memoized contested count must not lag a
     mutator in ANOTHER process indefinitely: the memo is keyed on the
     committed-op id set (one _ops listing, already paid per search),
     so a foreign commit marker busts it the moment it is visible,
@@ -465,13 +463,13 @@ def test_contested_memo_busts_on_foreign_commit(spark, sf_dir, monkeypatch):
     assert VO.mutation_state(spark, path) is not None  # counts, warms memo
     # simulate an out-of-process mutator: same landing protocol, but
     # the in-session invalidation hook never fires
-    monkeypatch.setattr(oplayout, "invalidate_contested_memo", lambda p: None)
+    monkeypatch.setattr(oplayout, "forget", lambda p: None)
     VO.delete_vectors(spark, path, [4])
     key = (path.rstrip("/"), None, "mutation_state")
-    assert oplayout._contested_count_memo[key][1] == 1  # stale memo survives
+    assert oplayout._memo[key][1].count == 1  # stale memo survives
     assert VO.mutation_state(spark, path) is not None
     # the ledger token changed -> the count re-ran despite the warm memo
-    assert oplayout._contested_count_memo[key][1] == 2
+    assert oplayout._memo[key][1].count == 2
     # and with an UNCHANGED ledger the memo still spares the count job
     def boom(self):
         raise AssertionError("telemetry count ran on a warm memo")
@@ -486,26 +484,29 @@ def test_contested_memo_busts_after_foreign_compaction(spark, sf_dir, monkeypatc
     id set exactly. The memo token also carries each commit marker's
     mtime, so the count still re-runs."""
     emb, cents, path = _build_layout(spark, sf_dir)
-    monkeypatch.setattr(oplayout, "invalidate_contested_memo", lambda p: None)
+    monkeypatch.setattr(oplayout, "forget", lambda p: None)
     VO.delete_vectors(spark, path, [2])
     assert VO.mutation_state(spark, path) is not None  # counts, warms memo
     key = (path.rstrip("/"), None, "mutation_state")
-    assert oplayout._contested_count_memo[key][1] == 1
+    assert oplayout._memo[key][1].count == 1
     VO.compact_in_place(spark, path)
     VO.delete_vectors(spark, path, [4, 5])
     assert oplayout.committed_ops(spark, path) == {0}  # same id set as before
     assert VO.mutation_state(spark, path) is not None
-    assert oplayout._contested_count_memo[key][1] == 2
+    assert oplayout._memo[key][1].count == 2
 
 
-def test_ledger_memo_evicts_only_the_least_recently_used(spark, monkeypatch):
-    """At its bound the ledger memo drops the least recently used entry
-    alone — a hit refreshes an entry — and unpersists its checkpoint."""
+def test_ledger_memo_evicts_only_the_least_recently_used(spark, sf_dir, monkeypatch):
+    """The one layout memo holds ledger state, file-stamped data and
+    shards schemas under one bound: past it the least recently used
+    entry alone is dropped — a hit refreshes an entry — and an evicted
+    ledger entry's checkpoint is unpersisted."""
     from collections import OrderedDict
 
+    _, _, path = _build_layout(spark, sf_dir)
     memo = OrderedDict()
-    monkeypatch.setattr(oplayout, "_contested_count_memo", memo)
-    monkeypatch.setattr(oplayout, "LEDGER_MEMO_ENTRIES", 3)
+    monkeypatch.setattr(oplayout, "_memo", memo)
+    monkeypatch.setattr(oplayout, "MEMO_ENTRIES", 3)
     checkpoint = spark.range(4).localCheckpoint()
     rdd_id = checkpoint._jdf.queryExecution().logical().rdd().id()
     built = []
@@ -518,16 +519,25 @@ def test_ledger_memo_evicts_only_the_least_recently_used(spark, monkeypatch):
 
         return oplayout.ledger_entry(spark, f"/nonexistent/{name}", "t", build)
 
+    def sidecar():
+        stamps = (("/nonexistent/sidecar/part-0.parquet", 1, 2),)
+        return oplayout.memo_by_files("sidecar", stamps, lambda: built.append("f") or "f")
+
     entry("a")
+    sidecar()
     entry("b", checkpoint)
-    entry("c")
     assert entry("a").count == 1  # a hit: refreshed, not rebuilt
+    assert sidecar() == "f"  # a hit: refreshed, not rebuilt
     persistent = spark.sparkContext._jsc.sc().getPersistentRDDs()
     assert persistent.contains(rdd_id)
-    entry("d")
-    assert built == ["a", "b", "c", "d"]
-    assert [k[0] for k in memo] == ["/nonexistent/c", "/nonexistent/a", "/nonexistent/d"]
+    probed = ANN.open_probed_shards(spark, path, [0])  # files the shards schema
+    assert built == ["a", "f", "b"]
+    assert [k[0] for k in memo] == ["/nonexistent/a", "sidecar", f"{path}/shards"]
     assert not spark.sparkContext._jsc.sc().getPersistentRDDs().contains(rdd_id)
+    inferred = spark.read.option("basePath", f"{path}/shards").parquet(f"{path}/shards")
+    assert memo[(f"{path}/shards", "schema")][1] == probed.schema == inferred.schema
+    entry("c")  # the bound holds: the least recently used goes
+    assert [k[0] for k in memo] == ["sidecar", f"{path}/shards", "/nonexistent/c"]
 
 
 def test_search_sees_same_process_and_foreign_commits(spark, sf_dir, monkeypatch):
@@ -548,7 +558,7 @@ def test_search_sees_same_process_and_foreign_commits(spark, sf_dir, monkeypatch
     VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id").isin(0, 3)))
     live = base_live | F.col("vec_id").isin(0, 3)
     assert search() == _rows(_expected(spark, emb, cents, live, queries))
-    monkeypatch.setattr(oplayout, "invalidate_contested_memo", lambda p: None)
+    monkeypatch.setattr(oplayout, "forget", lambda p: None)
     VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id").isin(6, 9)))
     VO.delete_vectors(spark, path, [3, 4])
     live = (base_live | F.col("vec_id").isin(0, 3, 6, 9)) & ~F.col("vec_id").isin(3, 4)
@@ -614,7 +624,7 @@ def test_live_frame_is_rebuilt_for_each_new_layout_state(spark, sf_dir, monkeypa
     snap, snap_ids = _live_ids(spark, path, as_of=0)
     assert snap is not frame and snap_ids == base_ids | {0, 3}
     assert VO.live_frame(spark, path)[0] is frame
-    monkeypatch.setattr(oplayout, "invalidate_contested_memo", lambda p: None)
+    monkeypatch.setattr(oplayout, "forget", lambda p: None)
     VO.delete_vectors(spark, path, [2])
     changed((base_ids | {0}) - {1, 2})
     rebuilt = emb.filter(F.col("vec_id") % 3 == 1)
@@ -641,8 +651,8 @@ def test_live_frame_memo_stays_bounded_and_never_reads_an_evicted_state(
     VO.upsert_vectors(spark, path, emb.filter(F.col("vec_id").isin(0, 3)))
     VO.delete_vectors(spark, path, [1])
     memo = OrderedDict()
-    monkeypatch.setattr(oplayout, "_contested_count_memo", memo)
-    monkeypatch.setattr(oplayout, "LEDGER_MEMO_ENTRIES", 3)
+    monkeypatch.setattr(oplayout, "_memo", memo)
+    monkeypatch.setattr(oplayout, "MEMO_ENTRIES", 3)
     head, want = _live_ids(spark, path)  # head's state and frame
     _live_ids(spark, path, as_of=0)  # evicts head's mutation state
     assert len(memo) == 3
@@ -1086,7 +1096,7 @@ def test_search_after_compact_in_place_runs_no_inference_job(spark, sf_dir):
     _, n_repeat = _job_count(spark, search())
     assert n_first == n_repeat <= 2, (n_first, n_repeat)
     assert sorted(map(tuple, rows)) == before
-    assert not [k for k in ANN._SHARDS_SCHEMA_MEMO if ".compacting" in k[0]]
+    assert not [k for k in oplayout._memo if ".compacting" in k[0]]
 
 
 def test_rewritten_centroids_seen_by_next_search_and_upsert(spark, sf_dir):
