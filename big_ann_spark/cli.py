@@ -810,66 +810,6 @@ def _build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def _load_index_shards(spark, index: str, id_col: str, vec_col: str, shards_df=None):
-    """A build-index dir's shards (``shards_df``, else the whole layout),
-    SQ8 codes decoded by a projection when there is no raw column. Keyed
-    off the DATA, not the sidecar: a float rebuild over an --sq8 index
-    leaves a stale sq8_ranges.parquet, and decoding a refine layout would
-    replace its real embeddings with quantized midpoints."""
-    from pyspark.sql import functions as F
-
-    from big_ann_spark.operators import pq as PQ
-
-    shards = shards_df if shards_df is not None else spark.read.parquet(f"{index}/shards")
-    if "codes" in shards.columns and vec_col not in shards.columns:
-        rows = spark.read.parquet(f"{index}/sq8_ranges.parquet").collect()
-        if not rows:
-            raise SystemExit(
-                f"{index}: shards carry sq8 codes but sq8_ranges.parquet "
-                "is empty — rebuild the index"
-            )
-        shards = shards.select(
-            id_col,
-            "shard_id",
-            PQ.sq8_decode_col(
-                F.col("codes"), list(rows[0].mins), list(rows[0].maxs)
-            ).alias(vec_col),
-        )
-    return shards
-
-
-def _decoded_index_search(spark, args, q, cents):
-    """IVF search of a build-index dir as stored (``evaluate``; ``search``
-    of a codes-only layout): route, open the probed shards — or list the
-    layout when at least half are probed, one walk beating m explicit
-    roots — resolve mutations, decode, ``ivf_search``."""
-    from pyspark.sql import functions as F
-
-    from big_ann_spark.operators import ann as ANN
-    from big_ann_spark.operators import vector_ops as VO
-
-    routed = ANN.route_queries(q, cents, args.nprobe).localCheckpoint()
-    probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
-    probed = len(probe_ids) < cents.count() / 2
-    if probed:
-        base = ANN.open_probed_shards(spark, args.index, probe_ids)
-    else:
-        base = spark.read.option("basePath", f"{args.index}/shards").parquet(
-            f"{args.index}/shards"
-        )
-    live = VO.live_probed_view(
-        spark, args.index, base, probe_ids if probed else None,
-        as_of=args.as_of, id_col=args.id_col, vec_col=args.vec_col,
-    )
-    shards = _load_index_shards(spark, args.index, args.id_col, args.vec_col, live)
-    if not probed:
-        shards = shards.filter(F.col("shard_id").isin(probe_ids))
-    return ANN.ivf_search(
-        q, shards, cents, k=args.k, nprobe=args.nprobe,
-        id_col=args.id_col, vec_col=args.vec_col, _routed=routed,
-    )
-
-
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
 
@@ -1117,20 +1057,16 @@ def main(argv: list[str] | None = None) -> int:
             F.col(args.id_col).alias("qid"), F.col(args.vec_col).alias("qvec")
         )
         # codec detection is SCHEMA-ONLY (zero jobs): code columns can
-        # only come from the base layout
-        codec = ANN.detect_refine_codec(spark, args.index, args.vec_col)
-        if codec == "codes_only":
-            # --sq8 layout: no raw column, so search the decoded codes
-            out = _decoded_index_search(spark, args, q, cents)
-        else:
-            # raw vectors, or a refine layout: quantized candidate scan
-            # (codes/pq_codes/bcodes only) + exact rerank from the raw
-            # column — one call routes, resolves mutations and scores
-            out = ANN.ivf_search_from_disk(
-                q, args.index, cents, k=args.k, nprobe=args.nprobe,
-                id_col=args.id_col, vec_col=args.vec_col,
-                codec=codec, as_of=args.as_of,
-            )
+        # only come from the base layout. A refine layout gets its
+        # quantized candidate scan + exact rerank, a --sq8 layout the
+        # scan of its decoded codes; one call routes, resolves
+        # mutations and scores
+        out = ANN.ivf_search_from_disk(
+            q, args.index, cents, k=args.k, nprobe=args.nprobe,
+            id_col=args.id_col, vec_col=args.vec_col,
+            codec=ANN.detect_refine_codec(spark, args.index, args.vec_col),
+            as_of=args.as_of,
+        )
         if args.out:
             out.write.mode("overwrite").parquet(args.out)
             # count the WRITTEN parquet — re-counting `out` would
@@ -1626,10 +1562,16 @@ def main(argv: list[str] | None = None) -> int:
                 f"{qids[0] if qids else None}/{qids[-1] if qids else None})"
             )
         # recall must be measured against the SERVED index — deleted
-        # vectors out, upserts in — exactly like `search`
-        pred = _decoded_index_search(spark, args, q, cents).select(
-            "qid", "neighbor_id", "rank"
-        )
+        # vectors out, upserts in — and its stored vectors: the raw
+        # column where there is one (no quantized pool), else the codes
+        from big_ann_spark.operators import ann as ANN
+
+        codes_only = ANN.detect_refine_codec(spark, args.index, args.vec_col) == "codes_only"
+        pred = ANN.ivf_search_from_disk(
+            q, args.index, cents, k=args.k, nprobe=args.nprobe,
+            id_col=args.id_col, vec_col=args.vec_col,
+            codec="codes_only" if codes_only else "raw", as_of=args.as_of,
+        ).select("qid", "neighbor_id", "rank")
         gt = FB.ground_truth_df(spark, args.gt, k=args.k)
         r = recall_at_k(pred, gt, args.k).collect()[0].recall_at_k
         print(f"recall@{args.k} (nprobe={args.nprobe}): {r:.4f}")

@@ -7,22 +7,23 @@ centroid index → top-MAX_CENTROIDS=3 routing → search top-1 shard's
 HNSW → top-10 by distance. Its cliffs: sequential queries, and the
 shard index re-loaded from disk per query (``utils.py:308-310``).
 
-Spark-first replacement (§7.4): IVF-style —
-1. routing: top-``nprobe`` centroids per query. In memory
-   (``route_queries``) a broadcast centroid array scored in a pure
-   projection; off a persisted layout (``ivf_search_from_disk``) the
-   query batch and the tiny centroid table are collected once and
-   routed on the driver with the same arithmetic and tie-break;
-2. candidate scan: only the probed shards are read. In memory a join
-   on ``shard_id`` with static partition pruning; from disk ONE
-   ``mapInArrow`` pass over the probed shards of the layout's memoized
-   live frame scores each (query, shard) group against the broadcast
-   queries (the fold-exact ``knn.fold_l2_topk`` for raw vectors,
-   quantized scorers for the refine tiers) and drops rows the mutation
-   ledger made dead;
-3. top-k per query by true distance: in memory one window; from disk
-   each scan task keeps its own top-k and the driver merges them (the
-   refine tiers re-rank their pool exactly first).
+Spark-first replacement (§7.4): IVF-style, one path for a table in
+memory (``ivf_search``) and for a persisted layout
+(``ivf_search_from_disk``) —
+1. routing: the query batch and the tiny centroid table are collected
+   once and routed on the driver (``_route_on_driver``:
+   ``knn.nearest_centroids``, the ``l2_distance`` fold with ties to the
+   lower shard id);
+2. candidate scan: one ``shard_id IN`` filter keeps the probed shards
+   (static partition pruning on a ``partitionBy("shard_id")`` table),
+   and ONE ``mapInArrow`` pass (``_arrow_nominating_pool``) scores each
+   (query, shard) group against the broadcast queries — the
+   fold-exact ``knn.fold_l2_topk`` for raw vectors, quantized scorers
+   for the refine tiers — and drops rows the mutation ledger made dead
+   (``_drop_dead``);
+3. top-k per query: each scan task keeps its own top-k and the driver
+   merges them by (dist, id) (the refine tiers re-rank their pool
+   exactly first).
 
 Recall loss vs exact is a *property of the routing* (the reference
 searches only the top-1 shard); ``nprobe`` trades IO for recall.
@@ -184,14 +185,6 @@ def _routing(qids, qmat, qrow, shards) -> Routing:
     return Routing(uq, qmat[first], shard_to_q, np.empty(0, dtype=np.int64))
 
 
-def _routing_of_table(routed: DataFrame) -> Routing:
-    """Routing of a (qid, qvec, shard_id) routing table."""
-    rows = routed.select("qid", "qvec", "shard_id").collect()
-    qids, shards = (np.array([r[c] for r in rows], dtype=np.int64) for c in ("qid", "shard_id"))
-    qmat = np.array([r["qvec"] for r in rows] or np.empty((0, 0)), dtype=np.float64)
-    return _routing(qids, qmat, np.arange(len(rows)), shards)
-
-
 def collect_to_driver(df: DataFrame, what: str):
     """``df`` as an Arrow table, read in one job of at most
     ``DRIVER_ROWS + 1`` rows; a larger ``df`` fails loudly, it is never
@@ -244,10 +237,10 @@ def centroid_matrix(spark, centroids: DataFrame | str) -> tuple[np.ndarray, np.n
 def _route_on_driver(
     queries: DataFrame, centroids: DataFrame, nprobe: int, *, query_id: str, query_vec: str
 ) -> Routing:
-    """``route_queries`` on the driver, pair for pair: the query batch
-    is collected once (``collect_to_driver``), the centroid matrix comes
-    from ``centroid_matrix``, and every query keeps its first
-    ``nprobe`` shards (``nearest_centroids``)."""
+    """The routing of every IVF search: the query batch is collected
+    once (``collect_to_driver``), the centroid matrix comes from
+    ``centroid_matrix``, and every query keeps its first ``nprobe``
+    shards by (distance, shard id) (``nearest_centroids``)."""
     from big_ann_spark.functions.arrowio import int_col, list_col_matrix
 
     q = collect_to_driver(
@@ -258,6 +251,45 @@ def _route_on_driver(
     qids, qmat = int_col(q, "qid"), list_col_matrix(q, "qvec")
     top, _ = nearest_centroids(qmat, cids, cmat, nprobe)
     return _routing(qids, qmat, np.repeat(np.arange(len(qids)), top.shape[1]), cids[top].ravel())
+
+
+def _probed(frame: DataFrame, routing: Routing) -> DataFrame:
+    """``frame`` kept to the probed shards of ``routing`` by one parsed
+    ``shard_id IN`` predicate (``_isin_ids``): static partition pruning
+    on a ``partitionBy("shard_id")`` table."""
+    return frame.filter(_isin_ids("shard_id", sorted(routing.shard_to_q)))
+
+
+def ivf_search(
+    queries: DataFrame,
+    sharded_vectors: DataFrame,
+    centroids: DataFrame,
+    k: int = 10,
+    nprobe: int = 2,
+    *,
+    query_id: str = "qid",
+    query_vec: str = "qvec",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """IVF top-k over a table of (``id_col``, ``vec_col``, shard_id):
+    route on the driver (``_route_on_driver``), keep the probed shards
+    (``_probed``: a ``partitionBy("shard_id")`` parquet table reads only
+    the probed shard directories), then one candidate scan
+    (``_fold_pool``) scores them by the ``l2_distance`` fold and ranks
+    by (dist, id) — the union of per-shard candidates re-sorted,
+    ``kanndi/README.md:46-47``.
+
+    Runs at call time: the query collect and the candidate scan (plus
+    the centroid read, memoized for a bare-file centroid table). Returns
+    a local frame (qid, neighbor_id, dist, rank) whose ``collect()``
+    starts no Spark job."""
+    routing = _route_on_driver(
+        queries, centroids, nprobe, query_id=query_id, query_vec=query_vec
+    )
+    return _fold_pool(
+        routing, _probed(sharded_vectors, routing), k, vec_col, lambda X: X, id_col=id_col
+    )
 
 
 def ivf_search_from_disk(
@@ -271,24 +303,21 @@ def ivf_search_from_disk(
     query_vec: str = "qvec",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
     codec: str = "raw",
     rerank_factor: int = 4,
     max_id_pushdown: int = DRIVER_ROWS,
     as_of: int | None = None,
-    _routed: DataFrame | None = None,
     _sq8_ranges: tuple[list[float], list[float]] | None = None,
 ) -> DataFrame:
     """``ivf_search`` straight off a ``write_sharded`` layout path: a
     global index on the driver picks the shards, then one local scan.
 
-    1. Route on the driver (``_route_on_driver``, bit-equal to
-       ``route_queries``); a query batch over ``DRIVER_ROWS`` fails.
+    1. Route on the driver (``_route_on_driver``); a query batch over
+       ``DRIVER_ROWS`` fails.
     2. Take the layout's live frame (``vector_ops.live_frame``: every
        base shard plus the resolved mutation winners, memoized per
        layout state, so an unchanged layout costs no Spark job and no
-       listing) and keep the probed shards with one ``shard_id IN``
-       partition filter.
+       listing) and keep the probed shards (``_probed``).
     3. One ``mapInArrow`` candidate scan (``_arrow_nominating_pool``)
        drops dead base rows and scores each (query, shard) group against
        the broadcast queries; each task keeps its top-k per query and
@@ -296,9 +325,12 @@ def ivf_search_from_disk(
 
     The candidate scan runs at call time. ``codec="raw"`` scores raw
     vectors by ``_fold_pool``, so results equal ``ivf_search`` over the
-    fully listed layout bit for bit, and the frame returned is local:
-    two Spark jobs in all once the layout state is resolved (the query
-    collect and the candidate scan), and its ``collect()`` starts none.
+    live rows bit for bit, and the frame returned is local: two Spark
+    jobs in all once the layout state is resolved (the query collect
+    and the candidate scan), and its ``collect()`` starts none.
+    ``codec="codes_only"`` serves a ``--sq8`` layout, which holds codes
+    and no raw column, the same way: ``sq8_pool`` at ``k`` with no
+    rerank, distances the fold over the decoded codes.
 
     ``codec="sq8"``/``"pq"``/``"opq"``/``"binary"`` (refine layouts)
     scan ONLY the code column of the probed shards — parquet column
@@ -313,16 +345,13 @@ def ivf_search_from_disk(
 
     ``as_of``: SNAPSHOT search — the layout as of committed mutation op
     ``as_of`` (``operators.vector_ops``; −1 = the base build, ``None`` =
-    head). A layout with no ``ops/`` directory resolves nothing.
-
-    ``_routed``: a caller-provided, materialized (qid, qvec, shard_id)
-    routing table (``ivf_search``'s contract) replaces step 1."""
+    head). A layout with no ``ops/`` directory resolves nothing."""
     from big_ann_spark.operators.vector_ops import live_frame
 
-    if codec not in ("raw", "sq8", "pq", "opq", "binary"):
+    if codec not in ("raw", "codes_only", "sq8", "pq", "opq", "binary"):
         raise ValueError(
-            f"unknown codec {codec!r}; use 'raw', 'sq8', 'pq', 'opq' or "
-            "'binary'"
+            f"unknown codec {codec!r}; use 'raw', 'codes_only', 'sq8', 'pq', "
+            "'opq' or 'binary'"
         )
     spark = queries.sparkSession
     # sidecar prefetch: the codebooks (+ optional OPQ rotation) live in
@@ -331,24 +360,19 @@ def ivf_search_from_disk(
     # are identical, only the wall-clock interleaving changes.
     sidecar_fut = sidecars = None
     if codec in ("pq", "opq"):
-        from big_ann_spark.operators import oplayout as _ol2
         from big_ann_spark.operators.pq import load_pq_codebooks, load_rotation
 
         def _load_pq_sidecars():
             cb = load_pq_codebooks(spark, f"{path}/pq_codebooks.parquet")
             rot = None
-            if _ol2.path_exists(spark, f"{path}/opq_rotation.parquet"):
+            if oplayout.path_exists(spark, f"{path}/opq_rotation.parquet"):
                 rot = load_rotation(spark, f"{path}/opq_rotation.parquet")
             return cb, rot
 
         sidecar_fut = _SIDECAR_PREFETCH.submit(_load_pq_sidecars)
     try:
-        routing = (
-            _routing_of_table(_routed)
-            if _routed is not None
-            else _route_on_driver(
-                queries, centroids, nprobe, query_id=query_id, query_vec=query_vec
-            )
+        routing = _route_on_driver(
+            queries, centroids, nprobe, query_id=query_id, query_vec=query_vec
         )
         frame, dead = live_frame(spark, path, as_of=as_of, id_col=id_col, vec_col=vec_col)
         if sidecar_fut is not None:
@@ -359,18 +383,15 @@ def ivf_search_from_disk(
         # the one that propagates)
         if sidecar_fut is not None and not sidecar_fut.cancel():
             sidecar_fut.exception()
-    # one parsed predicate, not one py4j literal per probed shard
-    probed = ",".join(str(s) for s in sorted(routing.shard_to_q))
-    live = frame.filter(F.expr(f"shard_id IN ({probed})") if probed else F.lit(False))
+    live = _probed(frame, routing)
     routing = routing._replace(dead=dead)
     if codec == "raw":
-        return _fold_pool(
-            None, live, k, vec_col, lambda X: X, id_col=id_col, routed_rows=routing
-        )
+        return _fold_pool(routing, live, k, vec_col, lambda X: X, id_col=id_col)
+    if codec == "codes_only":
+        return sq8_pool(routing, live, path, k, id_col=id_col, ranges=_sq8_ranges)
     if codec == "sq8":
         pool = sq8_pool(
-            None, live, path, k * rerank_factor,
-            id_col=id_col, ranges=_sq8_ranges, routed_rows=routing,
+            routing, live, path, k * rerank_factor, id_col=id_col, ranges=_sq8_ranges
         )
     elif codec in ("pq", "opq"):
         # OPQ is PQ with codes in a learned rotated space: pq_pool
@@ -385,13 +406,10 @@ def ivf_search_from_disk(
                 "or serve as codec='pq'"
             )
         pool = pq_pool(
-            None, live, path, k * rerank_factor,
-            id_col=id_col, routed_rows=routing, _sidecars=sidecars,
+            routing, live, path, k * rerank_factor, id_col=id_col, _sidecars=sidecars
         )
     else:
-        pool = binary_pool(
-            None, live, path, k * rerank_factor, id_col=id_col, routed_rows=routing
-        )
+        pool = binary_pool(routing, live, path, k * rerank_factor, id_col=id_col)
     # the pool is local: up to max_id_pushdown of its ids are In-pushed
     # to the raw scan beside a broadcast of its pairs; a larger pool is
     # joined to the probed shards without the In list
@@ -401,7 +419,7 @@ def ivf_search_from_disk(
     if len(pool_rows) <= max_id_pushdown:
         cand = np.unique(np.array([r["neighbor_id"] for r in pool_rows], dtype=np.int64))
         raw, pairs = live.filter(_isin_ids(id_col, cand.tolist())), F.broadcast(pairs)
-    return _exact_rerank(raw, pairs, routing, k, id_col=id_col, vec_col=vec_col, dim=dim)
+    return _exact_rerank(raw, pairs, routing, k, id_col=id_col, vec_col=vec_col)
 
 
 def _exact_rerank(
@@ -412,14 +430,13 @@ def _exact_rerank(
     *,
     id_col: str,
     vec_col: str,
-    dim: int | None,
 ) -> DataFrame:
     """The exact top-``k`` of each query among its pool ``pairs`` (qid,
     neighbor_id): the rows of ``raw``, a probed live frame, joined to the
     pairs and scored in one ``mapInArrow`` by ``knn.fold_l2`` against the
-    routed query vectors — ``l2_distance``'s fold bit for bit, over the
-    first ``dim`` dimensions when given — dropping dead base rows as the
-    candidate scan does; one window ranks by (dist, id)."""
+    routed query vectors — ``l2_distance``'s fold bit for bit — dropping
+    dead base rows as the candidate scan does; one window ranks by
+    (dist, id)."""
     bc = raw.sparkSession.sparkContext.broadcast((routing.qids, routing.qmat, routing.dead))
 
     def score(batches):
@@ -434,8 +451,6 @@ def _exact_rerank(
                 continue
             q = int_col(rb, "qid")
             Q, X = qmat[np.searchsorted(qids, q)], list_col_matrix(rb, vec_col)
-            if dim is not None:
-                Q, X = Q[:, :dim], X[:, :dim]
             yield pa.RecordBatch.from_arrays(
                 [pa.array(q), pa.array(ids), pa.array(fold_l2(Q, X))],
                 names=["qid", "neighbor_id", "dist"],
@@ -452,14 +467,13 @@ def _exact_rerank(
 
 
 def sq8_pool(
-    routed: DataFrame | None,
+    routing: Routing,
     shards: DataFrame,
     path: str,
     k_pool: int,
     *,
     id_col: str = "vec_id",
     ranges: tuple[list[float], list[float]] | None = None,
-    routed_rows: Routing | None = None,
 ) -> DataFrame:
     """Quantized candidate pool of an SQ8 layout: reads ONLY the
     ``codes`` column (plan-pinned in tests), decodes each Arrow batch
@@ -471,8 +485,7 @@ def sq8_pool(
 
     ``ranges``: the layout's (mins, maxs) sidecar values when the
     caller already holds them; otherwise they are read once per state
-    of the sidecar (``pq.load_sq8_ranges``).
-    ``routed``/``routed_rows``: see ``_arrow_nominating_pool``."""
+    of the sidecar (``pq.load_sq8_ranges``)."""
     from big_ann_spark.operators.pq import load_sq8_ranges
 
     if ranges is None:
@@ -480,13 +493,13 @@ def sq8_pool(
     mn = np.array(ranges[0], dtype=np.float64)
     mx = np.array(ranges[1], dtype=np.float64)
     return _fold_pool(
-        routed, shards, k_pool, "codes",
+        routing, shards, k_pool, "codes",
         lambda c: mn + ((c + 0.5) * (mx - mn)) / 255.0,
-        id_col=id_col, routed_rows=routed_rows,
+        id_col=id_col,
     )
 
 
-def _fold_pool(routed, shards, k_pool, payload_col, decode, **kw) -> DataFrame:
+def _fold_pool(routing, shards, k_pool, payload_col, decode, *, id_col) -> DataFrame:
     """``_arrow_nominating_pool`` scoring ``decode(payload)`` by
     ``knn.fold_l2_topk``: a GEMM nominates an error-bound band and the
     left-to-right fold ranks inside it, so distances are the fold of
@@ -497,8 +510,9 @@ def _fold_pool(routed, shards, k_pool, payload_col, decode, **kw) -> DataFrame:
         return qidx[qi], sel_ids, dists
 
     return _arrow_nominating_pool(
-        routed, shards, k_pool, payload_col=payload_col, payload_dtype=np.float64,
-        make_state=lambda qids, qmat: qmat, score_shard=score_shard, **kw,
+        routing, shards, k_pool, id_col=id_col, payload_col=payload_col,
+        payload_dtype=np.float64, make_state=lambda qids, qmat: qmat,
+        score_shard=score_shard,
     )
 
 
@@ -513,6 +527,22 @@ def _drop_dead(rb, ids, dead):
     keep = ~np.isin(ids, dead)
     keep |= rb.column("_resolved").to_numpy(zero_copy_only=False)
     return rb.filter(pa.array(keep)), ids[keep]
+
+
+def drop_dead_rows(live: DataFrame, dead: np.ndarray, id_col: str) -> DataFrame:
+    """The rows of ``live``, a (filtered, projected) ``vector_ops.live_frame``
+    that keeps its ``_resolved`` column, without the dead base rows, by
+    ``_drop_dead`` in one ``mapInArrow``; ``_resolved`` is dropped. The
+    dead ids ride a broadcast variable, which starts no Spark job."""
+    from big_ann_spark.functions.arrowio import int_col
+
+    if len(dead):
+        bc = live.sparkSession.sparkContext.broadcast(dead)
+        live = live.mapInArrow(
+            lambda batches: (_drop_dead(rb, int_col(rb, id_col), bc.value)[0] for rb in batches),
+            schema=live.schema,
+        )
+    return live.drop("_resolved")
 
 
 def _first_k(q, n, d, k):
@@ -543,7 +573,7 @@ def _collect_partials(scan: DataFrame, n_queries: int, k_pool: int):
 
 
 def _arrow_nominating_pool(
-    routed: DataFrame | None,
+    routing: Routing,
     shards: DataFrame,
     k_pool: int,
     *,
@@ -552,9 +582,8 @@ def _arrow_nominating_pool(
     payload_dtype,
     make_state,
     score_shard,
-    routed_rows: Routing | None = None,
 ) -> DataFrame:
-    """The one candidate scan of the from-disk search, run at call time:
+    """The one candidate scan of every IVF search, run at call time:
     ONE broadcast carries the routing (sorted query ids, per-query state
     ``make_state(qids, qmat)``, shard → query rows, dead ids). Each
     Arrow batch drops its dead base rows (``_drop_dead``), extracts the
@@ -570,15 +599,11 @@ def _arrow_nominating_pool(
 
     With one file per shard a query's partials come only from the tasks
     that scan its probed shards, so they stay within a small multiple of
-    the pool itself.
-
-    ``routed_rows``: the search's ``Routing`` when the caller holds it;
-    otherwise the (qid, qvec, shard_id) table ``routed`` is collected."""
+    the pool itself."""
     import pyarrow as pa
 
     from big_ann_spark.functions.arrowio import int_col
 
-    routing = routed_rows if routed_rows is not None else _routing_of_table(routed)
     state = make_state(routing.qids, routing.qmat)
     spark = shards.sparkSession
     bc = spark.sparkContext.broadcast(
@@ -647,13 +672,12 @@ def _arrow_nominating_pool(
 
 
 def pq_pool(
-    routed: DataFrame | None,
+    routing: Routing,
     shards: DataFrame,
     path: str,
     k_pool: int,
     *,
     id_col: str = "vec_id",
-    routed_rows: Routing | None = None,
     _sidecars: tuple | None = None,
 ) -> DataFrame:
     """Quantized candidate pool of an IVF-PQ (IVFADC) layout: scans ONLY
@@ -703,21 +727,19 @@ def pq_pool(
         return qidx[qi], sel_ids, dists
 
     return _arrow_nominating_pool(
-        routed, shards, k_pool,
+        routing, shards, k_pool,
         id_col=id_col, payload_col="pq_codes", payload_dtype=np.int64,
         make_state=make_state, score_shard=score_shard,
-        routed_rows=routed_rows,
     )
 
 
 def binary_pool(
-    routed: DataFrame | None,
+    routing: Routing,
     shards: DataFrame,
     path: str,
     k_pool: int,
     *,
     id_col: str = "vec_id",
-    routed_rows: Routing | None = None,
 ) -> DataFrame:
     """Candidate pool of a binary (sign-bit) layout — the 32× tier: scans
     ONLY the packed ``bcodes`` words of the probed shards and scores the
@@ -751,10 +773,9 @@ def binary_pool(
         return qidx[qi], sel_ids, dists
 
     return _arrow_nominating_pool(
-        routed, shards, k_pool,
+        routing, shards, k_pool,
         id_col=id_col, payload_col="bcodes", payload_dtype=np.int64,
         make_state=make_state, score_shard=score_shard,
-        routed_rows=routed_rows,
     )
 
 
@@ -893,7 +914,7 @@ def _filtered_candidates(
 
     uncommitted = list(uncommitted or [])
     tag_df = tag_ops.tag_df_view(spark, path, as_of=as_of, uncommitted=uncommitted)
-    # explode_OUTER (r14): an empty/null query tag set keeps a row with
+    # explode_OUTER: an empty/null query tag set keeps a row with
     # a NULL rarest tag, so the caller's empty-tag contract guard folds
     # into the bucket collect below — one serial job per search where
     # the guard used to run its own limit-1 count first. For every
@@ -908,7 +929,7 @@ def _filtered_candidates(
                 F.struct(F.coalesce("_df", F.lit(0)).alias("_df"), "_tag")
             )["_tag"].alias("_tag")
         )
-        # lazy (r14): the bucket collect just below materializes it
+        # lazy: the bucket collect just below materializes it
         .localCheckpoint(eager=False)
     )
     n_buckets = tag_ops.n_tag_buckets(spark, path)
@@ -974,13 +995,12 @@ def filtered_search_from_disk(
       corpus outgrows it.
 
     MUTATED layouts (vector_ops/tag_ops) are served exactly: the
-    vector fetch is the live probed view, the containment verify uses
-    the live tags view, and postings visibility excludes in-flight
+    vector fetch reads the layout's live frame (``vector_ops.live_frame``)
+    and drops its dead rows (``drop_dead_rows``), the containment verify
+    uses the live tags view, and postings visibility excludes in-flight
     ops — a stale posting of a re-tagged or deleted id is a candidate
     the verify drops. ``as_of``: snapshot search at that op id (one
-    time axis — vector and tag ops share the layout's ledger). A
-    pristine layout takes the identical plan as before mutations
-    existed."""
+    time axis — vector and tag ops share the layout's ledger)."""
     from big_ann_spark.operators import oplayout, tag_ops, vector_ops
 
     spark = queries.sparkSession
@@ -991,7 +1011,7 @@ def filtered_search_from_disk(
     ).localCheckpoint(eager=False)
     # empty-tag contract guard: folded into _filtered_candidates'
     # rarest-tag collect (explode_outer keeps a NULL-tag row per
-    # empty-tag query), so no dedicated guard job runs here (r14)
+    # empty-tag query), so no dedicated guard job runs here
     uncommitted = sorted(
         vector_ops._ops_on_disk(spark, path)
         - oplayout.committed_ops(spark, path)
@@ -1050,24 +1070,24 @@ def filtered_search_from_disk(
     shard_ids = [
         r["shard_id"] for r in cand.select("shard_id").distinct().collect()
     ]
-    base_vecs = open_probed_shards(spark, path, shard_ids)
-    # probe_ids=None on the live view: the BASE scan stays pruned to
-    # the posting shards (exact — an id whose live row is still in the
-    # base has accurate posting shards by construction), but the
-    # op-sized RESOLVED side must not be shard-filtered: a vector-only
-    # upsert (legal on point-fetch layouts) may have MOVED an id to a
-    # shard its stale posting doesn't name, and filtering resolved
-    # rows by the posting-derived probe set would silently drop that
-    # live qualifying neighbor from the verify.
-    vecs = vector_ops.live_probed_view(
-        spark, path, base_vecs, None,
-        as_of=as_of, id_col=id_col, vec_col=vec_col,
-    ).select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_bvec"))
+    # the base rows stay pruned to the posting shards (exact: an id
+    # whose live row is still in the base has accurate posting shards
+    # by construction), but the op-sized RESOLVED rows must not be
+    # shard-filtered: a vector-only upsert (legal on point-fetch
+    # layouts) may have MOVED an id to a shard its stale posting
+    # doesn't name, and filtering resolved rows by the posting-derived
+    # shards would silently drop that live qualifying neighbor from
+    # the verify.
+    frame, dead = vector_ops.live_frame(spark, path, as_of=as_of, id_col=id_col, vec_col=vec_col)
+    live = frame.filter(_isin_ids("shard_id", sorted(shard_ids)) | F.col("_resolved"))
+    if bounded is not None:
+        live = live.filter(_isin_ids(id_col, bounded))
+    vecs = drop_dead_rows(live.select(id_col, vec_col, "_resolved"), dead, id_col).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_bvec")
+    )
     btags = tag_ops.live_tags_view(
         spark, path, as_of=as_of, uncommitted=uncommitted, bounded_ids=bounded
     )
-    if bounded is not None:
-        vecs = vecs.filter(F.col("neighbor_id").isin(bounded))
     verified = (
         # distinct: a re-tagged id carries postings for the SAME tag
         # under two _mb partitions — without dedup the pair would be
@@ -1086,129 +1106,6 @@ def filtered_search_from_disk(
     )
     return top_k_per_group(
         verified, ["qid"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
-    )
-
-
-def route_queries(
-    queries: DataFrame,
-    centroids: DataFrame,
-    nprobe: int,
-    *,
-    query_id: str = "qid",
-    query_vec: str = "qvec",
-    dim: int | None = None,
-) -> DataFrame:
-    """J3: top-``nprobe`` nearest centroids per query →
-    (qid, qvec, shard_id, probe_rank).
-
-    Zero-exchange form: the centroid table collapses to ONE broadcast
-    array row; per query, the probe list is
-    ``array_sort(struct(cdist, shard_id))[:nprobe]`` exploded — a pure
-    projection fused into the query scan. The r1 window form
-    hash-exchanged all Q×M scored rows by qid before WindowGroupLimit
-    could trim them; with batch-ANN query sets in the millions that
-    exchange is the routing cost. Sort cost is M·log M per row — fine
-    for M ≤ 10^5 broadcastable centroids; ties break on shard_id
-    (struct field order), identical to the window form. It stays the
-    Spark-expression reference that ``knn.nearest_centroids`` is
-    tested against."""
-    cents = centroids.agg(
-        F.collect_list(
-            F.struct(F.col("shard_id").alias("_sid"), F.col("centroid").alias("_cv"))
-        ).alias("_cents")
-    )
-    scored = queries.select(
-        F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec")
-    ).crossJoin(F.broadcast(cents))
-    probes = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("_cents"),
-                lambda c: F.struct(
-                    l2_distance(F.col("qvec"), c["_cv"], dim).alias("cdist"),
-                    c["_sid"].alias("shard_id"),
-                ),
-            )
-        ),
-        1,
-        nprobe,
-    )
-    return scored.select(
-        "qid", "qvec", F.posexplode(probes).alias("_p", "_probe")
-    ).select(
-        "qid",
-        "qvec",
-        F.col("_probe")["shard_id"].alias("shard_id"),
-        (F.col("_p") + 1).alias("probe_rank"),
-    )
-
-
-def ivf_search(
-    queries: DataFrame,
-    sharded_vectors: DataFrame,
-    centroids: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    *,
-    query_id: str = "qid",
-    query_vec: str = "qvec",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    static_prune: bool = True,
-    _routed: DataFrame | None = None,
-) -> DataFrame:
-    """IVF top-k: route → candidate join on shard_id → per-query top-k
-    globally re-ranked by true distance (W2: union of per-shard
-    candidates re-sorted, ``kanndi/README.md:46-47``).
-
-    ``sharded_vectors`` must have (id_col, vec_col, shard_id). When it
-    is a ``partitionBy("shard_id")`` parquet table, ``static_prune``
-    (default) collects the DISTINCT routed shard ids — bounded by
-    min(Q·nprobe, m), contractually tiny — and applies them as an
-    ``isin`` filter before the join, so the scan carries static
-    PartitionFilters and reads ONLY probed shard directories. This is
-    what keeps search wall N-independent at fixed shard size (measured:
-    the join-only form relies on DPP, which Spark's heuristics decline
-    for this plan shape, silently degrading to a full scan — 11 s vs
-    0.9 s at 2M vectors). Disable for huge query batches that probe
-    every shard anyway (the filter is then a no-op costing one routing
-    pass).
-
-    ``_routed``: a caller that already computed (and pruned its scan
-    by) the routing table passes it here so the centroid argmin is not
-    recomputed — the streaming live-view search does exactly this;
-    implies ``static_prune`` handling stays with the caller."""
-    routed = (
-        _routed
-        if _routed is not None
-        else route_queries(
-            queries, centroids, nprobe, query_id=query_id, query_vec=query_vec, dim=dim
-        )
-    )
-    if static_prune and _routed is None:
-        # materialize routing ONCE: the distinct-id collect and the
-        # candidate join below both reuse it (without this the routing
-        # lineage — centroid agg + broadcast argmin — executes twice).
-        # Lazy (r14): the collect right below is the materializing job.
-        routed = routed.localCheckpoint(eager=False)
-        probe_ids = [
-            r["shard_id"] for r in routed.select("shard_id").distinct().collect()
-        ]
-        sharded_vectors = sharded_vectors.filter(
-            _isin_ids("shard_id", probe_ids)
-        )
-    cands = routed.join(
-        sharded_vectors.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_bvec"), "shard_id"
-        ),
-        "shard_id",
-    )
-    scored = cands.select(
-        "qid", "neighbor_id", l2_distance("qvec", "_bvec", dim).alias("dist")
-    )
-    return top_k_per_group(
-        scored, ["qid"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k
     )
 
 

@@ -120,7 +120,8 @@ def nearest_centroids(
     ``fold_l2_topk`` over blocks of ``_CENTROID_BLOCK`` rows. The
     distance is the ``l2_distance`` fold bit for bit, and the order is
     that of ``array_min``/``array_sort`` over ``struct(dist, shard_id)``
-    in ``ann.route_queries``. Every centroid pick in the package goes
+    in a Spark expression (ties go to the lower shard id). Every
+    centroid pick in the package goes
     through here: the build's ``assign_to_centroids``, upserts, search
     routing and the graph build's cell probes, so a vector lands in the
     shard a search for it probes first.

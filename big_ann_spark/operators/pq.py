@@ -308,23 +308,29 @@ def ivf_pq_search(
     query_id: str = "qid",
     query_vec: str = "qvec",
 ) -> DataFrame:
-    """IVF + PQ composed — the standard billion-scale ANN recipe:
-    zero-exchange centroid routing (operators.ann.route_queries) picks
+    """IVF + PQ composed — the standard billion-scale ANN recipe: the
+    driver router of every IVF search (``ann._route_on_driver``) picks
     ``nprobe`` shards per query, then ADC scores only those shards'
     8-byte code rows against the broadcast per-query lookup tables.
     ``sharded_codes`` = pq_encode output joined with shard assignment:
     (id, codes, shard_id); under a partitionBy(shard_id) layout the
-    probe equi-join is partition-pruned IO on a table that is already
-    ~32× smaller than the raw vectors."""
-    from big_ann_spark.operators.ann import route_queries
+    ``shard_id IN`` filter of the probed shards is partition-pruned IO
+    on a table that is already ~32× smaller than the raw vectors."""
+    from big_ann_spark.operators.ann import _probed, _route_on_driver
 
-    qrows = [(r[0], r[1]) for r in queries.select(query_id, query_vec).collect()]
+    routing = _route_on_driver(
+        queries, centroids, nprobe, query_id=query_id, query_vec=query_vec
+    )
     spark = queries.sparkSession
     luts = spark.createDataFrame(
-        pq_lut_rows(qrows, codebooks), "qid long, lut array<array<double>>"
+        pq_lut_rows(zip(routing.qids.tolist(), routing.qmat), codebooks),
+        "qid long, lut array<array<double>>",
     )
-    routed = route_queries(queries, centroids, nprobe, query_id=query_id, query_vec=query_vec)
-    probes = routed.select("qid", "shard_id").join(F.broadcast(luts), "qid")
+    pairs = [(int(routing.qids[i]), s) for s, qi in routing.shard_to_q.items() for i in qi]
+    probes = spark.createDataFrame(pairs, "qid long, shard_id int").join(
+        F.broadcast(luts), "qid"
+    )
+    sharded_codes = _probed(sharded_codes, routing)
     cands = probes.join(sharded_codes, "shard_id").select(
         "qid",
         F.col("id").alias("neighbor_id"),

@@ -42,9 +42,10 @@ Read-side resolution (filtered_search_from_disk):
   deleted id is a harmless candidate superset, because…
 - …the containment verify joins the LIVE tags view (base side table
   minus the broadcast contested ids, plus latest delta rows) and the
-  LIVE vector view (vector_ops.live_probed_view) — a candidate whose
-  current tags no longer contain the query tags, or whose vector is
-  tombstoned, drops out exactly as in the in-memory operator.
+  live vector rows (vector_ops.live_frame, dead rows dropped by
+  ann.drop_dead_rows) — a candidate whose current tags no longer
+  contain the query tags, or whose vector is tombstoned, drops out
+  exactly as in the in-memory operator.
 - EXACTNESS is preserved: a live qualifying neighbor contains every
   query tag, and its latest op (or the base build) wrote postings for
   all its current tags, so it appears on the rarest query tag's

@@ -37,12 +37,14 @@ the ops table — op-count-sized, not corpus-sized, read with the op
 rows' explicit schema — resolves per-id winners with one ``max_by``,
 memoized per ledger state (``mutation_state``), and the CONTESTED set
 (ids touched by any committed op — small between compactions by
-construction) marks the stale base rows. The from-disk search reads
-one ``live_frame`` per layout state — every base shard opened once,
-unioned with the resolved winners — and its candidate scan drops the
-stale base rows itself; compaction drops them by a broadcast anti-join
-(``live_probed_view``). A search keeps only its probed shards with a
-partition filter; uncontested vectors never shuffle.
+construction) marks the stale base rows. Every reader of live rows
+takes one ``live_frame`` per layout state — every base shard opened
+once, unioned with the resolved winners — and drops the stale base
+rows by one rule, ``ann._drop_dead``: the search's candidate scan
+inside its own ``mapInArrow``, compaction and the filtered search's
+vector fetch through ``ann.drop_dead_rows``. A search keeps only its
+probed shards with a partition filter; uncontested vectors never
+shuffle.
 
 Each mutation lands as one file. An upsert (whose batch is collected
 in one job) and a delete of listed ids write it from the driver with
@@ -471,53 +473,18 @@ def mutation_state(
     return entry.state
 
 
-def _probed_winners(
-    state: MutationState, base: DataFrame, probe_ids, id_col: str, vec_col: str
-) -> DataFrame:
-    """The resolved winners whose shard is probed (all live shards for
-    ``probe_ids=None``), renamed and typed like ``base``: the ops table
-    stores the canonical (vec_id, embedding[, codes…]) names, and an
-    upsert batch may have arrived as array<double>."""
+def _live_winners(state: MutationState, base: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The resolved winners of every live shard, renamed and typed like
+    ``base``: the ops table stores the canonical (vec_id,
+    embedding[, codes…]) names, and an upsert batch may have arrived as
+    array<double>."""
     alive = state.resolved
     for old, new in {"vec_id": id_col, "embedding": vec_col}.items():
         if old != new and old in alive.columns:
             alive = alive.withColumnRenamed(old, new)
-    if probe_ids is not None:
-        # one parsed predicate, not one py4j literal per probed shard
-        probed = ",".join(str(int(s)) for s in probe_ids)
-        alive = alive.filter(F.expr(f"shard_id IN ({probed})") if probed else F.lit(False))
-    else:
-        alive = alive.filter(F.col("shard_id") != TOMBSTONE_SHARD)
+    alive = alive.filter(F.col("shard_id") != TOMBSTONE_SHARD)
     return alive.select(
         [F.col(c).cast(base.schema[c].dataType).alias(c) for c in base.columns]
-    )
-
-
-def live_probed_view(
-    spark,
-    path: str,
-    base: DataFrame,
-    probe_ids: list[int] | None = None,
-    *,
-    as_of: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The live view of the probed partitions: base rows minus the
-    broadcast contested set, plus the resolved op winners whose shard
-    is probed. The base scan's partition pruning and column pruning
-    are untouched (the anti-join adds no exchange on the big side);
-    the ops side is O(mutations). A pristine layout returns ``base``
-    unchanged. ``probe_ids=None`` = all shards (compaction/export).
-
-    ``id_col``/``vec_col``: the BASE layout's column names."""
-    state = mutation_state(spark, path, as_of)
-    if state is None:
-        return base
-    contested = state.contested.withColumnRenamed("vec_id", id_col)
-    base_live = base.join(F.broadcast(contested), id_col, "left_anti")
-    return base_live.select(base.columns).unionByName(
-        _probed_winners(state, base, probe_ids, id_col, vec_col)
     )
 
 
@@ -529,14 +496,15 @@ def live_frame(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, np.ndarray]:
-    """The live frame of a layout state, for a reader that drops dead
-    base rows itself (the Arrow candidate scan): every base shard,
-    opened once with the memoized schema in one listing
-    (``ann.open_probed_shards``) plus a false ``_resolved`` column,
+    """The live frame of a layout state, the one reader of live rows:
+    every base shard, opened once with the memoized schema in one
+    listing (``ann.open_probed_shards``) plus a false ``_resolved`` column,
     unioned with the resolved winners of every live shard (``_resolved``
     true), typed like the base; and the sorted contested ids. A base row
-    is live iff its id is not contested. A reader keeps its shards with
-    one ``shard_id`` partition filter.
+    is live iff its id is not contested: a reader drops the others by
+    ``ann._drop_dead`` (in its own Arrow pass, or through
+    ``ann.drop_dead_rows``) and keeps its shards with one ``shard_id``
+    partition filter.
 
     Memoized in ``oplayout.ledger_entry`` per (layout, ``as_of``): valid
     while the ``mutation_state`` it unions (one per ledger token) and
@@ -554,7 +522,7 @@ def live_frame(
         live = base.withColumn("_resolved", F.lit(False))
         if state is None:
             return 0, (live, np.empty(0, dtype=np.int64), None), None
-        winners = _probed_winners(state, base, None, id_col, vec_col)
+        winners = _live_winners(state, base, id_col, vec_col)
         live = live.unionByName(winners.withColumn("_resolved", F.lit(True)))
         # holding ``state`` keeps its id, part of the token, unique
         return len(state.contested_ids), (live, state.contested_ids, state), None
@@ -590,19 +558,18 @@ def compact_vector_layout(
     layouts (no raw column → the stored codes are carried as the
     payload and the ranges sidecar is copied verbatim)."""
     from big_ann_spark.operators import pq as PQ
-    from big_ann_spark.operators.ann import open_probed_shards
+    from big_ann_spark.operators.ann import drop_dead_rows
     from big_ann_spark.operators.sharding import write_shards
 
-    base = open_probed_shards(spark, src_path, None)
-    live = live_probed_view(
-        spark, src_path, base, None, id_col=id_col, vec_col=vec_col
-    )
+    frame, dead = live_frame(spark, src_path, id_col=id_col, vec_col=vec_col)
     n_ops = len(
         oplayout.committed_ops(spark, src_path) & _ops_on_disk(spark, src_path)
     )
-    has_raw = vec_col in base.columns
+    has_raw = vec_col in frame.columns
     payload = vec_col if has_raw else "codes"
-    assignments = live.select(id_col, "shard_id", "dist", payload)
+    assignments = drop_dead_rows(
+        frame.select(id_col, "shard_id", "dist", payload, "_resolved"), dead, id_col
+    )
     ranges = None
     books = None
     thr = None
@@ -644,7 +611,7 @@ def compact_vector_layout(
         from big_ann_spark.operators.ann import write_tag_postings_layout
 
         live_tagged = tag_ops.resolve_live_tags(spark, src_path).join(
-            live.select(F.col(id_col).alias("vec_id")), "vec_id", "left_semi"
+            assignments.select(F.col(id_col).alias("vec_id")), "vec_id", "left_semi"
         )
         n_buckets, carry = tag_ops.tag_meta(spark, src_path)
         if carry and not has_raw:

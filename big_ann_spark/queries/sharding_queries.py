@@ -351,24 +351,20 @@ def ivf_search_top5(spark, sf_dir):
     (also oracled, but off the bench's hot list — mutation resolution
     shouldn't tax the flagship serving benchmark)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # lazy checkpoint (r14): both variants route over these 10 rows, and
-    # the from-disk search lazily checkpoints its routing table — with
-    # cents RDD-backed, that checkpoint's physical planning covers a
-    # shallow plan instead of re-planning the centroid aggregate, and
-    # the centroid pass computes once, not once per variant
+    # lazy checkpoint: both variants route over these 10 rows, so the
+    # centroid aggregate computes once, not once per variant
     cents = SH.label_centroids(emb).localCheckpoint(eager=False)
     assign = SH.assign_to_centroids(emb, cents)
     sharded = assign.select("vec_id", "shard_id").join(
         emb.select("vec_id", "embedding"), "vec_id"
     )
-    # spread the raw variant's scoring table (r15, guide §2.5): the
-    # one-file embeddings scan is ONE task, so the candidate l2 folds
-    # ran single-core (profiled 0.45 s of single-task CPU — the
-    # query's largest stage). The repartition sits AFTER the
-    # assign/centroid lineage, so every float upstream (avg-based
-    # centroids included) is bit-identical; scoring + top-k are
-    # placement-invariant (deterministic (dist, id) tie-break).
-    # spread_width_if_narrow skips this once the scan splits wide.
+    # spread the raw variant's scoring table: the one-file embeddings
+    # scan is ONE task, so the candidate scan would score single-core.
+    # The repartition sits AFTER the assign/centroid lineage, so every
+    # float upstream (avg-based centroids included) is bit-identical;
+    # scoring + top-k are placement-invariant (deterministic (dist, id)
+    # tie-break). spread_width_if_narrow skips this once the scan
+    # splits wide.
     from big_ann_spark.queries import spread_width_if_narrow
 
     _w = spread_width_if_narrow(spark, sf_dir, "embeddings")
@@ -377,20 +373,8 @@ def ivf_search_top5(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    # route ONCE for both variants (r14): the two tiers probe the same
-    # shards of the same centroid table, so one lazily-checkpointed
-    # routing feeds the in-memory search (_routed skips its in-plan
-    # re-derivation) and the from-disk search (skips its per-tier
-    # routing checkpoint — one plan analysis instead of two)
-    routed = ANN.route_queries(queries, cents, 2).localCheckpoint(eager=False)
-    # in-memory sharded table: the shard_id equi-join already restricts
-    # to routed shards and there is no partitioned layout to prune, so
-    # the static-prune routing collect would be a pure extra job
     def _raw():
-        return ANN.ivf_search(
-            queries, sharded, cents, k=5, nprobe=2, static_prune=False,
-            _routed=routed,
-        ).select(
+        return ANN.ivf_search(queries, sharded, cents, k=5, nprobe=2).select(
             F.lit("raw").alias("variant"),
             "qid",
             "neighbor_id",
@@ -402,7 +386,7 @@ def ivf_search_top5(spark, sf_dir):
         path, mins, maxs = _sq8_disk_layout(spark, sf_dir)
         return ANN.ivf_search_from_disk(
             queries, path, cents, k=5, nprobe=2, codec="sq8", rerank_factor=4,
-            _routed=routed, _sq8_ranges=(mins, maxs),
+            _sq8_ranges=(mins, maxs),
         ).select(
             F.lit("sq8_disk").alias("variant"),
             "qid",
@@ -411,11 +395,9 @@ def ivf_search_top5(spark, sf_dir):
             "rank",
         )
 
-    # overlap the two variant builds (guide §2.6): the raw branch is
-    # pure plan construction (py4j round trips), the sq8 branch runs
-    # the probe/pool collect jobs — neither blocks the other, and the
-    # only shared state is immutable plan objects (routed's lazy
-    # checkpoint is materialized solely by the sq8 branch's collects)
+    # overlap the two variant builds: each routes and runs its
+    # candidate scan at call time, and the only shared state is
+    # immutable plan objects (the centroids' lazy checkpoint)
     raw, sq8 = build_concurrently(_raw, _sq8)
     return raw.unionByName(sq8)
 
@@ -482,9 +464,7 @@ def ann_recall_at_10(spark, sf_dir):
         emb.select("vec_id", "embedding"), "vec_id"
     )
     q2 = queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    approx = ANN.ivf_search(
-        q2, sharded, cents, k=10, nprobe=2, static_prune=False
-    ).select(
+    approx = ANN.ivf_search(q2, sharded, cents, k=10, nprobe=2).select(
         "qid", "neighbor_id"
     )
     # ONE lazy job: counting exact and the hit-join as two eager driver
@@ -759,9 +739,7 @@ def kanndi_search_top1(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    top1 = ANN.ivf_search(
-        queries, sharded, cents, k=10, nprobe=1, static_prune=False
-    ).select(
+    top1 = ANN.ivf_search(queries, sharded, cents, k=10, nprobe=1).select(
         F.lit("top1").alias("variant"),
         "qid",
         "neighbor_id",

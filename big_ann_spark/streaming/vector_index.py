@@ -344,65 +344,52 @@ def search_index(
     *,
     query_id: str = "qid",
     query_vec: str = "qvec",
-    dim: int | None = None,
     state: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """IVF search over the index's live view — identical semantics to
-    batch ``ivf_search`` on a table holding exactly the live rows, but
-    PARTITION-PRUNED like batch IVF (VERDICT r7 #1).
+    batch ``ivf_search`` on a table holding exactly the live rows, and
+    PARTITION-PRUNED like it.
 
-    The r7 form fed ``live_vectors``' global max_by into ``ivf_search``:
-    the shard filter landed on the aggregate's output field and could
-    not push below it, so every search scanned and shuffled the whole
-    index. The fix exploits what the live view actually is:
+    Feeding ``live_vectors``' global max_by into ``ivf_search`` would
+    put the shard filter on the aggregate's output, where it cannot
+    push below it, so every search would scan and shuffle the whole
+    index. The view searched here is what the live view actually is:
 
     - an id with ONE committed row in a data shard is live as-is — its
       single op is that row's insert; no resolution needed. These rows
-      are read straight off the probed shards with a static
-      ``shard_id.isin`` filter → PartitionFilters, same N-independent
-      IO as batch IVF (the reference reads 1 of M shards per query,
-      ``kanndi_search.py:46-52`` — this keeps that property) — minus a
-      broadcast anti-join against the small contested id set;
+      are read straight off the shards minus a broadcast anti-join
+      against the small contested id set;
     - only the CONTESTED ids (>1 committed op — deletes, re-inserts;
       small by construction between compactions) need the max_by
       resolution; their already-resolved live rows come from the
-      ``prepare_search`` state and just get shard-filtered in.
+      ``prepare_search`` state.
+
+    ``ivf_search``'s ``shard_id IN`` filter of the probed shards pushes
+    below the union and the anti-join into the data scan
+    (PartitionFilters: the same N-independent IO as batch IVF; the
+    reference reads 1 of M shards per query, ``kanndi_search.py:46-52``).
 
     ``state``: pass a precomputed ``prepare_search`` result to amortize
     the contested detection + resolution across every query batch of
     one index epoch — searches then scan ONLY probed shard partitions
     (measured at 2M/64 shards: 2.1 s vs 10.8 s full-resolution;
     SCALE.md). Without it the state is computed per call, which still
-    never shuffles uncontested vectors but does rescan the index (about
-    the r7 cost) — right only for one-shot searches."""
-    from big_ann_spark.operators.ann import ivf_search, route_queries
+    never shuffles uncontested vectors but does rescan the index —
+    right only for one-shot searches."""
+    from big_ann_spark.operators.ann import ivf_search
 
     raw = _committed_scan(spark, path)
     if raw is None:
-        return ivf_search(
-            queries, live_vectors(spark, path), centroids, k=k, nprobe=nprobe,
-            query_id=query_id, query_vec=query_vec, dim=dim,
+        live = live_vectors(spark, path)
+    else:
+        contested, resolved = state if state is not None else prepare_search(spark, path)
+        live = (
+            raw.join(F.broadcast(contested), "vec_id", "left_anti")
+            .select("vec_id", "embedding", "shard_id")
+            .unionByName(resolved)
         )
-    contested, resolved = state if state is not None else prepare_search(spark, path)
-    # materialized once: the distinct-shard collect and the candidate
-    # join inside ivf_search both reuse it (same contract as batch
-    # ivf_search's static_prune path)
-    routed = route_queries(
-        queries, centroids, nprobe, query_id=query_id, query_vec=query_vec, dim=dim
-    ).localCheckpoint()
-    probe_ids = [
-        r["shard_id"] for r in routed.select("shard_id").distinct().collect()
-    ]
-    pruned = raw.filter(F.col("shard_id").isin(probe_ids))
-    live = (
-        pruned.join(F.broadcast(contested), "vec_id", "left_anti")
-        .select("vec_id", "embedding", "shard_id")
-        .unionByName(resolved.filter(F.col("shard_id").isin(probe_ids)))
-    )
     return ivf_search(
-        queries, live, centroids, k=k, nprobe=nprobe,
-        query_id=query_id, query_vec=query_vec, dim=dim,
-        static_prune=False, _routed=routed,
+        queries, live, centroids, k=k, nprobe=nprobe, query_id=query_id, query_vec=query_vec
     )
 
 

@@ -1,5 +1,5 @@
-"""Every keyword passed to the exact-kNN, quantized-serving, centroid
-assignment, PQ encode, KS, layout write and mutation entry points must
+"""Every keyword passed to the exact-kNN, IVF search, quantized-serving,
+centroid assignment, PQ encode, KS, layout write and mutation entry points must
 exist in the callee's signature — including in scripts that no test
 runs (``tools/``, ``bench.py``), where a deleted parameter would
 otherwise only surface as a TypeError the next time someone measures. Static (stdlib ``ast`` + ``inspect.signature``); starts no
@@ -12,13 +12,17 @@ import inspect
 import pathlib
 
 from big_ann_spark.operators import ann, knn, pq, sharding, stats, vector_ops
+from big_ann_spark.streaming import vector_index
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 CALLEES = {
     "exact_knn": knn.exact_knn,
+    "ivf_search": ann.ivf_search,
     "ivf_search_from_disk": ann.ivf_search_from_disk,
+    "filtered_search_from_disk": ann.filtered_search_from_disk,
     "sq8_pool": ann.sq8_pool,
     "pq_pool": ann.pq_pool,
+    "binary_pool": ann.binary_pool,
     "write_sharded": sharding.write_sharded,
     "write_shards": sharding.write_shards,
     "assign_to_centroids": sharding.assign_to_centroids,
@@ -28,6 +32,8 @@ CALLEES = {
     "delete_vectors": vector_ops.delete_vectors,
     "compact_in_place": vector_ops.compact_in_place,
     "compact_if_needed": vector_ops.compact_if_needed,
+    "compact_vector_layout": vector_ops.compact_vector_layout,
+    "search_index": vector_index.search_index,
 }
 
 
@@ -80,14 +86,20 @@ def test_stale_keyword_is_reported():
         "SH.assign_to_centroids(e, c, impl='arrow', extra_cols=['v'])\n"
         "write_sharded(a, e, p, pq_codebooks=b, pq_encode_impl='arrow')\n"
         "ks_two_sample(v, ranged=True, lazy_counts=True, n_bins=13)\n"
+        "ANN.ivf_search(q, s, c, k=5, static_prune=False, dim=64)\n"
+        "VI.search_index(s, p, q, c, dim=4, state=st)\n"
     )
     assert stale_keywords(src, "x.py") == [
         "x.py:1: exact_knn(metric=)",
         "x.py:2: ivf_search_from_disk(max_pushdown=)",
+        "x.py:3: sq8_pool(routed_rows=)",
         "x.py:4: upsert_vectors(assign_impl=)",
         "x.py:5: write_sharded(repartition_to=)",
         "x.py:6: assign_to_centroids(impl=)",
         "x.py:7: write_sharded(pq_encode_impl=)",
         "x.py:8: ks_two_sample(ranged=)",
         "x.py:8: ks_two_sample(lazy_counts=)",
+        "x.py:9: ivf_search(static_prune=)",
+        "x.py:9: ivf_search(dim=)",
+        "x.py:10: search_index(dim=)",
     ]

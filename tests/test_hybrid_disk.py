@@ -55,8 +55,7 @@ def test_hybrid_from_disk_equals_in_memory_fusion(spark, sf_dir, tmp_path):
     )
     sharded = SH.assign_to_centroids(emb, cents, extra_cols=["embedding"])
     dense = ANN.ivf_search(
-        q.select("qid", "qvec"), sharded, cents, k=10, nprobe=2,
-        static_prune=False,
+        q.select("qid", "qvec"), sharded, cents, k=10, nprobe=2
     ).select("qid", "neighbor_id", "rank")
     lex = B.bm25_topk(
         q.select(F.col("qid").alias("doc_id"), F.col("qtext").alias("text")),

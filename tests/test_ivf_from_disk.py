@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from big_ann_spark.catalog import load_table
 from big_ann_spark.operators import ann as ANN
 from big_ann_spark.operators import sharding as SH
+from tests.ivf_reference import probed_pool_inputs, route_queries
 
 
 def test_ivf_from_disk_equals_in_memory(spark, sf_dir):
@@ -146,9 +147,8 @@ def test_query_batch_past_the_driver_bound_fails_loudly(spark, sf_dir, monkeypat
     # and an empty batch is an empty result, not an error
     none = queries.limit(0)
     assert ANN.ivf_search_from_disk(none, path, cents, k=5, nprobe=2).count() == 0
-    assert ANN.ivf_search_from_disk(
-        none, path, cents, k=5, nprobe=2, _routed=ANN.route_queries(none, cents, 2)
-    ).count() == 0
+    listed = spark.read.parquet(f"{path}/shards")
+    assert ANN.ivf_search(none, listed, cents, k=5, nprobe=2).count() == 0
 
 
 def test_candidate_partials_past_the_driver_bound_fail_loudly(spark, sf_dir, monkeypatch):
@@ -161,18 +161,16 @@ def test_candidate_partials_past_the_driver_bound_fail_loudly(spark, sf_dir, mon
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    routed = ANN.route_queries(queries, cents, 2).localCheckpoint()
-    probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
-    shards = ANN.open_probed_shards(spark, path, probe_ids)
-    want = sorted(map(tuple, ANN.sq8_pool(routed, shards, path, 20).collect()))
+    _, routing, shards = probed_pool_inputs(spark, queries, cents, path)
+    want = sorted(map(tuple, ANN.sq8_pool(routing, shards, path, 20).collect()))
     assert len(want) == 160
     # room for 20 rows per scan task: fewer than the 8 queries keep
     monkeypatch.setattr(ANN, "DRIVER_ROWS", 1)
     with pytest.raises(ValueError, match="split the batch"):
-        ANN.sq8_pool(routed, shards, path, 20)
+        ANN.sq8_pool(routing, shards, path, 20)
     # a bound sized for the batch's 8 queries serves all of it
     monkeypatch.setattr(ANN, "DRIVER_ROWS", 8)
-    assert sorted(map(tuple, ANN.sq8_pool(routed, shards, path, 20).collect())) == want
+    assert sorted(map(tuple, ANN.sq8_pool(routing, shards, path, 20).collect())) == want
 
 
 def test_cli_build_index_and_search(spark, sf_dir, tmp_path):
@@ -434,23 +432,128 @@ def test_cli_evaluate_guards_and_sq8(spark, sf_dir, tmp_path):
         main(["evaluate", idx, bogus, gt, "--k", "3"])
 
 
-def test_shard_loader_never_decodes_refine_layouts(spark, sf_dir, tmp_path):
-    """A REFINE layout carries codes AND raw vectors; the shared shard
-    loader (evaluate path) must return the RAW embeddings, not decoded
-    quantization midpoints — recall would otherwise silently measure
-    the quantizer."""
-    from big_ann_spark.cli import _load_index_shards, main
+def test_cli_refine_layout_serves_raw_distances(spark, sf_dir, tmp_path, monkeypatch):
+    """A REFINE layout carries codes AND raw vectors: `search` re-ranks
+    by the raw vectors and `evaluate` scans them, so the distances
+    served are the raw fold, never decoded quantization midpoints —
+    recall would otherwise silently measure the quantizer."""
+    from big_ann_spark.cli import main
 
     src = f"{sf_dir}/embeddings.parquet"
+    emb = spark.read.parquet(src).filter(F.col("vec_id") < 300)
+    emb_path = str(tmp_path / "emb.parquet")
+    emb.write.parquet(emb_path)
     idx = str(tmp_path / "idx_refine")
-    assert main(["build-index", src, idx, "--m", "4", "--sq8-refine"]) == 0
-    loaded = _load_index_shards(spark, idx, "vec_id", "embedding")
-    joined = (
-        loaded.select("vec_id", F.col("embedding").alias("_got"))
-        .join(spark.read.parquet(src).select("vec_id", "embedding"), "vec_id")
-        .filter(F.col("_got") != F.col("embedding"))
+    assert main(["build-index", emb_path, idx, "--m", "4", "--sq8-refine"]) == 0
+    out = str(tmp_path / "res.parquet")
+    assert main(["search", idx, emb_path, "--k", "3", "--nprobe", "2", "--out", out]) == 0
+    raw = {r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in emb.collect()}
+    res = spark.read.parquet(out).collect()
+    assert len(res) == 3 * len(raw)
+    for r in res:
+        assert r.dist == _np_fold(raw[r.qid], raw[r.neighbor_id][None, :])[0]
+    # evaluate serves the raw column too: at nprobe == m recall vs the
+    # exact raw ground truth is 1.0, through the raw codec
+    from big_ann_spark.operators.knn import exact_knn
+    from big_ann_spark.sources import fbin as FB
+
+    q_path = str(tmp_path / "q.parquet")
+    emb.filter(F.col("vec_id") < 6).write.parquet(q_path)
+    exact = exact_knn(
+        spark.read.parquet(q_path), emb, k=3,
+        query_id="vec_id", query_vec="embedding", base_id="vec_id", base_vec="embedding",
+    ).collect()
+    gids = np.zeros((6, 3), dtype=np.int32)
+    for r in exact:
+        gids[r.qid, r.rank - 1] = r.neighbor_id
+    gt = str(tmp_path / "gt.ibin")
+    FB.write_ground_truth_local(gt, gids, np.zeros((6, 3), dtype=np.float32))
+    codecs, real = [], ANN.ivf_search_from_disk
+    monkeypatch.setattr(
+        ANN, "ivf_search_from_disk",
+        lambda *a, **kw: codecs.append(kw.get("codec")) or real(*a, **kw),
     )
-    assert joined.count() == 0
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        assert main(["evaluate", idx, q_path, gt, "--k", "3", "--nprobe", "4"]) == 0
+    assert "1.0000" in buf.getvalue() and codecs == ["raw"]
+
+
+def test_codes_only_codec_equals_numpy_over_live_decoded_codes(spark, sf_dir, tmp_path):
+    """A mutated codes-only --sq8 layout (upserts that move and add ids,
+    then deletes) serves, through ivf_search_from_disk(codec="codes_only")
+    and the CLI `search`, exactly a numpy brute force over the decoded
+    codes of the live rows in each query's probed shards: same ids,
+    ranks and distances; a deleted id is never returned."""
+    from big_ann_spark.cli import main
+    from big_ann_spark.operators import vector_ops as VO
+
+    src = f"{sf_dir}/embeddings.parquet"
+    emb = spark.read.parquet(src).filter(F.col("vec_id") < 300).select("vec_id", "embedding")
+    emb_path = str(tmp_path / "emb.parquet")
+    emb.write.parquet(emb_path)
+    idx = str(tmp_path / "idx_sq8")
+    assert main(["build-index", emb_path, idx, "--m", "4", "--sq8"]) == 0
+    assert ANN.detect_refine_codec(spark, idx) == "codes_only"
+    # op 0 re-upserts every 5th id with its vector reversed (most move
+    # shard) and adds ids 1000.. ; op 1 deletes base, moved and new ids
+    moved = emb.filter(F.col("vec_id") % 5 == 0).select(
+        "vec_id", F.reverse("embedding").alias("embedding")
+    )
+    fresh = emb.filter(F.col("vec_id") < 20).select(
+        (F.col("vec_id") + 1000).alias("vec_id"), "embedding"
+    )
+    VO.upsert_vectors(spark, idx, moved.unionByName(fresh))
+    deleted = [1, 2, 3, 10, 15, 1001, 1004]
+    VO.delete_vectors(spark, idx, deleted)
+
+    cents = spark.read.parquet(f"{idx}/centroids.parquet")
+    queries = emb.filter(F.col("vec_id") < 12).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    k, nprobe = 5, 2
+    got = sorted(map(tuple, ANN.ivf_search_from_disk(
+        queries, idx, cents, k=k, nprobe=nprobe, codec="codes_only"
+    ).select("qid", "neighbor_id", "dist", "rank").collect()))
+
+    # the oracle: latest op wins over the base; a delete removes the id
+    live = {
+        r.vec_id: (r.codes, r.shard_id)
+        for r in spark.read.parquet(f"{idx}/shards").select("vec_id", "codes", "shard_id").collect()
+    }
+    ops = spark.read.parquet(f"{idx}/ops").select("vec_id", "codes", "shard_id", "op", "_mb")
+    for r in sorted(ops.collect(), key=lambda r: r._mb):
+        if r.op == "delete":
+            live.pop(r.vec_id, None)
+        else:
+            live[r.vec_id] = (r.codes, r.shard_id)
+    rng = spark.read.parquet(f"{idx}/sq8_ranges.parquet").collect()[0]
+    mn, mx = np.array(rng["mins"]), np.array(rng["maxs"])
+    ids = np.array(sorted(live))
+    codes = np.array([live[i][0] for i in ids], dtype=np.float64)
+    shard = np.array([live[i][1] for i in ids])
+    X = mn + ((codes + 0.5) * (mx - mn)) / 255.0
+    probes = {}
+    for r in route_queries(queries, cents, nprobe).collect():
+        probes.setdefault(r.qid, (np.asarray(r.qvec, dtype=np.float64), set()))[1].add(r.shard_id)
+    want = []
+    for qid, (qv, sids) in probes.items():
+        sel = np.isin(shard, list(sids))
+        d = _np_fold(qv, X[sel])
+        for rank, i in enumerate(np.lexsort((ids[sel], d))[:k], 1):
+            want.append((qid, int(ids[sel][i]), float(d[i]), rank))
+    assert got == sorted(want) and len(got) == 12 * k
+    assert not {n for _, n, _, _ in got} & set(deleted)
+
+    q_path = str(tmp_path / "q.parquet")
+    emb.filter(F.col("vec_id") < 12).write.parquet(q_path)
+    out = str(tmp_path / "res.parquet")
+    assert main(["search", idx, q_path, "--k", str(k), "--nprobe", str(nprobe), "--out", out]) == 0
+    cli = spark.read.parquet(out).select("qid", "neighbor_id", "dist", "rank")
+    assert sorted(map(tuple, cli.collect())) == got
 
 
 # ------------------------------------------------------- SQ8 serving layout
@@ -545,7 +648,7 @@ def test_sq8_from_disk_matches_exact_rerank_semantics(spark, sf_dir):
         for a, b in zip(qv, nv):
             acc += (a - b) * (a - b)
         assert r["dist"] == math.sqrt(acc)  # exact rerank, bit-for-bit
-    routed = ANN.route_queries(queries, cents, 2)
+    routed = route_queries(queries, cents, 2)
     allowed = {
         (r["qid"], r["shard_id"]) for r in routed.collect()
     }
@@ -567,10 +670,8 @@ def test_sq8_scan_plans(spark, sf_dir, candidate_scans):
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    routed = ANN.route_queries(queries, cents, 2).localCheckpoint()
-    probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
-    shards = ANN.open_probed_shards(spark, path, probe_ids)
-    ANN.sq8_pool(routed, shards, path, 20)
+    _, routing, shards = probed_pool_inputs(spark, queries, cents, path)
+    ANN.sq8_pool(routing, shards, path, 20)
     pool_plan = formatted_plan(candidate_scans[-1])
     scan = [
         seg for seg in pool_plan.split("Scan parquet") if "codes" in seg
@@ -604,10 +705,8 @@ def test_sq8_pool_arrow_equals_fold(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    routed = ANN.route_queries(queries, cents, 2).localCheckpoint()
-    probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
-    shards = ANN.open_probed_shards(spark, path, probe_ids)
-    pool = ANN.sq8_pool(routed, shards, path, 20)
+    routed, routing, shards = probed_pool_inputs(spark, queries, cents, path)
+    pool = ANN.sq8_pool(routing, shards, path, 20)
     got = sorted(map(tuple, pool.select("qid", "neighbor_id", "dist", "rank").collect()))
     assert got == _np_sq8_pool(spark, routed, path, 20) and len(got) == 160
 
@@ -638,7 +737,7 @@ def test_sq8_from_disk_arrow_pool_end_to_end(spark, sf_dir):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     got = ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=2, codec="sq8")
-    routed = ANN.route_queries(queries, cents, 2)
+    routed = route_queries(queries, cents, 2)
     a = sorted(map(tuple, got.collect()))
     assert a == _np_sq8_search(spark, sf_dir, routed, path, 5, 20) and len(a) == 40
 
@@ -696,22 +795,21 @@ def test_cli_build_index_sq8_refine_and_search(spark, sf_dir, tmp_path):
 def test_cli_refine_search_runs_no_spark_routing(spark, sf_dir, tmp_path, monkeypatch):
     """A CLI search of an --sq8-refine layout dispatches on the
     schema-only codec detection straight to ivf_search_from_disk, which
-    routes on the driver: no route_queries pass at all (the CLI used to
-    route once only to read the probed columns, then the search routed
-    again)."""
+    routes once, on the driver: no second routing pass and no Spark
+    routing plan."""
     from big_ann_spark.cli import main
 
     calls = []
-    real = ANN.route_queries
+    real = ANN._route_on_driver
     monkeypatch.setattr(
-        ANN, "route_queries", lambda *a, **kw: calls.append(1) or real(*a, **kw)
+        ANN, "_route_on_driver", lambda *a, **kw: calls.append(1) or real(*a, **kw)
     )
     src = f"{sf_dir}/embeddings.parquet"
     idx = str(tmp_path / "idx_refine")
     assert main(["build-index", src, idx, "--m", "5", "--sq8-refine"]) == 0
     out = str(tmp_path / "res.parquet")
     assert main(["search", idx, src, "--k", "5", "--nprobe", "2", "--out", out]) == 0
-    assert calls == []
+    assert calls == [1]
     n_q = load_table(spark, sf_dir, "embeddings").count()
     assert spark.read.parquet(out).count() == 5 * n_q
 
@@ -745,9 +843,7 @@ def test_sq8_pool_arrow_parity_is_margin_free(spark, sf_dir):
     queries = emb.filter(F.col("vec_id").isin(0, 1000, 2000)).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    routed = ANN.route_queries(queries, cents, 3).localCheckpoint()
-    probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
-    shards = ANN.open_probed_shards(spark, path, probe_ids)
-    pool = ANN.sq8_pool(routed, shards, path, 25)
+    routed, routing, shards = probed_pool_inputs(spark, queries, cents, path, nprobe=3)
+    pool = ANN.sq8_pool(routing, shards, path, 25)
     got = sorted(map(tuple, pool.select("qid", "neighbor_id", "dist", "rank").collect()))
     assert got == _np_sq8_pool(spark, routed, path, 25) and len(got) == 75

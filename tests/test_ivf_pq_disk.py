@@ -14,6 +14,7 @@ from big_ann_spark.catalog import load_table
 from big_ann_spark.operators import ann as ANN
 from big_ann_spark.operators import sharding as SH
 from big_ann_spark.operators.pq import load_pq_codebooks, train_pq
+from tests.ivf_reference import probed_pool_inputs
 
 _CACHE: dict[str, tuple] = {}
 
@@ -85,10 +86,8 @@ def _np_pq_pool(spark, routed, path, k_pool):
 
 
 def _routed_pool(spark, emb, cents, path, k_pool):
-    routed = ANN.route_queries(_queries(emb), cents, 2).localCheckpoint()
-    probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
-    shards = ANN.open_probed_shards(spark, path, probe_ids)
-    pool = ANN.pq_pool(routed, shards, path, k_pool)
+    routed, routing, shards = probed_pool_inputs(spark, _queries(emb), cents, path)
+    pool = ANN.pq_pool(routing, shards, path, k_pool)
     got = sorted(map(tuple, pool.select("qid", "neighbor_id", "dist", "rank").collect()))
     return got, _np_pq_pool(spark, routed, path, k_pool)
 
@@ -141,10 +140,8 @@ def test_pq_candidate_scan_reads_codes_only(spark, sf_dir, candidate_scans):
     vector column — that is the entire point of the layout."""
     emb, cents, path, _ = _pq_layout(spark, sf_dir)
     queries = _queries(emb)
-    routed = ANN.route_queries(queries, cents, 2).localCheckpoint()
-    probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
-    shards = ANN.open_probed_shards(spark, path, probe_ids)
-    ANN.pq_pool(routed, shards, path, 20)
+    _, routing, shards = probed_pool_inputs(spark, queries, cents, path)
+    ANN.pq_pool(routing, shards, path, 20)
     plan = candidate_scans[-1]._jdf.queryExecution().executedPlan().toString()
     seg = plan.split("ReadSchema")[1].splitlines()[0]
     assert "pq_codes" in seg and "embedding" not in seg
@@ -302,7 +299,7 @@ def test_opq_pool_equals_numpy_lut_and_mutations_compose(spark, sf_dir):
     )
     live = emb.filter(F.col("vec_id") != 3)
     lassign = SH.assign_to_centroids(live, cents, extra_cols=["embedding"])
-    want = ANN.ivf_search(queries, lassign, cents, k=5, nprobe=3, static_prune=False)
+    want = ANN.ivf_search(queries, lassign, cents, k=5, nprobe=3)
     a = sorted(map(tuple, got.select("qid", "neighbor_id", "rank").collect()))
     b = sorted(map(tuple, want.select("qid", "neighbor_id", "rank").collect()))
     assert a == b
@@ -364,10 +361,8 @@ def test_binary_from_disk_exhaustive_pool_equals_exact(spark, sf_dir):
 def test_binary_candidate_scan_reads_bcodes_only(spark, sf_dir, candidate_scans):
     emb, cents, path = _binary_layout(spark, sf_dir)
     queries = _queries(emb)
-    routed = ANN.route_queries(queries, cents, 2).localCheckpoint()
-    probe_ids = [r["shard_id"] for r in routed.select("shard_id").distinct().collect()]
-    shards = ANN.open_probed_shards(spark, path, probe_ids)
-    ANN.binary_pool(routed, shards, path, 20)
+    _, routing, shards = probed_pool_inputs(spark, queries, cents, path)
+    ANN.binary_pool(routing, shards, path, 20)
     plan = candidate_scans[-1]._jdf.queryExecution().executedPlan().toString()
     seg = plan.split("ReadSchema")[1].splitlines()[0]
     assert "bcodes" in seg and "embedding" not in seg
@@ -409,7 +404,7 @@ def test_binary_mutation_runbook(spark, sf_dir):
     )
     live = emb.filter(F.col("vec_id") % 7 != 0)
     lassign = SH.assign_to_centroids(live, cents, extra_cols=["embedding"])
-    want = ANN.ivf_search(queries, lassign, cents, k=5, nprobe=3, static_prune=False)
+    want = ANN.ivf_search(queries, lassign, cents, k=5, nprobe=3)
     a = sorted(map(tuple, got.select("qid", "neighbor_id", "rank").collect()))
     b = sorted(map(tuple, want.select("qid", "neighbor_id", "rank").collect()))
     assert a == b and len(a) == 40
@@ -458,21 +453,16 @@ def test_sidecar_prefetch_outcome_is_retrieved_when_routing_raises(spark, monkey
         sidecar_started.set()
         raise OSError("sidecar unreadable")
 
-    class FailingRouting:
-        def select(self, *cols):
-            return self
-
-        def collect(self):
-            sidecar_started.wait(30)
-            raise RuntimeError("routing failed")
+    def failing_routing(*a, **kw):
+        sidecar_started.wait(30)
+        raise RuntimeError("routing failed")
 
     monkeypatch.setattr(ANN, "_SIDECAR_PREFETCH", Pool())
     monkeypatch.setattr(PQ, "load_pq_codebooks", unreadable_codebooks)
+    monkeypatch.setattr(ANN, "_route_on_driver", failing_routing)
     queries = spark.createDataFrame([(0, [0.0])], "qid long, qvec array<double>")
     with pytest.raises(RuntimeError, match="routing failed"):
-        ANN.ivf_search_from_disk(
-            queries, "/nonexistent/layout", None, codec="pq", _routed=FailingRouting()
-        )
+        ANN.ivf_search_from_disk(queries, "/nonexistent/layout", None, codec="pq")
     [fut] = futures
     assert fut.done() and fut.retrieved
     assert isinstance(fut.exception(), OSError)

@@ -91,7 +91,7 @@ def test_ivf_pq_recall(spark, trained):
     assert r >= 0.2, r
     # candidates only from probed shards: every neighbor's shard must
     # be in its query's probe list
-    from big_ann_spark.operators.ann import route_queries
+    from tests.ivf_reference import route_queries
 
     probed = route_queries(qq, cents, 2).select("qid", "shard_id")
     joined = (

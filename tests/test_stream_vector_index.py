@@ -102,7 +102,7 @@ def test_search_matches_batch_ivf_on_live_rows(spark):
     got = sorted(
         map(
             tuple,
-            VI.search_index(spark, path, queries, cents, k=3, nprobe=2, dim=4)
+            VI.search_index(spark, path, queries, cents, k=3, nprobe=2)
             .select("qid", "neighbor_id", F.round("dist", 6).alias("d"), "rank")
             .collect(),
         )
@@ -121,7 +121,7 @@ def test_search_matches_batch_ivf_on_live_rows(spark):
     want = sorted(
         map(
             tuple,
-            ivf_search(queries, sharded, cents, k=3, nprobe=2, dim=4)
+            ivf_search(queries, sharded, cents, k=3, nprobe=2)
             .select("qid", "neighbor_id", F.round("dist", 6).alias("d"), "rank")
             .collect(),
         )
@@ -131,11 +131,13 @@ def test_search_matches_batch_ivf_on_live_rows(spark):
     assert not deleted_hits
 
 
-def test_search_plan_is_partition_pruned(spark):
-    """VERDICT r7 #1: search must read ONLY probed shard partitions —
-    the r7 global-max_by form scanned the whole index per query batch.
-    Uncontested rows come off a PartitionFilters-pruned scan; only the
-    contested ids (deletes/re-inserts) pay the resolution aggregate."""
+def test_search_plan_is_partition_pruned(spark, candidate_scans):
+    """Search must read ONLY probed shard partitions: a global max_by
+    over the index would scan all of it per query batch. Uncontested
+    rows come off a PartitionFilters-pruned scan (ivf_search's
+    shard_id IN filter pushes below the union and the anti-join); only
+    the contested ids (deletes/re-inserts) pay the resolution
+    aggregate."""
     src = tempfile.mkdtemp(prefix="vi_src_")
     ids = list(range(8)) + list(range(100, 108)) + list(range(200, 208))
     _write_batches(
@@ -148,9 +150,10 @@ def test_search_plan_is_partition_pruned(spark):
     VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
 
     queries = spark.createDataFrame([(0, _vec(1))], "qid long, qvec array<float>")
-    out = VI.search_index(spark, path, queries, cents, k=3, nprobe=2, dim=4)
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
+    VI.search_index(spark, path, queries, cents, k=3, nprobe=2)
+    scan = candidate_scans[-1]
+    plan = scan._sc._jvm.PythonSQLUtils.explainString(
+        scan._jdf.queryExecution(), "formatted"
     )
     assert "PartitionFilters" in plan
     # at least one scan is pruned on shard_id (the uncontested branch)
@@ -193,7 +196,7 @@ def test_search_state_reuse_and_full_resolution_agree(spark):
         return sorted(
             map(
                 tuple,
-                VI.search_index(spark, path, queries, cents, k=4, nprobe=2, dim=4, **kw)
+                VI.search_index(spark, path, queries, cents, k=4, nprobe=2, **kw)
                 .select("qid", "neighbor_id", F.round("dist", 6), "rank")
                 .collect(),
             )
@@ -207,7 +210,7 @@ def test_search_state_reuse_and_full_resolution_agree(spark):
         map(
             tuple,
             ivf_search(
-                queries, VI.live_vectors(spark, path), cents, k=4, nprobe=2, dim=4
+                queries, VI.live_vectors(spark, path), cents, k=4, nprobe=2
             )
             .select("qid", "neighbor_id", F.round("dist", 6), "rank")
             .collect(),
@@ -514,7 +517,7 @@ def test_export_to_batch_layout(spark, tmp_path):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     want = sorted(
-        map(tuple, VI.search_index(spark, path, queries, cents, k=3, nprobe=2, dim=4)
+        map(tuple, VI.search_index(spark, path, queries, cents, k=3, nprobe=2)
             .select("qid", "neighbor_id", "rank").collect())
     )
     got = sorted(
@@ -551,7 +554,7 @@ def test_export_to_batch_layout(spark, tmp_path):
     got3 = sorted(
         map(tuple, ANN.ivf_search_from_disk(
             queries, dst3, cents, k=3, nprobe=2, codec="opq",
-            rerank_factor=100, dim=4,
+            rerank_factor=100,
         ).select("qid", "neighbor_id", "rank").collect())
     )
     assert got3 == want

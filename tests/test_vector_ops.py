@@ -17,6 +17,7 @@ from big_ann_spark.operators import ann as ANN
 from big_ann_spark.operators import oplayout
 from big_ann_spark.operators import sharding as SH
 from big_ann_spark.operators import vector_ops as VO
+from tests.ivf_reference import route_queries
 
 
 def _build_layout(spark, sf_dir, *, sq8=False, pq=False):
@@ -46,9 +47,7 @@ def _build_layout(spark, sf_dir, *, sq8=False, pq=False):
 def _expected(spark, emb, cents, live_pred, queries, k=5, nprobe=3):
     live = emb.filter(live_pred)
     assign = SH.assign_to_centroids(live, cents, extra_cols=["embedding"])
-    return ANN.ivf_search(
-        queries, assign, cents, k=k, nprobe=nprobe, static_prune=False
-    )
+    return ANN.ivf_search(queries, assign, cents, k=k, nprobe=nprobe)
 
 
 def _rows(df):
@@ -178,11 +177,23 @@ def test_compaction_folds_history(spark, sf_dir):
 
 
 def test_pristine_layout_short_circuits(spark, sf_dir):
-    """A layout with no ops/ dir must pass the base DataFrame through
-    UNTOUCHED (identity — zero extra Spark jobs on the serve path)."""
-    emb, cents, path = _build_layout(spark, sf_dir)
-    base = spark.read.option("basePath", f"{path}/shards").parquet(f"{path}/shards")
-    assert VO.live_probed_view(spark, path, base, [0, 1]) is base
+    """A layout with no ops/ dir resolves no mutation state: its live
+    frame has no dead ids and no resolved rows, and a search of it runs
+    only the query collect and the candidate scan — no mutation-state
+    job."""
+    emb, _, path = _build_layout(spark, sf_dir)
+    cents = spark.read.parquet(f"{path}/centroids.parquet")
+    assert VO.mutation_state(spark, path) is None
+    frame, dead = VO.live_frame(spark, path)
+    assert len(dead) == 0 and frame.filter("_resolved").count() == 0
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    ANN.centroid_matrix(spark, cents)
+    rows, n = _job_count(
+        spark, lambda: ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3).collect()
+    )
+    assert n <= 2 and len(rows) == 40
 
 
 @pytest.mark.slow
@@ -327,17 +338,6 @@ def test_evaluate_honors_mutations(spark, sf_dir, tmp_path):
     assert "recall@1" in buf.getvalue()
     recall = float(buf.getvalue().strip().split(":")[-1])
     assert recall == 0.0  # the deleted ids must be gone from serving
-
-
-def test_live_view_plan_broadcast_anti_join(spark, sf_dir):
-    """The contested-set subtraction must be a BROADCAST anti-join on
-    the probed base scan — never a shuffle of the big side."""
-    emb, cents, path = _build_layout(spark, sf_dir)
-    VO.delete_vectors(spark, path, [2, 4, 8])
-    base = spark.read.option("basePath", f"{path}/shards").parquet(f"{path}/shards")
-    view = VO.live_probed_view(spark, path, base, [0, 1, 2])
-    plan = view._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
 def test_writer_lock_blocks_concurrent_mutator(spark, sf_dir):
@@ -589,6 +589,26 @@ def test_repeat_search_of_unchanged_mutated_layout_runs_two_jobs(spark, sf_dir):
     top = {r.qid: r.neighbor_id for r in rows if r["rank"] == 1}
     assert top[3] == 3 and top[6] == 6  # upserted ids find themselves
     assert not {r.neighbor_id for r in rows} & {1, 2}
+
+
+def test_ivf_search_over_a_bare_file_centroid_table_runs_two_jobs(spark, sf_dir):
+    """ivf_search routes on the driver and scans once: with the centroid
+    matrix of a bare-file centroid table in memory, a search runs at
+    most two Spark jobs (the query collect and the candidate scan) and
+    returns a local frame, equal to the from-disk search of the same
+    layout."""
+    emb, _, path = _build_layout(spark, sf_dir)
+    cents = spark.read.parquet(f"{path}/centroids.parquet")
+    listed = spark.read.parquet(f"{path}/shards")
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    ANN.ivf_search(queries, listed, cents, k=5, nprobe=3)
+    out, n = _job_count(spark, lambda: ANN.ivf_search(queries, listed, cents, k=5, nprobe=3))
+    assert n <= 2, f"ivf_search ran {n} jobs"
+    rows, n_collect = _job_count(spark, out.collect)
+    assert n_collect == 0 and len(rows) == 40
+    assert _rows(out) == _rows(ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3))
 
 
 def _live_ids(spark, path, as_of=None):
@@ -870,7 +890,7 @@ def _op_files(path, op_id):
 
 def test_upsert_assignment_bit_equal_to_fold_on_near_ties(spark):
     """Upserts and the build's assign_to_centroids both pick the shard
-    and distance of ``route_queries``' Spark ``l2_distance`` fold, bit
+    and distance of the reference ``route_queries``' Spark ``l2_distance`` fold, bit
     for bit: points 1e-16 apart around the plane equidistant from two
     centroids (ties go to the lower shard id), and a batch-internal
     duplicate id keeps its first row."""
@@ -899,7 +919,7 @@ def test_upsert_assignment_bit_equal_to_fold_on_near_ties(spark):
     VO.upsert_vectors(spark, path, vecs)
     ladder = spark.createDataFrame([(int(i), [float(x) for x in v]) for i, v in rows], vecs.schema)
     queries = ladder.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
-    want = ANN.route_queries(queries, cents, 1).join(cents, "shard_id").select(
+    want = route_queries(queries, cents, 1).join(cents, "shard_id").select(
         "qid", "shard_id", l2_distance("qvec", "centroid").alias("dist")
     )
     want = sorted(map(tuple, want.collect()))
@@ -1051,12 +1071,13 @@ def test_landing_killed_before_its_rename_stays_invisible(spark, sf_dir, monkeyp
     assert search() == _rows(_expected(spark, emb, cents, live, queries))
 
 
-def test_compact_in_place_runs_three_jobs_and_writes_no_histogram(spark, sf_dir):
+def test_compact_in_place_runs_two_jobs_and_writes_no_histogram(spark, sf_dir):
     """Compaction rewrites only the shards: on a mutated layout whose
-    mutation state is resolved it runs three Spark jobs (the contested
-    ids' broadcast, the clustering shuffle, the partitioned write), and
-    the compacted layout has no distribution/ — the build's histogram
-    describes the build only."""
+    mutation state a search has resolved it runs two Spark jobs (the
+    clustering shuffle and the partitioned write; the dead ids ride a
+    broadcast variable, which runs none), and the compacted layout has
+    no distribution/ — the build's histogram describes the build
+    only."""
     import os
 
     emb, cents, path = _build_layout(spark, sf_dir)
@@ -1068,7 +1089,7 @@ def test_compact_in_place_runs_three_jobs_and_writes_no_histogram(spark, sf_dir)
     )
     before = _rows(ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3))
     n_ops, n_jobs = _job_count(spark, lambda: VO.compact_in_place(spark, path))
-    assert (n_ops, n_jobs) == (2, 3)
+    assert (n_ops, n_jobs) == (2, 2)
     assert not os.path.exists(f"{path}/distribution")
     assert _rows(ANN.ivf_search_from_disk(queries, path, cents, k=5, nprobe=3)) == before
 
@@ -1119,7 +1140,7 @@ def test_rewritten_centroids_seen_by_next_search_and_upsert(spark, sf_dir):
     queries = batch.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
     fresh = spark.read.parquet(f"{path}/centroids.parquet")
     routed = ANN._route_on_driver(queries, fresh, 1, query_id="qid", query_vec="qvec")
-    want_routed = ANN.route_queries(queries, flipped, 1).select("qid", "shard_id").collect()
+    want_routed = route_queries(queries, flipped, 1).select("qid", "shard_id").collect()
     assert sorted(
         (int(routed.qids[q]), s) for s, qs in routed.shard_to_q.items() for q in qs
     ) == sorted(map(tuple, want_routed))

@@ -129,9 +129,7 @@ def test_any_op_sequence_equals_rebuild(spark, script, seed, monkeypatch):
     want_assign = SH.assign_to_centroids(
         want_base, cents, extra_cols=["embedding"]
     )
-    want = ANN.ivf_search(
-        queries, want_assign, cents, k=3, nprobe=_DIM, static_prune=False
-    ).select("qid", "neighbor_id", "dist", "rank")
+    want = ANN.ivf_search(queries, want_assign, cents, k=3, nprobe=_DIM).select("qid", "neighbor_id", "dist", "rank")
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
     # compaction of the mutated layout serves identically

@@ -1,5 +1,6 @@
-"""Measure streaming-index search: pruned contested-set path (r8) vs
-the full max_by resolution (the r7 form / the CONTESTED_FALLBACK path).
+"""Measure streaming-index search: the pruned contested-set path
+(``search_index``) vs ``ivf_search`` over the full max_by resolution
+(``live_vectors``).
 Builds the index layout directly (partitioned write + markers) so the
 measurement times SEARCH, not streaming ingest.
 
@@ -130,7 +131,7 @@ def main() -> None:
           lambda: VI.search_index(spark, path, queries, cents, k=10, nprobe=2))
     from big_ann_spark.operators.ann import ivf_search
 
-    timed("r7 full-resolution search",
+    timed("full-resolution search (live_vectors)",
           lambda: ivf_search(queries, VI.live_vectors(spark, path), cents, k=10, nprobe=2))
 
 
