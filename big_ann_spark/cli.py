@@ -401,16 +401,21 @@ def _build_parser() -> argparse.ArgumentParser:
 
     vi = sub.add_parser(
         "vindex-ingest",
-        help="stream a vector directory (insert/delete runbook) into an "
-        "evolving IVF index (exactly-once, shard-partitioned)",
+        help="stream a vector directory (insert/delete runbook) into a "
+        "build-index layout's op ledger — each micro-batch lands as one "
+        "committed op, exactly-once across restarts; serve it with "
+        "search, fold it with index-compact or --compact-above",
     )
     vi.add_argument("src", help="directory of parquet files: (id, vector[, op])")
-    vi.add_argument("dst", help="index dir (data/ + checkpoint/ incl. commit markers)")
+    vi.add_argument(
+        "dst", help="build-index layout dir (seeded empty when it holds none)"
+    )
     vi.add_argument(
         "--centroids",
         required=True,
         help="centroids parquet (shard_id, centroid), or a build-index "
-        "dir containing centroids.parquet",
+        "dir containing centroids.parquet; seeds a new layout (an "
+        "existing one routes by its own centroids)",
     )
     vi.add_argument("--id-col", default="vec_id")
     vi.add_argument("--vec-col", default="embedding")
@@ -527,23 +532,6 @@ def _build_parser() -> argparse.ArgumentParser:
     bk.add_argument("src", help="dir produced by bm25-build")
     bk.add_argument("dst", help="fresh index dir")
 
-    vx = sub.add_parser(
-        "vindex-export",
-        help="materialize a vindex-ingest live view into the batch "
-        "build-index layout (search / index-upsert / index-delete / "
-        "index-compact and every refine codec run on it unmodified)",
-    )
-    vx.add_argument("src", help="dir produced by vindex-ingest")
-    vx.add_argument("dst", help="fresh batch index dir")
-    vx.add_argument("--centroids", required=True)
-    vx.add_argument(
-        "--codec", default=None, choices=["sq8", "pq", "opq", "binary"],
-        help="also land a compressed candidate column (refine layout), "
-        "quantization trained on the exported live view",
-    )
-    vx.add_argument("--as-of", type=int, default=None,
-                    help="export a snapshot instead of the head")
-
     bx = sub.add_parser(
         "bm25-export",
         help="materialize a bm25-stream-ingest live index into the "
@@ -553,19 +541,6 @@ def _build_parser() -> argparse.ArgumentParser:
     bx.add_argument("src", help="dir produced by bm25-stream-ingest")
     bx.add_argument("dst", help="fresh batch-layout index dir")
     bx.add_argument("--term-buckets", type=int, default=256)
-
-    vs = sub.add_parser(
-        "vindex-search", help="IVF search over a streamed index's live view"
-    )
-    vs.add_argument("index", help="dir produced by vindex-ingest")
-    vs.add_argument("queries", help="parquet with (id, vector) query columns")
-    vs.add_argument("--centroids", required=True)
-    vs.add_argument("--k", type=int, default=10)
-    vs.add_argument("--nprobe", type=int, default=2)
-    vs.add_argument("--id-col", default="vec_id")
-    vs.add_argument("--vec-col", default="embedding")
-    vs.add_argument("--out", default=None)
-    vs.add_argument("--show", type=int, default=20)
 
     pr = sub.add_parser(
         "prep",
@@ -679,14 +654,6 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     bc.add_argument("src", help="dir produced by bm25-stream-ingest")
     bc.add_argument("dst", help="fresh index dir")
-
-    vc = sub.add_parser(
-        "vindex-compact",
-        help="copy-on-write compaction: fold tombstones, land the live "
-        "view as the base epoch of a fresh index dir",
-    )
-    vc.add_argument("src", help="dir produced by vindex-ingest")
-    vc.add_argument("dst", help="fresh index dir")
 
     ev = sub.add_parser(
         "evaluate",
@@ -1185,8 +1152,12 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "index-compact":
         from big_ann_spark.operators import vector_ops as VO
 
+        from big_ann_spark.operators.ann import open_probed_shards
+
         n_ops = VO.compact_vector_layout(spark, args.src, args.dst)
-        n = spark.read.parquet(f"{args.dst}/shards").count()
+        # the schema sidecar types the count of a layout whose every
+        # row was deleted (its shards directory holds no file)
+        n = open_probed_shards(spark, args.dst, None).count()
         print(f"compacted {n_ops} ops -> {args.dst} ({n} live vectors)")
         return 0
 
@@ -1355,57 +1326,42 @@ def main(argv: list[str] | None = None) -> int:
         print(f"graph layout at {args.layout}: {n_ops} committed op(s)")
         return 0
 
-    if args.cmd in ("vindex-ingest", "vindex-search"):
+    if args.cmd == "vindex-ingest":
         import os
 
+        from pyspark.sql.types import StructType
+
+        from big_ann_spark.operators.ann import drop_dead_rows
+        from big_ann_spark.operators.vector_ops import live_frame
         from big_ann_spark.streaming import vector_index as VI
 
         cpath = args.centroids
         if os.path.isdir(cpath) and os.path.isdir(f"{cpath}/centroids.parquet"):
             cpath = f"{cpath}/centroids.parquet"
         cents = spark.read.parquet(cpath)
-        if args.cmd == "vindex-ingest":
-            # infer the stream schema from a batch read of the source
-            # (ADVICE r7: a hardcoded array<float> silently mismatched
-            # array<double> corpora); fail naming any missing column
-            from pyspark.sql.types import StructType
-
-            src_schema = spark.read.parquet(args.src).schema
-            want = [args.id_col, args.vec_col] + (
-                [args.op_col] if args.op_col else []
+        # the stream schema comes from a batch read of the source, so an
+        # array<double> corpus streams as itself; fail naming any
+        # missing column
+        src_schema = spark.read.parquet(args.src).schema
+        want = [args.id_col, args.vec_col] + ([args.op_col] if args.op_col else [])
+        missing = [c for c in want if c not in src_schema.names]
+        if missing:
+            raise SystemExit(
+                f"vindex-ingest: {args.src} lacks column(s) {missing} "
+                f"(found: {src_schema.names})"
             )
-            missing = [c for c in want if c not in src_schema.names]
-            if missing:
-                raise SystemExit(
-                    f"vindex-ingest: {args.src} lacks column(s) {missing} "
-                    f"(found: {src_schema.names})"
-                )
-            stream = (
-                spark.readStream.schema(StructType([src_schema[c] for c in want]))
-                .format("parquet")
-                .load(args.src)
-            )
-            VI.stream_vector_index_ingest(
-                stream, args.dst, cents,
-                id_col=args.id_col, vec_col=args.vec_col, op_col=args.op_col,
-            )
-            n = VI.live_vectors(spark, args.dst).count()
-            print(f"index at {args.dst}: {n} live vectors")
-            return 0
-        q = spark.read.parquet(args.queries).select(
-            F.col(args.id_col).alias("qid"), F.col(args.vec_col).alias("qvec")
+        stream = (
+            spark.readStream.schema(StructType([src_schema[c] for c in want]))
+            .format("parquet")
+            .load(args.src)
         )
-        out = VI.search_index(
-            spark, args.index, q, cents, k=args.k, nprobe=args.nprobe
+        VI.stream_vector_index_ingest(
+            stream, args.dst, cents,
+            id_col=args.id_col, vec_col=args.vec_col, op_col=args.op_col,
         )
-        if args.out:
-            out.write.mode("overwrite").parquet(args.out)
-            # count the WRITTEN parquet — re-counting `out` would
-            # re-execute the whole search DAG for one integer
-            n = spark.read.parquet(args.out).count()
-            print(f"{n} rows -> {args.out}")
-        else:
-            out.show(args.show, truncate=False)
+        frame, dead = live_frame(spark, args.dst)
+        n = drop_dead_rows(frame.select("vec_id", "_resolved"), dead, "vec_id").count()
+        print(f"index at {args.dst}: {n} live vectors")
         return 0
 
     if args.cmd == "prep":
@@ -1490,25 +1446,6 @@ def main(argv: list[str] | None = None) -> int:
 
         n = compact_bm25_stream(spark, args.src, args.dst)
         print(f"compacted {args.src} -> {args.dst}: {n} live postings")
-        return 0
-
-    if args.cmd == "vindex-compact":
-        from big_ann_spark.streaming import vector_index as VI
-
-        n = VI.compact_index(spark, args.src, args.dst)
-        print(f"compacted {args.src} -> {args.dst}: {n} live vectors")
-        return 0
-
-    if args.cmd == "vindex-export":
-        from big_ann_spark.streaming import vector_index as VI
-
-        cents = spark.read.parquet(args.centroids)
-        n = VI.export_vector_index(
-            spark, args.src, args.dst, cents,
-            codec=args.codec, as_of=args.as_of,
-        )
-        tag = f" (+{args.codec} refine)" if args.codec else ""
-        print(f"exported {n} live vectors -> {args.dst}{tag}")
         return 0
 
     from big_ann_spark.sources import fbin as FB

@@ -375,6 +375,7 @@ def ivf_search_from_disk(
             queries, centroids, nprobe, query_id=query_id, query_vec=query_vec
         )
         frame, dead = live_frame(spark, path, as_of=as_of, id_col=id_col, vec_col=vec_col)
+        oplayout.refuse_contested_above_bound(len(dead), path)
         if sidecar_fut is not None:
             sidecars = sidecar_fut.result()
     finally:
@@ -1079,6 +1080,7 @@ def filtered_search_from_disk(
     # shards would silently drop that live qualifying neighbor from
     # the verify.
     frame, dead = vector_ops.live_frame(spark, path, as_of=as_of, id_col=id_col, vec_col=vec_col)
+    oplayout.refuse_contested_above_bound(len(dead), path)
     live = frame.filter(_isin_ids("shard_id", sorted(shard_ids)) | F.col("_resolved"))
     if bounded is not None:
         live = live.filter(_isin_ids(id_col, bounded))

@@ -54,9 +54,10 @@ stays the lock's (and the orchestrator's) job.
 **Compaction policy**: mutation state costs every search one shipped
 id per contested id — measured linear in mutation volume (+6.5 s at
 1.58M ids, SCALE.md) and reset by compaction. Readers warn past
-``CONTESTED_WARN_ABOVE`` (``warn_contested_size``), and the mutation
-CLIs accept ``--compact-above N`` to fold the layout in place
-(``vector_ops.compact_in_place``, write-new-then-swap) when the
+``CONTESTED_WARN_ABOVE`` (``warn_contested_size``), searches refuse
+past ``CONTESTED_SEARCH_MAX`` (``refuse_contested_above_bound``), and
+the mutation CLIs accept ``--compact-above N`` to fold the layout in
+place (``vector_ops.compact_in_place``, write-new-then-swap) when the
 contested count exceeds the budget.
 
 **The layout memo** (``memo``): every piece of state the engine reads
@@ -258,6 +259,15 @@ def writer_lock(spark, path: str, *, owner: str = "", in_compaction: bool = Fals
 # latency budget tolerates more.
 CONTESTED_WARN_ABOVE = 500_000
 
+# Hard bound on the contested ids one search ships to its candidate
+# scan (the dead ids, collected once per ledger state by
+# ``vector_ops.mutation_state``, broadcast with every search). The cost
+# is linear — +6.5 s per search at 1.58M ids (SCALE.md) — so past 2M a
+# search costs more than any serving budget and is refused loudly.
+# Compaction and the ``--compact-above`` count read the same state and
+# are not bounded: they are what resets the set.
+CONTESTED_SEARCH_MAX = 2_000_000
+
 
 class LedgerEntry(NamedTuple):
     """State derived from one ledger state of one layout."""
@@ -390,6 +400,19 @@ def warn_contested_size(n: int, path: str, context: str) -> None:
             f"compact the layout (CLI: index-compact, or pass "
             f"--compact-above to the mutation commands) to reset it",
             stacklevel=3,
+        )
+
+
+def refuse_contested_above_bound(n: int, path: str) -> None:
+    """Fail a search of the layout at ``path`` whose ``n`` contested
+    ids exceed ``CONTESTED_SEARCH_MAX``; one comparison otherwise."""
+    if n > CONTESTED_SEARCH_MAX:
+        raise ValueError(
+            f"{n:,} contested ids in {path.rstrip('/')} exceed "
+            f"CONTESTED_SEARCH_MAX = {CONTESTED_SEARCH_MAX:,}: every search "
+            "would ship them all (measured +6.5 s/search at 1.58M, SCALE.md). "
+            "Compact first (CLI: index-compact, or pass --compact-above to "
+            "the mutation commands), then search"
         )
 
 
@@ -592,9 +615,10 @@ def read_dir_memo(spark, path: str, kind: str, read):
 
 
 def copy_dir(spark, src: str, dst: str) -> None:
-    """Replace ``dst`` with a copy of the flat directory ``src`` through
-    the Hadoop FS API (no Spark job); each file keeps its modification
-    time, so a byte-identical copy keeps its ``memo_by_files`` key."""
+    """Replace ``dst`` with a copy of the directory tree ``src`` through
+    the Hadoop FS API (no Spark job); each file directly under ``src``
+    keeps its modification time, so a byte-identical copy of a sidecar
+    keeps its ``memo_by_files`` key."""
     jvm = spark._jvm
     sfs, jsrc = fs_path(spark, src)
     dfs, jdst = fs_path(spark, dst)

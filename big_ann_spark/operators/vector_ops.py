@@ -7,9 +7,11 @@ Reference context: the reference engine's shard layout
 (``shard_by_distance.py``) is build-once — removing or replacing a
 vector means rebuilding the shard. An LLM-serving index needs
 retraction (takedowns, dedup-after-index, corpus refreshes) without a
-full rebuild, so the engine treats the batch layout exactly like its
-streaming sibling (``streaming/vector_index.py``): every mutation is
-an op, readers resolve latest-op-wins.
+full rebuild, so every mutation is an op and readers resolve
+latest-op-wins. This ledger is the layout's one mutation model: the
+batch calls land one op each, and the vector stream
+(``streaming/vector_index.py``) lands one op per micro-batch through
+the same ``_land_vector_op``.
 
 Layout extension (backward compatible — a pristine layout has no
 ``ops/`` directory and every reader short-circuits to the base):
@@ -21,36 +23,36 @@ Layout extension (backward compatible — a pristine layout has no
   shard_id)`` with their assigned shard (routed on the driver);
   deletes land tombstones ``op='delete'`` with the RESERVED shard −1
   kept as a value (query routing can never probe it, so a bare
-  tombstone can never surface as a candidate — the streaming index's
-  trick). Ledgers written before ``shard_id`` became a column hold
-  ``_mb=<op>/shard_id=S/`` dirs: they are read and compacted as
-  before, and a new op on them is refused until they are compacted
-  (Spark cannot infer one table over both layouts);
+  tombstone can never surface as a candidate). Ledgers written before
+  ``shard_id`` became a column hold ``_mb=<op>/shard_id=S/`` dirs:
+  they are read and compacted as before, and a new op on them is
+  refused until they are compacted (Spark cannot infer one table over
+  both layouts);
 - ``{path}/ops/_staging/_mb=<op>/`` — an op file being landed, hidden
   from readers until one rename moves it into ``ops/_mb=<op>/``;
 - ``{path}/_ops/<op>`` — commit markers (oplayout protocol: a landing
   that replaces what the id held + marker = idempotent replay,
   crash-invisible half-writes, O(in-flight) NOT-IN for readers).
 
-Read-side resolution mirrors ``streaming/vector_index.prepare_search``:
-the ops table — op-count-sized, not corpus-sized, read with the op
-rows' explicit schema — resolves per-id winners with one ``max_by``,
-memoized per ledger state (``mutation_state``), and the CONTESTED set
-(ids touched by any committed op — small between compactions by
-construction) marks the stale base rows. Every reader of live rows
-takes one ``live_frame`` per layout state — every base shard opened
-once, unioned with the resolved winners — and drops the stale base
-rows by one rule, ``ann._drop_dead``: the search's candidate scan
-inside its own ``mapInArrow``, compaction and the filtered search's
-vector fetch through ``ann.drop_dead_rows``. A search keeps only its
+Read side: the ops table — op-count-sized, not corpus-sized, read
+with the op rows' explicit schema — resolves per-id winners with one
+``max_by``, memoized per ledger state (``mutation_state``), and the
+CONTESTED set (ids touched by any committed op, reset by compaction;
+a search refuses past ``oplayout.CONTESTED_SEARCH_MAX``) marks the
+stale base rows. Every reader of live rows takes one ``live_frame``
+per layout state — every base shard opened once, unioned with the
+resolved winners — and drops the stale base rows by one rule,
+``ann._drop_dead``: the search's candidate scan inside its own
+``mapInArrow``, compaction, the filtered search's vector fetch and the
+streaming registry query through ``ann.drop_dead_rows``. A search keeps only its
 probed shards with a partition filter; uncontested vectors never
 shuffle.
 
 Each mutation lands as one file. An upsert (whose batch is collected
-in one job) and a delete of listed ids write it from the driver with
-no Spark job (``oplayout.write_table_dir``); a DataFrame of ids to
-delete is deduplicated distributed and lands in one write job.
-Compaction rewrites the base as one file per shard.
+in one job), a delete of listed ids and a streamed micro-batch write
+it from the driver with no Spark job (``oplayout.write_table_dir``);
+a DataFrame of ids to delete is deduplicated distributed and lands in
+one write job. Compaction rewrites the base as one file per shard.
 
 At 100 TB: ops cost O(batch) writes; search cost gains an O(contested)
 id filter in the probed scan plus an O(ops-size) side scan —
@@ -257,6 +259,64 @@ def _code_columns(spark, path: str, E: np.ndarray, schema: StructType) -> dict:
     return {c: matrix_list_col(M) for c, M in out.items()}
 
 
+def _first_row_per_id(batch, id_col: str):
+    """The Arrow ``batch`` with each id's first row only, in batch order."""
+    from big_ann_spark.functions.arrowio import int_col
+
+    _, first = np.unique(int_col(batch, id_col), return_index=True)
+    return batch.take(np.sort(first))
+
+
+def _insert_rows(spark, path: str, batch, schema: StructType, *, id_col: str, vec_col: str):
+    """The op rows (Arrow, typed by ``schema``, the layout's
+    ``op_schema``) inserting the Arrow ``batch`` of distinct ids: each
+    vector routed to its nearest centroid of the layout's
+    ``centroids.parquet`` (``knn.nearest_centroids``, read once per
+    state of its files by ``ann.centroid_matrix``), stored as float32,
+    with its code columns encoded on the driver (``_code_columns``). A
+    vector that is not finite fails here, before anything is written."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from big_ann_spark.functions.arrowio import int_col, list_col_matrix, matrix_list_col
+    from big_ann_spark.operators.ann import centroid_matrix
+    from big_ann_spark.operators.knn import nearest_centroids
+
+    ids = int_col(batch, id_col)
+    cids, cmat = centroid_matrix(spark, f"{path}/centroids.parquet")
+    V = list_col_matrix(batch, vec_col) if len(ids) else np.empty((0, cmat.shape[1]))
+    near, dist = nearest_centroids(V, cids, cmat, 1)
+    E = V.astype(np.float32)  # the stored embedding is array<float>
+    return pa.table(
+        {
+            "vec_id": pa.array(ids, pa.int64()),
+            "dist": pa.array(dist[:, 0], pa.float64()),
+            "embedding": matrix_list_col(E),
+            **_code_columns(spark, path, E, schema),
+            "op": pa.array([OP_INSERT] * len(ids), pa.string()),
+            "shard_id": pa.array(cids[near[:, 0]], pa.int32()),
+        }
+    ).cast(to_arrow_schema(schema))
+
+
+def _tombstone_rows(ids, schema: StructType):
+    """The op rows (Arrow, typed by ``schema``) deleting the distinct
+    ids among ``ids``: shard ``TOMBSTONE_SHARD``, every data column null."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    uniq = np.unique(np.asarray(ids, dtype=np.int64))
+    n = len(uniq)
+    fixed = {
+        "vec_id": pa.array(uniq, pa.int64()),
+        "op": pa.array([OP_DELETE] * n, pa.string()),
+        "shard_id": pa.array(np.full(n, TOMBSTONE_SHARD, np.int32)),
+    }
+    return pa.table(
+        {f.name: fixed.get(f.name, pa.nulls(n, f.type)) for f in to_arrow_schema(schema)}
+    )
+
+
 def upsert_vectors(
     spark,
     path: str,
@@ -277,14 +337,13 @@ def upsert_vectors(
     upserted points is a property of that frozen routing), by
     ``knn.nearest_centroids``, the kernel of ``assign_to_centroids`` and
     of search routing: the upsert lands in the shard a search for the
-    vector probes first. A vector that is not finite fails the upsert
-    before anything is written. The centroid matrix is read once per
-    state of ``centroids.parquet`` (``ann.centroid_matrix``). Code columns (SQ8/PQ/OPQ/binary) are
-    encoded on the driver under the frozen sidecars, bit-equal to the
-    build's encoders. The op lands from the driver as one file, with no
-    Spark job beyond the batch collect. Duplicate ids
-    WITHIN one batch collapse to their first row — between batches,
-    the higher op id wins.
+    vector probes first (``_insert_rows``). A vector that is not finite
+    fails the upsert before anything is written. Code columns
+    (SQ8/PQ/OPQ/binary) are encoded on the driver under the frozen
+    sidecars, bit-equal to the build's encoders. The op lands from the
+    driver as one file, with no Spark job beyond the batch collect.
+    Duplicate ids WITHIN one batch collapse to their first row —
+    between batches, the higher op id wins.
 
     ``tags_col``: when the layout carries filtered-track tag artifacts
     (``write_tag_postings_layout``), the batch's tag arrays land as
@@ -293,10 +352,8 @@ def upsert_vectors(
     Returns the committed op id."""
     import pyarrow as pa
 
-    from big_ann_spark.functions.arrowio import int_col, list_col_matrix, matrix_list_col
     from big_ann_spark.operators import tag_ops
-    from big_ann_spark.operators.ann import centroid_matrix, collect_to_driver
-    from big_ann_spark.operators.knn import nearest_centroids
+    from big_ann_spark.operators.ann import collect_to_driver
 
     if tags_col is not None:
         if not tag_ops.has_tag_artifacts(spark, path):
@@ -312,26 +369,9 @@ def upsert_vectors(
             "stale embedding"
         )
     cols = [id_col, vec_col] + ([tags_col] if tags_col is not None else [])
-    batch = collect_to_driver(vectors.select(*cols), "upsert batch")
-    ids = int_col(batch, id_col)
-    _, first = np.unique(ids, return_index=True)
-    keep = np.sort(first)
-    batch, ids = batch.take(keep), ids[keep]
-    cids, cmat = centroid_matrix(spark, f"{path}/centroids.parquet")
-    V = list_col_matrix(batch, vec_col) if len(ids) else np.empty((0, cmat.shape[1]))
-    near, dist = nearest_centroids(V, cids, cmat, 1)
-    E = V.astype(np.float32)  # the stored embedding is array<float>
+    batch = _first_row_per_id(collect_to_driver(vectors.select(*cols), "upsert batch"), id_col)
     schema = op_schema(spark, path)
-    table = pa.table(
-        {
-            "vec_id": pa.array(ids, pa.int64()),
-            "dist": pa.array(dist[:, 0], pa.float64()),
-            "embedding": matrix_list_col(E),
-            **_code_columns(spark, path, E, schema),
-            "op": pa.array([OP_INSERT] * len(ids), pa.string()),
-            "shard_id": pa.array(cids[near[:, 0]], pa.int32()),
-        }
-    )
+    table = _insert_rows(spark, path, batch, schema, id_col=id_col, vec_col=vec_col)
     tag_batch = None
     if tags_col is not None:
         tag_batch = spark.createDataFrame(
@@ -357,9 +397,6 @@ def delete_vectors(
     may hold more ids than the driver should) is deduplicated
     distributed and lands in one write job. Returns the committed op
     id."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     schema = op_schema(spark, path)
     if isinstance(ids, DataFrame):
         id_df = ids.select(F.col(ids.columns[0]).cast("long").alias("vec_id")).distinct()
@@ -370,16 +407,7 @@ def delete_vectors(
             *[fill.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
         return _land_vector_op(spark, path, rows, op_id, schema)
-    uniq = np.unique(np.fromiter((int(i) for i in ids), dtype=np.int64))
-    n = len(uniq)
-    fixed = {
-        "vec_id": pa.array(uniq, pa.int64()),
-        "op": pa.array([OP_DELETE] * n, pa.string()),
-        "shard_id": pa.array(np.full(n, TOMBSTONE_SHARD, np.int32)),
-    }
-    rows = pa.table(
-        {f.name: fixed.get(f.name, pa.nulls(n, f.type)) for f in to_arrow_schema(schema)}
-    )
+    rows = _tombstone_rows(np.fromiter((int(i) for i in ids), dtype=np.int64), schema)
     return _land_vector_op(spark, path, rows, op_id, schema)
 
 
@@ -431,8 +459,10 @@ def mutation_state(
 ) -> MutationState | None:
     """The search state of the ledger, or None for a pristine layout
     (or an ``as_of`` behind every op). ``contested``: the ids touched by
-    any visible op — one per delete/upsert since the last compaction,
-    SMALL by construction — also on the driver as ``contested_ids``.
+    any visible op since the last compaction — also on the driver as
+    ``contested_ids``; a search refuses a set past
+    ``oplayout.CONTESTED_SEARCH_MAX``, while compaction, which resets
+    it, reads it at any size.
     ``resolved``: the LIVE row of each contested id under latest-op-wins
     (one ``max_by`` keyed on (op id, delete-beats-insert) over the
     op-count-sized ops table, never the corpus): (vec_id, dist,
@@ -687,6 +717,11 @@ def compact_in_place(
     ``{path}`` → ``{path}.precompact``, ``{path}.compacting`` →
     ``{path}``, delete ``{path}.precompact``. Returns ops folded.
 
+    A stream checkpoint at ``{path}/checkpoint`` (``streaming/sink``:
+    which micro-batches already landed) is copied into the new tree
+    before the swap: without it a restarted stream would re-land every
+    batch it had folded, deleted ids included.
+
     CRASH RECOVERY (the swap is two renames, not atomic together): if
     ``{path}`` is missing and ``{path}.compacting`` exists, rename the
     latter into place (it is complete — the rename-out only happens
@@ -740,6 +775,8 @@ def compact_in_place(
                 n_ops = compact_vector_layout(
                     spark, base, tmp, id_col=id_col, vec_col=vec_col
                 )
+            if oplayout.path_exists(spark, f"{base}/checkpoint"):
+                oplayout.copy_dir(spark, f"{base}/checkpoint", f"{tmp}/checkpoint")
             fs, jbase = oplayout.fs_path(spark, base)
             _, jold = oplayout.fs_path(spark, old)
             _, jtmp = oplayout.fs_path(spark, tmp)

@@ -210,16 +210,17 @@ def event_analytics(spark, sf_dir):
       rollup over orders;
     - ``funnel``: event-transition funnel (lead window per user);
     - ``live_view``: the streaming vector index's latest-op-wins
-      resolution, driver-certified (VERDICT r7 #2). A deterministic
-      insert → delete → re-insert runbook is derived from event user
-      ids (u<40: all inserted in batch 0; u%3==0 deleted in batch 1;
-      u%6==0 re-inserted in batch 2, with the batch number encoded in
-      the vector), ingested through the REAL machinery —
-      ``stream_vector_index_ingest``'s exactly-once sink, one
-      availableNow run per batch so batch order is guaranteed — and
-      read back via ``live_vectors``. The oracle replays the runbook
-      in SQL with ``arg_max(op, batch)``: deleted ids must be absent,
-      revived ids must carry the batch-2 vector."""
+      resolution, checked against an independent SQL replay. A
+      deterministic insert → delete → re-insert runbook is derived
+      from event user ids (u<40: all inserted in batch 0; u%3==0
+      deleted in batch 1; u%6==0 re-inserted in batch 2, with the
+      batch number encoded in the vector), ingested through the REAL
+      machinery — ``stream_vector_index_ingest`` landing one op per
+      micro-batch, one availableNow run per batch so batch order is
+      guaranteed — and read back through ``vector_ops.live_frame`` and
+      ``ann.drop_dead_rows``. The oracle replays the runbook in SQL
+      with ``arg_max(op, batch)``: deleted ids must be absent, revived
+      ids must carry the batch-2 vector."""
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
@@ -277,6 +278,8 @@ def _live_view_variant(spark, events):
     never straddle a representation difference."""
     import tempfile
 
+    from big_ann_spark.operators.ann import drop_dead_rows
+    from big_ann_spark.operators.vector_ops import live_frame
     from big_ann_spark.streaming import vector_index as VI
 
     users = (
@@ -320,7 +323,9 @@ def _live_view_variant(spark, events):
             cents,
             op_col="op",
         )
-    return VI.live_vectors(spark, idx).select(
+    frame, dead = live_frame(spark, idx)
+    live = drop_dead_rows(frame.select("vec_id", "embedding", "_resolved"), dead, "vec_id")
+    return live.select(
         F.lit("live_view").alias("variant"),
         F.col("vec_id").cast("string").alias("k1"),
         F.lit(None).cast("string").alias("k2"),

@@ -40,7 +40,7 @@ by design; fold them in at compaction time.
 At 100 TB: per-batch dfs tables accumulate (vocabulary × batches rows);
 the live view's groupBy(term) merge is map-side combinable and stays
 cheap, and :func:`compact_bm25_stream` folds history into one base
-epoch (batch ``-1``, the vector index's convention) whenever batch
+epoch (batch ``-1``, the op ledger's ``BASE_EPOCH`` convention) whenever batch
 count warrants.
 """
 
@@ -148,11 +148,10 @@ def live_bm25_index(spark: SparkSession, path: str) -> Bm25Index | None:
     # the in-flight set comes from a directory LISTING (the sink
     # helper), not a Spark distinct() job over the data — deriving
     # "what's on disk" must never cost a partition-discovery scan
-    # (ADVICE r8; same protocol as vector_index._committed_scan)
     uncommitted = uncommitted_batch_ids(path)
     if uncommitted:
-        # NOT-IN over the tiny in-flight set, never isin(committed)
-        # whose literal list grows per batch (VERDICT r7 #6 pattern)
+        # NOT-IN over the tiny in-flight set, never isin(committed),
+        # whose literal list would grow by one id per batch
         data = data.filter(~F.col("_batch_id").isin([int(b) for b in uncommitted]))
     postings = data.filter(F.col("_kind") == "p").select(
         "doc", "term", "tf", "dl", "_tb"
@@ -178,8 +177,7 @@ def export_bm25_index(
     spark: SparkSession, src_path: str, dst_path: str, *, n_term_buckets: int = 256
 ) -> int:
     """Materialize the live streaming index into the BATCH persisted
-    layout (``operators/bm25.write_bm25_index``'s contract, VERDICT r8
-    #8) so ``bm25_topk_from_disk``, ``merge_bm25_index``,
+    layout (``operators/bm25.write_bm25_index``'s contract) so ``bm25_topk_from_disk``, ``merge_bm25_index``,
     ``delete_from_bm25_index`` and ``compact_bm25_index`` run on it
     UNMODIFIED — the stream is the ingestion front, the batch layout
     the serving/maintenance form. Postings re-bucket to the target

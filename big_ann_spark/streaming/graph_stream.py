@@ -1,37 +1,20 @@
-"""Streaming ingest into the GRAPH serving tier (VERDICT r13 #2) —
-the freshness story's last leg: the IVF tier takes streaming updates
-(``streaming/vector_index``), the graph tier took only batch CLI
-mutations; this bridge drives a vector stream into the graph layout's
-op ledger so micro-batches become committed graph ops, exactly-once.
+"""Streaming ingest into the GRAPH serving tier: drives a vector
+stream into the graph layout's op ledger so micro-batches become
+committed graph ops, exactly-once.
 
 One micro-batch = ONE graph op. The landing reuses
 ``graph_ops._land_graph_op`` verbatim (claim-first id, writer lock,
 dynamic-overwrite partitions, commit marker), so a streamed op is
 indistinguishable from a batch ``graph-upsert``/``graph-delete`` op at
 search/compaction/as-of time — equality with the same mutations landed
-batch-wise is a test, not a hope.
+batch-wise is a test, not a hope. Exactly-once across crash and replay
+is the op-ledger sink's batch-id → op-id marker protocol
+(``streaming/sink.run_op_ledger_sink``), the one the IVF stream
+(``streaming/vector_index``) lands through too.
 
-**Exactly-once across crash/replay** (the part foreachBatch does NOT
-give you — a batch can replay after any crash):
-
-- a batch-id → op-id MARKER under ``<checkpoint>/_graph_ops/<batch>``
-  records the op id the batch will land under, written atomically
-  BEFORE the landing (tmp + rename);
-- a replay that finds its marker AND the op's ledger commit skips
-  entirely; a replay that finds the marker but no commit (crash
-  mid-landing) re-lands under the SAME op id — the ledger makes that a
-  pure self-overwrite (purge-own-partition + dynamic overwrite), so no
-  duplicate op id and no duplicate rows can exist;
-- a fresh batch allocates max+1 over every id the ledger OR the
-  markers know (committed, on-disk, claimed, marker-recorded), so a
-  marker whose landing never started cannot be reused by a later
-  batch.
-
-Markers live inside the stream checkpoint (the ``streaming/sink``
-lifecycle rule): deleting the checkpoint to reprocess deletes them
-with it. Rebuilding the BASE layout (``write_knn_graph_layout``)
-purges the op ledger — delete the stream checkpoint with it, or
-replayed batches would re-land ops against the new base.
+Rebuilding the BASE layout (``write_knn_graph_layout``) purges the op
+ledger — delete the stream checkpoint with it, or replayed batches
+would re-land ops against the new base.
 
 Within one batch the ledger's tie rules apply: duplicate upsert ids
 are deduped (arbitrary row, the ``upsert_graph_vectors`` contract) and
@@ -46,34 +29,12 @@ story, bounded by ``compact_if_needed``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from big_ann_spark.operators import graph_ops as GO
-from big_ann_spark.operators import oplayout
 from big_ann_spark.operators import vector_ops as VO
-
-
-def _marker_dir(checkpoint_dir: str) -> str:
-    return f"{checkpoint_dir}/_graph_ops"
-
-
-def _recorded_op_ids(checkpoint_dir: str) -> set[int]:
-    d = _marker_dir(checkpoint_dir)
-    if not os.path.isdir(d):
-        return set()
-    out: set[int] = set()
-    for name in os.listdir(d):
-        if name.endswith(".tmp"):
-            continue
-        try:
-            with open(os.path.join(d, name)) as fh:
-                out.add(int(fh.read().strip()))
-        except ValueError:
-            continue
-    return out
+from big_ann_spark.streaming.sink import run_op_ledger_sink
 
 
 def stream_graph_ingest(
@@ -96,36 +57,8 @@ def stream_graph_ingest(
     sink must never be silently lossy. ``checkpoint_dir`` defaults to
     ``{path}/checkpoint``."""
     spark = stream_df.sparkSession
-    ckpt = checkpoint_dir or f"{path}/checkpoint"
 
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        mdir = _marker_dir(ckpt)
-        os.makedirs(mdir, exist_ok=True)
-        marker = os.path.join(mdir, str(batch_id))
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                op_id = int(fh.read().strip())
-            if op_id in oplayout.committed_ops(spark, path):
-                # fully landed before the crash — replay is a no-op
-                if _fault_point is not None:
-                    _fault_point("skip", batch_id)
-                return
-            # crash mid-landing: re-land under the SAME id (ledger
-            # self-overwrite — no duplicate op possible)
-        else:
-            seen = (
-                oplayout.committed_ops(spark, path)
-                | GO._graph_ops_on_disk(spark, path)
-                | set(oplayout.claimed_op_ids(spark, path))
-                | _recorded_op_ids(ckpt)
-            )
-            op_id = max(seen) + 1 if seen else 0
-            if _fault_point is not None:
-                _fault_point("pre-marker", batch_id)
-            tmp = marker + ".tmp"
-            with open(tmp, "w") as fh:
-                fh.write(str(op_id))
-            os.replace(tmp, marker)  # atomic: marker is whole or absent
+    def prepare(batch: DataFrame, batch_id: int) -> DataFrame:
         vt = GO._vec_type(spark, path)
         b = batch.select(
             F.col(id_col).cast("long").alias("vec_id"),
@@ -154,16 +87,13 @@ def stream_graph_ingest(
             )
             .distinct()
         )
-        if _fault_point is not None:
-            _fault_point("pre-land", batch_id)
-        GO._land_graph_op(spark, path, ins.unionByName(dels), op_id)
-        if _fault_point is not None:
-            _fault_point("post-land", batch_id)
+        return ins.unionByName(dels)
 
-    q = (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    run_op_ledger_sink(
+        stream_df,
+        path,
+        prepare,
+        lambda rows, op_id: GO._land_graph_op(spark, path, rows, op_id),
+        checkpoint_dir=checkpoint_dir or f"{path}/checkpoint",
+        _fault_point=_fault_point,
     )
-    q.awaitTermination()

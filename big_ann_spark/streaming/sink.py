@@ -1,7 +1,9 @@
-"""The exactly-once foreachBatch landing protocol, shared by every file
-sink in the engine (events landing zone, corpus ingest). ONE
-implementation of the crash-safety mechanics so a protocol fix can
-never diverge between sinks:
+"""The two exactly-once foreachBatch landing protocols of the engine,
+each implemented once so a protocol fix can never diverge between
+sinks.
+
+**Partitioned file sinks** (events landing zone, corpus ingest, BM25
+stream) — ``run_exactly_once_sink``:
 
 - **batch-scoped dynamic overwrite**: each batch's rows land under
   partitions that include ``_batch_id`` with
@@ -21,8 +23,33 @@ never diverge between sinks:
   with it — bare-id markers that outlived the checkpoint would make
   every restarted batch silently skip its write.
 
-``_fault_point`` is the crash-injection hook the restart tests use
-(called at "skip" / "pre-marker" / "post-marker").
+**Op-ledger sinks** (the IVF and graph layouts' streams) —
+``run_op_ledger_sink``: each micro-batch lands as ONE op of the
+layout's op ledger (``operators/oplayout``), so a streamed op is an
+ordinary op at search, compaction and as-of time. foreachBatch may
+replay a batch after any crash, so a batch-id → op-id MARKER under
+``<checkpoint>/_batch_ops/<batch>`` records the op id the batch lands
+under, written atomically (tmp + rename) before the landing:
+
+- a replay that finds its marker AND the op's commit skips entirely;
+  a replay that finds the marker but no commit (crash mid-landing)
+  re-lands under the SAME op id, which the ledger makes a pure
+  self-overwrite — no duplicate op and no duplicate rows;
+- a fresh batch allocates max+1 over every id the ledger or the
+  markers know (committed, on disk, claimed, marker-recorded), so a
+  marker whose landing never started is never reused by a later
+  batch;
+- the batch is prepared (collected, validated) before its marker is
+  written, so a batch that fails validation leaves nothing behind.
+
+Markers live inside the stream checkpoint, so deleting the checkpoint
+to reprocess deletes them with it; an in-place compaction carries the
+checkpoint into the compacted tree (``vector_ops.compact_in_place``).
+
+``_fault_point`` is the crash-injection hook the restart tests use:
+called at "skip" / "pre-marker" / "post-marker" by the file sinks and
+at "skip" / "pre-marker" / "pre-land" / "post-land" by the op-ledger
+sinks.
 """
 
 from __future__ import annotations
@@ -31,6 +58,8 @@ import os
 from typing import Callable
 
 from pyspark.sql import DataFrame
+
+from big_ann_spark.operators import oplayout, vector_ops
 
 
 def run_exactly_once_sink(
@@ -99,9 +128,9 @@ def uncommitted_batch_ids(path: str, partition_col: str = "_batch_id") -> list[i
     job. This set is O(in-flight batches) — tiny by the protocol
     (markers land right after each write) — so a reader can exclude it
     with one small NOT-IN predicate instead of an ``isin(committed)``
-    whose literal list grows one entry per batch forever (VERDICT r7
-    #6: thousands of ids make an unwieldy expression tree and defeat
-    partition-range pruning)."""
+    whose literal list grows one entry per batch forever (thousands of
+    ids make an unwieldy expression tree and defeat partition-range
+    pruning)."""
     data_dir = f"{path}/data"
     if not os.path.isdir(data_dir):
         return []
@@ -120,3 +149,79 @@ def uncommitted_batch_ids(path: str, partition_col: str = "_batch_id") -> list[i
 
     walk(data_dir)
     return sorted(landed - set(committed_batch_ids(path)))
+
+
+BATCH_OPS = "_batch_ops"
+
+
+def _recorded_op_ids(marker_dir: str) -> set[int]:
+    """The op ids every batch-id → op-id marker under ``marker_dir``
+    records. A marker is named by its batch id alone: a half-written
+    ``.tmp`` marker, or the ``.crc`` file a Hadoop copy of the
+    checkpoint adds, records nothing."""
+    if not os.path.isdir(marker_dir):
+        return set()
+    out: set[int] = set()
+    for name in os.listdir(marker_dir):
+        if name.isdigit():
+            with open(os.path.join(marker_dir, name)) as fh:
+                out.add(int(fh.read().strip()))
+    return out
+
+
+def run_op_ledger_sink(
+    stream_df: DataFrame,
+    path: str,
+    prepare: Callable[[DataFrame, int], object],
+    land: Callable[[object, int], object],
+    *,
+    checkpoint_dir: str,
+    _fault_point=None,
+) -> None:
+    """Drive ``stream_df`` to completion (availableNow), landing each
+    micro-batch as one op of the op ledger at ``path`` under the
+    batch-id → op-id marker protocol (module docstring).
+    ``prepare(batch_df, batch_id)`` builds the batch's op rows and may
+    fail loudly; nothing is written before it returns.
+    ``land(rows, op_id)`` lands them as op ``op_id`` and commits it."""
+    spark = stream_df.sparkSession
+    marker_dir = f"{checkpoint_dir}/{BATCH_OPS}"
+
+    def fault(point: str, batch_id: int) -> None:
+        if _fault_point is not None:
+            _fault_point(point, batch_id)
+
+    def handle(batch: DataFrame, batch_id: int) -> None:
+        marker = f"{marker_dir}/{batch_id}"
+        op_id = None
+        if os.path.exists(marker):
+            with open(marker) as fh:
+                op_id = int(fh.read().strip())
+            if op_id in oplayout.committed_ops(spark, path):
+                fault("skip", batch_id)  # landed before the crash
+                return
+        rows = prepare(batch, batch_id)
+        if op_id is None:
+            seen = (
+                oplayout.committed_ops(spark, path)
+                | vector_ops._ops_on_disk(spark, path)
+                | set(oplayout.claimed_op_ids(spark, path))
+                | _recorded_op_ids(marker_dir)
+            )
+            op_id = max(seen) + 1 if seen else 0
+            fault("pre-marker", batch_id)
+            os.makedirs(marker_dir, exist_ok=True)
+            with open(marker + ".tmp", "w") as fh:
+                fh.write(str(op_id))
+            os.replace(marker + ".tmp", marker)  # whole or absent
+        fault("pre-land", batch_id)
+        land(rows, op_id)
+        fault("post-land", batch_id)
+
+    q = (
+        stream_df.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()

@@ -33,7 +33,7 @@ CALLEES = {
     "compact_in_place": vector_ops.compact_in_place,
     "compact_if_needed": vector_ops.compact_if_needed,
     "compact_vector_layout": vector_ops.compact_vector_layout,
-    "search_index": vector_index.search_index,
+    "stream_vector_index_ingest": vector_index.stream_vector_index_ingest,
 }
 
 
@@ -87,7 +87,7 @@ def test_stale_keyword_is_reported():
         "write_sharded(a, e, p, pq_codebooks=b, pq_encode_impl='arrow')\n"
         "ks_two_sample(v, ranged=True, lazy_counts=True, n_bins=13)\n"
         "ANN.ivf_search(q, s, c, k=5, static_prune=False, dim=64)\n"
-        "VI.search_index(s, p, q, c, dim=4, state=st)\n"
+        "VI.stream_vector_index_ingest(d, p, c, dim=4, op_col='op')\n"
     )
     assert stale_keywords(src, "x.py") == [
         "x.py:1: exact_knn(metric=)",
@@ -101,5 +101,5 @@ def test_stale_keyword_is_reported():
         "x.py:8: ks_two_sample(lazy_counts=)",
         "x.py:9: ivf_search(static_prune=)",
         "x.py:9: ivf_search(dim=)",
-        "x.py:10: search_index(dim=)",
+        "x.py:10: stream_vector_index_ingest(dim=)",
     ]

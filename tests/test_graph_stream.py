@@ -232,3 +232,29 @@ def test_cli_graph_stream_ingest(spark, sf_dir, tmp_path):
     # missing column fails loudly before any stream starts
     with pytest.raises(SystemExit, match="lacks column"):
         main(["graph-stream-ingest", src, path, "--op-col", "nope"])
+
+
+def test_restart_after_delete_and_compaction_keeps_deleted_ids_deleted(
+    spark, sf_dir, tmp_path
+):
+    """Stream batch 0 (which inserts 1000 and 1001), delete both
+    batch-wise, compact in place, restart the stream over the same
+    source: the compacted tree keeps the stream checkpoint, so the
+    restart lands no op and 1000/1001 stay deleted."""
+    import os
+
+    emb, path, qs = _build_layout(spark, sf_dir, tmp_path)
+    batches, _ = _mutation_rows(spark, emb)
+    src = tempfile.mkdtemp(prefix="gs_src_")
+    _write_batches(spark, src, batches[:1])
+    GS.stream_graph_ingest(_stream(spark, src), path, op_col="op")
+    GO.delete_graph_nodes(spark, path, [1000, 1001])
+    GO.compact_graph_in_place(spark, path, k=6, dim=64, build="hash", iterations=1)
+    assert os.path.isdir(f"{path}/checkpoint")
+
+    GS.stream_graph_ingest(_stream(spark, src), path, op_col="op")
+    assert oplayout.committed_ops(spark, path) == set()
+    served = {t[1] for t in _serve(qs, path)}
+    assert not served & {1000, 1001}
+    nodes = {r["node"] for r in spark.read.parquet(f"{path}/graph.parquet").collect()}
+    assert not nodes & {1000, 1001}

@@ -1,7 +1,11 @@
 """Streaming vector-index maintenance (insert/delete runbook + search),
-the big-ann-benchmarks streaming-track shape: live-view semantics,
-equivalence with a batch-built IVF index, and crash-restart
-exactly-once at both fault windows."""
+the big-ann-benchmarks streaming-track shape: each micro-batch lands as
+one op of a ``write_sharded`` layout's op ledger, so the streamed
+layout is searched by ``ivf_search_from_disk``, compacted by
+``compact_in_place`` and read by ``live_frame`` like any other. Tested:
+live-view semantics, equality with the same mutations landed
+batch-wise and with batch IVF over the live rows, and crash-restart
+exactly-once at every fault window."""
 
 from __future__ import annotations
 
@@ -10,6 +14,9 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from big_ann_spark.operators import ann as ANN
+from big_ann_spark.operators import oplayout
+from big_ann_spark.operators import vector_ops as VO
 from big_ann_spark.streaming import vector_index as VI
 
 _SCHEMA = "vec_id long, embedding array<float>, op string"
@@ -51,6 +58,44 @@ def _centroids(spark):
     return spark.createDataFrame(rows, "shard_id int, centroid array<float>")
 
 
+def _ingest(spark, src, path, **kw):
+    VI.stream_vector_index_ingest(
+        _stream(spark, src), path, _centroids(spark), op_col="op", **kw
+    )
+
+
+def _live(spark, path, as_of=None):
+    """The layout's live rows (vec_id, shard_id, embedding)."""
+    frame, dead = VO.live_frame(spark, path, as_of=as_of)
+    return ANN.drop_dead_rows(
+        frame.select("vec_id", "shard_id", "embedding", "_resolved"), dead, "vec_id"
+    )
+
+
+def _live_ids(spark, path, as_of=None):
+    return {r.vec_id for r in _live(spark, path, as_of).collect()}
+
+
+def _live_rows(spark, path):
+    return sorted(
+        (r.vec_id, r.shard_id, tuple(r.embedding)) for r in _live(spark, path).collect()
+    )
+
+
+def _search(queries, path, k=3, nprobe=2):
+    cents = _centroids(queries.sparkSession)
+    return sorted(
+        (r.qid, r.neighbor_id, round(r.dist, 6), r.rank)
+        for r in ANN.ivf_search_from_disk(queries, path, cents, k=k, nprobe=nprobe).collect()
+    )
+
+
+def _queries(spark, ids):
+    return spark.createDataFrame(
+        [(i, _vec(i)) for i in ids], "qid long, qvec array<float>"
+    )
+
+
 def test_live_view_insert_delete_reinsert(spark):
     src = tempfile.mkdtemp(prefix="vi_src_")
     _write_batches(
@@ -63,25 +108,21 @@ def test_live_view_insert_delete_reinsert(spark):
         ],
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
-    VI.stream_vector_index_ingest(
-        _stream(spark, src), path, _centroids(spark), op_col="op"
-    )
-    live = {r.vec_id for r in VI.live_vectors(spark, path).collect()}
-    assert live == {1, 2, 3, 101, 201}  # 102 deleted, 2 revived
+    _ingest(spark, src, path)
+    assert oplayout.committed_ops(spark, path) == {0, 1, 2}  # one op per batch
+    assert _live_ids(spark, path) == {1, 2, 3, 101, 201}  # 102 deleted, 2 revived
 
     # delete-wins inside one batch: insert+delete of the same id
     _write_batches(spark, src, [_rows([301]) + _rows([301], op="delete")])
-    VI.stream_vector_index_ingest(
-        _stream(spark, src), path, _centroids(spark), op_col="op"
-    )
-    live = {r.vec_id for r in VI.live_vectors(spark, path).collect()}
-    assert 301 not in live
+    _ingest(spark, src, path)
+    assert oplayout.committed_ops(spark, path) == {0, 1, 2, 3}
+    assert 301 not in _live_ids(spark, path)
 
     # shard routing: tombstones live in shard -1 only, data rows in 0..3
-    raw = spark.read.parquet(f"{path}/data")
+    raw = spark.read.parquet(f"{path}/ops")
     by_op = {r.op: r.s for r in raw.groupBy("op").agg(F.collect_set("shard_id").alias("s")).collect()}
-    assert by_op["delete"] == [-1]
-    assert -1 not in by_op["insert"]
+    assert by_op["delete"] == [VO.TOMBSTONE_SHARD]
+    assert VO.TOMBSTONE_SHARD not in by_op["insert"]
 
 
 def test_search_matches_batch_ivf_on_live_rows(spark):
@@ -94,22 +135,12 @@ def test_search_matches_batch_ivf_on_live_rows(spark):
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
     cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
+    _ingest(spark, src, path)
 
-    queries = spark.createDataFrame(
-        [(0, _vec(1)), (1, _vec(101))], "qid long, qvec array<float>"
-    )
-    got = sorted(
-        map(
-            tuple,
-            VI.search_index(spark, path, queries, cents, k=3, nprobe=2)
-            .select("qid", "neighbor_id", F.round("dist", 6).alias("d"), "rank")
-            .collect(),
-        )
-    )
+    queries = _queries(spark, [1, 101])
+    got = _search(queries, path)
 
     # batch-equivalent: ivf_search over a table holding exactly the live rows
-    from big_ann_spark.operators.ann import ivf_search
     from big_ann_spark.operators.sharding import assign_to_centroids
 
     live_ids = set(ids) - {3, 103, 203}
@@ -119,12 +150,8 @@ def test_search_matches_batch_ivf_on_live_rows(spark):
     asg = assign_to_centroids(batch, cents).select("vec_id", "shard_id")
     sharded = batch.join(asg, "vec_id")
     want = sorted(
-        map(
-            tuple,
-            ivf_search(queries, sharded, cents, k=3, nprobe=2)
-            .select("qid", "neighbor_id", F.round("dist", 6).alias("d"), "rank")
-            .collect(),
-        )
+        (r.qid, r.neighbor_id, round(r.dist, 6), r.rank)
+        for r in ANN.ivf_search(queries, sharded, cents, k=3, nprobe=2).collect()
     )
     assert got == want
     deleted_hits = {t[1] for t in got} & {3, 103, 203}
@@ -132,12 +159,11 @@ def test_search_matches_batch_ivf_on_live_rows(spark):
 
 
 def test_search_plan_is_partition_pruned(spark, candidate_scans):
-    """Search must read ONLY probed shard partitions: a global max_by
-    over the index would scan all of it per query batch. Uncontested
-    rows come off a PartitionFilters-pruned scan (ivf_search's
-    shard_id IN filter pushes below the union and the anti-join); only
-    the contested ids (deletes/re-inserts) pay the resolution
-    aggregate."""
+    """The candidate scan reads only the probed shard directories of
+    the base: a streamed layout's ops fold into partitioned shards at
+    compaction, and a later search keeps its probed shards with a
+    PartitionFilters predicate on shard_id, while the ops streamed
+    since the compaction reach the scan as resolved winners."""
     src = tempfile.mkdtemp(prefix="vi_src_")
     ids = list(range(8)) + list(range(100, 108)) + list(range(200, 208))
     _write_batches(
@@ -146,28 +172,26 @@ def test_search_plan_is_partition_pruned(spark, candidate_scans):
         [_rows(ids[:12]), _rows(ids[12:]), _rows([3, 103], op="delete")],
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
-    cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
+    _ingest(spark, src, path)
+    VO.compact_in_place(spark, path)
+    _write_batches(spark, src, [_rows([4], op="delete") + _rows([301])])
+    _ingest(spark, src, path)
 
-    queries = spark.createDataFrame([(0, _vec(1))], "qid long, qvec array<float>")
-    VI.search_index(spark, path, queries, cents, k=3, nprobe=2)
+    got = _search(_queries(spark, [1]), path)
+    assert 4 not in {t[1] for t in got}
     scan = candidate_scans[-1]
     plan = scan._sc._jvm.PythonSQLUtils.explainString(
         scan._jdf.queryExecution(), "formatted"
     )
-    assert "PartitionFilters" in plan
-    # at least one scan is pruned on shard_id (the uncontested branch)
     pruned_sections = plan.split("PartitionFilters")[1:]
     assert any("shard_id" in s[:300] for s in pruned_sections), plan
-    # the contested exclusion is a BROADCAST anti-join (a literal
-    # NOT-IN list measurably collapses at realistic contested sizes)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
 
 
 def test_search_state_reuse_and_full_resolution_agree(spark):
-    """prepare_search state is amortizable across query batches of one
-    epoch; precomputed-state, computed-per-call, and the full
-    max_by-resolution form must all return identical results."""
+    """Every streamed id is contested until compaction; the resolved
+    winners hold exactly the live ones. The memoized state is reused
+    across query batches of one ledger state, and a repeated search
+    equals batch IVF over the fully resolved live rows."""
     src = tempfile.mkdtemp(prefix="vi_src_")
     _write_batches(
         spark,
@@ -180,81 +204,59 @@ def test_search_state_reuse_and_full_resolution_agree(spark):
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
     cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
+    _ingest(spark, src, path)
 
-    state = VI.prepare_search(spark, path)
-    contested, resolved = state
-    # delete+insert pairs contested; bare inserts excluded
-    assert {r.vec_id for r in contested.collect()} == {2, 102}
-    # resolved carries ONLY the live contested rows (102 stays deleted)
-    assert {r.vec_id for r in resolved.collect()} == {2}
-    queries = spark.createDataFrame(
-        [(0, _vec(2)), (1, _vec(102))], "qid long, qvec array<float>"
-    )
+    state = VO.mutation_state(spark, path)
+    streamed = set(range(6)) | set(range(100, 106)) | {200}
+    assert set(state.contested_ids.tolist()) == streamed
+    assert {r.vec_id for r in state.resolved.collect()} == streamed - {102}
+    assert VO.mutation_state(spark, path) is state  # memoized per ledger state
 
-    def run(**kw):
-        return sorted(
-            map(
-                tuple,
-                VI.search_index(spark, path, queries, cents, k=4, nprobe=2, **kw)
-                .select("qid", "neighbor_id", F.round("dist", 6), "rank")
-                .collect(),
-            )
-        )
-
-    per_call = run()
-    precomputed = run(state=state)
-    from big_ann_spark.operators.ann import ivf_search
-
+    queries = _queries(spark, [2, 102])
+    first = _search(queries, path, k=4)
+    again = _search(queries, path, k=4)
     full_res = sorted(
-        map(
-            tuple,
-            ivf_search(
-                queries, VI.live_vectors(spark, path), cents, k=4, nprobe=2
-            )
-            .select("qid", "neighbor_id", F.round("dist", 6), "rank")
-            .collect(),
-        )
+        (r.qid, r.neighbor_id, round(r.dist, 6), r.rank)
+        for r in ANN.ivf_search(
+            queries, _live(spark, path), cents, k=4, nprobe=2
+        ).collect()
     )
-    assert per_call == precomputed == full_res
-    hit_ids = {t[1] for t in per_call}
+    assert first == again == full_res
+    hit_ids = {t[1] for t in first}
     assert 2 in hit_ids and 102 not in hit_ids  # revived found, deleted not
 
 
 @pytest.mark.slow
-def test_live_view_many_batches_and_crashed_tail(spark):
-    """VERDICT r7 #6: the committed filter must stay O(1)-sized over
-    long uncompacted runs — 12 batches plus a crashed (landed,
-    unmarked) tail batch that the view must exclude."""
+def test_live_view_many_batches_and_crashed_tail(spark, monkeypatch):
+    """12 streamed batches read back right, and an op that landed its
+    rows but never committed (a crashed tail) stays invisible."""
     src = tempfile.mkdtemp(prefix="vi_src_")
     batches = [_rows([10 * b, 10 * b + 1]) for b in range(12)]
     batches[6] = _rows([40], op="delete") + _rows([600])
     _write_batches(spark, src, batches)
     path = tempfile.mkdtemp(prefix="vi_idx_")
-    cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
+    _ingest(spark, src, path)
 
-    from big_ann_spark.streaming.sink import uncommitted_batch_ids
-
-    assert uncommitted_batch_ids(path) == []
+    assert VO.uncommitted_vector_ops(spark, path) == []
     expect = {10 * b + i for b in range(12) for i in (0, 1)} - {60, 61, 40} | {600}
-    assert {r.vec_id for r in VI.live_vectors(spark, path).collect()} == expect
+    assert _live_ids(spark, path) == expect
 
-    # simulate a crash: batch 99 landed its data but never got a marker
-    spark.createDataFrame(
-        [(999, _vec(999), "insert", 5, 99)],
-        "vec_id long, embedding array<float>, op string, shard_id int, _batch_id int",
-    ).write.mode("append").partitionBy("shard_id", "_batch_id").parquet(f"{path}/data")
-    assert uncommitted_batch_ids(path) == [99]
-    live = {r.vec_id for r in VI.live_vectors(spark, path).collect()}
-    assert 999 not in live and live == expect
+    # simulate a crash: op 12 lands its rows but never gets a marker
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before commit")
+
+    monkeypatch.setattr(oplayout, "mark_committed", crash)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        VO.upsert_vectors(spark, path, _queries(spark, [999]).toDF("vec_id", "embedding"))
+    monkeypatch.undo()
+    assert VO.uncommitted_vector_ops(spark, path) == [12]
+    assert _live_ids(spark, path) == expect
 
 
 def test_duplicate_same_batch_insert_keeps_vector_shard_consistent(spark):
-    """Two same-batch inserts of one id with DIFFERENT vectors: whichever
-    row the live view resolves to, its shard must be the argmin of ITS
-    OWN embedding (a join-back on the non-unique id used to be able to
-    pair a vector with the other duplicate's shard — an unfindable row)."""
+    """Two same-batch inserts of one id with DIFFERENT vectors: the
+    batch keeps the id's first row, as an upsert does, and that row's
+    shard is the nearest centroid of ITS OWN vector."""
     src = tempfile.mkdtemp(prefix="vi_src_")
     v_shard0 = [10.0, 0.0, 0.0, 0.0]
     v_shard2 = [0.0, 0.0, 10.0, 0.0]
@@ -264,43 +266,61 @@ def test_duplicate_same_batch_insert_keeps_vector_shard_consistent(spark):
         [[(7, v_shard0, "insert"), (7, v_shard2, "insert"), (8, v_shard0, "insert")]],
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
-    VI.stream_vector_index_ingest(
-        _stream(spark, src), path, _centroids(spark), op_col="op"
-    )
-    raw = spark.read.parquet(f"{path}/data").filter(F.col("vec_id") == 7).collect()
-    assert len(raw) == 2
-    for r in raw:
-        expect = 0 if list(r.embedding) == v_shard0 else 2
-        assert r.shard_id == expect, (list(r.embedding), r.shard_id)
+    _ingest(spark, src, path)
+    raw = spark.read.parquet(f"{path}/ops").filter(F.col("vec_id") == 7).collect()
+    assert len(raw) == 1
+    assert (list(raw[0].embedding), raw[0].shard_id) == (v_shard0, 0)
+    assert _live_rows(spark, path) == [
+        (7, 0, tuple(v_shard0)), (8, 0, tuple(v_shard0))
+    ]
 
 
 def test_empty_index_and_unknown_op(spark):
-    # an index that never landed a batch reads as empty, not as an error
+    # a stream that never lands a batch seeds an empty layout, which
+    # reads as empty, not as an error
+    src = tempfile.mkdtemp(prefix="vi_src_")
     fresh = tempfile.mkdtemp(prefix="vi_idx_")
-    empty = VI.live_vectors(spark, fresh)
-    assert empty.count() == 0
-    assert set(empty.columns) == {"vec_id", "embedding", "shard_id"}
+    _ingest(spark, src, fresh)
+    assert _live(spark, fresh).count() == 0
+    assert _search(_queries(spark, [1]), fresh) == []
 
     # an op outside the contract fails the batch loudly (exactly-once
-    # sinks must not be silently lossy)
-    src = tempfile.mkdtemp(prefix="vi_src_")
+    # sinks must not be silently lossy), and nothing lands
     _write_batches(spark, src, [[(1, _vec(1), "Insert")]])
     with pytest.raises(Exception, match="unknown op"):
-        VI.stream_vector_index_ingest(
-            _stream(spark, src), fresh, _centroids(spark), op_col="op"
-        )
+        _ingest(spark, src, fresh)
+    assert oplayout.committed_ops(spark, fresh) == set()
+    assert oplayout.claimed_op_ids(spark, fresh) == {}
 
 
-def test_compact_fully_deleted_index_is_empty_not_broken(spark):
+def test_oversized_micro_batch_fails_before_anything_lands(spark, monkeypatch):
+    """A micro-batch is collected to the driver under DRIVER_ROWS: a
+    larger one fails loudly, commits no op and leaves no claim."""
+    src = tempfile.mkdtemp(prefix="vi_src_")
+    _write_batches(spark, src, [_rows([1, 2, 3, 4, 5, 6])])
+    path = tempfile.mkdtemp(prefix="vi_idx_")
+    monkeypatch.setattr(ANN, "DRIVER_ROWS", 5)
+    with pytest.raises(Exception, match="more than 5 rows"):
+        _ingest(spark, src, path)
+    assert oplayout.committed_ops(spark, path) == set()
+    assert oplayout.claimed_op_ids(spark, path) == {}
+    assert VO.uncommitted_vector_ops(spark, path) == []
+    assert _live(spark, path).count() == 0
+
+
+def test_compact_fully_deleted_index_is_empty_not_broken(spark, tmp_path):
+    from big_ann_spark.cli import main
+
     src = tempfile.mkdtemp(prefix="vi_src_")
     _write_batches(spark, src, [_rows([1, 2]), _rows([1, 2], op="delete")])
     path = tempfile.mkdtemp(prefix="vi_idx_")
-    VI.stream_vector_index_ingest(
-        _stream(spark, src), path, _centroids(spark), op_col="op"
-    )
-    dst = tempfile.mkdtemp(prefix="vi_cmp_") + "/idx"
-    assert VI.compact_index(spark, path, dst) == 0
-    assert VI.live_vectors(spark, dst).count() == 0
+    _ingest(spark, src, path)
+    dst = str(tmp_path / "cmp")
+    assert main(["index-compact", path, dst]) == 0
+    assert _live(spark, dst).count() == 0
+    assert VO.compact_in_place(spark, path) == 2
+    assert _live(spark, path).count() == 0
+    assert _search(_queries(spark, [1]), path) == []
 
 
 def test_compact_folds_tombstones_and_preserves_live_view(spark):
@@ -311,30 +331,45 @@ def test_compact_folds_tombstones_and_preserves_live_view(spark):
         [_rows([1, 2, 3, 101]), _rows([2], op="delete"), _rows([2]) + _rows([3], op="delete")],
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
-    cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
-    before = sorted(map(tuple, VI.live_vectors(spark, path).collect()))
+    _ingest(spark, src, path)
+    before = _live_rows(spark, path)
 
-    dst = tempfile.mkdtemp(prefix="vi_cmp_") + "/idx"
-    n = VI.compact_index(spark, path, dst)
-    after = sorted(map(tuple, VI.live_vectors(spark, dst).collect()))
-    assert after == before
-    assert n == len(before)
-    raw = spark.read.parquet(f"{dst}/data")
-    # tombstones folded away, single base epoch at _batch_id = -1
-    assert raw.filter(F.col("op") == "delete").count() == 0
-    assert {r._batch_id for r in raw.select("_batch_id").distinct().collect()} == {-1}
+    assert VO.compact_in_place(spark, path) == 3
+    assert _live_rows(spark, path) == before
+    assert VO.contested_count(spark, path) == 0
+    assert oplayout.committed_ops(spark, path) == set()
+    assert {r.vec_id for r in spark.read.parquet(f"{path}/shards").collect()} == {1, 2, 101}
 
-    # post-compaction ingest resumes at batch 0 with a fresh checkpoint
-    # and must NOT be skip-replayed as the epoch base
-    src2 = tempfile.mkdtemp(prefix="vi_src_")
-    _write_batches(spark, src2, [_rows([301]) + _rows([1], op="delete")])
-    VI.stream_vector_index_ingest(_stream(spark, src2), dst, cents, op_col="op")
-    live = {r.vec_id for r in VI.live_vectors(spark, dst).collect()}
-    assert live == ({t[0] for t in before} - {1}) | {301}
+    # ingest resumes on the compacted layout: the carried checkpoint
+    # lands only the new batch, as one op
+    _write_batches(spark, src, [_rows([301]) + _rows([1], op="delete")])
+    _ingest(spark, src, path)
+    assert len(oplayout.committed_ops(spark, path)) == 1
+    assert _live_ids(spark, path) == ({t[0] for t in before} - {1}) | {301}
+
+
+def test_restart_after_delete_and_compaction_keeps_deleted_ids_deleted(spark):
+    """Stream, delete batch-wise, compact in place, restart the stream
+    over the same source: the compacted tree keeps the stream
+    checkpoint, so the restart lands no op and the deleted ids stay
+    deleted."""
+    import os
+
+    src = tempfile.mkdtemp(prefix="vi_src_")
+    _write_batches(spark, src, [_rows([1, 2, 101])])
+    path = tempfile.mkdtemp(prefix="vi_idx_")
+    _ingest(spark, src, path)
+    VO.delete_vectors(spark, path, [1, 101])
+    VO.compact_in_place(spark, path)
+    assert os.path.isdir(f"{path}/checkpoint")
+
+    _ingest(spark, src, path)
+    assert oplayout.committed_ops(spark, path) == set()
+    assert _live_ids(spark, path) == {2}
 
 
 def test_cli_vindex_lifecycle(spark, tmp_path):
+    """vindex-ingest → search → index-compact on one layout."""
     from big_ann_spark.cli import main
 
     cents = _centroids(spark)
@@ -349,19 +384,18 @@ def test_cli_vindex_lifecycle(spark, tmp_path):
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "out")
     assert main(["vindex-ingest", src, idx, "--centroids", cpath, "--op-col", "op"]) == 0
-    assert main(
-        ["vindex-search", idx, qpath, "--centroids", cpath, "--k", "2", "--out", out]
-    ) == 0
+    assert main(["search", idx, qpath, "--k", "2", "--out", out]) == 0
     hits = {r.neighbor_id for r in spark.read.parquet(out).collect()}
     assert 1 in hits and 2 not in hits
     cmp_dir = str(tmp_path / "cmp")
-    assert main(["vindex-compact", idx, cmp_dir]) == 0
-    assert {r.vec_id for r in VI.live_vectors(spark, cmp_dir).collect()} == {1, 101}
+    assert main(["index-compact", idx, cmp_dir]) == 0
+    assert _live_ids(spark, cmp_dir) == {1, 101}
+    assert VO.contested_count(spark, cmp_dir) == 0
 
 
-def test_compact_if_needed_threshold(spark, tmp_path):
-    """Compaction fires only past the contested-ratio threshold, and a
-    fresh index / healthy index returns None untouched."""
+def test_compact_if_needed_threshold(spark):
+    """Compaction fires only past the contested-id threshold; every
+    streamed id counts as contested until then."""
     src = tempfile.mkdtemp(prefix="vi_src_")
     _write_batches(
         spark,
@@ -369,26 +403,35 @@ def test_compact_if_needed_threshold(spark, tmp_path):
         [_rows(list(range(10))), _rows([0, 1, 2], op="delete")],
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
-    cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
+    _ingest(spark, src, path)
 
-    # 3 contested of 13 committed rows (~23%): healthy at a 0.5
-    # threshold, compacts at 0.05
-    assert VI.compact_if_needed(spark, path, str(tmp_path / "a"), max_contested_ratio=0.5) is None
-    n = VI.compact_if_needed(spark, path, str(tmp_path / "b"), max_contested_ratio=0.05)
-    assert n == 7
-    compacted = str(tmp_path / "b")
-    assert {r.vec_id for r in VI.live_vectors(spark, compacted).collect()} == set(range(3, 10))
+    assert VO.compact_if_needed(spark, path, max_contested=10) == (10, None)
+    assert VO.compact_if_needed(spark, path, max_contested=5) == (10, 2)
+    assert _live_ids(spark, path) == set(range(3, 10))
     # post-compaction: contested set empty -> never re-compacts
-    assert VI.compact_if_needed(spark, compacted, str(tmp_path / "c"), max_contested_ratio=0.0) is None
-    # an index that never landed anything is healthy, not an error
-    assert VI.compact_if_needed(spark, tempfile.mkdtemp(prefix="vi_x_"), str(tmp_path / "d")) is None
+    assert VO.compact_if_needed(spark, path, max_contested=0) == (0, None)
+
+
+def test_search_refuses_contested_set_past_bound(spark, monkeypatch):
+    """A search whose contested set exceeds CONTESTED_SEARCH_MAX fails
+    loudly, naming the fix; compaction still runs past the bound, and
+    the compacted layout serves."""
+    src = tempfile.mkdtemp(prefix="vi_src_")
+    _write_batches(spark, src, [_rows([1, 2, 3, 101])])
+    path = tempfile.mkdtemp(prefix="vi_idx_")
+    _ingest(spark, src, path)
+    monkeypatch.setattr(oplayout, "CONTESTED_SEARCH_MAX", 3)
+    queries = _queries(spark, [1])
+    with pytest.raises(ValueError, match="index-compact.*--compact-above"):
+        _search(queries, path)
+    assert VO.compact_if_needed(spark, path, max_contested=3) == (4, 1)
+    assert {t[1] for t in _search(queries, path)} == {1, 2, 3}
 
 
 def test_cli_vindex_ingest_infers_vector_element_type(spark, tmp_path):
-    """ADVICE r7: the CLI hardcoded array<float>; an array<double>
-    source must ingest with its own type, and a missing column must
-    fail naming it."""
+    """An array<double> source streams with its own type and is stored
+    as array<float>, as every upsert is; a missing column fails naming
+    it."""
     from big_ann_spark.cli import main
 
     cents = _centroids(spark)
@@ -401,15 +444,15 @@ def test_cli_vindex_ingest_infers_vector_element_type(spark, tmp_path):
     ).coalesce(1).write.parquet(src)
     idx = str(tmp_path / "idx_dbl")
     assert main(["vindex-ingest", src, idx, "--centroids", cpath]) == 0
-    live = VI.live_vectors(spark, idx)
-    assert dict(live.dtypes)["embedding"] == "array<double>"
+    live = _live(spark, idx)
+    assert dict(live.dtypes)["embedding"] == "array<float>"
     assert {r.vec_id for r in live.collect()} == {1, 101}
 
     with pytest.raises(SystemExit, match="lacks column"):
         main(["vindex-ingest", src, idx, "--centroids", cpath, "--op-col", "op"])
 
 
-@pytest.mark.parametrize("crash_point", ["pre-marker", "post-marker"])
+@pytest.mark.parametrize("crash_point", ["pre-marker", "pre-land", "post-land"])
 def test_crash_restart_exactly_once(spark, crash_point):
     src = tempfile.mkdtemp(prefix="vi_src_")
     _write_batches(
@@ -418,7 +461,6 @@ def test_crash_restart_exactly_once(spark, crash_point):
         [_rows([1, 2]), _rows([2], op="delete") + _rows([10]), _rows([20])],
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
-    cents = _centroids(spark)
 
     class Boom(RuntimeError):
         pass
@@ -427,22 +469,16 @@ def test_crash_restart_exactly_once(spark, crash_point):
         if point == crash_point and batch_id == 1:
             raise Boom(point)
 
-    try:
-        VI.stream_vector_index_ingest(
-            _stream(spark, src), path, cents, op_col="op", _fault_point=fault
-        )
-    except Exception:
-        pass  # the injected crash surfaces through the stream
+    with pytest.raises(Exception):
+        _ingest(spark, src, path, _fault_point=fault)
+    _ingest(spark, src, path)
 
-    VI.stream_vector_index_ingest(
-        _stream(spark, src), path, cents, op_col="op"
-    )
-    live = {r.vec_id for r in VI.live_vectors(spark, path).collect()}
-    assert live == {1, 10, 20}
-    # no duplicate rows for any id+batch (replay overwrote, not appended)
-    raw = spark.read.parquet(f"{path}/data")
+    assert oplayout.committed_ops(spark, path) == {0, 1, 2}  # one op per batch
+    assert _live_ids(spark, path) == {1, 10, 20}
+    # no duplicate rows for any id within an op (replay overwrote)
+    raw = spark.read.parquet(f"{path}/ops")
     dupes = (
-        raw.groupBy("vec_id", "_batch_id", "op")
+        raw.groupBy("vec_id", "_mb", "op")
         .agg(F.count("*").alias("c"))
         .filter(F.col("c") > 1)
         .count()
@@ -451,10 +487,9 @@ def test_crash_restart_exactly_once(spark, crash_point):
 
 
 def test_live_view_as_of_snapshots(spark):
-    """Snapshot reads (the BM25 layout's as_of contract, mirrored):
-    as_of=N is the live view exactly as of committed batch N — each
-    point of an insert -> delete -> re-insert runbook must equal the
-    state after that batch."""
+    """as_of=N is the live view exactly as of committed op N — one op
+    per batch, so each point of an insert -> delete -> re-insert
+    runbook must equal the state after that batch."""
     src = tempfile.mkdtemp(prefix="vi_src_")
     _write_batches(
         spark,
@@ -466,9 +501,7 @@ def test_live_view_as_of_snapshots(spark):
         ],
     )
     path = tempfile.mkdtemp(prefix="vi_idx_")
-    VI.stream_vector_index_ingest(
-        _stream(spark, src), path, _centroids(spark), op_col="op"
-    )
+    _ingest(spark, src, path)
 
     want = {
         0: {1, 2, 101},
@@ -476,114 +509,42 @@ def test_live_view_as_of_snapshots(spark):
         2: {1, 2, 101, 201},
     }
     for as_of, ids in want.items():
-        got = {
-            r.vec_id
-            for r in VI.live_vectors(spark, path, as_of=as_of).collect()
-        }
-        assert got == ids, f"as_of={as_of}"
-    # head view == latest snapshot
-    head = {r.vec_id for r in VI.live_vectors(spark, path).collect()}
-    assert head == want[2]
+        assert _live_ids(spark, path, as_of) == ids, f"as_of={as_of}"
+    assert _live_ids(spark, path) == want[2]
 
 
-@pytest.mark.slow
-def test_export_to_batch_layout(spark, tmp_path):
-    """vindex-export: the streamed live view materialized into the
-    batch write_sharded layout must serve IDENTICAL results through
-    ivf_search_from_disk, take batch mutations, and optionally carry a
-    refine codec column."""
-    from big_ann_spark.operators import ann as ANN
-    from big_ann_spark.operators import vector_ops as VO
+def test_stream_equals_batch_landed_mutations(spark):
+    """The streamed ledger is indistinguishable from batch landing: an
+    insert / delete / re-insert / same-batch insert+delete runbook
+    gives the same committed op ids, the same live rows and the same
+    search results as upsert_vectors/delete_vectors."""
+    batches = [
+        _rows([1, 2, 3, 101, 102, 201]),
+        _rows([2, 102], op="delete"),
+        _rows([2, 301]),
+        _rows([401]) + _rows([401], op="delete"),
+    ]
+    src = tempfile.mkdtemp(prefix="vi_src_")
+    _write_batches(spark, src, batches)
+    spath = tempfile.mkdtemp(prefix="vi_idx_")
+    _ingest(spark, src, spath)
 
-    src = tempfile.mkdtemp(prefix="vi_exp_src_")
-    _write_batches(
-        spark,
-        src,
-        [
-            _rows([1, 2, 3, 101, 102, 201]),
-            _rows([2], op="delete") + _rows([301, 302]),
-        ],
-    )
-    path = tempfile.mkdtemp(prefix="vi_exp_idx_")
-    cents = _centroids(spark)
-    VI.stream_vector_index_ingest(_stream(spark, src), path, cents, op_col="op")
+    # the same mutations, landed batch-wise on a layout seeded the same
+    # way (an empty source seeds without landing an op)
+    bpath = tempfile.mkdtemp(prefix="vi_idx_")
+    _ingest(spark, tempfile.mkdtemp(prefix="vi_empty_"), bpath)
 
-    dst = str(tmp_path / "batch_idx")
-    n = VI.export_vector_index(spark, path, dst, cents)
-    live = VI.live_vectors(spark, path)
-    assert n == live.count()
+    def vecs(rows):
+        return spark.createDataFrame(rows, _SCHEMA).select("vec_id", "embedding")
 
-    queries = live.filter(F.col("vec_id").isin(1, 101)).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    want = sorted(
-        map(tuple, VI.search_index(spark, path, queries, cents, k=3, nprobe=2)
-            .select("qid", "neighbor_id", "rank").collect())
-    )
-    got = sorted(
-        map(tuple, ANN.ivf_search_from_disk(queries, dst, cents, k=3, nprobe=2)
-            .select("qid", "neighbor_id", "rank").collect())
-    )
-    assert got == want and len(got) == 6
+    assert VO.upsert_vectors(spark, bpath, vecs(batches[0])) == 0
+    assert VO.delete_vectors(spark, bpath, [r[0] for r in batches[1]]) == 1
+    assert VO.upsert_vectors(spark, bpath, vecs(batches[2])) == 2
+    assert VO.delete_vectors(spark, bpath, [401]) == 3
 
-    # the exported layout is a first-class batch index: mutations work
-    VO.delete_vectors(spark, dst, [1])
-    after = {
-        r["neighbor_id"]
-        for r in ANN.ivf_search_from_disk(queries, dst, cents, k=3, nprobe=2).collect()
-    }
-    assert 1 not in after
-
-    # refine-codec export: codes column present, search auto-usable
-    dst2 = str(tmp_path / "batch_idx_sq8")
-    VI.export_vector_index(spark, path, dst2, cents, codec="sq8")
-    cols = spark.read.parquet(f"{dst2}/shards").columns
-    assert "codes" in cols and "embedding" in cols
-    got2 = sorted(
-        map(tuple, ANN.ivf_search_from_disk(
-            queries, dst2, cents, k=3, nprobe=2, codec="sq8", rerank_factor=100
-        ).select("qid", "neighbor_id", "rank").collect())
-    )
-    assert got2 == want
-
-    # opq export: rotation sidecar lands, detector reports the tier,
-    # and the exhaustive-pool search equals the raw answers
-    dst3 = str(tmp_path / "batch_idx_opq")
-    VI.export_vector_index(spark, path, dst3, cents, codec="opq")
-    assert ANN.detect_refine_codec(spark, dst3) == "opq"
-    got3 = sorted(
-        map(tuple, ANN.ivf_search_from_disk(
-            queries, dst3, cents, k=3, nprobe=2, codec="opq",
-            rerank_factor=100,
-        ).select("qid", "neighbor_id", "rank").collect())
-    )
-    assert got3 == want
-    # the stored codes must be the ROTATED-space encoding under the
-    # stored sidecars — catches an export that lands the rotation but
-    # encodes unrotated (the exhaustive-pool equality above cannot see
-    # that: the exact rerank hides any ADC garbage at this corpus size)
-    from big_ann_spark.operators.pq import (
-        load_pq_codebooks,
-        load_rotation,
-        with_pq_codes_arrow,
-    )
-
-    R = load_rotation(spark, f"{dst3}/opq_rotation.parquet")
-    books3 = load_pq_codebooks(spark, f"{dst3}/pq_codebooks.parquet")
-    expect_codes = {
-        r["vec_id"]: list(r["pq_codes"])
-        for r in with_pq_codes_arrow(
-            VI.live_vectors(spark, path).select(
-                "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
-            ),
-            books3,
-            rotation=R,
-        ).collect()
-    }
-    got_codes = {
-        r["vec_id"]: list(r["pq_codes"])
-        for r in spark.read.parquet(f"{dst3}/shards")
-        .select("vec_id", "pq_codes")
-        .collect()
-    }
-    assert got_codes == expect_codes
+    assert oplayout.committed_ops(spark, spath) == {0, 1, 2, 3}
+    assert oplayout.committed_ops(spark, bpath) == {0, 1, 2, 3}
+    assert _live_rows(spark, spath) == _live_rows(spark, bpath)
+    assert _live_ids(spark, spath) == {1, 2, 3, 101, 201, 301}
+    queries = _queries(spark, [1, 101, 201, 401])
+    assert _search(queries, spath, k=4) == _search(queries, bpath, k=4)
