@@ -402,9 +402,12 @@ def _build_parser() -> argparse.ArgumentParser:
     vi = sub.add_parser(
         "vindex-ingest",
         help="stream a vector directory (insert/delete runbook) into a "
-        "build-index layout's op ledger — each micro-batch lands as one "
-        "committed op, exactly-once across restarts; serve it with "
-        "search, fold it with index-compact or --compact-above",
+        "build-index layout's op ledger — each source file is one "
+        "micro-batch, collected to the driver and landed as one committed "
+        "op, exactly-once across restarts; the layout is compacted in "
+        "place after the stream once its contested ids pass the size at "
+        "which searches warn; serve it with search, fold it with "
+        "index-compact or --compact-above",
     )
     vi.add_argument("src", help="directory of parquet files: (id, vector[, op])")
     vi.add_argument(
@@ -1331,8 +1334,9 @@ def main(argv: list[str] | None = None) -> int:
 
         from pyspark.sql.types import StructType
 
+        from big_ann_spark.operators import oplayout as OL
+        from big_ann_spark.operators import vector_ops as VO
         from big_ann_spark.operators.ann import drop_dead_rows
-        from big_ann_spark.operators.vector_ops import live_frame
         from big_ann_spark.streaming import vector_index as VI
 
         cpath = args.centroids
@@ -1350,8 +1354,13 @@ def main(argv: list[str] | None = None) -> int:
                 f"vindex-ingest: {args.src} lacks column(s) {missing} "
                 f"(found: {src_schema.names})"
             )
+        # one source file per micro-batch: a micro-batch is collected to
+        # the driver (at most ann.DRIVER_ROWS rows), so the whole
+        # directory as one batch would cap the source at that size; a
+        # runbook file is one step, landed as one op in file order
         stream = (
             spark.readStream.schema(StructType([src_schema[c] for c in want]))
+            .option("maxFilesPerTrigger", 1)
             .format("parquet")
             .load(args.src)
         )
@@ -1359,7 +1368,15 @@ def main(argv: list[str] | None = None) -> int:
             stream, args.dst, cents,
             id_col=args.id_col, vec_col=args.vec_col, op_col=args.op_col,
         )
-        frame, dead = live_frame(spark, args.dst)
+        # every streamed id stays contested until a compaction, and each
+        # search pays for the contested set: fold the layout once it
+        # passes the size at which searches start to warn
+        n, n_ops = VO.compact_if_needed(
+            spark, args.dst, max_contested=OL.CONTESTED_WARN_ABOVE
+        )
+        if n_ops is not None:
+            print(f"auto-compact: {n} contested ids; folded {n_ops} ops in place")
+        frame, dead = VO.live_frame(spark, args.dst)
         n = drop_dead_rows(frame.select("vec_id", "_resolved"), dead, "vec_id").count()
         print(f"index at {args.dst}: {n} live vectors")
         return 0

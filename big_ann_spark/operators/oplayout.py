@@ -51,6 +51,14 @@ reclaimable without a delete+recreate race; commit deletes the id's
 claims. The claim is an allocation arbiter, not a lease — liveness
 stays the lock's (and the orchestrator's) job.
 
+**Reserved ids** (``reserve_op_id``): a stream batch records its op id
+in the stream checkpoint before it lands (``streaming/sink``), so that
+id must stay its own across a crash: ``_ops/_reserve.<id>.<owner>``
+keeps it from every other writer (``claim_op_id`` neither reclaims
+nor allocates a reserved id) until its commit drops the reservation.
+An in-place compaction carries reservations into the compacted tree
+with the stream checkpoint.
+
 **Compaction policy**: mutation state costs every search one shipped
 id per contested id — measured linear in mutation volume (+6.5 s at
 1.58M ids, SCALE.md) and reset by compaction. Readers warn past
@@ -159,9 +167,12 @@ def mark_committed(spark, path: str, op_id: int) -> None:
     fs, jp = fs_path(spark, f"{path}/_ops/{op_id}")
     fs.mkdirs(jp.getParent())
     fs.create(jp, True).close()
-    # the commit marker supersedes the id's claim markers — drop them
-    # so the claim listing stays O(in-flight ops), never O(history)
-    gfs, gp = fs_path(spark, f"{path}/_ops/{ALLOC_PREFIX}{int(op_id)}.*")
+    # the commit marker supersedes the id's claim and reservation
+    # markers — drop them so those listings stay O(in-flight ops),
+    # never O(history)
+    gfs, gp = fs_path(
+        spark, f"{path}/_ops/{{{ALLOC_PREFIX},{RESERVE_PREFIX}}}{int(op_id)}.*"
+    )
     for st in gfs.globStatus(gp) or []:
         gfs.delete(st.getPath(), False)
 
@@ -417,6 +428,23 @@ def refuse_contested_above_bound(n: int, path: str) -> None:
 
 
 ALLOC_PREFIX = "_alloc."
+RESERVE_PREFIX = "_reserve."
+
+
+def _ops_markers(spark, path: str, prefix: str) -> list[tuple[int, str]]:
+    """(op id, rest of the name) of every ``{path}/_ops/<prefix><id>.<rest>``
+    marker — one directory listing."""
+    fs, jp = fs_path(spark, f"{path}/_ops")
+    if not fs.exists(jp):
+        return []
+    out = []
+    for st in fs.listStatus(jp):
+        name = st.getPath().getName()
+        if name.startswith(prefix):
+            op_s, _, rest = name[len(prefix):].partition(".")
+            if op_s.isdigit():
+                out.append((int(op_s), rest))
+    return out
 
 
 def claimed_op_ids(spark, path: str) -> dict[int, int]:
@@ -424,21 +452,56 @@ def claimed_op_ids(spark, path: str) -> dict[int, int]:
     ``{path}/_ops/_alloc.<id>.<gen>`` markers — ids some writer claimed
     but has not (yet) committed. One directory listing; commit deletes
     a claim, so this stays O(in-flight + crashed), never O(history)."""
-    fs, jp = fs_path(spark, f"{path}/_ops")
     out: dict[int, int] = {}
-    if not fs.exists(jp):
-        return out
-    for st in fs.listStatus(jp):
-        name = st.getPath().getName()
-        if not name.startswith(ALLOC_PREFIX):
-            continue
-        try:
-            op_s, gen_s = name[len(ALLOC_PREFIX):].split(".", 1)
-            op, gen = int(op_s), int(gen_s)
-        except ValueError:
-            continue
-        out[op] = max(gen, out.get(op, -1))
+    for op, gen_s in _ops_markers(spark, path, ALLOC_PREFIX):
+        if gen_s.isdigit():
+            out[op] = max(int(gen_s), out.get(op, -1))
     return out
+
+
+def reserved_op_ids(spark, path: str) -> set[int]:
+    """Ids under a ``{path}/_ops/_reserve.<id>.<owner>`` marker: recorded
+    by a stream batch (``reserve_op_id``) and not committed yet."""
+    return {op for op, _ in _ops_markers(spark, path, RESERVE_PREFIX)}
+
+
+def reserve_op_id(spark, path: str, owner: str) -> int:
+    """Allocate an op id that stays ``owner``'s until it commits, for a
+    writer that records the id before it lands (a stream batch, see
+    ``streaming/sink``): max+1 over every committed, claimed and
+    reserved id, kept by atomically creating
+    ``_ops/_reserve.<id>.<owner>`` under the writer lock. No other
+    writer's ``claim_op_id`` reclaims or allocates it, so a batch
+    writer that runs while the owner is down never commits under it.
+    Landing the id claims and purges it like any explicit op id;
+    ``mark_committed`` drops the reservation. ``owner``: a token that
+    is unique per recording (no dots)."""
+    with writer_lock(spark, path, owner="reserve_op_id"):
+        seen = (
+            committed_ops(spark, path)
+            | set(claimed_op_ids(spark, path))
+            | reserved_op_ids(spark, path)
+        )
+        op = max(seen) + 1 if seen else 0
+        fs, jp = fs_path(spark, f"{path}/_ops/{RESERVE_PREFIX}{op}.{owner}")
+        fs.create(jp, False).close()
+    return op
+
+
+def holds_reservation(spark, path: str, op_id: int, owner: str) -> bool:
+    """True while ``owner``'s reservation of ``op_id`` stands: the id
+    has not committed since ``reserve_op_id``."""
+    return path_exists(spark, f"{path}/_ops/{RESERVE_PREFIX}{int(op_id)}.{owner}")
+
+
+def carry_reservations(spark, src: str, dst: str) -> None:
+    """Recreate every reservation marker of the layout ``src`` under
+    ``dst`` (an in-place compaction's new tree), so a reserved id stays
+    reserved across the swap."""
+    fs, jp = fs_path(spark, f"{src}/_ops/{RESERVE_PREFIX}*")
+    for st in fs.globStatus(jp) or []:
+        dfs, djp = fs_path(spark, f"{dst}/_ops/{st.getPath().getName()}")
+        dfs.create(djp, True).close()
 
 
 def claim_op_id(
@@ -452,7 +515,8 @@ def claim_op_id(
     """CREATE-MARKER-FIRST op-id allocation: decide the id (lowest
     crashed — reclaim, safe because the new op purges the crashed
     attempt's partitions before writing — else max+1, with
-    CLAIMED-but-byteless crashed ids also reclaimable), then
+    CLAIMED-but-byteless crashed ids also reclaimable; a reserved id,
+    ``reserve_op_id``, is neither), then
     atomically create ``_ops/_alloc.<id>.<gen>`` BEFORE anything is
     purged or written. Two mutators that race to the same (id, gen)
     decision serialize on that one atomic create: the loser raises
@@ -471,11 +535,12 @@ def claim_op_id(
     loudly. Returns the claimed id."""
     claims = claimed_op_ids(spark, path)
     if op_id is None:
-        crashed = sorted((set(on_disk) | set(claims)) - set(committed))
+        reserved = reserved_op_ids(spark, path)
+        crashed = sorted((set(on_disk) | set(claims)) - set(committed) - reserved)
         if crashed:
             op = crashed[0]
         else:
-            seen = set(on_disk) | set(committed) | set(claims)
+            seen = set(on_disk) | set(committed) | set(claims) | reserved
             op = max(seen) + 1 if seen else 0
     else:
         op = int(op_id)

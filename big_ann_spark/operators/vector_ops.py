@@ -720,7 +720,10 @@ def compact_in_place(
     A stream checkpoint at ``{path}/checkpoint`` (``streaming/sink``:
     which micro-batches already landed) is copied into the new tree
     before the swap: without it a restarted stream would re-land every
-    batch it had folded, deleted ids included.
+    batch it had folded, deleted ids included. So are the op-id
+    reservations of batches that have not landed yet
+    (``oplayout.reserve_op_id``), which the folded ledger's next ids
+    must not take.
 
     CRASH RECOVERY (the swap is two renames, not atomic together): if
     ``{path}`` is missing and ``{path}.compacting`` exists, rename the
@@ -777,6 +780,7 @@ def compact_in_place(
                 )
             if oplayout.path_exists(spark, f"{base}/checkpoint"):
                 oplayout.copy_dir(spark, f"{base}/checkpoint", f"{tmp}/checkpoint")
+            oplayout.carry_reservations(spark, base, tmp)
             fs, jbase = oplayout.fs_path(spark, base)
             _, jold = oplayout.fs_path(spark, old)
             _, jtmp = oplayout.fs_path(spark, tmp)

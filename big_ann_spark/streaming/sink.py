@@ -27,24 +27,30 @@ stream) — ``run_exactly_once_sink``:
 ``run_op_ledger_sink``: each micro-batch lands as ONE op of the
 layout's op ledger (``operators/oplayout``), so a streamed op is an
 ordinary op at search, compaction and as-of time. foreachBatch may
-replay a batch after any crash, so a batch-id → op-id MARKER under
-``<checkpoint>/_batch_ops/<batch>`` records the op id the batch lands
-under, written atomically (tmp + rename) before the landing:
+replay a batch after any crash, so before landing, the batch RESERVES
+an op id in the ledger (``oplayout.reserve_op_id``: no other writer
+allocates or reclaims a reserved id) and records it in a batch-id →
+op-id MARKER, ``<checkpoint>/_batch_ops/<batch>`` (the op id and the
+reservation's owner token, written atomically: tmp + rename):
 
-- a replay that finds its marker AND the op's commit skips entirely;
-  a replay that finds the marker but no commit (crash mid-landing)
-  re-lands under the SAME op id, which the ledger makes a pure
-  self-overwrite — no duplicate op and no duplicate rows;
-- a fresh batch allocates max+1 over every id the ledger or the
-  markers know (committed, on disk, claimed, marker-recorded), so a
-  marker whose landing never started is never reused by a later
-  batch;
-- the batch is prepared (collected, validated) before its marker is
-  written, so a batch that fails validation leaves nothing behind.
+- a replay whose marker's reservation still stands (crash before or
+  inside the landing) re-lands under the SAME op id, which the ledger
+  makes a pure self-overwrite — no duplicate op and no duplicate
+  rows; a batch upsert or delete that ran while the stream was down
+  took a later id, so the batch is not lost (it orders before that
+  op, by the id it reserved first);
+- a replay whose reservation is gone skips: the op committed (the
+  commit drops the reservation), whether it is still in the ledger
+  or an in-place compaction has folded it since — a folded batch is
+  never applied twice;
+- the batch is prepared (collected, validated) before its id is
+  reserved, so a batch that fails validation leaves nothing behind.
 
 Markers live inside the stream checkpoint, so deleting the checkpoint
-to reprocess deletes them with it; an in-place compaction carries the
-checkpoint into the compacted tree (``vector_ops.compact_in_place``).
+to reprocess deletes them with it (a reservation whose batch never
+landed is then left as an unused id); an in-place compaction carries
+the checkpoint and the reservations into the compacted tree
+(``vector_ops.compact_in_place``).
 
 ``_fault_point`` is the crash-injection hook the restart tests use:
 called at "skip" / "pre-marker" / "post-marker" by the file sinks and
@@ -55,11 +61,12 @@ sinks.
 from __future__ import annotations
 
 import os
+import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from big_ann_spark.operators import oplayout, vector_ops
+from big_ann_spark.operators import oplayout
 
 
 def run_exactly_once_sink(
@@ -154,21 +161,6 @@ def uncommitted_batch_ids(path: str, partition_col: str = "_batch_id") -> list[i
 BATCH_OPS = "_batch_ops"
 
 
-def _recorded_op_ids(marker_dir: str) -> set[int]:
-    """The op ids every batch-id → op-id marker under ``marker_dir``
-    records. A marker is named by its batch id alone: a half-written
-    ``.tmp`` marker, or the ``.crc`` file a Hadoop copy of the
-    checkpoint adds, records nothing."""
-    if not os.path.isdir(marker_dir):
-        return set()
-    out: set[int] = set()
-    for name in os.listdir(marker_dir):
-        if name.isdigit():
-            with open(os.path.join(marker_dir, name)) as fh:
-                out.add(int(fh.read().strip()))
-    return out
-
-
 def run_op_ledger_sink(
     stream_df: DataFrame,
     path: str,
@@ -180,7 +172,7 @@ def run_op_ledger_sink(
 ) -> None:
     """Drive ``stream_df`` to completion (availableNow), landing each
     micro-batch as one op of the op ledger at ``path`` under the
-    batch-id → op-id marker protocol (module docstring).
+    reserve-then-record protocol (module docstring).
     ``prepare(batch_df, batch_id)`` builds the batch's op rows and may
     fail loudly; nothing is written before it returns.
     ``land(rows, op_id)`` lands them as op ``op_id`` and commits it."""
@@ -196,23 +188,19 @@ def run_op_ledger_sink(
         op_id = None
         if os.path.exists(marker):
             with open(marker) as fh:
-                op_id = int(fh.read().strip())
-            if op_id in oplayout.committed_ops(spark, path):
+                op_s, owner = fh.read().split()
+            op_id = int(op_s)
+            if not oplayout.holds_reservation(spark, path, op_id, owner):
                 fault("skip", batch_id)  # landed before the crash
                 return
         rows = prepare(batch, batch_id)
         if op_id is None:
-            seen = (
-                oplayout.committed_ops(spark, path)
-                | vector_ops._ops_on_disk(spark, path)
-                | set(oplayout.claimed_op_ids(spark, path))
-                | _recorded_op_ids(marker_dir)
-            )
-            op_id = max(seen) + 1 if seen else 0
             fault("pre-marker", batch_id)
+            owner = uuid.uuid4().hex
+            op_id = oplayout.reserve_op_id(spark, path, owner)
             os.makedirs(marker_dir, exist_ok=True)
             with open(marker + ".tmp", "w") as fh:
-                fh.write(str(op_id))
+                fh.write(f"{op_id} {owner}")
             os.replace(marker + ".tmp", marker)  # whole or absent
         fault("pre-land", batch_id)
         land(rows, op_id)

@@ -30,7 +30,13 @@ next compaction.
 
 The batch is collected to the driver, at most ``ann.DRIVER_ROWS``
 rows: a larger micro-batch fails loudly before anything lands — cap it
-at the source (e.g. ``maxFilesPerTrigger``)."""
+at the source (``maxFilesPerTrigger``; the CLI ``vindex-ingest`` reads
+one file per micro-batch).
+
+A path holding an index of the former stream layout (``data/``
+partitioned by ``_batch_id``, its own checkpoint) is refused: its
+checkpoint would skip every source file it had read, so the new layout
+would read empty. Re-ingest its source into a new path."""
 
 from __future__ import annotations
 
@@ -86,15 +92,30 @@ def stream_vector_index_ingest(
     import pyarrow.compute as pc
 
     from big_ann_spark.functions.arrowio import int_col
-    from big_ann_spark.operators.ann import collect_to_driver
+    from big_ann_spark.operators import ann as ANN
 
     spark = stream_df.sparkSession
     if not oplayout.path_exists(spark, f"{path}/centroids.parquet"):
+        if oplayout.path_exists(spark, f"{path}/data"):
+            raise ValueError(
+                f"{path} holds a streaming index of the former data/_batch_id= "
+                "layout, which the op ledger does not read (its checkpoint "
+                "would skip every source file it had read): re-ingest the "
+                "source into a new path"
+            )
         _seed_layout(spark, path, centroids)
     cols = [id_col, vec_col] + ([op_col] if op_col is not None else [])
 
     def prepare(batch: DataFrame, batch_id: int):
-        b = collect_to_driver(batch.select(*cols), f"micro-batch {batch_id}")
+        b = batch.select(*cols).limit(ANN.DRIVER_ROWS + 1).toArrow()
+        if b.num_rows > ANN.DRIVER_ROWS:
+            raise ValueError(
+                f"micro-batch {batch_id} has more than {ANN.DRIVER_ROWS:,} "
+                "rows, and it is collected to the driver: cap the rows per "
+                "micro-batch at the stream source (maxFilesPerTrigger; "
+                "vindex-ingest reads one file per micro-batch, so split "
+                "larger files)"
+            )
         schema = VO.op_schema(spark, path)
         if op_col is None:
             ins, dels = b, b.slice(0, 0)

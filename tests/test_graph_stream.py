@@ -1,6 +1,6 @@
-"""Streaming graph ingest (VERDICT r13 #2): micro-batches land as
-committed graph ops, byte-equal to the same mutations landed batch-wise,
-exactly-once across crash/replay at every fault window."""
+"""Streaming graph ingest: micro-batches land as committed graph ops,
+byte-equal to the same mutations landed batch-wise, exactly-once across
+crash/replay at every fault window."""
 
 from __future__ import annotations
 
@@ -177,8 +177,7 @@ def test_same_batch_insert_delete_resolves_deleted(spark, sf_dir, tmp_path):
 def test_crash_restart_exactly_once(spark, sf_dir, tmp_path, crash_point):
     """Kill the stream at every fault window of batch 1, restart, and
     the ledger holds exactly one op per batch — no duplicate op ids,
-    no duplicate rows, live view exactly right (VERDICT r13 #2's done
-    criterion)."""
+    no duplicate rows, live view exactly right."""
     emb, path, qs = _build_layout(spark, sf_dir, tmp_path)
     batches, live = _mutation_rows(spark, emb)
     src = tempfile.mkdtemp(prefix="gs_src_")
@@ -210,6 +209,33 @@ def test_crash_restart_exactly_once(spark, sf_dir, tmp_path, crash_point):
         == 0
     )
     assert _serve(qs, path) == _exact(qs, live)
+
+
+def test_graph_delete_while_stream_is_down_keeps_its_op_id(
+    spark, sf_dir, tmp_path
+):
+    """Batch 1 (deletes 3 and 11) crashes after recording its op id; a
+    batch graph delete runs before the restart. The delete takes a
+    later id, so the restart still lands batch 1 and every deleted id
+    stays deleted."""
+    emb, path, qs = _build_layout(spark, sf_dir, tmp_path)
+    batches, live = _mutation_rows(spark, emb)
+    src = tempfile.mkdtemp(prefix="gs_src_")
+    _write_batches(spark, src, batches)
+
+    def fault(point, batch_id):
+        if point == "pre-land" and batch_id == 1:
+            raise RuntimeError(point)
+
+    with pytest.raises(Exception):
+        GS.stream_graph_ingest(
+            _stream(spark, src), path, op_col="op", _fault_point=fault
+        )
+    assert GO.delete_graph_nodes(spark, path, [1000]) == 2
+    GS.stream_graph_ingest(_stream(spark, src), path, op_col="op")
+
+    assert oplayout.committed_ops(spark, path) == {0, 1, 2}
+    assert _serve(qs, path) == _exact(qs, live.filter(F.col("vec_id") != 1000))
 
 
 def test_cli_graph_stream_ingest(spark, sf_dir, tmp_path):

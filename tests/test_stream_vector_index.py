@@ -393,6 +393,32 @@ def test_cli_vindex_lifecycle(spark, tmp_path):
     assert VO.contested_count(spark, cmp_dir) == 0
 
 
+def test_cli_vindex_ingest_reads_one_file_per_micro_batch(
+    spark, tmp_path, monkeypatch
+):
+    """vindex-ingest lands each source file as one op, so a source over
+    DRIVER_ROWS rows in all ingests; past CONTESTED_WARN_ABOVE it
+    compacts the layout in place after the stream."""
+    from big_ann_spark.cli import main
+
+    cpath = str(tmp_path / "cents.parquet")
+    _centroids(spark).write.parquet(cpath)
+    src = str(tmp_path / "src")
+    _write_batches(spark, src, [_rows([1, 2]), _rows([3, 101]), _rows([2], op="delete")])
+    monkeypatch.setattr(ANN, "DRIVER_ROWS", 2)
+    idx = str(tmp_path / "idx")
+    assert main(["vindex-ingest", src, idx, "--centroids", cpath, "--op-col", "op"]) == 0
+    assert oplayout.committed_ops(spark, idx) == {0, 1, 2}
+    assert _live_ids(spark, idx) == {1, 3, 101}
+
+    monkeypatch.setattr(oplayout, "CONTESTED_WARN_ABOVE", 4)
+    _write_batches(spark, src, [_rows([201])])
+    assert main(["vindex-ingest", src, idx, "--centroids", cpath, "--op-col", "op"]) == 0
+    assert oplayout.committed_ops(spark, idx) == set()
+    assert VO.contested_count(spark, idx) == 0
+    assert _live_ids(spark, idx) == {1, 3, 101, 201}
+
+
 def test_compact_if_needed_threshold(spark):
     """Compaction fires only past the contested-id threshold; every
     streamed id counts as contested until then."""
@@ -484,6 +510,68 @@ def test_crash_restart_exactly_once(spark, crash_point):
         .count()
     )
     assert dupes == 0
+
+
+@pytest.mark.parametrize(
+    "window, compact",
+    [("pre-land", False), ("mid-land", False), ("mid-land", True), ("post-land", True)],
+)
+def test_batch_delete_while_stream_is_down_keeps_its_own_op_id(
+    spark, monkeypatch, window, compact
+):
+    """Batch 1 crashes at ``window`` (mid-land: its rows written, no
+    commit); a batch delete then runs, after an in-place compaction
+    when ``compact``. The delete must not take the op id batch 1
+    recorded: the restart lands batch 1 exactly once if it had not
+    landed, and never again if it had."""
+    src = tempfile.mkdtemp(prefix="vi_src_")
+    _write_batches(spark, src, [_rows([1, 2]), _rows([10, 11])])
+    path = tempfile.mkdtemp(prefix="vi_idx_")
+
+    class Boom(RuntimeError):
+        pass
+
+    def fault(point, batch_id):
+        if point == window and batch_id == 1:
+            raise Boom(point)
+
+    if window == "mid-land":
+        commit = oplayout.mark_committed
+
+        def crash_on_op_1(spark_, path_, op_id):
+            if op_id == 1:
+                raise Boom(window)
+            commit(spark_, path_, op_id)
+
+        monkeypatch.setattr(oplayout, "mark_committed", crash_on_op_1)
+    with pytest.raises(Exception):
+        _ingest(spark, src, path, _fault_point=fault)
+    monkeypatch.undo()
+    if window == "mid-land":
+        assert VO.uncommitted_vector_ops(spark, path) == [1]
+    if compact:
+        VO.compact_in_place(spark, path)
+    landed = window == "post-land"
+    VO.delete_vectors(spark, path, [1, 11] if landed else [1])
+
+    _ingest(spark, src, path)
+    assert _live_ids(spark, path) == ({2, 10} if landed else {2, 10, 11})
+    assert oplayout.reserved_op_ids(spark, path) == set()
+    assert VO.uncommitted_vector_ops(spark, path) == []
+
+
+def test_former_stream_layout_is_refused(spark):
+    """A path holding the former data/_batch_id= stream layout fails
+    loudly instead of seeding an empty layout beside it."""
+    import os
+
+    path = tempfile.mkdtemp(prefix="vi_idx_")
+    os.makedirs(f"{path}/data/_batch_id=0")
+    src = tempfile.mkdtemp(prefix="vi_src_")
+    _write_batches(spark, src, [_rows([1])])
+    with pytest.raises(ValueError, match="former data/_batch_id= layout"):
+        _ingest(spark, src, path)
+    assert not os.path.exists(f"{path}/centroids.parquet")
 
 
 def test_live_view_as_of_snapshots(spark):
