@@ -30,7 +30,7 @@ TABLES = (
 def table_file_bytes(sf_dir: str, name: str) -> int:
     """On-disk byte size of a fixture table's parquet file (0 when not
     statable, e.g. a non-posix path). Used to derive SCALE-ADAPTIVE
-    spread widths (guide §2): a repartition that exists only to spread
+    spread widths: a repartition that exists only to spread
     CPU-dense per-row work should get ~one task per fixed chunk of
     input, not a constant tuned to one host — constants over-spread
     tiny inputs (per-task overhead dominates) and under-spread big

@@ -1242,7 +1242,7 @@ def nn_descent_knn_graph(
     REPLACES the hash-bucket init (re-scored with the canonical
     distance expression — see the inline invariant — and truncated to
     build_k per src) — the
-    scale path (VERDICT r12 #1): the hash init's early rounds are
+    scale path: the hash init's early rounds are
     all-churn and their candidate volume is what killed the 2M build
     (>80 GB spill / OOM); an IVF-seeded start
     (:func:`ivf_seeded_knn_graph`) begins at high recall so the
@@ -1253,7 +1253,7 @@ def nn_descent_knn_graph(
     to its J NEAREST forward and J nearest reverse neighbors
     ((dist, dst) order), capping per-round candidate volume at
     n·(2J)² regardless of build_k — the knob that keeps a refinement
-    round's shuffle linear-in-n small at 2M+ (SCALE.md r13). The
+    round's shuffle linear-in-n small at 2M+ (SCALE.md). The
     merge still unions the FULL previous graph, so no edge is ever
     dropped from the graph state; only pair GENERATION is trimmed
     (like ``sample_rate``, but deterministic and biased to the
@@ -1262,7 +1262,7 @@ def nn_descent_knn_graph(
 
     ``local_join_schedule``: a per-round J list (e.g. ``[8, 12, 16]``)
     replacing the single ``local_join_cap`` — ``iterations`` becomes
-    ``len(schedule)``. Rationale (VERDICT r13 #4): early rounds on a
+    ``len(schedule)``. Rationale: early rounds on a
     high-recall seed only need small-J cheap passes to fix easy
     edges; on near-equidistant (clusterless) data the REMAINING
     misses need a wider candidate neighborhood, so spending J where
@@ -1328,7 +1328,7 @@ def nn_descent_knn_graph(
         .filter(F.col("u") < F.col("v"))
         .distinct()
     )
-    # Orphan backfill (ADVICE r6): a node whose init buckets are ALL
+    # Orphan backfill: a node whose init buckets are ALL
     # singletons gets no init pair, and a node absent from the seed
     # graph can never be rediscovered by later iterations — it would be
     # silently missing from the returned graph. Detect orphans from the
@@ -1641,7 +1641,7 @@ def _assign_top_probes(
 # this many cells: flat MLlib Lloyd cost is sample·k·d per iteration,
 # and the 2M-validated build (977 cells) is the last decade where one
 # flat fit is clearly fine — at 20M the build needs ~9.8k cells and at
-# 200M ~98k (n_shards grows linearly with n; VERDICT r13 #1).
+# 200M ~98k (n_shards grows linearly with n).
 TWO_LEVEL_SEEDING_ABOVE = 4096
 
 
@@ -1658,11 +1658,11 @@ def _seed_cell_centroids(
     sample-capped) vector table ``samp`` with columns
     ``(_nid, _nvec)``.
 
-    ``mode="flat"``: one MLlib KMeans with k = ``n_cells`` — exact
-    r13 behavior, fine through ~4k cells.
+    ``mode="flat"``: one MLlib KMeans with k = ``n_cells``, fine
+    through ~4k cells.
 
     ``mode="two_level"``: hierarchical seeding that removes the flat
-    fit's k-scaling ceiling (VERDICT r13 #1 — cells grow LINEARLY
+    fit's k-scaling ceiling (cells grow LINEARLY
     with n at fixed ``target_shard_rows``, so one flat Lloyd is
     sample·n_cells·d per iteration and its k×d centroid broadcast
     grows with n): first a SMALL MLlib fit to ``ceil(sqrt(n_cells))``
@@ -1679,7 +1679,7 @@ def _seed_cell_centroids(
     silently re-spread, so cell counts stay reproducible).
 
     ``mode="auto"``: flat at or under ``TWO_LEVEL_SEEDING_ABOVE``
-    cells (bit-identical to r13 builds), two-level above.
+    cells (bit-identical to a flat build), two-level above.
 
     The downstream contract is unchanged either way: the centroids
     seed a multi-probe assignment, so seeding quality shifts WHERE
@@ -1803,21 +1803,22 @@ def ivf_seeded_knn_graph(
     merge_strategy: str = "agg",
     seeding: str = "auto",
 ) -> DataFrame:
-    """kNN-graph build that SURVIVES a scale-up (VERDICT r12 #1) —
+    """kNN-graph build that SURVIVES a scale-up —
     IVF-seeded init + capped NN-Descent refinement, replacing the
     hash-bucket init whose all-churn early rounds killed the 2M build
-    (>80 GB shuffle spill, then OOM; ROUND_NOTES r12):
+    (>80 GB shuffle spill, then OOM):
 
     1. **Partition**: a cell-centroid fit on a seeded Bernoulli
        sample (cap ``kmeans_sample_cap`` — spread across partitions,
-       never a ``limit`` slice: the r12 codebook lesson) into
+       never a ``limit`` slice, which covers only the clusters the
+       first partitions hold) into
        ``ceil(n·probes / target_shard_rows)`` cells. ``seeding=``
        picks the fit: one flat MLlib KMeans, or the two-level
        hierarchical fit past ``TWO_LEVEL_SEEDING_ABOVE`` cells
        (``"auto"``, the default — see
        :func:`_seed_cell_centroids`; cells grow linearly with n, so
        the flat fit's sample·k·d Lloyd cost is the build's only
-       super-linear-in-n term, VERDICT r13 #1).
+       super-linear-in-n term).
     2. **Multi-assign**: every vector rides to its ``probes`` nearest
        cells (one broadcast-matrix Arrow pass) — the 2nd+ probe is
        what covers Voronoi-boundary neighbors, the recall hole of
@@ -1838,8 +1839,7 @@ def ivf_seeded_knn_graph(
        rounds with ``init_graph=`` the seed and ``local_join_cap=`` J
        (candidate volume n·(2J)² per round) to close the remaining
        cross-cell edges. ``refine_schedule=[J₁, J₂, …]`` replaces
-       that flat pair with per-round growing caps (VERDICT r13 #4 —
-       spend J where the graph has already partially converged; see
+       that flat pair with per-round growing caps (spend J where the graph has already partially converged; see
        :func:`nn_descent_knn_graph`'s ``local_join_schedule``).
 
     The reference's analog is its per-shard hnswlib build
@@ -1987,7 +1987,7 @@ def ivf_seeded_knn_graph(
     ).localCheckpoint()
 
     if refine_schedule is not None or refine_iterations > 0:
-        # refine_schedule (growing-J rounds, VERDICT r13 #4) replaces
+        # refine_schedule (growing-J rounds) replaces
         # the flat (refine_iterations × local_join_cap) pair when given
         return nn_descent_knn_graph(
             vectors,
@@ -2139,8 +2139,8 @@ def write_knn_graph_layout(
       independent.
     - ``graph_entries.parquet`` — the ``n_entries`` min-id nodes WITH
       vectors (entry scoring is one tiny broadcast, no graph scan;
-      default ``GRAPH_MAX_ENTRIES``, a build knob since VERDICT r12
-      #6 — size it to the largest ``n_entry`` searches will ask for).
+      default ``GRAPH_MAX_ENTRIES``, a build knob — size it to the
+      largest ``n_entry`` searches will ask for).
     - ``graph_meta.parquet`` — the bucket count and the stored entry
       count (layout constants the query side must respect; readers of
       pre-knob layouts fall back to ``GRAPH_MAX_ENTRIES``).
@@ -2156,7 +2156,7 @@ def write_knn_graph_layout(
     # an op ledger (a compaction target reused across generations, or
     # a rebuild over a mutated layout) would otherwise leave the stale
     # ops visible and silently applied to the NEW base at search time.
-    # The purge+write runs UNDER the layout's writer lock (ADVICE r13):
+    # The purge+write runs UNDER the layout's writer lock:
     # COMMITTED ops are refused unless the caller says discard_ops
     # (a direct rebuild over a live mutated layout would silently drop
     # committed mutations — fold them with graph_ops.compact_graph_

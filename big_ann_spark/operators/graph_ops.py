@@ -1,4 +1,4 @@
-"""Graph-tier freshness (VERDICT r12 #2) — exactly-once mutations on
+"""Graph-tier freshness — exactly-once mutations on
 the persisted kNN-graph layout, the FreshDiskANN serving pattern on
 the repo's op-ledger protocol.
 

@@ -195,7 +195,7 @@ def _merge_islands(
       offsets. No global WindowExec; cost is two passes over the data
       plus two O(n_bins) driver collects.
     - default: the single-window form (bounded inputs only — the
-      sort collapses to one task; VERDICT r1 flagged this for scale).
+      sort collapses to one task, so it does not scale).
 
     Results are identical across strategies (equivalence-tested)."""
     aggs = [F.min("begin").alias("begin"), F.max("end").alias("end")]
@@ -388,7 +388,7 @@ def split_overlaps(
             bb.join(F.broadcast(carry), "_bin", "left")
             .select(
                 F.col("b").alias("s_begin"),
-                # _next_min carries b's own type (ADVICE r2) — no double
+                # _next_min carries b's own type — no double
                 # round-trip that could shift segment edges above 2^53
                 F.coalesce(F.lead("b").over(w_loc), F.col("_next_min")).alias("s_end"),
             )

@@ -261,8 +261,8 @@ def build_tag_postings(
     """The inverted tag index ``(neighbor_id, _tag)`` that
     ``filtered_knn``'s tag mode probes — exposed so repeated query
     batches against one base stop paying a full base scan per call
-    (VERDICT r7 #5: at 100 TB the tag index is a precomputable artifact
-    like the IVF shard layout). Persist it (parquet, ideally
+    (at 100 TB the tag index is a precomputable artifact like the IVF
+    shard layout). Persist it (parquet, ideally
     partitioned by a tag hash bucket) and pass it back via
     ``filtered_knn(postings=...)``; rebuild on base changes — index
     freshness is the caller's contract, exactly as for the IVF layout.
@@ -356,8 +356,8 @@ def filtered_knn(
             postings = build_tag_postings(b, base_id="neighbor_id", tags_col="_btags")
         else:
             postings = postings.select("neighbor_id", "_tag")
-        # df only for the tags the query batch actually carries (r14,
-        # guide §2.3/§3.1): the full-vocabulary groupBy aggregated the
+        # df only for the tags the query batch actually carries: the
+        # full-vocabulary groupBy aggregated the
         # ENTIRE posting index to rank each query's 1-2 tags — pruning
         # the aggregate with a broadcast semi-join on the batch's
         # distinct tags makes its input the probed posting lists only,

@@ -407,7 +407,7 @@ def train_opq(
     in HASH order (``orderBy(xxhash64(id))``) — an id-prefix sample
     (``orderBy(id)``) covers whatever clusters the low ids happen to
     hold, and a biased sample was MEASURED to invert the OPQ-vs-PQ
-    recall ordering at 200k (SCALE.md r12 caveat). Codebooks and R are
+    recall ordering at 200k (SCALE.md, training-sample caveat). Codebooks and R are
     model parameters of size m·k·(d/m) + d² floats, and sample-training
     them is the standard practice at any data scale; only the
     *application* of the model (rotate + encode + ADC) touches the
@@ -421,7 +421,7 @@ def train_opq(
     (same trainer, R = I) distortion by construction — that invariant
     is what tests assert, and it is iteration-count-independent:
     ``warm_iter`` (the Lloyd steps per OUTER round) keeps each warm
-    round monotone at any depth. MEASURED (SCALE.md r13): warm_iter=2
+    round monotone at any depth. MEASURED (SCALE.md): warm_iter=2
     trains in 27 s but INVERTED the serving-recall ordering at 200k
     (OPQ 0.305 < PQ 0.315 — sample distortion matched, recall did
     not), so the default stays at the full 8: same training dynamics
@@ -430,7 +430,7 @@ def train_opq(
 
     ``init_books``: where the R = I baseline fit starts. The DEFAULT
     ``"mllib"`` trains :func:`train_pq` (MLlib kmeans‖) internally and
-    warm-starts from it — the r13 200-query A/B showed the serving
+    warm-starts from it — a 200-query A/B showed the serving
     layout inherits the init gap (random-pick-init OPQ 0.28–0.30
     recall vs MLlib PQ 0.33), and making the good init the default
     means no call site can silently regress. With a warm start, final
@@ -585,8 +585,8 @@ def opq_recall_ab(
     plain = adc_recall(emb, queries, plain_books)
 
     # warm-start from the SAME books the plain side serves: the A/B is
-    # then rotation-on vs rotation-off with one trainer (the r13
-    # confound fix), and the one MLlib fit is shared, not repeated
+    # then rotation-on vs rotation-off with one trainer (no trainer
+    # confound), and the one MLlib fit is shared, not repeated
     R, opq_books, plain_mse, opq_mse = train_opq(
         emb, m=m, k=k_codes, vec_col=vec_col, id_col=id_col, dim=dims,
         sample_size=sample_size, seed=seed, init_books=plain_books,

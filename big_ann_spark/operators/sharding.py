@@ -424,7 +424,7 @@ def _nullable(dt):
 
 def nearest_admitting_seed(remaining: DataFrame, seeds: DataFrame, d: float) -> DataFrame:
     """One KANNDI round's point→seed selection as a ZERO-exchange
-    projection (VERDICT r2 #1): the S seeds collapse to one broadcast
+    projection: the S seeds collapse to one broadcast
     array row; per point, candidates = struct(pin, dist, shard_id) per
     seed, filtered to admitting (dist ≤ d, or the seed's own row —
     pin=0 ranks a seed first into its own shard), argmin via
@@ -507,7 +507,7 @@ def kanndi_shard(
     impossible (its admission depends on scan order); invariants +
     routing recall are the contract (SURVEY §7.5).
 
-    ``seeding`` (VERDICT r13 #5): ``"id_order"`` (default, the
+    ``seeding``: ``"id_order"`` (default, the
     reference's rule — first unassigned ids) vs ``"ivf"``, which
     reuses the graph build's cell machinery for the seeding pass: one
     small MLlib KMeans (``seeds_per_round`` cells, hash-spread sample)

@@ -75,7 +75,7 @@ def get_spark(app_name: str = "big-ann-spark", *, shuffle_partitions: int | None
         # the driver's events.parquet stores ts as timestamp[ns]; Spark
         # has no nanosecond type — read as long, catalog converts to µs
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # r14: every decorated DataFrame/Column op otherwise pays ~3
+        # Every decorated DataFrame/Column op otherwise pays ~3
         # py4j round trips + a Python stack walk to capture error-
         # origin call sites (pyspark.errors.utils._with_origin);
         # measured 15-25% of pure query-construction time on the heavy
@@ -130,7 +130,7 @@ def prepare_foreign_session(spark: SparkSession) -> None:
     """
     if getattr(spark, "_big_ann_prepared", False):
         return
-    # r14: disable per-op error-origin capture in THIS python process
+    # Disable per-op error-origin capture in THIS python process
     # (see get_spark). The conf alone is not enough on a foreign
     # session: pyspark caches the gate on first decorated call, which
     # the session owner has usually made already — set both.
