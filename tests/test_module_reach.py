@@ -79,7 +79,7 @@ def _roots(modules: set[str]) -> set[str]:
 def _unreached() -> set[str]:
     modules = _module_names()
     seen: set[str] = set()
-    todo = [m for root in _roots(modules) for m in _with_parents(root)]
+    todo = ["", *_roots(modules)]  # the package __init__ runs first
     while todo:
         mod = todo.pop()
         if mod in seen:
