@@ -37,11 +37,18 @@ from typing import NamedTuple
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 from big_ann_spark.functions.vector import l2_distance
 from big_ann_spark.operators import oplayout
-from big_ann_spark.operators.knn import band_select, fold_l2, fold_l2_topk, nearest_centroids
+from big_ann_spark.operators.knn import (
+    _POOL_SCHEMA,
+    _first_k,
+    band_select,
+    fold_l2,
+    fold_l2_topk,
+    merge_partials,
+    nearest_centroids,
+)
 from big_ann_spark.operators.topk import top_k_per_group
 
 
@@ -153,17 +160,6 @@ _SCORE_BLOCK = 1 << 20
 
 # popcount of every byte value: the binary pool's Hamming kernel
 _POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
-
-# what a candidate scan emits per (query, candidate), and a merged pool:
-# types, not DDL strings, which the JVM would parse on every call
-_POOL_SCHEMA = StructType(
-    [
-        StructField("qid", LongType()),
-        StructField("neighbor_id", LongType()),
-        StructField("dist", DoubleType()),
-    ]
-)
-_RANKED_POOL_SCHEMA = StructType(_POOL_SCHEMA.fields + [StructField("rank", IntegerType())])
 
 
 class Routing(NamedTuple):
@@ -546,33 +542,6 @@ def drop_dead_rows(live: DataFrame, dead: np.ndarray, id_col: str) -> DataFrame:
     return live.drop("_resolved")
 
 
-def _first_k(q, n, d, k):
-    """The first ``k`` rows of each query id ``q`` by (dist ``d``, id
-    ``n``), the order of the ``row_number`` window this replaces:
-    (q, n, d, 1-based rank), sorted by (q, d, n)."""
-    order = np.lexsort((n, d, q))
-    q, n, d = q[order], n[order], d[order]
-    rank = np.arange(len(q)) - np.searchsorted(q, q)
-    keep = rank < k
-    return q[keep], n[keep], d[keep], rank[keep] + 1
-
-
-def _collect_partials(scan: DataFrame, n_queries: int, k_pool: int):
-    """The per-task partials of a candidate scan over ``n_queries``
-    queries, as an Arrow table read in one job. A task emits at most
-    ``k_pool`` rows per query, so a batch of at most ``DRIVER_ROWS``
-    queries bounds the collect at ``DRIVER_ROWS · k_pool`` rows per
-    task; a larger batch fails loudly before the scan runs, and nothing
-    is ever truncated."""
-    if n_queries > DRIVER_ROWS:
-        raise ValueError(
-            f"the candidate scan's query batch has more than {DRIVER_ROWS:,} "
-            f"rows, and their top-{k_pool} of every scan task is collected to "
-            "the driver: split the batch into smaller calls"
-        )
-    return scan.toArrow()
-
-
 def _arrow_nominating_pool(
     routing: Routing,
     shards: DataFrame,
@@ -593,18 +562,14 @@ def _arrow_nominating_pool(
     returns aligned (query row, neighbor id, dist) arrays. Each of the
     at most ``defaultParallelism`` tasks keeps its own top-``k_pool``
     per query; the driver collects those partials, bounded through the
-    batch size (``_collect_partials``), and merges them with one
-    ``lexsort`` by (qid, dist, id) (``_first_k``). Returns the merged pool (qid,
-    neighbor_id, dist, rank) as a local, Arrow-built frame: its
-    ``collect()`` starts no Spark job.
+    batch size, and merges them with one ``lexsort`` by (qid, dist, id)
+    (``knn.merge_partials``). Returns the merged pool (qid, neighbor_id,
+    dist, rank) as a local, Arrow-built frame: its ``collect()`` starts
+    no Spark job.
 
     With one file per shard a query's partials come only from the tasks
     that scan its probed shards, so they stay within a small multiple of
     the pool itself."""
-    import pyarrow as pa
-
-    from big_ann_spark.functions.arrowio import int_col
-
     state = make_state(routing.qids, routing.qmat)
     spark = shards.sparkSession
     bc = spark.sparkContext.broadcast(
@@ -659,17 +624,7 @@ def _arrow_nominating_pool(
         .coalesce(spark.sparkContext.defaultParallelism)
         .mapInArrow(part, schema=_POOL_SCHEMA)
     )
-    t = _collect_partials(scan, len(routing.qids), k_pool)
-    q, n, d, rank = _first_k(
-        int_col(t, "qid"),
-        int_col(t, "neighbor_id"),
-        t.column("dist").to_numpy().astype(np.float64, copy=False),
-        k_pool,
-    )
-    merged = pa.table(
-        {"qid": q, "neighbor_id": n, "dist": d, "rank": rank.astype(np.int32)}
-    )
-    return spark.createDataFrame(merged, schema=_RANKED_POOL_SCHEMA)
+    return merge_partials(scan, len(routing.qids), k_pool)
 
 
 def pq_pool(

@@ -15,12 +15,13 @@ Reference behavior:
 
 Spark-first design
 ------------------
-``exact_knn`` is one ``mapInArrow`` partial top-k: each base partition
-scores its Arrow batches against the broadcast query matrix and emits
-only its local top-k (Q×k rows per batch), then a windowed top-k merges
-the partials. The shuffle carries O(batches × Q × k) rows instead of
-O(N × Q) — this is the 100 TB path, and it fixes the reference's
-O(Q×S) pure-Python loop.
+``exact_knn`` is one ``mapInArrow`` partial top-k: each scan task
+scores its Arrow batches against the broadcast query matrix and folds
+them into its own top-k (at most Q×k rows per task), and the driver
+merges the tasks' partials with one ``lexsort`` (``merge_partials``,
+the merge the IVF pools share). The driver reads O(tasks × Q × k) rows
+instead of O(N × Q) — this is the 100 TB path, and it fixes the
+reference's O(Q×S) pure-Python loop.
 
 Every emitted distance is the left-to-right float64 fold
 ``Σ (q_i − b_i)²`` (then ``sqrt``) — the arithmetic of
@@ -36,9 +37,20 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 from big_ann_spark.functions.vector import cosine_similarity, l2_distance, sq_l2_distance
-from big_ann_spark.operators.topk import top_k_per_group
+
+# what a partial top-k scan emits per (query, neighbor), and a merged
+# top-k: types, not DDL strings, which the JVM would parse on every call
+_POOL_SCHEMA = StructType(
+    [
+        StructField("qid", LongType()),
+        StructField("neighbor_id", LongType()),
+        StructField("dist", DoubleType()),
+    ]
+)
+_RANKED_POOL_SCHEMA = StructType(_POOL_SCHEMA.fields + [StructField("rank", IntegerType())])
 
 
 def _dist_expr(metric: str, a: str | Column, b: str | Column, dim: int | None = None) -> Column:
@@ -152,6 +164,57 @@ def nearest_centroids(
     return np.concatenate(top), np.concatenate(dist)
 
 
+def _first_k(q, n, d, k):
+    """The first ``k`` rows of each query id ``q`` by (dist ``d``, id
+    ``n``), the order of a ``row_number`` window over (dist, id):
+    (q, n, d, 1-based rank), sorted by (q, d, n)."""
+    order = np.lexsort((n, d, q))
+    q, n, d = q[order], n[order], d[order]
+    rank = np.arange(len(q)) - np.searchsorted(q, q)
+    keep = rank < k
+    return q[keep], n[keep], d[keep], rank[keep] + 1
+
+
+def _collect_partials(scan: DataFrame, n_queries: int, k: int):
+    """The per-task partials of a top-k scan over ``n_queries``
+    queries, as an Arrow table read in one job. A task emits at most
+    ``k`` rows per query, so a batch of at most ``ann.DRIVER_ROWS``
+    queries bounds the collect at ``DRIVER_ROWS · k`` rows per task; a
+    larger batch fails loudly before the scan runs, and nothing is ever
+    truncated."""
+    from big_ann_spark.operators import ann
+
+    if n_queries > ann.DRIVER_ROWS:
+        raise ValueError(
+            f"the candidate scan's query batch has more than {ann.DRIVER_ROWS:,} "
+            f"rows, and their top-{k} of every scan task is collected to "
+            "the driver: split the batch into smaller calls"
+        )
+    return scan.toArrow()
+
+
+def merge_partials(scan: DataFrame, n_queries: int, k: int) -> DataFrame:
+    """The one top-k merge of the exact and IVF scans: the partials
+    (``_POOL_SCHEMA``) each task of ``scan`` emits are collected
+    (``_collect_partials``) and merged with one ``lexsort`` into the
+    first ``k`` rows of each query by (dist, id) (``_first_k``).
+    Returns (qid, neighbor_id, dist, rank) as a local, Arrow-built
+    frame: its ``collect()`` starts no Spark job."""
+    import pyarrow as pa
+
+    from big_ann_spark.functions.arrowio import int_col
+
+    t = _collect_partials(scan, n_queries, k)
+    q, n, d, rank = _first_k(
+        int_col(t, "qid"),
+        int_col(t, "neighbor_id"),
+        t.column("dist").to_numpy().astype(np.float64, copy=False),
+        k,
+    )
+    merged = pa.table({"qid": q, "neighbor_id": n, "dist": d, "rank": rank.astype(np.int32)})
+    return scan.sparkSession.createDataFrame(merged, schema=_RANKED_POOL_SCHEMA)
+
+
 def exact_knn(
     queries: DataFrame,
     base: DataFrame,
@@ -166,17 +229,26 @@ def exact_knn(
 
     Returns ``(qid, neighbor_id, dist, rank)`` with rank 1..k ordered by
     (distance, neighbor_id); ``dist`` is the left-to-right fold (module
-    docstring). Queries are collected to the driver (they are the small
-    side by contract) and shipped as one ``sc.broadcast`` variable —
-    torrent-distributed once per executor, not re-pickled into every
-    task closure, which at a 10k–1M query batch would dominate. The
-    base streams through executors exactly once; each Arrow batch emits
-    its exact local top-k (``fold_l2_topk``), so the final windowed
-    merge of at most batches × Q × k rows is exact."""
-    qrows = queries.select(query_id, query_vec).collect()
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = np.array([r[1] for r in qrows], dtype=np.float64)
-    bc = broadcast_matrix(queries.sparkSession.sparkContext, qids, qmat)
+    docstring). The queries are the small side by contract: they are
+    collected once (``ann.collect_to_driver``: a batch of more than
+    ``ann.DRIVER_ROWS`` rows fails loudly before the base is scanned)
+    and shipped as one ``sc.broadcast`` variable — torrent-distributed
+    once per executor, not re-pickled into every task closure. The base
+    streams through at most ``defaultParallelism`` tasks exactly once;
+    each task folds its Arrow batches' exact top-k (``fold_l2_topk``)
+    into its own running top-k, so the driver reads at most
+    ``defaultParallelism`` × Q × k partial rows and ``merge_partials``
+    is exact. Both jobs run at call time: the result is a local frame."""
+    from big_ann_spark.functions.arrowio import int_col, list_col_matrix
+    from big_ann_spark.operators.ann import collect_to_driver
+
+    q = collect_to_driver(
+        queries.select(F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec")),
+        "query batch of an exact k-NN",
+    )
+    qids, qmat = int_col(q, "qid"), list_col_matrix(q, "qvec")
+    sc = queries.sparkSession.sparkContext
+    bc = broadcast_matrix(sc, qids, qmat)
 
     def part_topk(batches):
         import pyarrow as pa
@@ -184,29 +256,43 @@ def exact_knn(
         from big_ann_spark.functions.arrowio import int_col, list_col_matrix
 
         qids, qmat = bc.value
+        top = None  # this task's (qid, id, dist) top-k per query so far
         for rb in batches:
             if rb.num_rows == 0 or len(qids) == 0:
                 continue
-            ids = int_col(rb, base_id)
-            qi, nbr, dist = fold_l2_topk(qmat, list_col_matrix(rb, base_vec), ids, k)
+            qi, nbr, dist = fold_l2_topk(qmat, list_col_matrix(rb, base_vec), int_col(rb, base_id), k)
+            cand = (qids[qi], nbr, dist)
+            if top is not None:
+                cand = [np.concatenate(c) for c in zip(top, cand)]
+            top = _first_k(*cand, k)[:3]
+        if top is not None:
             yield pa.RecordBatch.from_arrays(
-                [pa.array(qids[qi]), pa.array(nbr), pa.array(dist)],
-                names=["qid", "neighbor_id", "dist"],
+                [pa.array(c) for c in top], names=["qid", "neighbor_id", "dist"]
             )
 
-    partial = base.select(base_id, base_vec).mapInArrow(
-        part_topk, schema="qid long, neighbor_id long, dist double"
+    scan = (
+        base.select(base_id, base_vec)
+        .coalesce(sc.defaultParallelism)
+        .mapInArrow(part_topk, schema=_POOL_SCHEMA)
     )
-    return top_k_per_group(partial, ["qid"], [F.col("dist").asc(), F.col("neighbor_id").asc()], k)
+    return merge_partials(scan, len(qids), k)
+
+
+# the broadcast_matrix LRU: at most this many (ids, matrix) pairs, and
+# at most this many bytes of them summed (the newest pair always stays)
+BROADCAST_CACHE_ENTRIES = 4
+BROADCAST_CACHE_BYTES = 64 << 20
 
 
 def broadcast_matrix(sc, ids, mat):
     """Session-cached ``sc.broadcast`` of an (ids, matrix) pair — a
     query batch, or a centroid table: repeated calls with the same
     pair (bench loops, recall A/Bs, long-lived sessions) reuse one
-    broadcast instead of accumulating blocks on executors. A tiny LRU
-    evicts with ``unpersist()`` — safe even if a stale plan re-reads an
-    evicted broadcast, Spark re-ships it on demand."""
+    broadcast instead of accumulating blocks on executors. A small LRU,
+    bounded by ``BROADCAST_CACHE_ENTRIES`` pairs and by
+    ``BROADCAST_CACHE_BYTES`` of their summed sizes, evicts with
+    ``unpersist()`` — safe even if a stale plan re-reads an evicted
+    broadcast, Spark re-ships it on demand."""
     import hashlib
 
     h = hashlib.sha1()
@@ -218,12 +304,15 @@ def broadcast_matrix(sc, ids, mat):
     if cache is None:
         cache = {}
         sc._big_ann_matrix_bc = cache
-    bc = cache.pop(key, None)
+    bc, nbytes = cache.pop(key, (None, ids.nbytes + mat.nbytes))
     if bc is None:
         bc = sc.broadcast((ids, mat))
-    cache[key] = bc  # re-insert refreshes LRU position
-    while len(cache) > 4:
-        cache.pop(next(iter(cache))).unpersist()
+    cache[key] = bc, nbytes  # re-insert refreshes LRU position
+    while len(cache) > 1 and (
+        len(cache) > BROADCAST_CACHE_ENTRIES
+        or sum(n for _, n in cache.values()) > BROADCAST_CACHE_BYTES
+    ):
+        cache.pop(next(iter(cache)))[0].unpersist()
     return bc
 
 
@@ -320,7 +409,10 @@ def filtered_knn(
       selective-predicate strategy, vs. scoring the whole base.
 
     Returns ``(qid, neighbor_id, dist, rank)``, rank 1..k by
-    (dist, neighbor_id)."""
+    (dist, neighbor_id), as a lazy frame ranked by a ``row_number``
+    window: the query batch is never collected here."""
+    from big_ann_spark.operators.topk import top_k_per_group
+
     q_cols = [F.col(query_id).alias("qid"), F.col(query_vec).alias("_qvec")]
     b_cols = [F.col(base_id).alias("neighbor_id"), F.col(base_vec).alias("_bvec")]
     order = [F.col("dist").asc(), F.col("neighbor_id").asc()]

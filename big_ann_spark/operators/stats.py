@@ -15,10 +15,14 @@ distributed (one scan, map-side partial aggs); the d×d matrices are
 tiny (d ≤ a few hundred) and are finished driver-side — inverting a
 64×64 matrix is not a distributed op. The KS all-pairs matrix is one
 scan and one shuffle into one Arrow group per dimension pair, where the
-reference is a sequential Python double loop.
+reference is a sequential Python double loop. Anderson-Darling gathers
+each dimension's values into one array row (a partially aggregated
+``collect_list``) and evaluates every row in one ``mapInArrow``.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -103,47 +107,87 @@ def vif_matrix(emb: DataFrame, dims: int, *, vec_col: str = "embedding") -> np.n
     return np.linalg.inv(cor)
 
 
+def _libm(f, x: np.ndarray) -> np.ndarray:
+    """``f``, a ``math`` function, applied element by element: libm, as
+    DuckDB's ``ln``/``exp`` call it (numpy's SIMD log can differ by 1
+    ulp)."""
+    return np.frompyfunc(f, 1, 1)(x).astype(np.float64)
+
+
+def _ad_stat(x: np.ndarray, dist: str) -> tuple[float, float]:
+    """(A², corrected A²) of one dimension's values ``x``:
+    A² = -n - (1/n) Σ (2i-1)[ln F(z_i) + ln(1-F(z_{n+1-i}))] over the
+    sorted, standardised values, F through libm (``_libm``)."""
+    x = np.sort(x)
+    n = len(x)
+    mu, sigma = x.mean(), x.std(ddof=1)
+    z = (x - mu) / sigma
+    if dist == "logistic":
+        # mirror the oracle term-for-term: ln F = -ln(1+e^-z),
+        # ln(1-F) = -z - ln(1+e^-z)
+        lse = _libm(math.log, 1.0 + _libm(math.exp, -z))
+        ln_cdf = -lse
+        ln_sf = -z - lse
+    else:
+        # normal CDF via erf; clip to avoid log(0)
+        cdf = np.clip(0.5 * (1.0 + _libm(math.erf, z / math.sqrt(2.0))), 1e-15, 1 - 1e-15)
+        ln_cdf = np.log(cdf)
+        ln_sf = np.log(1 - cdf)
+    i = np.arange(1, n + 1)
+    a2 = -n - np.sum((2 * i - 1) * (ln_cdf + ln_sf[::-1])) / n
+    # small-sample correction for estimated params (Stephens 1974)
+    return a2, a2 * (1 + 0.75 / n + 2.25 / n**2)
+
+
 def anderson_darling_per_dim(dim_df: DataFrame, *, dist: str = "normal") -> DataFrame:
-    """A11: Anderson-Darling statistic per dimension (reference
-    ``variance.py:109`` via scipy.stats.anderson; scipy is absent here
-    so the statistic is computed directly:
-    A² = -n - (1/n) Σ (2i-1)[ln F(z_i) + ln(1-F(z_{n+1-i}))]).
-    One Arrow group task per dimension — d independent tasks.
+    """A11: Anderson-Darling statistic per dimension of a ``(pos, val)``
+    table → ``(pos, a2, a2_corrected)`` (reference ``variance.py:109``
+    via scipy.stats.anderson; scipy is absent here, so ``_ad_stat``
+    computes the statistic directly).
+
+    One aggregate and one ``mapInArrow``: ``collect_list`` gathers each
+    dimension's values into one array row, with map-side partial
+    aggregation, so the shuffle carries one array per (map task,
+    dimension), not one row per value. The kernel then sorts each array
+    and evaluates A². Memory contract: one dimension's N values sit in
+    one array row on one Python task.
+
+    A statistic that is NaN — a constant dimension (σ = 0), or one
+    holding a null value — is returned as null, as a pandas group
+    returns it. ``collect_list`` drops nulls, so the aggregate counts
+    them beside it and such a dimension reads null, not the statistic
+    of its other values.
 
     ``dist="normal"``: F = Φ via math.erf — the reference's normality
     test, verified against a direct numpy evaluation in tests.
     ``dist="logistic"``: F = 1/(1+e^(-z)) — same machinery, but every
     term is elementary (exp/ln), so the DuckDB oracle reproduces the
     whole statistic; this is the driver-checked variant."""
-    import math
+    import pyarrow as pa
 
-    def ad_stat(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = np.sort(pdf["val"].to_numpy(dtype=np.float64))
-        n = len(x)
-        mu, sigma = x.mean(), x.std(ddof=1)
-        z = (x - mu) / sigma
-        if dist == "logistic":
-            # mirror the oracle term-for-term: ln F = -ln(1+e^-z),
-            # ln(1-F) = -z - ln(1+e^-z); math.log/exp = libm, same as
-            # DuckDB's ln/exp (numpy's SIMD log can differ by 1 ulp)
-            lse = np.array([math.log(1.0 + math.exp(-v)) for v in z])
-            ln_cdf = -lse
-            ln_sf = -z - lse
-        else:
-            # normal CDF via erf; clip to avoid log(0)
-            cdf = np.array([0.5 * (1.0 + math.erf(v / math.sqrt(2.0))) for v in z])
-            cdf = np.clip(cdf, 1e-15, 1 - 1e-15)
-            ln_cdf = np.log(cdf)
-            ln_sf = np.log(1 - cdf)
-        i = np.arange(1, n + 1)
-        a2 = -n - np.sum((2 * i - 1) * (ln_cdf + ln_sf[::-1])) / n
-        # small-sample correction for estimated params (Stephens 1974)
-        a2_corr = a2 * (1 + 0.75 / n + 2.25 / n**2)
-        return pd.DataFrame({"pos": [pdf["pos"].iloc[0]], "a2": [a2], "a2_corrected": [a2_corr]})
+    def ad(batches):
+        for rb in batches:
+            stats = np.array([
+                (np.nan, np.nan) if n_null else _ad_stat(vals.values.to_numpy(zero_copy_only=False), dist)
+                for vals, n_null in zip(rb.column("vals"), rb.column("n_null").to_numpy())
+            ]).reshape(-1, 2)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("pos").cast(pa.int32()),
+                    # NaN → null, as a pandas group's output converts
+                    pa.array(stats[:, 0], from_pandas=True),
+                    pa.array(stats[:, 1], from_pandas=True),
+                ],
+                names=["pos", "a2", "a2_corrected"],
+            )
 
     return (
         dim_df.groupBy("pos")
-        .applyInPandas(ad_stat, schema="pos int, a2 double, a2_corrected double")
+        .agg(
+            F.collect_list(F.col("val").cast("double")).alias("vals"),
+            (F.count(F.lit(1)) - F.count("val")).alias("n_null"),
+        )
+        .mapInArrow(ad, schema="pos int, a2 double, a2_corrected double")
     )
 
 

@@ -26,14 +26,14 @@ def sf_dir() -> str:
 
 @pytest.fixture
 def candidate_scans(monkeypatch) -> list:
-    """The candidate-scan frames the from-disk pools collect to the
-    driver during the test: a pool function returns a local frame, so
-    plan pins inspect these."""
-    from big_ann_spark.operators import ann
+    """The partial top-k scan frames the IVF pools and ``exact_knn``
+    collect to the driver during the test: they return a local frame,
+    so plan pins inspect these."""
+    from big_ann_spark.operators import knn
 
-    scans, real = [], ann._collect_partials
+    scans, real = [], knn._collect_partials
     monkeypatch.setattr(
-        ann, "_collect_partials", lambda df, *a: scans.append(df) or real(df, *a)
+        knn, "_collect_partials", lambda df, *a: scans.append(df) or real(df, *a)
     )
     return scans
 

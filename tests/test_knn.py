@@ -128,6 +128,64 @@ def test_arrow_knn_broadcasts_query_matrix(spark, sf_dir, monkeypatch):
     assert len(mats) == 1 and mats[0][1].shape == (3, 64)
 
 
+def test_exact_knn_query_batch_over_driver_rows_fails_before_scan(
+    spark, sf_dir, monkeypatch, candidate_scans
+):
+    """The query batch is collected to the driver under DRIVER_ROWS: a
+    larger batch fails loudly in that collect, before the base scan."""
+    from big_ann_spark.operators import ann as ANN
+
+    monkeypatch.setattr(ANN, "DRIVER_ROWS", 2)
+    emb = load_table(spark, sf_dir, "embeddings")
+    sc = spark.sparkContext
+    sc.setJobGroup("exact_knn_over_driver_rows", "over DRIVER_ROWS")
+    try:
+        with pytest.raises(ValueError, match="more than 2 rows"):
+            exact_knn(
+                emb.filter(F.col("vec_id") < 3), emb, k=5, query_id="vec_id",
+                query_vec="embedding", base_id="vec_id", base_vec="embedding",
+            )
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("exact_knn_over_driver_rows")
+    assert candidate_scans == []
+    assert len(jobs) == 1  # the query collect only
+
+
+def test_broadcast_matrix_lru_is_byte_bounded(spark, monkeypatch):
+    """The summed sizes of the cached (ids, matrix) pairs stay under
+    BROADCAST_CACHE_BYTES, oldest evicted first with unpersist(); a
+    repeated pair reuses its broadcast, and the newest pair stays even
+    when it alone exceeds the bound."""
+    import pyspark
+
+    from big_ann_spark.operators import knn
+
+    sc = spark.sparkContext
+    monkeypatch.setattr(sc, "_big_ann_matrix_bc", {}, raising=False)
+    monkeypatch.setattr(knn, "BROADCAST_CACHE_BYTES", 3 * 1000)
+    unpersisted = []
+    orig = pyspark.broadcast.Broadcast.unpersist
+
+    def recording(self, blocking=False):
+        unpersisted.append(self)
+        return orig(self, blocking)
+
+    monkeypatch.setattr(pyspark.broadcast.Broadcast, "unpersist", recording)
+
+    def pair(seed, rows=12):  # 12 ids + 12 x 10 doubles = 1056 bytes
+        return np.arange(rows, dtype=np.int64), np.full((rows, 10), float(seed))
+
+    bcs = [knn.broadcast_matrix(sc, *pair(s)) for s in range(4)]
+    cache = sc._big_ann_matrix_bc
+    assert len(cache) == 2 and sum(n for _, n in cache.values()) <= 3000
+    assert unpersisted == bcs[:2]  # oldest first
+    assert knn.broadcast_matrix(sc, *pair(3)) is bcs[3]
+    big = knn.broadcast_matrix(sc, *pair(9, rows=100))
+    assert [bc for bc, _ in cache.values()] == [big]
+    assert unpersisted == bcs
+
+
 def test_median_pairwise_matches_numpy(spark, sf_dir, emb_np):
     ids, mat = emb_np
     sub = mat[:60]

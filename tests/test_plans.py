@@ -111,13 +111,17 @@ def test_topk_uses_window_group_limit(spark, sf_dir):
     assert "WindowGroupLimit" in plan
 
 
-def test_knn_broadcasts_queries(spark, sf_dir):
-    plan = _plan(load_all()["knn_exact_top10"].fn(spark, sf_dir))
-    # the queries ride a broadcast variable into one MapInArrow pass:
-    # the base streams once, through no join
+def test_knn_broadcasts_queries(spark, sf_dir, candidate_scans):
+    """exact_knn returns a local frame, so the pin is on its scan: the
+    queries ride a broadcast variable into one MapInArrow pass, the
+    base streams once through no join, and each task's partial top-k
+    is merged on the driver, not by a window."""
+    load_all()["knn_exact_top10"].fn(spark, sf_dir)
+    assert len(candidate_scans) == 1
+    plan = _plan(candidate_scans[0])
     assert "MapInArrow" in plan and "Join" not in plan
     assert plan.count("Scan parquet") == 1
-    assert "WindowGroupLimit" in plan  # partial top-k before final
+    assert "Window" not in plan
 
 
 def test_agg_has_partial_phase(spark, sf_dir):

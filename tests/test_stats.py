@@ -1,12 +1,15 @@
 """Statistics operator semantics: VIF inverse property, Anderson-
-Darling vs direct numpy, KS matrix vs single-pair oracle query, buddy
-ordering, approx-distinct error bounds."""
+Darling vs direct numpy and vs its per-group pandas reference, KS
+matrix vs single-pair oracle query, buddy ordering, approx-distinct
+error bounds."""
 
 from __future__ import annotations
 
 import math
 
 import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from big_ann_spark.catalog import load_table
@@ -43,6 +46,104 @@ def test_anderson_darling_matches_numpy(spark, sf_dir):
     i = np.arange(1, n + 1)
     want = -n - np.sum((2 * i - 1) * (np.log(cdf) + np.log(1 - cdf[::-1]))) / n
     assert abs(got[0] - want) < 1e-9
+
+
+def _ad_stat_per_group(dist):
+    """The reference A² kernel: one pandas group per dimension through
+    ``applyInPandas``, the implementation ``anderson_darling_per_dim``
+    had before it became ``collect_list`` plus one ``mapInArrow``."""
+
+    def ad_stat(pdf: pd.DataFrame) -> pd.DataFrame:
+        x = np.sort(pdf["val"].to_numpy(dtype=np.float64))
+        n = len(x)
+        mu, sigma = x.mean(), x.std(ddof=1)
+        z = (x - mu) / sigma
+        if dist == "logistic":
+            lse = np.array([math.log(1.0 + math.exp(-v)) for v in z])
+            ln_cdf = -lse
+            ln_sf = -z - lse
+        else:
+            cdf = np.array([0.5 * (1.0 + math.erf(v / math.sqrt(2.0))) for v in z])
+            cdf = np.clip(cdf, 1e-15, 1 - 1e-15)
+            ln_cdf = np.log(cdf)
+            ln_sf = np.log(1 - cdf)
+        i = np.arange(1, n + 1)
+        a2 = -n - np.sum((2 * i - 1) * (ln_cdf + ln_sf[::-1])) / n
+        a2_corr = a2 * (1 + 0.75 / n + 2.25 / n**2)
+        return pd.DataFrame({"pos": [pdf["pos"].iloc[0]], "a2": [a2], "a2_corrected": [a2_corr]})
+
+    return ad_stat
+
+
+def _ad_by_pos(df):
+    return {r["pos"]: (r["a2"], r["a2_corrected"]) for r in df.collect()}
+
+
+@pytest.fixture(scope="module")
+def ad_dims(spark):
+    """(pos, val) over three partitions: a Gaussian dimension, one with
+    heavy ties, a constant one (σ = 0, so A² is NaN, which Spark reads
+    as null) and a skewed one."""
+    rng = np.random.default_rng(11)
+    n = 700
+    cols = [
+        rng.normal(size=n) * 3 + 1,
+        np.round(rng.normal(size=n), 1),
+        np.full(n, 2.5),
+        rng.exponential(size=n),
+    ]
+    rows = [(p, float(v)) for p, c in enumerate(cols) for v in c]
+    df = spark.createDataFrame(rows, "pos int, val double").repartition(3)
+    assert df.rdd.getNumPartitions() == 3
+    return df
+
+
+@pytest.mark.parametrize("dist", ["normal", "logistic"])
+def test_anderson_darling_equals_per_group_reference(spark, ad_dims, dist):
+    """Bit-equal to the per-group pandas kernel it replaced: the same
+    numpy expressions over the same sorted values, the same libm call
+    per element."""
+    got = _ad_by_pos(anderson_darling_per_dim(ad_dims, dist=dist))
+    want = _ad_by_pos(
+        ad_dims.groupBy("pos").applyInPandas(
+            _ad_stat_per_group(dist), schema="pos int, a2 double, a2_corrected double"
+        )
+    )
+    assert got.keys() == {0, 1, 2, 3}
+    assert got[2] == (None, None)  # the constant dimension
+    assert got == want
+
+
+def test_anderson_darling_null_value_makes_dimension_null(spark, ad_dims):
+    """``collect_list`` drops nulls; a dimension holding one still reads
+    null, as in the per-group reference (where the null became a NaN
+    value), and the other dimensions are unaffected."""
+    df = ad_dims.unionByName(spark.createDataFrame([(1, None)], "pos int, val double"))
+    got = _ad_by_pos(anderson_darling_per_dim(df))
+    want = _ad_by_pos(
+        df.groupBy("pos").applyInPandas(
+            _ad_stat_per_group("normal"), schema="pos int, a2 double, a2_corrected double"
+        )
+    )
+    assert got[1] == (None, None)
+    assert got == want
+
+
+def test_anderson_darling_plan_is_partial_aggregate_then_arrow(spark, sf_dir):
+    """Plan pin: one array row per (map task, dimension) crosses the one
+    shuffle (an aggregate on both sides of it), and the statistic runs
+    in one MapInArrow, not one pandas group per dimension."""
+    from big_ann_spark.plans.inspect import count_exchanges, executed_plan
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    df = anderson_darling_per_dim(dim_table(emb).filter(F.col("pos") < 2))
+    plan = executed_plan(df)  # before any action: the one plan AQE starts from
+    assert len(df.collect()) == 2
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert count_exchanges(plan) == 1, plan
+    exch = plan.index("Exchange ")
+    assert "Aggregate" in plan[:exch] and "Aggregate" in plan[exch:], plan
 
 
 def test_ks_matrix_agrees_with_single_pair_query(spark, sf_dir):
